@@ -15,38 +15,33 @@ Public surface:
   helpers.
 """
 
-def _register_pickle_by_value() -> None:
-    """Ship our kernel code inside the pickled UDF closures.
+def _register_pickle_by_value(*modules) -> None:
+    """Ship the given modules' code inside pickled UDF closures.
 
-    Spark workers unpickle pandas UDFs; if this package isn't importable
-    on the worker's sys.path (e.g. the driver script runs from another
-    cwd), reference-pickling fails with ModuleNotFoundError. By-value
-    registration makes every UDF closure self-contained — no
-    installation or --py-files needed on executors.
+    Spark workers unpickle the UDFs; if this package isn't importable on
+    the worker's sys.path (e.g. the driver script runs from another cwd),
+    reference-pickling fails with ModuleNotFoundError. By-value
+    registration makes every UDF closure self-contained — no installation
+    or --py-files needed on executors. Only modules whose code runs
+    inside workers belong here; the pure-API modules (api/column/union)
+    are driver-side and stay reference-pickled. The JSON engine registers
+    its kernel modules below; ``operators`` and ``streaming`` register
+    theirs when they are imported.
     """
     try:
         from pyspark import cloudpickle
 
-        from . import register, streaming
-        from .functions import core, kernels, multi, udfs
-        from .operators import _codecs, dedup, multimodal, similarity, sketch
-        from .operators import text as optext
-
-        # Only the modules whose code executes inside workers — the
-        # pure-API modules (api/column/union) are driver-side and stay
-        # reference-pickled. streaming is here because its stateful
-        # operators' closures reference module-level helpers
-        # (_session_frame, the session DDLs) that must travel with the
-        # pickled function: without it, sessionize from a foreign cwd
-        # dies with ModuleNotFoundError at the first micro-batch.
-        for m in (core, kernels, udfs, multi, register, dedup, similarity,
-                  optext, multimodal, _codecs, sketch, streaming):
+        for m in modules:
             cloudpickle.register_pickle_by_value(m)
     except Exception:  # pragma: no cover - best-effort; cwd layouts still work
         pass
 
 
-_register_pickle_by_value()
+from . import register as _register_mod  # noqa: E402
+from .functions import core as _core, kernels as _kernels  # noqa: E402
+from .functions import multi as _multi, udfs as _udfs  # noqa: E402
+
+_register_pickle_by_value(_core, _kernels, _udfs, _multi, _register_mod)
 
 from .column import JsonColumn, col
 from .functions.multi import json_extract_multi

@@ -32,7 +32,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .. import union as union_mod
-from . import udfs
+from . import jvm_tier, udfs
 
 __all__ = [
     "json_get",
@@ -122,17 +122,21 @@ def _coerce_json_arg(json):
 
 
 def _invoke(fn_key: str, json, path: tuple) -> Column:
-    """Shared entry: validate, apply un-nesting, build the UDF call."""
+    """Shared entry: validate, apply un-nesting, build the call — on the
+    JVM exact tier (:mod:`.jvm_tier`) when it serves the function at a
+    literal path, else as an Arrow UDF over the Python kernels."""
     lit_path, key_col = _validate_path(fn_key, path)
     text_col, prov = _coerce_json_arg(json)
-    if prov is not None and lit_path is not None:
+    if key_col is not None:
+        return udfs.column_path_udf(fn_key)(text_col, key_col)
+    if prov is not None:
         # Call un-nesting: f(json_get(j, 'a'), 'b') => f(j, 'a', 'b').
         # Fires only when the inner call is json_get (type-preserving) and
         # every path element is literal (reference: src/rewrite.rs:74-83).
-        root, inner_path = prov
-        return udfs.literal_path_udf(fn_key, inner_path + lit_path)(root)
-    if key_col is not None:
-        return udfs.column_path_udf(fn_key)(text_col, key_col)
+        text_col, lit_path = prov[0], prov[1] + lit_path
+    jvm = jvm_tier.column(fn_key, text_col, lit_path)
+    if jvm is not None:
+        return jvm
     return udfs.literal_path_udf(fn_key, lit_path)(text_col)
 
 

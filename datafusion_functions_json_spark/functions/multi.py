@@ -27,7 +27,7 @@ import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from . import core
+from . import core, jvm_tier
 
 __all__ = ["json_extract_multi", "FIELD_KINDS"]
 
@@ -516,11 +516,14 @@ def json_extract_multi(
                     )
                 )
                 or (
-                    k == "union_text"
+                    k in ("union_text", "length")
                     and (type(v) is dict or type(v) is list)
                 )
             ):
-                out.append(_fallback_one(s, k, p))  # raw-bytes fidelity
+                # raw-bytes fidelity; and json_length counts duplicate
+                # members and stops at the finder's depth limit, which a
+                # parsed dict/list cannot tell
+                out.append(_fallback_one(s, k, p))
             else:
                 out.append(_coerce(k, found, v))
         return tuple(out)
@@ -576,4 +579,10 @@ def json_extract_multi(
             children = [pc.take(c, idx) for c in children]
         return pa.StructArray.from_arrays(children, names=out_names)
 
+    if json_profile is None:
+        # the JVM exact tier serves the kinds that are single getters;
+        # the Arrow UDF above is the fallback
+        jvm = jvm_tier.multi(json_col, specs)
+        if jvm is not None:
+            return jvm
     return _multi(json_col)

@@ -267,7 +267,10 @@ def union_to_text_udf():
     def fn(u: pa.Array) -> pa.Array:
         if isinstance(u, pa.ChunkedArray):
             u = u.combine_chunks()
-        cols = [u.field(name).to_pylist() for name in UNION_FIELDS]
+        # flatten() masks each member by the struct's own validity: a NULL
+        # struct (an outer-join miss) may carry arbitrary member values
+        members = dict(zip((f.name for f in u.type), u.flatten()))
+        cols = [members[name].to_pylist() for name in UNION_FIELDS]
         return pa_col(kernel(*cols), pa.string())
 
     fn.__name__ = "json_union_to_text"

@@ -24,6 +24,11 @@ from . import (
     text,
     validate,
 )
+from .. import _register_pickle_by_value
+from . import _codecs
+
+# the operators whose UDF bodies run module-level helpers in the workers
+_register_pickle_by_value(dedup, similarity, text, multimodal, _codecs, sketch)
 
 __all__ = [
     "bpe",

@@ -38,7 +38,7 @@ import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .functions import kernels, udfs
+from .functions import jvm_tier, kernels, udfs
 from .functions.udfs import RETURN_TYPES
 from .union import UNION_DDL
 
@@ -475,6 +475,14 @@ def register_all(
     names["scalar_to_json"] = names["json_from_scalar"]  # src/json_from_scalar.rs:31
     for name, udf in names.items():
         spark.udf.register(name, udf)
+    # calls the JVM exact tier serves (a string document, literal path)
+    # skip the Python UDFs registered above; they keep every other call
+    exact = {"json_len": "json_length"}
+    jvm_tier.bind_sql(spark, {
+        name: fn for name in names
+        if (fn := exact.get(name, name.removesuffix("_exact")))
+        in jvm_tier.TIER_FNS
+    })
     # record the routed set on the session so jsonf.sql()'s operator
     # rewriter can steer incompatible call shapes to <name>_exact;
     # cleared by a plain register_all (the exact surface is back)

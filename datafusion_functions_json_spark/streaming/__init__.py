@@ -11,11 +11,20 @@ deterministic + stateless (no accumulated state per row)."""
 
 from __future__ import annotations
 
+import sys
+
 import pandas as pd  # module-level: pandas_udf type hints must resolve
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import _register_pickle_by_value
 from ..functions import api as jsonf
+
+# stateful operators' closures reference module-level helpers
+# (_session_frame, the session DDLs) that must travel with the pickled
+# function: without it, sessionize from a foreign cwd dies with
+# ModuleNotFoundError at the first micro-batch
+_register_pickle_by_value(sys.modules[__name__])
 
 __all__ = [
     "extract_json_stream",

@@ -30,6 +30,15 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def python_tier(monkeypatch):
+    """The JVM exact tier's loader forced off: every call this test builds
+    runs on the Python kernels (functions/jvm_tier.py falls back)."""
+    from datafusion_functions_json_spark.functions import jvm_tier
+
+    monkeypatch.setattr(jvm_tier, "load", lambda sc: None)
+
+
 # reference: tests/utils/mod.rs:32-40 (FIXTURES.md §1)
 TEST_ROWS = [
     ("object_foo", ' {"foo": "abc"} '),

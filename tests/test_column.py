@@ -2,9 +2,11 @@
 src/rewrite.rs; plan-shape assertions mirror reference tests/main.rs:
 984-1136 which capture EXPLAIN output)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 import datafusion_functions_json_spark as jsonf
+from datafusion_functions_json_spark.functions import jvm_tier as jsonf_jvm_tier
 
 
 def physical_plan(df) -> str:
@@ -68,7 +70,7 @@ class TestCallUnnesting:
         # two dependent UDF evaluations -> two ArrowEvalPython nodes
         assert plan.count("ArrowEvalPython") == 2
 
-    def test_typed_getter_after_chain_flattens(self, spark):
+    def test_typed_getter_after_chain_flattens(self, spark, python_tier):
         df = spark.createDataFrame([('{"a": {"b": 2}}',)], "j string")
         jc = jsonf.col("j")
         out = df.select(jc["a"].get_int("b").alias("v"))
@@ -76,6 +78,17 @@ class TestCallUnnesting:
         # json_get_int over the flattened path — union never materialized
         assert plan.count("ArrowEvalPython") == 1
         assert "json_get_int" in plan
+        assert out.collect()[0].v == 2
+
+    def test_typed_getter_after_chain_flattens_jvm_tier(self, spark):
+        # the same flattened getter on the JVM exact tier: no Python hop
+        if jsonf_jvm_tier.load(spark.sparkContext) is None:
+            pytest.skip("JVM exact tier unavailable")
+        df = spark.createDataFrame([('{"a": {"b": 2}}',)], "j string")
+        out = df.select(jsonf.col("j")["a"].get_int("b").alias("v"))
+        plan = physical_plan(out)
+        assert "EvalPython" not in plan
+        assert plan.count("json_get_int") == 1
         assert out.collect()[0].v == 2
 
 

@@ -152,7 +152,7 @@ class TestMultiEquivalence:
         ).collect()
         assert [tuple(r) for r in fused] == [tuple(r) for r in unfused]
 
-    def test_single_arrow_eval(self, spark):
+    def test_single_arrow_eval(self, spark, python_tier):
         from datafusion_functions_json_spark.plans import arrow_eval_count
 
         df = spark.createDataFrame([('{"a": 1, "b": "x"}',)], "j string")
@@ -162,6 +162,21 @@ class TestMultiEquivalence:
             ).alias("u")
         )
         assert arrow_eval_count(out) == 1
+
+    def test_no_arrow_eval_on_jvm_exact_tier(self, spark):
+        from datafusion_functions_json_spark.functions import jvm_tier
+        from datafusion_functions_json_spark.plans import arrow_eval_count
+
+        if jvm_tier.load(spark.sparkContext) is None:
+            pytest.skip("JVM exact tier unavailable")
+        df = spark.createDataFrame([('{"a": 1, "b": "x"}',)], "j string")
+        out = df.select(
+            jsonf.json_extract_multi(
+                "j", {"a": ("int", "a"), "b": ("str", "b"), "n": ("length",)}
+            ).alias("u")
+        )
+        assert arrow_eval_count(out) == 0
+        assert out.collect()[0].u == (1, "x", 2)
 
     def test_deep_paths(self, spark):
         df = spark.createDataFrame([('{"a": {"b": [10, 20]}}',)], "j string")
@@ -250,7 +265,7 @@ class TestAutoTierMulti:
     def _df(self, spark):
         return spark.createDataFrame(self.DOCS, "j string")
 
-    def test_auto_picks_variant_and_matches_exact(self, spark):
+    def test_auto_picks_variant_and_matches_exact(self, spark, python_tier):
         from datafusion_functions_json_spark.functions.multi import _auto_tier
         from datafusion_functions_json_spark.functions.native import JsonProfile
 
@@ -286,6 +301,44 @@ class TestAutoTierMulti:
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "ArrowEvalPython" in bare
+
+    def test_bare_call_runs_on_jvm_exact_tier(self, spark):
+        # the bare (no profile) call on the JVM exact tier: no Python
+        # hop, and the same rows as the Python kernels
+        from datafusion_functions_json_spark.functions import jvm_tier
+        from datafusion_functions_json_spark.functions.native import JsonProfile
+
+        if jvm_tier.load(spark.sparkContext) is None:
+            pytest.skip("JVM exact tier unavailable")
+        out = self._df(spark).select(
+            jsonf.json_extract_multi("j", self.FIELDS).alias("u")
+        ).select("u.*")
+        assert "EvalPython" not in out._jdf.queryExecution().executedPlan().toString()
+        exact = self._df(spark).select(
+            jsonf.json_extract_multi("j", self.FIELDS, tier="exact",
+                                     json_profile=JsonProfile.strict()).alias("u")
+        ).select("u.*")
+        assert "ArrowEvalPython" in exact._jdf.queryExecution().executedPlan().toString()
+        assert out.collect() == exact.collect()
+
+    def test_length_counts_members_like_json_length(self, spark, python_tier):
+        # duplicate members and nesting past the finder's depth limit:
+        # the fused length must equal json_length, which a parsed dict or
+        # list cannot tell
+        deep = "[" * 1000 + "]" * 1000
+        df = spark.createDataFrame(
+            [('{"k": 1, "k": 2}',), ('{"c": {"x": 1, "x": 2}}',), (deep,)],
+            "j string",
+        )
+        out = df.select(
+            jsonf.json_extract_multi(
+                "j", {"n": ("length",), "c": ("length", "c")}
+            ).alias("u"),
+            jsonf.json_length("j").alias("n"),
+            jsonf.json_length("j", "c").alias("c"),
+        ).collect()
+        assert [(r.u.n, r.u.c) for r in out] == [(r.n, r.c) for r in out]
+        assert [(r.n, r.c) for r in out] == [(2, None), (1, 2), (None, None)]
 
     def test_auto_falls_back_on_envelope(self, spark):
         from datafusion_functions_json_spark.functions.multi import _auto_tier

@@ -649,7 +649,9 @@ class TestReviewFindingsRound7d:
         # first (2-event) session — pre-fix this crashed the query
         assert got == [("a", 2)]
 
-    def test_extract_json_stream_is_fused_single_hop(self, spark, json_dir):
+    def test_extract_json_stream_is_fused_single_hop(
+        self, spark, json_dir, python_tier
+    ):
         df = spark.read.schema(SCHEMA).json(json_dir)
         out = js.extract_json_stream(
             df, "payload",
@@ -658,6 +660,24 @@ class TestReviewFindingsRound7d:
         )
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert plan.count("ArrowEvalPython") == 1  # K fields, ONE hop
+        got = out.orderBy("n2").collect()
+        assert [r.n2 for r in got if r.n2 is not None] == [1, 2, 3]
+        assert all(r.has in (True, False) for r in got)
+
+    def test_extract_json_stream_on_jvm_exact_tier(self, spark, json_dir):
+        # the same extraction on the JVM exact tier: K fields, no hop
+        from datafusion_functions_json_spark.functions import jvm_tier
+
+        if jvm_tier.load(spark.sparkContext) is None:
+            pytest.skip("JVM exact tier unavailable")
+        df = spark.read.schema(SCHEMA).json(json_dir)
+        out = js.extract_json_stream(
+            df, "payload",
+            {"n2": ("int", "n"), "u": ("str", "user"),
+             "has": ("exists", "n"), "ln": ("length",)},
+        )
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "EvalPython" not in plan
         got = out.orderBy("n2").collect()
         assert [r.n2 for r in got if r.n2 is not None] == [1, 2, 3]
         assert all(r.has in (True, False) for r in got)

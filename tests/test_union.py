@@ -88,6 +88,35 @@ class TestUnionToText:
             == "10000000000.0"
         )
 
+    def test_null_struct_masks_its_members(self):
+        # a NULL struct row may carry member values (Arrow keeps the
+        # children of a null parent slot); the text must still be NULL
+        import pyarrow as pa
+
+        from datafusion_functions_json_spark.functions import udfs
+
+        kids = [
+            pa.array([2, 2], pa.int8()), pa.array([None, None], pa.bool_()),
+            pa.array([7, 7], pa.int64()), pa.array([None, None], pa.float64()),
+            pa.array([None, None], pa.string()),
+            pa.array([None, None], pa.string()),
+            pa.array([None, None], pa.string()),
+        ]
+        u = pa.StructArray.from_arrays(
+            kids, names=list(udfs.UNION_FIELDS),
+            mask=pa.array([False, True]),
+        )
+        assert udfs.union_to_text_udf().func(u).to_pylist() == ["7", None]
+
+    def test_outer_join_miss_is_null_text(self, spark):
+        left = spark.createDataFrame([(1,), (2,)], "id int")
+        right = spark.createDataFrame([(1, '{"v": 5}')], "id int, j string")
+        joined = left.join(
+            right.select("id", jsonf.json_get("j", "v").alias("u")), "id", "left"
+        )
+        out = joined.select("id", jsonf.json_union_to_text(F.col("u")))
+        assert sorted(tuple(r) for r in out.collect()) == [(1, "5"), (2, None)]
+
 
 class TestIsNull:
     def test_three_null_sources(self, spark):
