@@ -94,23 +94,26 @@ def _validate_path(fn_name: str, path: tuple):
     return tuple(out), None
 
 
-def _coerce_json_arg(json):
+def _coerce_json_arg(json, literal: bool):
     """Resolve the JSON argument to (text_column, provenance).
 
     provenance is ``(root_col, literal_path)`` when the input is a
-    JsonColumn produced by json_get over an all-literal path — the
-    precondition for call un-nesting (reference: src/rewrite.rs:74-83) —
-    else None.
+    JsonColumn produced by json_get over an all-literal path and the
+    outer path is ``literal`` too — the precondition for call un-nesting
+    (reference: src/rewrite.rs:74-83) — else None. The text column is
+    None when un-nesting makes it unnecessary.
     """
     from ..column import JsonColumn  # local import to avoid a cycle
     from ..column import Column as ClassicColumn
 
     if isinstance(json, JsonColumn):
-        prov = json._flatten_provenance()
+        prov = json._flatten_provenance() if literal else None
+        if prov is not None:
+            return None, prov
         plain = ClassicColumn(json._jc)  # strip the JsonColumn __getitem__
         if json._is_text:
-            return plain, prov
-        return union_mod.union_container_text(plain), prov
+            return plain, None
+        return union_mod.union_container_text(plain), None
     if isinstance(json, str):
         return F.col(json), None
     if _is_column(json):
@@ -121,12 +124,20 @@ def _coerce_json_arg(json):
     )
 
 
+def _literal_call(fn_key: str, text_col, lit_path: tuple) -> Column:
+    """``fn_key(text_col, *lit_path)`` on the JVM exact tier
+    (:mod:`.jvm_tier`) when it is loaded, else as an Arrow UDF over the
+    Python kernels."""
+    jvm = jvm_tier.column(fn_key, text_col, lit_path)
+    if jvm is not None:
+        return jvm
+    return udfs.literal_path_udf(fn_key, lit_path)(text_col)
+
+
 def _invoke(fn_key: str, json, path: tuple) -> Column:
-    """Shared entry: validate, apply un-nesting, build the call — on the
-    JVM exact tier (:mod:`.jvm_tier`) when it serves the function at a
-    literal path, else as an Arrow UDF over the Python kernels."""
+    """Shared entry: validate, apply un-nesting, build the call."""
     lit_path, key_col = _validate_path(fn_key, path)
-    text_col, prov = _coerce_json_arg(json)
+    text_col, prov = _coerce_json_arg(json, key_col is None)
     if key_col is not None:
         return udfs.column_path_udf(fn_key)(text_col, key_col)
     if prov is not None:
@@ -134,10 +145,17 @@ def _invoke(fn_key: str, json, path: tuple) -> Column:
         # Fires only when the inner call is json_get (type-preserving) and
         # every path element is literal (reference: src/rewrite.rs:74-83).
         text_col, lit_path = prov[0], prov[1] + lit_path
-    jvm = jvm_tier.column(fn_key, text_col, lit_path)
+    return _literal_call(fn_key, text_col, lit_path)
+
+
+def _union_at(text_col, lit_path: tuple) -> Column:
+    """The union struct of ``json_get(text_col, *lit_path)``, its null arm
+    a whole-struct NULL (the JVM tier returns it that way)."""
+    jvm = jvm_tier.column("json_get", text_col, lit_path)
     if jvm is not None:
         return jvm
-    return udfs.literal_path_udf(fn_key, lit_path)(text_col)
+    raw = udfs.literal_path_udf("json_get", lit_path)(text_col)
+    return union_mod.mask_null_arm(raw)
 
 
 def json_get(json, *path):
@@ -149,13 +167,11 @@ def json_get(json, *path):
     from ..column import JsonColumn
 
     lit_path, key_col = _validate_path("json_get", path)
-    text_col, prov = _coerce_json_arg(json)
-    if prov is not None and lit_path is not None:
+    text_col, prov = _coerce_json_arg(json, key_col is None)
+    if prov is not None:
         root, inner_path = prov
-        raw = udfs.literal_path_udf("json_get", inner_path + lit_path)(root)
-        return JsonColumn(
-            union_mod.mask_null_arm(raw), root=root, path=inner_path + lit_path
-        )
+        full = inner_path + lit_path
+        return JsonColumn(_union_at(root, full), root=root, path=full)
     if key_col is not None:
         raw = udfs.column_path_udf("json_get")(text_col, key_col)
         # no LITERAL provenance (un-nesting requires literal paths) but
@@ -168,10 +184,9 @@ def json_get(json, *path):
             cast_root=text_col,
             cast_path=tuple(path),
         )
-    raw = udfs.literal_path_udf("json_get", lit_path)(text_col)
     root = text_col if not isinstance(json, JsonColumn) else None
     return JsonColumn(
-        union_mod.mask_null_arm(raw),
+        _union_at(text_col, lit_path),
         root=root,
         path=lit_path if root is not None else None,
     )
@@ -346,9 +361,9 @@ def json_union_to_text(u) -> Column:
     (reference: src/json_union_to_text.rs:82-118).
 
     When ``u`` is a literal-path ``json_get`` result, the composition
-    fuses into ONE UDF (find + canonicalize — no intermediate struct
-    crossing the Arrow boundary): the reference's un-nesting philosophy
-    extended to the union consumers."""
+    fuses into ONE call (find + canonicalize — no intermediate struct):
+    the reference's un-nesting philosophy extended to the union
+    consumers."""
     from ..column import JsonColumn
 
     if isinstance(u, str):
@@ -363,8 +378,10 @@ def json_union_to_text(u) -> Column:
             )
         prov = u._flatten_provenance()
         if prov is not None:
-            root, path = prov
-            return udfs.literal_path_udf("json_to_text_fused", path)(root)
+            return _literal_call("json_to_text_fused", *prov)
+    jvm = jvm_tier.union_to_text(u)
+    if jvm is not None:
+        return jvm
     return udfs.union_to_text_udf()(u)
 
 
@@ -386,7 +403,6 @@ def json_is_null(u) -> Column:
             )
         prov = u._flatten_provenance()
         if prov is not None:
-            root, path = prov
-            return udfs.literal_path_udf("json_is_null_fused", path)(root)
+            return _literal_call("json_is_null_fused", *prov)
         u = ClassicColumn(u._jc)
     return union_mod.json_is_null(u)

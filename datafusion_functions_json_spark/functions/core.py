@@ -58,6 +58,8 @@ __all__ = [
     "keys_at",
     "items_at",
     "json_dumps_canonical",
+    "text_value",
+    "int_to_float",
     "parse_int_like_rust",
     "parse_float_like_rust",
     "parse_bool_like_rust",
@@ -139,6 +141,26 @@ def _raw_decode(s: str, i: int):
     return rd(s, i)
 
 PathElem = Union[str, int]
+
+# a decoded JSON string holding a lone surrogate (an unpaired \ud800-\udfff
+# escape; decoding joins the valid pairs): jiter and serde_json reject
+# such strings and Spark's UTF-8 strings cannot hold them
+_LONE_SURROGATE = re.compile("[\ud800-\udfff]").search
+
+
+def text_value(v):
+    """A decoded JSON string as a result value: ``v``, or None when it
+    holds a lone surrogate."""
+    return None if _LONE_SURROGATE(v) else v
+
+
+def int_to_float(v: int) -> float:
+    """The nearest double to a JSON integer, ±inf beyond the double range
+    (Python's ``float(int)`` raises there; a text parse gives inf)."""
+    try:
+        return float(v)
+    except OverflowError:
+        return float("inf") if v > 0 else float("-inf")
 
 
 def _skip_ws(s: str, i: int, n: int) -> int:
@@ -246,7 +268,9 @@ def find(s, path):
     NOT Spark's '$.a[0]' JSONPath strings.
 
     Returns ``(kind, value)`` with container values as RAW TEXT slices;
-    never raises on data errors (reference: src/common.rs:559-578).
+    never raises on data errors (reference: src/common.rs:559-578). A
+    string holding a lone surrogate is ``(STR, None)``: it exists, but
+    has no value.
     """
     if s is None:
         return MISSING, None
@@ -261,7 +285,7 @@ def find(s, path):
             return ARRAY, s[i : _skip_value(s, i)]
         if c == '"':
             v, _ = scanstring(s, i + 1)
-            return STR, v
+            return STR, text_value(v)
         v, _ = _raw_decode(s, i)
         if v is None:
             return NULL, None
@@ -520,7 +544,8 @@ def find_raw(s, path):
     the value for EVERY kind (strings stay quoted, ``4.2e-1`` stays
     ``4.2e-1`` — reference: tests/main.rs:507-512); ``strval`` is the
     decoded string when kind == STR (for ``json_as_text``'s unquoting,
-    reference: src/json_as_text.rs:101-112), else None.
+    reference: src/json_as_text.rs:101-112; None when it holds a lone
+    surrogate), else None.
     MISSING => (MISSING, None, None).
     """
     if s is None:
@@ -536,7 +561,7 @@ def find_raw(s, path):
             return ARRAY, s[i : _skip_value(s, i)], None
         if c == '"':
             v, end = scanstring(s, i + 1)
-            return STR, s[i:end], v
+            return STR, s[i:end], text_value(v)
         v, end = _raw_decode(s, i)
         raw = s[i:end]
         if v is None:
@@ -632,14 +657,18 @@ def _object_keys(s: str, i: int, n: int):
 
 def keys_at(s, path):
     """Object keys in document order at the path; non-object (including
-    array) / missing => None (reference: src/json_object_keys.rs:122-141)."""
+    array) / missing / a key holding a lone surrogate => None (reference:
+    src/json_object_keys.rs:122-141)."""
     if s is None:
         return None
     try:
         i, n = _navigate(s, path)
         if i < 0 or s[i] != "{":
             return None
-        return _object_keys(s, i, n)
+        keys = _object_keys(s, i, n)
+        if any(_LONE_SURROGATE(k) for k in keys):
+            return None
+        return keys
     except (ValueError, TypeError, RecursionError, IndexError, StopIteration):
         return None
 
@@ -677,9 +706,9 @@ def json_dumps_canonical(kind: int, value) -> Optional[str]:
     """Serialize one (kind, value) pair to canonical JSON text — the
     flattening rule of ``json_union_to_text`` (reference:
     src/json_union_to_text.rs:82-118): bool/int/float canonical, strings
-    JSON-quoted+escaped, containers raw passthrough, null member => None
-    (SQL NULL)."""
-    if kind in (NULL, MISSING):
+    JSON-quoted+escaped, containers raw passthrough, null member or a
+    string without a value => None (SQL NULL)."""
+    if kind in (NULL, MISSING) or (kind == STR and value is None):
         return None
     if kind == BOOL:
         return "true" if value else "false"

@@ -1,8 +1,9 @@
-"""The JVM exact tier: the literal-path scalar getters inside Spark's
-executor.
+"""The JVM exact tier: the literal-path functions inside Spark's executor.
 
-``json_get_str/int/float/bool``, ``json_get_json``, ``json_as_text``,
-``json_contains`` and ``json_length`` at a literal path run as Catalyst
+Every function of :data:`TIER_FNS` at a literal path — the scalar getters,
+``json_get`` (the union struct), ``json_get_array``, ``json_object_keys``
+and the fused ``json_union_to_text``/``json_is_null`` over ``json_get`` —
+and ``json_union_to_text`` over any union struct run as Catalyst
 ``ScalaUDF`` expressions over ``jsonsparkext.JsonFinder``, the Java port of
 :mod:`.core`'s streaming finder (``jvm_extension/src/jsonsparkext/``). No
 document crosses the JVM→Python Arrow hop, which costs more than the JSON
@@ -18,8 +19,8 @@ Spark version and the Spark jars it compiles against, and written
 atomically. Spark Connect sessions, hosts
 without a JDK, installs without the Java sources and any failed build or
 load leave every call on the Python kernels. Call shapes the tier does
-not serve (column paths, a union-struct JSON argument, the other
-functions) always use the Python kernels.
+not serve (column paths, a union-struct JSON argument in SQL) always use
+the Python kernels.
 """
 
 from __future__ import annotations
@@ -37,12 +38,21 @@ from pathlib import Path
 
 from .core import INT64_MAX, INT64_MIN
 
-__all__ = ["TIER_FNS", "MULTI_KIND_FNS", "load", "column", "multi", "bind_sql"]
+__all__ = [
+    "TIER_FNS", "SQL_FNS", "MULTI_KIND_FNS", "load", "column",
+    "union_to_text", "multi", "bind_sql",
+]
 
 TIER_FNS = frozenset({
-    "json_get_str", "json_get_int", "json_get_float", "json_get_bool",
-    "json_get_json", "json_as_text", "json_contains", "json_length",
+    "json_get", "json_get_str", "json_get_int", "json_get_float",
+    "json_get_bool", "json_get_json", "json_get_array", "json_as_text",
+    "json_contains", "json_length", "json_object_keys",
+    "json_to_text_fused", "json_is_null_fused",
 })
+
+# what bind_sql serves: the literal-path functions, plus the two union
+# consumers over a union-struct argument
+SQL_FNS = TIER_FNS | {"json_union_to_text", "json_is_null"}
 
 # json_extract_multi field kinds the tier serves, as the function each
 # kind reads (multi.py pins every kind to its single-field kernel)
@@ -54,6 +64,8 @@ MULTI_KIND_FNS = {
     "text": "json_as_text",
     "length": "json_length",
     "exists": "json_contains",
+    "union_text": "json_to_text_fused",
+    "union_isnull": "json_is_null_fused",
 }
 
 _EXT_DIR = Path(__file__).resolve().parents[2] / "jvm_extension"
@@ -182,6 +194,14 @@ def column(fn_key: str, json_col, path: tuple):
     return _wrap(tier.column(fn_key, jc, _path_json(path)))
 
 
+def union_to_text(u):
+    """``json_union_to_text(u)`` over the union-struct column ``u`` on the
+    tier, or None when the tier is unavailable."""
+    jc = getattr(u, "_jc", None)
+    tier = None if jc is None else _active_tier()
+    return None if tier is None else _wrap(tier.unionToText(jc))
+
+
 def multi(json_col, specs):
     """``json_extract_multi`` over ``specs`` (``(name, kind, path)``) as a
     struct of tier columns, or None when the tier is unavailable or a
@@ -198,9 +218,9 @@ def multi(json_col, specs):
 
 def bind_sql(spark, names) -> bool:
     """Route the session's registered SQL functions ``names`` (name →
-    tier function) to the tier for the calls it serves; the Python UDFs
-    registered under those names keep every other call. False when the
-    tier is unavailable."""
+    function of :data:`SQL_FNS`) to the tier for the calls it serves; the
+    Python UDFs registered under those names keep every other call. False
+    when the tier is unavailable."""
     jsession = getattr(spark, "_jsparkSession", None)
     tier = None if jsession is None else load(spark.sparkContext)
     if tier is None or not names:

@@ -112,13 +112,13 @@ def kernel_json_get(json_vals, paths):
                 tid = 0
         elif kind == FLOAT:
             tid, f = 3, v
-        elif kind == STR:
+        elif kind == STR and v is not None:
             tid, st = 4, v
         elif kind == ARRAY:
             tid, ar = 5, v
         elif kind == OBJECT:
             tid, ob = 6, v
-        else:  # NULL or MISSING -> null arm
+        else:  # NULL, MISSING, a lone-surrogate string -> null arm
             tid = 0
         tids.append(tid)
         bools.append(b)
@@ -344,7 +344,7 @@ def kernel_json_get_float(json_vals, paths):
         if kind == FLOAT:
             out.append(v)
         elif kind == INT:
-            out.append(float(v))
+            out.append(core.int_to_float(v))
         elif kind == STR:
             out.append(core.parse_float_like_rust(v))
         else:
@@ -461,12 +461,14 @@ def kernel_json_to_text_fused(json_vals, paths):
 
 def kernel_json_is_null_fused(json_vals, paths):
     """Fused ``json_is_null(json_get(j, *path))``: true iff the union
-    would hold the null arm (missing / json-null / invalid / big int)."""
+    would hold the null arm (missing / json-null / invalid / big int /
+    a lone-surrogate string)."""
     out = []
     for kind, v in _scalar_pairs(json_vals, paths):
         out.append(
             kind in (MISSING, NULL)
             or (kind == INT and not (INT64_MIN <= v <= INT64_MAX))
+            or (kind == STR and v is None)
         )
     return out
 
@@ -475,9 +477,10 @@ def kernel_json_union_to_text(
     type_ids, bools, ints, floats, strs, arrs, objs
 ):
     """Flatten union struct rows → canonical JSON text (reference:
-    src/json_union_to_text.rs:82-118): null member → SQL NULL, bool/int
-    canonical, float via repr (matches serde_json for normal values),
-    strings JSON-quoted+escaped, containers raw passthrough.
+    src/json_union_to_text.rs:82-118): null arm, unknown type id or a
+    NULL member → SQL NULL, bool/int canonical, float via repr (matches
+    serde_json for normal values), strings JSON-quoted+escaped,
+    containers raw passthrough.
 
     Takes the 7 member columns as parallel sequences (a struct column
     arrives in pandas as a DataFrame; the wrapper splits it).
@@ -491,11 +494,13 @@ def kernel_json_union_to_text(
         if tid is None or tid != tid or tid == 0:
             out.append(None)
         elif tid == 1:
-            out.append("true" if b else "false")
+            out.append(None if b is None else "true" if b else "false")
         elif tid == 2:
-            out.append(str(int(i)))
+            out.append(None if i is None else str(int(i)))
         elif tid == 3:
-            out.append(core.json_dumps_canonical(FLOAT, float(f)))
+            out.append(
+                None if f is None else core.json_dumps_canonical(FLOAT, float(f))
+            )
         elif tid == 4:
             out.append(core.json_dumps_canonical(STR, st))
         elif tid == 5:

@@ -97,7 +97,7 @@ def _coerce(kind: str, found: bool, v):
         if isinstance(v, float):
             return v
         if isinstance(v, int):
-            return float(v)
+            return core.int_to_float(v)
         if isinstance(v, str):
             return core.parse_float_like_rust(v)
         return None
@@ -171,8 +171,10 @@ def _fallback_one(s, kind: str, path):
         return core.json_dumps_canonical(k, v)
     if kind == "union_isnull":
         k, v = core.find(s, path)
-        return k in (core.MISSING, core.NULL) or (
-            k == core.INT and not (core.INT64_MIN <= v <= core.INT64_MAX)
+        return (
+            k in (core.MISSING, core.NULL)
+            or (k == core.INT and not (core.INT64_MIN <= v <= core.INT64_MAX))
+            or (k == core.STR and v is None)
         )
     k, v = core.find(s, path)
     if kind == "str":
@@ -185,7 +187,7 @@ def _fallback_one(s, kind: str, path):
         if k == core.FLOAT:
             return v
         if k == core.INT:
-            return float(v)
+            return core.int_to_float(v)
         return core.parse_float_like_rust(v) if k == core.STR else None
     if kind == "bool":
         if k == core.BOOL:
@@ -471,6 +473,8 @@ def json_extract_multi(
     from .kernels import _dict_encode as dict_encode  # closure-captured
     from .kernels import _fast_mask as fast_mask  # closure-captured
 
+    text_value = core.text_value
+
     # Arrow output type per field (matches FIELD_KINDS / ret exactly)
     _pa_kind = {
         "string": pa.string(),
@@ -505,6 +509,10 @@ def json_extract_multi(
         out = []
         for _, k, p in specs:
             found, v = _nav(doc, p)
+            if not use_fast and type(v) is str:
+                # only a document with escapes can decode to a lone
+                # surrogate; such a string has no value on any kind
+                v = text_value(v)
             if found and (
                 (
                     k == "text"

@@ -257,10 +257,11 @@ def column_path_udf(fn_key: str):
 @lru_cache(maxsize=1)
 def union_to_text_udf():
     """json_union_to_text over the union struct (reference:
-    src/json_union_to_text.rs:82-118). Python-side because float
-    canonicalization must match serde_json's shortest-roundtrip formatting
-    (Python ``repr``), which Spark's double→string cast does not
-    (``1e10`` → '1.0E10' in Spark vs '10000000000.0' canonical)."""
+    src/json_union_to_text.rs:82-118) on the Python kernels: the fallback
+    when the JVM exact tier is not loaded. Spark's own double→string cast
+    cannot stand in for either tier, because the canonical float text is
+    the shortest round-trip form (Python ``repr``, ``1e10`` →
+    '10000000000.0') where Spark writes '1.0E10'."""
     kernel = kernels.kernel_json_union_to_text
     pa_col = _pa_col
 

@@ -475,13 +475,15 @@ def register_all(
     names["scalar_to_json"] = names["json_from_scalar"]  # src/json_from_scalar.rs:31
     for name, udf in names.items():
         spark.udf.register(name, udf)
-    # calls the JVM exact tier serves (a string document, literal path)
-    # skip the Python UDFs registered above; they keep every other call
-    exact = {"json_len": "json_length"}
+    # calls the JVM exact tier serves (a string document and a literal
+    # path, or one union-struct argument for json_union_to_text and
+    # json_is_null, which then becomes a plain Catalyst null test) skip
+    # the Python UDFs registered above; they keep every other call
+    alias = {"json_len": "json_length", "json_keys": "json_object_keys"}
     jvm_tier.bind_sql(spark, {
         name: fn for name in names
-        if (fn := exact.get(name, name.removesuffix("_exact")))
-        in jvm_tier.TIER_FNS
+        if (fn := alias.get(name, name.removesuffix("_exact")))
+        in jvm_tier.SQL_FNS
     })
     # record the routed set on the session so jsonf.sql()'s operator
     # rewriter can steer incompatible call shapes to <name>_exact;

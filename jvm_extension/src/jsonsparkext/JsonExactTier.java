@@ -7,11 +7,18 @@ import java.util.Map;
 import java.util.concurrent.ConcurrentHashMap;
 
 import org.apache.spark.sql.Column;
+import org.apache.spark.sql.Row;
+import org.apache.spark.sql.RowFactory;
 import org.apache.spark.sql.catalyst.FunctionIdentifier;
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry;
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder;
+import org.apache.spark.sql.catalyst.expressions.EqualTo;
 import org.apache.spark.sql.catalyst.expressions.Expression;
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo;
+import org.apache.spark.sql.catalyst.expressions.GetStructField;
+import org.apache.spark.sql.catalyst.expressions.IsNull;
+import org.apache.spark.sql.catalyst.expressions.Literal;
+import org.apache.spark.sql.catalyst.expressions.Or;
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF;
 import org.apache.spark.sql.classic.ExpressionUtils;
 import org.apache.spark.sql.classic.SparkSession;
@@ -22,6 +29,7 @@ import org.apache.spark.sql.types.IntegerType;
 import org.apache.spark.sql.types.LongType;
 import org.apache.spark.sql.types.ShortType;
 import org.apache.spark.sql.types.StringType;
+import org.apache.spark.sql.types.StructType;
 
 import scala.Function1;
 import scala.Function2;
@@ -51,34 +59,62 @@ import scala.jdk.javaapi.CollectionConverters;
 import scala.runtime.AbstractFunction1;
 
 /**
- * The JVM exact tier: the literal-path scalar getters evaluated by
+ * The JVM exact tier: the literal-path JSON functions evaluated by
  * {@link JsonFinder} inside Spark's executor, as {@code ScalaUDF}
  * expressions, instead of across the Python worker hop.
  *
- * <p>Serves {@code json_get_str/int/float/bool}, {@code json_get_json},
- * {@code json_as_text}, {@code json_contains} and {@code json_length} when
- * the JSON argument is a string and every path element is a non-null
- * string or integer literal. The Python package loads this class at run
- * time (datafusion_functions_json_spark/functions/jvm_tier.py) and keeps
- * its Arrow UDFs for every other call shape:
+ * <p>Serves {@code json_get} (the union struct), {@code json_get_str/int/
+ * float/bool}, {@code json_get_json}, {@code json_get_array},
+ * {@code json_as_text}, {@code json_contains}, {@code json_length},
+ * {@code json_object_keys} and the fused {@code json_union_to_text} and
+ * {@code json_is_null} over {@code json_get} when the JSON argument is a
+ * string and every path element is a non-null string or integer literal,
+ * and {@code json_union_to_text} over any union struct. The Python
+ * package loads this class at run time
+ * (datafusion_functions_json_spark/functions/jvm_tier.py) and keeps its
+ * Arrow UDFs for every other call shape:
  * <ul>
- * <li>{@link #column} builds the Python API's columns;</li>
+ * <li>{@link #column} and {@link #unionToText(Column)} build the Python
+ *     API's columns;</li>
  * <li>{@link #bindSql} wraps the SQL functions {@code register_all}
  *     registered, so a call whose arguments fit runs here and any other
- *     call goes to the Python UDF it wraps.</li>
+ *     call goes to the Python UDF it wraps; SQL {@code json_is_null} over
+ *     a union struct becomes a plain Catalyst null test.</li>
  * </ul>
  */
 public final class JsonExactTier {
 
-    private static final Map<String, DataType> RESULT_TYPES = Map.of(
-        "json_get_str", DataTypes.StringType,
-        "json_get_int", DataTypes.LongType,
-        "json_get_float", DataTypes.DoubleType,
-        "json_get_bool", DataTypes.BooleanType,
-        "json_get_json", DataTypes.StringType,
-        "json_as_text", DataTypes.StringType,
-        "json_contains", DataTypes.BooleanType,
-        "json_length", DataTypes.LongType);
+    /**
+     * The union struct {@code json_get} returns (union.py): a type id and
+     * one member per arm, at the position of its type id.
+     */
+    static final StructType UNION = new StructType()
+        .add("type_id", DataTypes.ByteType)
+        .add("bool", DataTypes.BooleanType)
+        .add("int", DataTypes.LongType)
+        .add("float", DataTypes.DoubleType)
+        .add("str", DataTypes.StringType)
+        .add("array", DataTypes.StringType)
+        .add("object", DataTypes.StringType);
+
+    private static final DataType STRINGS =
+        DataTypes.createArrayType(DataTypes.StringType, true);
+
+    /** The result type per function, as udfs.RETURN_TYPES declares it. */
+    private static final Map<String, DataType> RESULT_TYPES = Map.ofEntries(
+        Map.entry("json_get", UNION),
+        Map.entry("json_get_str", DataTypes.StringType),
+        Map.entry("json_get_int", DataTypes.LongType),
+        Map.entry("json_get_float", DataTypes.DoubleType),
+        Map.entry("json_get_bool", DataTypes.BooleanType),
+        Map.entry("json_get_json", DataTypes.StringType),
+        Map.entry("json_get_array", STRINGS),
+        Map.entry("json_as_text", DataTypes.StringType),
+        Map.entry("json_contains", DataTypes.BooleanType),
+        Map.entry("json_length", DataTypes.LongType),
+        Map.entry("json_object_keys", STRINGS),
+        Map.entry("json_to_text_fused", DataTypes.StringType),
+        Map.entry("json_is_null_fused", DataTypes.BooleanType));
 
     /** Largest argument count a ScalaUDF takes. */
     private static final int MAX_ARITY = 22;
@@ -122,10 +158,84 @@ public final class JsonExactTier {
                     return JsonFinder.contains(s, path);
                 case "json_length":
                     return JsonFinder.length(s, path);
+                case "json_get":
+                    return unionRow(JsonFinder.getUnion(s, path));
+                case "json_get_array":
+                    return JsonFinder.getArray(s, path);
+                case "json_object_keys":
+                    return JsonFinder.objectKeys(s, path);
+                case "json_to_text_fused":
+                    return JsonFinder.toTextFused(s, path);
+                case "json_is_null_fused":
+                    return JsonFinder.isNullFused(s, path);
                 default:
                     throw new IllegalArgumentException(fn);
             }
         }
+    }
+
+    /** The union struct row for an arm (type id, value); null arm NULL. */
+    private static Row unionRow(Object[] arm) {
+        if (arm == null) {
+            return null;
+        }
+        int kind = (Integer) arm[0];
+        Object[] members = new Object[UNION.size()];
+        members[0] = (byte) kind;
+        members[kind] = arm[1];
+        return RowFactory.create(members);
+    }
+
+    /**
+     * json_union_to_text over a union struct row
+     * (kernels.kernel_json_union_to_text): the null arm, an unknown type id
+     * and a NULL member are NULL.
+     */
+    static String unionRowText(Object u) {
+        if (u == null) {
+            return null;
+        }
+        if (!(u instanceof Row)) {
+            throw new IllegalArgumentException(
+                "json_union_to_text expects a union struct (a json_get result)");
+        }
+        Row r = (Row) u;
+        Object tid = r.get(r.fieldIndex("type_id"));
+        int kind = tid == null ? 0 : ((Number) tid).intValue();
+        if (kind < 1 || kind >= UNION.size()) {
+            return null;
+        }
+        Object v = r.get(r.fieldIndex(UNION.fields()[kind].name()));
+        return v == null ? null : JsonFinder.unionText(kind, v);
+    }
+
+    /** {@code json_union_to_text(u)} for the Python API, as a Column. */
+    public Column unionToText(Column u) {
+        return ExpressionUtils.column(unionToTextUdf(
+            seq(List.of(ExpressionUtils.expression(u)))));
+    }
+
+    private static Expression unionToTextUdf(Seq<Expression> children) {
+        return new ScalaUDF(UNION_TO_TEXT, DataTypes.StringType, children,
+            seq(List.<Option<ExpressionEncoder<?>>>of()), Option.empty(),
+            Option.apply("json_union_to_text"), true, true);
+    }
+
+    private static final Object UNION_TO_TEXT =
+        (Function1<Object, String> & Serializable) JsonExactTier::unionRowText;
+
+    /**
+     * Python's repr of each double in {@code bits} (hexadecimal IEEE 754
+     * bit patterns, comma separated), newline separated: the float text
+     * json_union_to_text writes, for checking against Python.
+     */
+    public String formatFloats(String bits) {
+        StringBuilder b = new StringBuilder();
+        for (String h : bits.split(",")) {
+            b.append(JsonFinder.floatText(
+                Double.longBitsToDouble(Long.parseUnsignedLong(h, 16)))).append('\n');
+        }
+        return b.toString();
     }
 
     /** {@code fn(doc, *path)} for the Python API, as a Column. */
@@ -171,9 +281,42 @@ public final class JsonExactTier {
 
         @Override
         public Expression apply(Seq<Expression> args) {
+            if (fn.equals("json_union_to_text") || fn.equals("json_is_null")) {
+                int typeId = typeIdOrdinal(args);
+                if (typeId < 0) {
+                    return fallback.apply(args);
+                }
+                return fn.equals("json_is_null") ? isNullArm(args.apply(0), typeId)
+                                                 : unionToTextUdf(args);
+            }
             JsonFinder.Path path = literalPath(args);
             return path == null ? fallback.apply(args)
                                 : udf(name, fn, path, args);
+        }
+
+        /**
+         * The ordinal of the {@code type_id} field when the one argument is
+         * a union struct, else -1.
+         */
+        private static int typeIdOrdinal(Seq<Expression> args) {
+            if (args.size() != 1 || !args.apply(0).resolved()
+                    || !(args.apply(0).dataType() instanceof StructType)) {
+                return -1;
+            }
+            StructType t = (StructType) args.apply(0).dataType();
+            Option<Object> k = t.getFieldIndex("type_id");
+            return k.isDefined() && t.fields()[(Integer) k.get()].dataType()
+                instanceof ByteType ? (Integer) k.get() : -1;
+        }
+
+        /**
+         * {@code u IS NULL OR u.type_id IS NULL OR u.type_id = 0}, the
+         * null test union.json_is_null builds for the Python API.
+         */
+        private static Expression isNullArm(Expression u, int typeId) {
+            Expression tid = new GetStructField(u, typeId, Option.apply("type_id"));
+            return new Or(new Or(new IsNull(u), new IsNull(tid)),
+                new EqualTo(tid, Literal.create((byte) 0, DataTypes.ByteType)));
         }
 
         /** The path when the document is a string and the rest literals. */

@@ -1,6 +1,9 @@
 package jsonsparkext;
 
+import java.math.BigDecimal;
 import java.math.BigInteger;
+import java.math.MathContext;
+import java.math.RoundingMode;
 import java.util.ArrayList;
 import java.util.Arrays;
 import java.util.List;
@@ -8,8 +11,10 @@ import java.util.List;
 /**
  * Exact JSON path finder: the JVM port of the Python kernels' streaming
  * finder (datafusion_functions_json_spark/functions/core.py {@code find},
- * {@code find_raw}, {@code exists_at}, {@code length_at}) and of the
- * string coercions {@code parse_{int,float,bool}_like_rust}. The Python
+ * {@code find_raw}, {@code exists_at}, {@code length_at},
+ * {@code items_at}, {@code keys_at}), of the string coercions
+ * {@code parse_{int,float,bool}_like_rust} and of the canonicalizer
+ * {@code json_dumps_canonical}. The Python
  * code is the specification; this port is pinned to it row for row by
  * tests/test_jvm_tier.py.
  *
@@ -248,7 +253,7 @@ final class JsonFinder {
             return null;
         }
         JsonFinder f = lookupScalar(s, p, false);
-        return f.kind == STR ? f.decodedString() : null;
+        return f.kind == STR ? f.outputString(f.start + 1, f.end - 1) : null;
     }
 
     static Long getInt(String s, Path p) {
@@ -323,7 +328,7 @@ final class JsonFinder {
         JsonFinder f = lookupScalar(s, p, true);
         switch (f.kind) {
             case STR:
-                return f.decodedString();
+                return f.outputString(f.start + 1, f.end - 1);
             case MISSING:
             case NULL:
                 return null;
@@ -377,6 +382,314 @@ final class JsonFinder {
         } catch (Malformed e) {
             return null;
         }
+    }
+
+    // ---------------------------------------------------- union family
+
+    /**
+     * json_get (kernels.kernel_json_get): the union arm's type id and
+     * value, or null for the null arm: JSON null, a miss, an integer
+     * outside i64, a string holding a lone surrogate, an invalid document.
+     */
+    static Object[] getUnion(String s, Path p) {
+        if (s == null) {
+            return null;
+        }
+        JsonFinder f = lookupScalar(s, p, true);
+        Object v = f.unionValue();
+        return v == null ? null : new Object[] {f.kind, v};
+    }
+
+    /**
+     * json_union_to_text(json_get(doc, path)) in one pass
+     * (kernels.kernel_json_to_text_fused).
+     */
+    static String toTextFused(String s, Path p) {
+        if (s == null) {
+            return null;
+        }
+        JsonFinder f = lookupScalar(s, p, true);
+        Object v = f.unionValue();
+        return v == null ? null : unionText(f.kind, v);
+    }
+
+    /**
+     * json_is_null(json_get(doc, path)) in one pass
+     * (kernels.kernel_json_is_null_fused): whether the union holds the
+     * null arm. Containers never do, so they are not sliced.
+     */
+    static boolean isNullFused(String s, Path p) {
+        if (s == null) {
+            return true;
+        }
+        JsonFinder f = lookupScalar(s, p, true);
+        switch (f.kind) {
+            case MISSING:
+            case NULL:
+                return true;
+            case INT:
+            case STR:
+                return f.unionValue() == null;
+            default:
+                return false;
+        }
+    }
+
+    /**
+     * The value the union arm of the current lookup holds: Boolean, Long,
+     * Double, String, or the verbatim slice of a container; null for the
+     * null arm. A container found only by the unbounded re-read is null:
+     * the Python kernels slice containers with the depth-limited finder.
+     */
+    private Object unionValue() {
+        switch (kind) {
+            case BOOL:
+                return s.charAt(start) == 't';
+            case INT:
+                return parseLong(s.substring(start, end));
+            case FLOAT:
+                return Double.parseDouble(s.substring(start, end));
+            case STR:
+                return outputString(start + 1, end - 1);
+            case ARRAY:
+            case OBJECT:
+                return depthLimit == DEPTH_LIMIT ? s.substring(start, end) : null;
+            default:
+                return null;
+        }
+    }
+
+    /**
+     * Canonical JSON text of a union arm (core.json_dumps_canonical):
+     * floats as Python's repr, non-finite floats as null, strings quoted
+     * like json.dumps(..., ensure_ascii=False), containers verbatim.
+     */
+    static String unionText(int kind, Object v) {
+        switch (kind) {
+            case BOOL:
+                return (Boolean) v ? "true" : "false";
+            case INT:
+                return v.toString();
+            case FLOAT:
+                return floatText((Double) v);
+            case STR:
+                return quote((String) v);
+            default:
+                return (String) v;
+        }
+    }
+
+    /** json_get_array: the verbatim element slices; else NULL. */
+    static String[] getArray(String s, Path p) {
+        if (s == null || p.alwaysMissing) {
+            return null;
+        }
+        JsonFinder f = new JsonFinder(s, DEPTH_LIMIT);
+        try {
+            int i = f.navigate(p);
+            if (i < 0 || i >= f.n || s.charAt(i) != '[') {
+                return null;
+            }
+            List<String> items = new ArrayList<>();
+            i = f.skipWs(i + 1);
+            if (i < f.n && s.charAt(i) == ']') {
+                return new String[0];
+            }
+            while (true) {
+                int end = f.skipValue(i);
+                items.add(s.substring(i, end));
+                i = f.skipWs(end);
+                if (i < f.n && s.charAt(i) == ',') {
+                    i = f.skipWs(i + 1);
+                    continue;
+                }
+                if (i < f.n && s.charAt(i) == ']') {
+                    return items.toArray(new String[0]);
+                }
+                throw MALFORMED;
+            }
+        } catch (Malformed e) {
+            return null;
+        }
+    }
+
+    /**
+     * json_object_keys: the unescaped keys in document order, duplicates
+     * kept; NULL for a non-object, a miss, or a key holding a lone
+     * surrogate.
+     */
+    static String[] objectKeys(String s, Path p) {
+        if (s == null || p.alwaysMissing) {
+            return null;
+        }
+        JsonFinder f = new JsonFinder(s, DEPTH_LIMIT);
+        try {
+            int i = f.navigate(p);
+            if (i < 0 || i >= f.n || s.charAt(i) != '{') {
+                return null;
+            }
+            List<String> keys = new ArrayList<>();
+            boolean lone = false;
+            i = f.skipWs(i + 1);
+            if (i < f.n && s.charAt(i) == '}') {
+                return new String[0];
+            }
+            while (true) {
+                if (i >= f.n || s.charAt(i) != '"') {
+                    throw MALFORMED;
+                }
+                int keyEnd = f.scanString(i + 1);
+                String key = f.outputString(i + 1, keyEnd - 1);
+                lone |= key == null;
+                keys.add(key);
+                i = f.skipWs(keyEnd);
+                if (i >= f.n || s.charAt(i) != ':') {
+                    throw MALFORMED;
+                }
+                i = f.skipWs(f.skipValue(f.skipWs(i + 1)));
+                if (i < f.n && s.charAt(i) == ',') {
+                    i = f.skipWs(i + 1);
+                    continue;
+                }
+                if (i < f.n && s.charAt(i) == '}') {
+                    return lone ? null : keys.toArray(new String[0]);
+                }
+                throw MALFORMED;
+            }
+        } catch (Malformed e) {
+            return null;
+        }
+    }
+
+    // ------------------------------------------------------ formatting
+
+    /**
+     * A float as json.dumps writes it: Python's repr (the shortest digits
+     * that read back to the same double, the nearest such string, switching
+     * to an exponent below 1e-4 and from 1e16), or null when non-finite.
+     * Double.toString is not used: before JDK 19 it may print more digits
+     * than needed (JDK-4511638).
+     */
+    static String floatText(double d) {
+        if (Double.isNaN(d) || Double.isInfinite(d)) {
+            return "null";
+        }
+        if (d == 0) {
+            return Double.doubleToRawLongBits(d) < 0 ? "-0.0" : "0.0";
+        }
+        BigDecimal digits = shortest(Math.abs(d));
+        String ds = digits.unscaledValue().toString();
+        int decpt = ds.length() - digits.scale();
+        StringBuilder b = new StringBuilder(24);
+        if (d < 0) {
+            b.append('-');
+        }
+        if (decpt > 16 || decpt < -3) {
+            b.append(ds.charAt(0));
+            if (ds.length() > 1) {
+                b.append('.').append(ds, 1, ds.length());
+            }
+            int exp = decpt - 1;
+            b.append(exp < 0 ? "e-" : "e+");
+            if (Math.abs(exp) < 10) {
+                b.append('0');
+            }
+            b.append(Math.abs(exp));
+        } else if (decpt <= 0) {
+            b.append("0.");
+            for (int k = 0; k < -decpt; k++) {
+                b.append('0');
+            }
+            b.append(ds);
+        } else if (decpt >= ds.length()) {
+            b.append(ds);
+            for (int k = ds.length(); k < decpt; k++) {
+                b.append('0');
+            }
+            b.append(".0");
+        } else {
+            b.append(ds, 0, decpt).append('.').append(ds, decpt, ds.length());
+        }
+        return b.toString();
+    }
+
+    /**
+     * The shortest decimal that reads back as {@code d} (positive,
+     * finite), the nearest one when several have that length, trailing
+     * zeros stripped. If some p-digit decimal reads back, one with p + 1
+     * digits does too, so the search walks down from a length that works:
+     * Double.toString's, which reads back but may be a digit too long.
+     */
+    private static BigDecimal shortest(double d) {
+        BigDecimal exact = new BigDecimal(d);
+        int hi = new BigDecimal(Double.toString(d)).stripTrailingZeros().precision();
+        BigDecimal best = readsBack(exact, hi, d);
+        if (best == null) {
+            hi = 17;
+            best = readsBack(exact, hi, d);
+        }
+        for (int p = hi - 1; p >= 1; p--) {
+            BigDecimal c = readsBack(exact, p, d);
+            if (c == null) {
+                break;
+            }
+            best = c;
+        }
+        return best.stripTrailingZeros();
+    }
+
+    /**
+     * A {@code p}-digit decimal that reads back as {@code d}: the nearest
+     * one (ties to even), else the nearest on the other side of
+     * {@code d}; null when neither does.
+     */
+    private static BigDecimal readsBack(BigDecimal exact, int p, double d) {
+        BigDecimal near = exact.round(new MathContext(p, RoundingMode.HALF_EVEN));
+        if (near.doubleValue() == d) {
+            return near;
+        }
+        RoundingMode other = near.compareTo(exact) > 0 ? RoundingMode.FLOOR
+                                                        : RoundingMode.CEILING;
+        BigDecimal far = exact.round(new MathContext(p, other));
+        return far.doubleValue() == d ? far : null;
+    }
+
+    /** A string as json.dumps(s, ensure_ascii=False) quotes it. */
+    static String quote(String v) {
+        StringBuilder b = new StringBuilder(v.length() + 2).append('"');
+        for (int i = 0; i < v.length(); i++) {
+            char c = v.charAt(i);
+            switch (c) {
+                case '"':
+                    b.append("\\\"");
+                    break;
+                case '\\':
+                    b.append("\\\\");
+                    break;
+                case '\n':
+                    b.append("\\n");
+                    break;
+                case '\r':
+                    b.append("\\r");
+                    break;
+                case '\t':
+                    b.append("\\t");
+                    break;
+                case '\b':
+                    b.append("\\b");
+                    break;
+                case '\f':
+                    b.append("\\f");
+                    break;
+                default:
+                    if (c < 0x20) {
+                        b.append(String.format("\\u%04x", (int) c));
+                    } else {
+                        b.append(c);
+                    }
+            }
+        }
+        return b.append('"').toString();
     }
 
     // ------------------------------------------------------- coercions
@@ -802,6 +1115,25 @@ final class JsonFinder {
 
     private String decodedString() {
         return decode(start + 1, end - 1);
+    }
+
+    /**
+     * A scanned string body [from, to) as a result value: its text, or
+     * null when an escape left a lone surrogate, which jiter and
+     * serde_json reject and Spark's UTF-8 strings cannot hold.
+     */
+    private String outputString(int from, int to) {
+        String v = decode(from, to);
+        for (int i = 0; i < v.length(); i++) {
+            char c = v.charAt(i);
+            if (Character.isHighSurrogate(c) && i + 1 < v.length()
+                    && Character.isLowSurrogate(v.charAt(i + 1))) {
+                i++;
+            } else if (Character.isSurrogate(c)) {
+                return null;
+            }
+        }
+        return v;
     }
 
     /** The text of a scanned string body [from, to), escapes resolved. */

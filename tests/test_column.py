@@ -51,7 +51,7 @@ class TestOperatorSugar:
 
 
 class TestCallUnnesting:
-    def test_literal_chain_single_udf(self, spark):
+    def test_literal_chain_single_udf(self, spark, python_tier):
         # reference: tests/main.rs:1047-1056 — nested get flattens to one
         # call => ONE python UDF in the physical plan
         df = spark.createDataFrame([('{"a": {"b": 1}}',)], "j string")
@@ -60,7 +60,19 @@ class TestCallUnnesting:
         assert plan.count("ArrowEvalPython") == 1
         assert plan.count("json_get") == 1
 
-    def test_column_key_blocks_flattening(self, spark):
+    def test_literal_chain_single_udf_jvm_tier(self, spark):
+        # the same flattened chain on the JVM exact tier: one json_get
+        # call and no Python hop
+        if jsonf_jvm_tier.load(spark.sparkContext) is None:
+            pytest.skip("JVM exact tier unavailable")
+        df = spark.createDataFrame([('{"a": {"b": 1}}',)], "j string")
+        out = df.select(jsonf.col("j")["a"]["b"].alias("v"))
+        plan = physical_plan(out)
+        assert "EvalPython" not in plan
+        assert plan.count("json_get") == 1
+        assert out.collect()[0].v.int == 1
+
+    def test_column_key_blocks_flattening(self, spark, python_tier):
         # reference: tests/main.rs:1126-1136 — non-literal path must NOT
         # flatten; two UDF evaluations remain
         df = spark.createDataFrame([('{"a": {"b": 1}}', "a")], "j string, k string")
@@ -69,6 +81,20 @@ class TestCallUnnesting:
         plan = physical_plan(df.select(jsonf.json_get(inner, "b")))
         # two dependent UDF evaluations -> two ArrowEvalPython nodes
         assert plan.count("ArrowEvalPython") == 2
+
+    def test_column_key_blocks_flattening_jvm_tier(self, spark):
+        # on the JVM exact tier the outer literal-path json_get runs in the
+        # executor; the column-key inner call stays a Python UDF, and the
+        # two calls are still not flattened into one
+        if jsonf_jvm_tier.load(spark.sparkContext) is None:
+            pytest.skip("JVM exact tier unavailable")
+        df = spark.createDataFrame([('{"a": {"b": 1}}', "a")], "j string, k string")
+        inner = jsonf.col("j").get(F.col("k"))
+        out = df.select(jsonf.json_get(inner, "b").alias("v"))
+        plan = physical_plan(out)
+        assert plan.count("ArrowEvalPython") == 1
+        assert plan.count("json_get(") == 2
+        assert out.collect()[0].v.int == 1
 
     def test_typed_getter_after_chain_flattens(self, spark, python_tier):
         df = spark.createDataFrame([('{"a": {"b": 2}}',)], "j string")
