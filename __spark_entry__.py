@@ -76,10 +76,7 @@ def _lineitem_k(spark, sf_dir):
     # downstream is a dict-shortcut-able exact Python kernel
     # (sources/io.py spread="kernel") — tiny inputs stop paying a
     # full-core fan-out they cannot amortize; sf1+ inputs clear the
-    # cores×task-bytes product and spread exactly as before. JVM
-    # variant/native-tier entries stay on _lineitem (full width): their
-    # per-row parse cannot dedup and needs all cores even at sf0.1
-    # (measured 0.75 s at width 32 vs 3.6 s unspread).
+    # cores×task-bytes product and spread exactly as before.
     return load_table(spark, sf_dir, "lineitem", spread="kernel")
 
 
@@ -273,170 +270,6 @@ def _q_json_object_keys(spark, sf_dir):
     )
 
 
-def _q_json_get_int_variant(spark, sf_dir):
-    # tier comparison: Spark 4 VariantType native path, same semantics on
-    # data inside the native envelope (flat int values here).
-    # Stays on the unconditional spread (round-17): for a pure-JVM
-    # expression the exchange costs only ~30-40 ms at sf0.1 (vs ~0.2 s
-    # for a Python-hop query), and an unspread single-task pipeline is
-    # fully exposed to a stolen core — measured +65% inflation under a
-    # 16%-steal window vs the spread form's +30%.
-    from datafusion_functions_json_spark.functions import native
-
-    return _events(spark, sf_dir).select(
-        "event_id", native.json_get_int_variant("props", "k").alias("k")
-    )
-
-
-def _q_json_as_text_native(spark, sf_dir):
-    from datafusion_functions_json_spark.functions import native
-
-    return _events(spark, sf_dir).select(
-        "event_id", native.json_as_text_native("props", "k").alias("kt")
-    )
-
-
-def _q_json_get_int_sql_auto(spark, sf_dir):
-    # round-12: the auto-routed SQL surface — register_all(auto_tier=
-    # True) binds the CANONICAL name json_get_int to the Catalyst-
-    # inlined variant body (permissive JsonProfile, Spark 4), so plain
-    # SQL runs at variant-tier speed with zero Python hops. The default
-    # exact surface is restored before returning (spark.sql analyzes
-    # eagerly, so the returned plan keeps the inlined body).
-    from datafusion_functions_json_spark import register_all
-
-    _events(spark, sf_dir).createOrReplaceTempView("ev_sql_auto")
-    try:
-        routed = register_all(spark, auto_tier=True)
-        assert "json_get_int" in routed, routed
-        return spark.sql(
-            "select event_id, json_get_int(props, 'k') as k from ev_sql_auto"
-        )
-    finally:
-        register_all(spark)
-
-
-def _q_json_json_variant(spark, sf_dir):
-    # variant tier for json_get_json/json_length at a path: parse once
-    # into VariantType, re-serialize with to_json — all JVM, zero Python
-    # hops. Envelope: minified re-serialization matches DuckDB's
-    # json_extract rendering on int/string/container values (no floats,
-    # no raw-slice fidelity); pinned vs the exact tier in test_native.py
-    from datafusion_functions_json_spark.functions import native
-
-    li = _lineitem(spark, sf_dir).withColumn("j", _nested_json_col())
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        native.json_get_json_variant("j", "a").alias("a_json"),
-        native.json_get_json_variant("j", "a", "b").alias("b_json"),
-        native.json_length_variant("j", "a").alias("a_len"),
-        native.json_length_variant("j", "a", "b").alias("b_len"),
-    )
-
-
-def _q_get_array_variant(spark, sf_dir):
-    # variant tier for json_get_array/json_object_keys at a path —
-    # element texts CSV-joined (the driver's canonicalizer cannot sort
-    # list cells, same workaround as get_array_csv / embed_quantize)
-    from datafusion_functions_json_spark.functions import native
-
-    li = _lineitem(spark, sf_dir).withColumn("j", _nested_json_col())
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.array_join(
-            native.json_get_array_variant("j", "a", "b"), "|"
-        ).alias("b_elems"),
-        F.array_join(
-            native.json_object_keys_variant("j", "a"), "|"
-        ).alias("a_keys"),
-    )
-
-
-def _q_union_variant(spark, sf_dir):
-    # round-6: the union-typed `->` itself on the variant tier —
-    # json_get_variant builds the SAME tagged-union struct as the exact
-    # tier from pure JVM expressions (schema_of_variant dispatch,
-    # lambda-bound parse). Emits type_ids and arms across all the
-    # nested fixture's kinds; present-null $.d must be a whole-struct
-    # NULL (type_id reads back SQL NULL).
-    from datafusion_functions_json_spark.functions import native
-
-    li = _lineitem(spark, sf_dir).withColumn("j", _nested_json_col())
-    ua = native.json_get_variant("j", "a")
-    ub0 = native.json_get_variant("j", "a", "b", 0)
-    uflag = native.json_get_variant("j", "a", "b", 1, "c")
-    ud = native.json_get_variant("j", "d")
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        ua.getField("type_id").cast("int").alias("a_tid"),
-        ua.getField("object").alias("a_obj"),
-        ub0.getField("type_id").cast("int").alias("b0_tid"),
-        ub0.getField("int").alias("b0_int"),
-        uflag.getField("str").alias("flag"),
-        ud.getField("type_id").cast("int").alias("d_tid"),
-    )
-
-
-def _q_union_roundtrip_variant(spark, sf_dir):
-    # the union ROUNDTRIP fully zero-hop: json_get_variant builds the
-    # union struct from JVM variant expressions, json_union_to_text
-    # _native formats it back with pure Column expressions — no
-    # ArrowEvalPython anywhere in the plan. NOT a throughput win: the
-    # per-row expression tree (2 parses + schema_of_variant + typed
-    # gets per struct) measured 2.3 s vs the exact fused tier's 1.1 s
-    # at sf0.1 — the value is DEPLOYMENT reach (no Python workers, no
-    # Arrow memory) and tier parity, not speed; the fused exact tier
-    # stays the throughput recommendation for union workloads.
-    from datafusion_functions_json_spark.functions import native
-
-    li = _lineitem(spark, sf_dir).withColumn("j", _nested_json_col())
-    ua = native.json_get_variant("j", "a")
-    ud = native.json_get_variant("j", "d")
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        native.json_union_to_text_native(ua).alias("a_text"),
-        jsonf.json_is_null(ud).alias("d_is_null"),
-        jsonf.json_is_null(ua).alias("a_is_null"),
-    )
-
-
-def _q_json_contains_variant(spark, sf_dir):
-    # round-6 variant-tier widening: `?` as pure-JVM IS NOT NULL over
-    # try_variant_get — present-null ($.d) must be TRUE, missing FALSE,
-    # exactly the reference's json_contains semantics
-    from datafusion_functions_json_spark.functions import native
-
-    li = _lineitem(spark, sf_dir).withColumn("j", _nested_json_col())
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        native.json_contains_variant("j", "d").alias("has_d"),
-        native.json_contains_variant("j", "a", "x").alias("has_ax"),
-        native.json_contains_variant("j", "a", "b", 1).alias("has_ab1"),
-        native.json_contains_variant("j", "a", "b", 2).alias("has_ab2"),
-    )
-
-
-def _q_json_as_text_variant(spark, sf_dir):
-    # round-6 variant-tier widening: `->>` via the variant string cast
-    # (scalars bare, containers minified JSON, JSON null -> SQL NULL)
-    from datafusion_functions_json_spark.functions import native
-
-    li = _lineitem(spark, sf_dir).withColumn("j", _nested_json_col())
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        native.json_as_text_variant("j", "a", "b", 1, "c").alias("flag"),
-        native.json_as_text_variant("j", "a", "b", 0).alias("b0"),
-        native.json_as_text_variant("j", "d").alias("d_txt"),
-        native.json_as_text_variant("j", "a").alias("a_txt"),
-    )
-
-
 def _q_json_agg(spark, sf_dir):
     # flagship composition: JSON predicate + extraction + aggregation.
     # Written as conditional aggregation rather than filter-then-agg:
@@ -455,47 +288,11 @@ def _q_json_agg(spark, sf_dir):
     # unfused form; measured 0.88 s -> 0.79 s at sf0.1 (same window).
     ev = _events_k(spark, sf_dir)
     u = jsonf.json_extract_multi(
-        "props", {"c": ("exists", "k"), "v": ("int", "k")}, tier="exact"
+        "props", {"c": ("exists", "k"), "v": ("int", "k")}
     ).alias("u")
     return (
         ev.select("event_type", u)
         .select("event_type", "u.c", "u.v")
-        .groupBy("event_type")
-        .agg(
-            F.sum(F.when(F.col("c"), F.col("v"))).alias("sum_k"),
-            F.count(F.when(F.col("c"), F.lit(1))).alias("n"),
-        )
-        .filter(F.col("n") > 0)
-    )
-
-
-def _q_json_agg_variant(spark, sf_dir):
-    # the flagship composition on the zero-hop VARIANT tier — the scale
-    # path when raw-slice union fidelity isn't needed: same conditional
-    # aggregation as _q_json_agg but json_contains_variant /
-    # json_get_int_variant are pure Catalyst expressions, so the whole
-    # plan is one scan + one partial-agg exchange with NO Python hop.
-    # FORMULATION ADJUDICATED at sf100 (round 15, one interleaved
-    # window, min-of-3): this two-twin form 10.6 s ≈ a shared-
-    # projection parse 10.5 s, while the HOF-fused
-    # json_extract_multi(tier='variant') form reads 15.0 s — at TWO
-    # fields the transform() lambda binding (codegen fallback) costs
-    # more than the second parse; the fused form wins on WIDE
-    # extractions (multi_extract_variant, 5 fields). The exact tier's
-    # orjson kernel reads 8.9 s in the same window: at tiny-doc
-    # scan-bound scale the variant tier's JVM parse throughput sits
-    # ~20% below Arrow+orjson, so this twin's value is zero-Python
-    # deployment and small/mid-scale latency (r12: 25% faster at sf1),
-    # not raw large-scale throughput — BASELINE.md round-15.
-    from datafusion_functions_json_spark.functions import native
-
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.select(
-            "event_type",
-            native.json_contains_variant("props", "k").alias("c"),
-            native.json_get_int_variant("props", "k").alias("v"),
-        )
         .groupBy("event_type")
         .agg(
             F.sum(F.when(F.col("c"), F.col("v"))).alias("sum_k"),
@@ -640,13 +437,7 @@ def _q_dict_extract_rowwise(spark, sf_dir):
 
 
 def _q_multi_extract(spark, sf_dir):
-    # fused extraction: one parse + one Arrow hop for 5 typed fields.
-    # tier PINNED to exact: since r16 the default is tier='auto', which
-    # on this 5-field all-expressible spec would pick the fused variant
-    # tier — identical results (multi_extract_variant is the green twin
-    # on the same oracle) but this entry exists to MEASURE the exact
-    # Arrow+orjson path; the auto default is driver-covered by
-    # multi_extract_auto.
+    # fused extraction: one parse for 5 typed fields.
     li = _lineitem_k(spark, sf_dir).withColumn("j", _nested_json_col())
     u = jsonf.json_extract_multi(
         "j",
@@ -657,76 +448,6 @@ def _q_multi_extract(spark, sf_dir):
             "len_ab": ("length", "a", "b"),
             "has_d": ("exists", "d"),
         },
-        tier="exact",
-    ).alias("u")
-    return li.select("l_orderkey", "l_linenumber", u).select(
-        "l_orderkey", "l_linenumber", "u.*"
-    )
-
-
-def _q_multi_extract_variant(spark, sf_dir):
-    # round-6 stretch: the SAME 5-field fused extraction as
-    # multi_extract but on the zero-hop variant tier — the parsed
-    # variant is lambda-bound once per row (transform/array trick in
-    # multi._variant_multi), so the parse is structurally single;
-    # no ArrowEvalPython at all
-    li = _lineitem(spark, sf_dir).withColumn("j", _nested_json_col())
-    u = jsonf.json_extract_multi(
-        "j",
-        {
-            "b0": ("int", "a", "b", 0),
-            "flag": ("str", "a", "b", 1, "c"),
-            "d_text": ("text", "d"),
-            "len_ab": ("length", "a", "b"),
-            "has_d": ("exists", "d"),
-        },
-        tier="variant",
-    ).alias("u")
-    return li.select("l_orderkey", "l_linenumber", u).select(
-        "l_orderkey", "l_linenumber", "u.*"
-    )
-
-
-def _q_multi_extract_auto(spark, sf_dir):
-    # round-16: the DEFAULT tier (auto) on the same 5-field spec. The
-    # permissive JsonProfile claim is what unlocks the JVM tiers (a
-    # bare call with NO profile stays on the exact tier — fidelity
-    # default, multi._auto_tier step 0); with the claim, 5 fields >=
-    # the 3-field break-even resolves to the fused variant tier. This
-    # entry driver-checks the auto policy end-to-end against the same
-    # oracle as both explicit-tier twins.
-    li = _lineitem(spark, sf_dir).withColumn("j", _nested_json_col())
-    u = jsonf.json_extract_multi(
-        "j",
-        {
-            "b0": ("int", "a", "b", 0),
-            "flag": ("str", "a", "b", 1, "c"),
-            "d_text": ("text", "d"),
-            "len_ab": ("length", "a", "b"),
-            "has_d": ("exists", "d"),
-        },
-        json_profile=jsonf.JsonProfile(),
-    ).alias("u")
-    return li.select("l_orderkey", "l_linenumber", u).select(
-        "l_orderkey", "l_linenumber", "u.*"
-    )
-
-
-def _q_multi_extract_perfield(spark, sf_dir):
-    # round-16: a 2-field auto call with the permissive claim — BELOW
-    # the ~3-field fused break-even, so auto (no input_df → size
-    # unknown → large) resolves to variant_perfield: two independent
-    # parse+get chains that stay inside whole-stage codegen instead of
-    # the HOF-bound fused form (the sf100-measured 15.0 s vs 10.6 s
-    # case, VERDICT r15 #4)
-    li = _lineitem(spark, sf_dir).withColumn("j", _nested_json_col())
-    u = jsonf.json_extract_multi(
-        "j",
-        {
-            "b0": ("int", "a", "b", 0),
-            "flag": ("str", "a", "b", 1, "c"),
-        },
-        json_profile=jsonf.JsonProfile(),
     ).alias("u")
     return li.select("l_orderkey", "l_linenumber", u).select(
         "l_orderkey", "l_linenumber", "u.*"
@@ -4511,11 +4232,6 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # queries(); this dict is the single source of truth for the
     # registry, so a key can never be bound twice to diverging builders.
     return {
-        "json_contains_variant": _q_json_contains_variant,
-        "json_as_text_variant": _q_json_as_text_variant,
-        "multi_extract_variant": _q_multi_extract_variant,
-        "multi_extract_auto": _q_multi_extract_auto,
-        "multi_extract_perfield": _q_multi_extract_perfield,
         "line_dedup": _q_line_dedup,
         "get_array_csv": _q_get_array_csv,
         "json_explode": _q_json_explode,
@@ -4530,9 +4246,6 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "json_contains": _q_json_contains,
         "json_length": _q_json_length,
         "json_object_keys": _q_json_object_keys,
-        "json_get_int_variant": _q_json_get_int_variant,
-        "json_get_int_sql_auto": _q_json_get_int_sql_auto,
-        "json_as_text_native": _q_json_as_text_native,
         "nested_get_int": _q_nested_get_int,
         "nested_contains": _q_nested_contains,
         "nested_length_keys": _q_nested_length_keys,
@@ -4569,7 +4282,6 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "video_features": _q_video_features,
         "media_features": _q_media_features,
         "stream_decontam": _q_stream_decontam,
-        "json_agg_variant": _q_json_agg_variant,
         "bloom_join": _q_bloom_join,
         "skew_report": _q_skew_report,
         "gopher_filter": _q_gopher_filter,
@@ -4614,15 +4326,12 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "neardedup_compact_twin": _q_neardedup_compact_twin,
         "knn_recall": _q_knn_recall,
         "data_quality": _q_data_quality,
-        "union_variant": _q_union_variant,
-        "union_roundtrip_variant": _q_union_roundtrip_variant,
         "tpch_q13": _q_tpch_q13,
         "tpch_q17": _q_tpch_q17,
         "tpch_q22": _q_tpch_q22,
         "bigram_lm": _q_bigram_lm,
         "ann_recall": _q_ann_recall,
         "media_meta": _q_media_meta,
-        "json_json_variant": _q_json_json_variant,
         "kmeans": _q_kmeans,
         "stratified_sample": _q_stratified_sample,
         "decontam": _q_decontam,
@@ -4662,7 +4371,6 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ivf_topk": _q_ivf_topk,
         "ivf_recall": _q_ivf_recall,
         "embedding_dups": _q_embedding_dups,
-        "get_array_variant": _q_get_array_variant,
         "dup_spans": _q_dup_spans,
         "from_scalar": _q_from_scalar,
         "sql_operators": _q_sql_operators,
@@ -4754,30 +4462,6 @@ def oracle_sql() -> dict[str, str]:
             "select event_id, array_to_string(json_keys(props), ',') as keys_csv "
             "from events"
         ),
-        "json_get_int_variant": (
-            f"select event_id, try_cast({jx} as bigint) as k from events"
-        ),
-        "json_get_int_sql_auto": (
-            f"select event_id, try_cast({jx} as bigint) as k from events"
-        ),
-        "json_as_text_native": (
-            "select event_id, json_extract_string(props,'$.k') as kt from events"
-        ),
-        "json_json_variant": (
-            f"select l_orderkey, l_linenumber, "
-            f"json_extract({nested}, '$.a')::varchar as a_json, "
-            f"json_extract({nested}, '$.a.b')::varchar as b_json, "
-            f"len(json_keys({nested}, '$.a'))::bigint as a_len, "
-            f"json_array_length({nested}, '$.a.b')::bigint as b_len "
-            f"from lineitem"
-        ),
-        "get_array_variant": (
-            f"select l_orderkey, l_linenumber, "
-            f"json_extract({nested}, '$.a.b[0]')::varchar || '|' || "
-            f"json_extract({nested}, '$.a.b[1]')::varchar as b_elems, "
-            f"array_to_string(json_keys({nested}, '$.a'), '|') as a_keys "
-            f"from lineitem"
-        ),
         "video_features": (
             # closed-form twin of the planted AVI fixture: frame i of
             # doc d is solid (d*37+11i, d*59+23i, d*83+41i) % 256, so
@@ -4791,50 +4475,7 @@ def oracle_sql() -> dict[str, str]:
             "+ 0.114 * ((doc_id * 83 + i * 41) % 256)) / 255.0, 6) as f0 "
             "from v"
         ),
-        "union_roundtrip_variant": (
-            # variant tier re-serializes: minified a_text (the exact
-            # twin union_roundtrip reconstructs the RAW spaced text)
-            "select l_orderkey, l_linenumber, "
-            "'{\"b\":[' || (l_orderkey % 10) || ',{\"c\":\"' || l_returnflag "
-            "|| '\"}]}' as a_text, "
-            "true as d_is_null, false as a_is_null from lineitem"
-        ),
-        "union_variant": (
-            # minified object arm matches DuckDB's json_extract
-            # rendering (same envelope as json_json_variant); JSON-null
-            # $.d is a whole-struct NULL so its type_id reads SQL NULL
-            f"select l_orderkey, l_linenumber, "
-            f"6 as a_tid, json_extract({nested}, '$.a')::varchar as a_obj, "
-            f"2 as b0_tid, (l_orderkey % 10)::bigint as b0_int, "
-            f"l_returnflag as flag, NULL::int as d_tid "
-            f"from lineitem"
-        ),
-        "json_contains_variant": (
-            f"select l_orderkey, l_linenumber, "
-            f"json_type({nested}, '$.d') is not null as has_d, "
-            f"json_type({nested}, '$.a.x') is not null as has_ax, "
-            f"json_type({nested}, '$.a.b[1]') is not null as has_ab1, "
-            f"json_type({nested}, '$.a.b[2]') is not null as has_ab2 "
-            f"from lineitem"
-        ),
-        "json_as_text_variant": (
-            f"select l_orderkey, l_linenumber, "
-            f"json_extract_string({nested}, '$.a.b[1].c') as flag, "
-            f"json_extract_string({nested}, '$.a.b[0]') as b0, "
-            f"json_extract_string({nested}, '$.d') as d_txt, "
-            f"json_extract({nested}, '$.a')::varchar as a_txt "
-            f"from lineitem"
-        ),
         "json_agg": (
-            "select event_type, sum(try_cast(json_extract(props,'$.k') as bigint))::bigint as sum_k, "
-            "count(*) as n from events "
-            "where json_type(props,'$.k') is not null group by event_type"
-        ),
-        # identical twin for the variant-tier flagship: present-'k'
-        # filter + int extraction agree across tiers on this data
-        # (props.k values are JSON ints; variant's extra string
-        # coercions never fire)
-        "json_agg_variant": (
             "select event_type, sum(try_cast(json_extract(props,'$.k') as bigint))::bigint as sum_k, "
             "count(*) as n from events "
             "where json_type(props,'$.k') is not null group by event_type"
@@ -4892,8 +4533,6 @@ def oracle_sql() -> dict[str, str]:
             f"json_array_length({nested}, '$.a.b')::bigint as len_ab, "
             f"json_type({nested}, '$.d') is not null as has_d from lineitem"
         ),
-        # identical twin for the variant tier: every field here sits
-        # inside the variant envelope (no floats/containers re-encoded)
         # closed-form twin of the planted solid-color PPM: every
         # luma-grid cell of doc d equals Rec.601 luma of
         # (29d, 47d+5, 71d+9) % 256
@@ -4911,32 +4550,6 @@ def oracle_sql() -> dict[str, str]:
             "select doc_id as media_id, 16 as height, 16 as width, "
             "3 as channels, true as ok "
             "from documents where doc_id < 50"
-        ),
-        "multi_extract_variant": (
-            f"select l_orderkey, l_linenumber, "
-            f"try_cast(json_extract({nested}, '$.a.b[0]') as bigint) as b0, "
-            f"json_extract_string({nested}, '$.a.b[1].c') as flag, "
-            f"json_extract_string({nested}, '$.d') as d_text, "
-            f"json_array_length({nested}, '$.a.b')::bigint as len_ab, "
-            f"json_type({nested}, '$.d') is not null as has_d from lineitem"
-        ),
-        # r16: the auto DEFAULT (resolves to fused variant at 5 fields)
-        # against the same oracle as its explicit-tier twins
-        "multi_extract_auto": (
-            f"select l_orderkey, l_linenumber, "
-            f"try_cast(json_extract({nested}, '$.a.b[0]') as bigint) as b0, "
-            f"json_extract_string({nested}, '$.a.b[1].c') as flag, "
-            f"json_extract_string({nested}, '$.d') as d_text, "
-            f"json_array_length({nested}, '$.a.b')::bigint as len_ab, "
-            f"json_type({nested}, '$.d') is not null as has_d from lineitem"
-        ),
-        # r16: 2-field auto (resolves to variant_perfield — codegen,
-        # N independent parses)
-        "multi_extract_perfield": (
-            f"select l_orderkey, l_linenumber, "
-            f"try_cast(json_extract({nested}, '$.a.b[0]') as bigint) as b0, "
-            f"json_extract_string({nested}, '$.a.b[1].c') as flag "
-            f"from lineitem"
         ),
         "union_roundtrip": (
             # our a_text preserves the document's RAW bytes (spacing

@@ -37,11 +37,8 @@ BENCH_QUERIES = [
     # JSON extraction surface
     "json_agg",            # contains-filter + int-extract + group agg
     "json_get_int",        # plain per-row extraction (exact tier)
-    "json_get_int_variant",  # same extraction via Spark 4 VariantType
-    "json_as_text_native",   # same via get_json_object
     "nested_get_str",      # 4-level path on synthesized nested docs
     "multi_extract",       # fused 5-field extraction, one parse per doc
-    "multi_extract_variant",  # same 5 fields, zero-hop variant tier
     "union_roundtrip",     # union semantics (fused multi kinds)
     # relational
     "tpch_q1",

@@ -44,7 +44,7 @@ from .functions import multi as _multi, udfs as _udfs  # noqa: E402
 _register_pickle_by_value(_core, _kernels, _udfs, _multi, _register_mod)
 
 from .column import JsonColumn, col
-from .functions.multi import json_extract_multi
+from .functions.multi import JsonProfile, json_extract_multi
 from .functions.api import (
     json_as_text,
     json_contains,
@@ -65,8 +65,7 @@ from .functions.api import (
     scalar_to_json,
 )
 from .functions.distinct_eval import eval_per_distinct
-from .functions.native import JsonProfile, recommend_tier, tier_callable
-from .register import register_all, register_native, register_pipeline
+from .register import register_all, register_pipeline
 from .sql import rewrite_sql, sql
 from .union import UNION_DDL, UNION_SCHEMA, format_union_value
 
@@ -93,10 +92,7 @@ __all__ = [
     "json_extract_multi",
     "eval_per_distinct",
     "JsonProfile",
-    "recommend_tier",
-    "tier_callable",
     "register_all",
-    "register_native",
     "register_pipeline",
     "rewrite_sql",
     "sql",

@@ -120,6 +120,19 @@ except ImportError:  # pragma: no cover
 # over-trigger; that's a conservative fallback, never a wrong answer.
 _BIG_DIGITS = re.compile(r"[0-9]{19}")
 
+# The streaming finder gives up on values nested deeper than about this
+# many containers (CPython's recursion limit; JsonFinder.DEPTH_LIMIT on
+# the JVM tier is the same number), and orjson 3.8 crashes the process
+# on documents some 70,000 levels deep. A document with fewer '{'/'['
+# characters than this cannot nest that deep, so only such documents
+# reach orjson; the rest take the streaming finder on both tiers.
+DEPTH_LIMIT = 960
+
+
+def _may_nest_too_deep(s: str) -> bool:
+    return s.count("{") + s.count("[") >= DEPTH_LIMIT
+
+
 def _raw_decode(s: str, i: int):
     """C-accelerated ``JSONDecoder.raw_decode`` with a process-local
     decoder instance.
@@ -342,6 +355,8 @@ def find_scalar(s, path):
             return find(s, path)
     if _IS_ORJSON and _BIG_DIGITS.search(s) is not None:
         return find(s, path)
+    if _may_nest_too_deep(s):
+        return find(s, path)
     try:
         doc = _loads(s)
     except Exception:
@@ -414,6 +429,7 @@ def make_find_scalar(path):
     fallback = find
     loads = _loads
     big = _BIG_DIGITS.search if _IS_ORJSON else None
+    too_deep = _may_nest_too_deep
 
     def find_scalar_const(s):
         if s is None:
@@ -424,6 +440,8 @@ def make_find_scalar(path):
             if s.count(nd) > 1:
                 return fallback(s, path)
         if big is not None and big(s) is not None:
+            return fallback(s, path)
+        if too_deep(s):
             return fallback(s, path)
         try:
             doc = loads(s)

@@ -23,7 +23,7 @@ the computed table is what AQE sees — no stats guessing).
 Exactness: the join key is the raw document string compared null-safely
 (``eqNullSafe``), so results are byte-identical to evaluating per row —
 including NULL and malformed documents, which our kernels map to
-deterministic fallbacks. No semantic envelope, unlike the variant tier.
+deterministic fallbacks.
 
 Measured break-even (round 14, local[32], 1M rows, D=100, two exact-
 tier extractions, min-of-3 noop-sink writes, window steal 0.1%):

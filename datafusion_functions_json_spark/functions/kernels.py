@@ -142,7 +142,8 @@ def _fast_mask(json_vals, needles, check_big):
     """Batch-vectorized evaluation of ``find_scalar``'s textual guards
     (round-17 optimization, guide §4.2): True where a row may take the
     loads+walk fast path — no backslash AND every queried path key
-    occurs at most once AND (when ``check_big``) no 19-digit run.
+    occurs at most once AND fewer than ``core.DEPTH_LIMIT`` ``{``/``[``
+    characters AND (when ``check_big``) no 19-digit run.
     Identical conditions to the per-row guards, evaluated in one
     pyarrow.compute pass over the whole Arrow batch instead of 2+K
     C-string calls per row (measured 2.2x on the per-row guard cost at
@@ -164,6 +165,8 @@ def _fast_mask(json_vals, needles, check_big):
         except Exception:
             return None
     m = pc.invert(pc.match_substring(arr, "\\"))
+    brackets = pc.add(pc.count_substring(arr, "{"), pc.count_substring(arr, "["))
+    m = pc.and_kleene(m, pc.less(brackets, core.DEPTH_LIMIT))
     for nd in needles:
         m = pc.and_kleene(m, pc.less_equal(pc.count_substring(arr, nd), 1))
     if check_big:

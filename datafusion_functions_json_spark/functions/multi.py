@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from . import core, jvm_tier
 
-__all__ = ["json_extract_multi", "FIELD_KINDS"]
+__all__ = ["json_extract_multi", "FIELD_KINDS", "JsonProfile"]
 
 FIELD_KINDS = {
     "str": "string",
@@ -196,217 +196,36 @@ def _fallback_one(s, kind: str, path):
     raise ValueError(f"unknown field kind {kind!r}")
 
 
-# kinds expressible on the pure-JVM variant tier (functions/native.py)
-# and their per-field builders; union kinds need the exact tier (the
-# union struct + raw-slice fidelity have no variant equivalent)
-_VARIANT_KINDS = frozenset(
-    {"str", "int", "float", "bool", "text", "length", "exists"}
-)
-
-
-def _variant_multi(json_col, specs) -> Column:
-    # ONE parse per document, enforced structurally: the parsed variant
-    # is bound to a higher-order-function lambda variable
-    # (transform(array(parse), x -> struct(...))[0]), which Catalyst
-    # evaluates exactly once per row — naive per-field composition
-    # re-parses per field (measured linear in field count; codegen
-    # subexpression elimination does not fire on variant expressions)
-    from . import native
-
-    v = native.parse_variant(json_col)
-    return F.transform(
-        F.array(v),
-        lambda x: F.struct(
-            *(native.variant_field(x, p, k).alias(n) for n, k, p in specs)
-        ),
-    )[0]
-
-
-def _variant_perfield(json_col, specs) -> Column:
-    # N independent parses, NO lambda binding: each field is a plain
-    # parse_json+try_variant_get chain, so the projection stays inside
-    # whole-stage codegen (the HOF binding above is a codegen FALLBACK —
-    # measured at sf100 r15: below ~3 fields the interpreted projection
-    # costs more than the 1-2 parses it saves, fused 15.0 s vs two
-    # independent single-field twins 10.6 s on 100M docs)
-    from . import native
-
-    return F.struct(
-        *(
-            native.variant_field(native.parse_variant(json_col), p, k).alias(n)
-            for n, k, p in specs
-        )
-    )
-
-
-# tier='auto' crossover constants — both measured round 15 at sf100
-# (BASELINE.md decade ledger). Below _HOF_MIN_FIELDS the fused
-# HOF-bound form's interpreted projection costs more than the parses it
-# saves; below _SMALL_INPUT_BYTES the tier difference is immaterial and
-# the exact tier (reference-fidelity, zero envelope caveats) wins by
-# default. Mirrors cosine_topk's impl='auto' (operators/similarity.py).
-_HOF_MIN_FIELDS = 3
-_SMALL_INPUT_BYTES = 64 << 20
-
-
-def _auto_tier(specs, json_profile, input_df=None) -> str:
-    """Resolve ``tier='auto'`` to one of ``exact`` / ``variant`` (fused
-    HOF, one parse) / ``variant_perfield`` (N parses, stays in codegen).
-
-    Gate first, then crossover:
-
-    0. ``json_profile is None`` → ``exact``, always. The JVM tiers are
-       only PROVABLY equivalent relative to a caller's claim about the
-       data (the :class:`~.native.JsonProfile` flags); with no claim
-       nothing is proven, and the module's contract — results identical
-       to N single-field calls on ANY input — wins. This is why the
-       r16 default-tier change (``tier='auto'``) is bit-compatible with
-       r15's ``tier='exact'`` default: speed is one explicit
-       ``json_profile=JsonProfile()`` away, silent divergence never is.
-    1. A JVM tier is eligible iff Spark >= 4, every requested kind/path
-       is variant-expressible, and the profile doesn't disqualify the
-       corresponding function's envelope (same rules as
-       :func:`~.native.recommend_tier`) — otherwise ``exact``.
-       A disqualified AUTO silently falls back — the point is "fastest
-       equivalent without reading envelope docs"; callers who want a
-       hard error opt into ``tier='variant'``.
-    2. ``len(specs) >= 3`` → fused ``variant`` (one parse for N fields;
-       the HOF binding's codegen-fallback cost amortizes — measured
-       break-even ~3 fields at sf100, round 15).
-    3. 1-2 fields: the fused form LOSES; pick between per-field variant
-       and exact by the optimizer's free size statistic when
-       ``input_df`` was provided: below ~64 MB the difference is
-       immaterial and ``exact`` (the reference-fidelity tier) wins by
-       default; large or UNKNOWN (no ``input_df``, or Spark Connect
-       where plan stats are unreachable) → ``variant_perfield``
-       (measured ~20% under Arrow+orjson on tiny-doc scans, no Python
-       workers — the conservative choice at scale)."""
-    import pyspark
-
-    from .native import _jvm_tier_ok, jsonpath, parse_spark_version
-
-    if json_profile is None:
-        return "exact"  # no data claim -> nothing provable -> fidelity
-    try:
-        ver = parse_spark_version(pyspark.__version__)
-    except ValueError:
-        return "exact"
-    if ver < (4, 0):
-        return "exact"
-    p = json_profile
-    kind_fn = {
-        "str": "json_get_str",
-        "int": "json_get_int",
-        "float": "json_get_float",
-        "bool": "json_get_bool",
-        "text": "json_as_text",
-        "length": "json_length",
-        "exists": "json_contains",
-    }
-    for _, kind, path in specs:
-        if kind not in _VARIANT_KINDS or kind not in kind_fn:
-            return "exact"
-        if not _jvm_tier_ok(kind_fn[kind], "variant", p):
-            return "exact"
-        try:
-            jsonpath(path)
-        except ValueError:
-            return "exact"  # key inexpressible in JSONPath syntax
-    if len(specs) >= _HOF_MIN_FIELDS:
-        return "variant"
-    if input_df is not None:
-        from ..plans import plan_size_bytes
-
-        sz = plan_size_bytes(input_df)
-        if sz is not None and sz < _SMALL_INPUT_BYTES:
-            return "exact"
-    return "variant_perfield"
+class JsonProfile:
+    """A claim about the data that :func:`json_extract_multi` and
+    :func:`~..register.register_all` accept and ignore, so existing
+    ``json_profile=JsonProfile()`` calls keep working: every call runs
+    on the exact tier."""
 
 
 def json_extract_multi(
     json_col,
     fields: Mapping[str, Tuple],
     *,
-    tier: str = "auto",
     json_profile=None,
-    input_df=None,
 ) -> Column:
     """Extract N typed fields from one JSON column with ONE parse per
     document.
 
     ``fields``: ``{out_name: (kind, *path)}`` with kind in
-    ``FIELD_KINDS`` ({str,int,float,bool,text,length,exists}) and path
-    elements str (key) / int (index).
+    ``FIELD_KINDS`` ({str,int,float,bool,text,length,exists,union_text,
+    union_isnull}) and path elements str (key) / int (index).
 
     Returns a struct column; expand with ``.select(out["*"])`` or
     ``F.col("out.*")``.
 
-    Scale: for K fields this replaces K ArrowEvalPython round trips and
-    K parses with 1 + 1 — on wide-extraction workloads the dominant cost
-    (parse) is paid once.
+    With the JVM exact tier loaded every field is one of its columns and
+    no document crosses to Python; otherwise one Arrow UDF parses each
+    document once for all K fields, replacing K ArrowEvalPython round
+    trips and K parses with 1 + 1.
 
-    ``tier="variant"`` — ZERO-hop JVM fast path via Spark 4's
-    VariantType (functions/native.py): every field compiles to
-    ``try_variant_get`` over ONE parsed variant, bound per row to a
-    higher-order-function lambda variable so the parse is structurally
-    single (codegen subexpression elimination does NOT fire on variant
-    expressions — measured) — one parse, N fields, no Python. CAVEAT
-    measured at sf100 (round 15, 100M tiny docs, 2 fields): the HOF
-    binding is a whole-stage-codegen FALLBACK, and below ~3 fields its
-    interpreted-projection cost exceeds the parses it saves (fused
-    15.0 s vs two independent single-field twins 10.6 s in one
-    interleaved window) — prefer the single-field ``*_variant`` twins
-    for 1-2 fields; the fused path wins on wide extractions (the
-    5-field multi_extract_variant beats DuckDB at sf1). OPT-IN
-    because the variant envelope is not bit-equal to the exact tier
-    (container/float re-serialization for ``text``, cast-based string
-    coercions; see native.py's envelope docs); union kinds and
-    JSONPath-inexpressible keys raise. The bench shows the Arrow hop
-    alone costs ~0.3 s/600k rows — this path removes it entirely.
-
-    ``tier="variant_perfield"`` — N independent parse+get chains, one
-    per field: more parses than the fused form but NO HOF binding, so
-    the projection stays inside whole-stage codegen. The measured
-    winner for 1-2 fields at scan scale (see the sf100 numbers above);
-    same envelope caveats as ``"variant"``.
-
-    ``tier="auto"`` (DEFAULT since round 16) — pick the fastest
-    PROVABLY-EQUIVALENT tier for a :class:`~.native.JsonProfile`
-    (``json_profile`` kwarg). **No profile → exact**: the JVM tiers are
-    only provably equivalent relative to a claim about the data, so a
-    bare call keeps r15's exact-tier results bit-for-bit; pass
-    ``json_profile=JsonProfile()`` (the permissive claim: no mixed-type
-    paths, no trailing garbage, no raw-slice needs...) to unlock the
-    JVM tiers. Given a profile: exact whenever any
-    field's envelope or Spark < 4 disqualifies the JVM tiers (silent
-    fallback instead of the variant tier's hard errors); otherwise
-    fused ``variant`` at >= 3 fields, ``variant_perfield`` at 1-2
-    fields — except that when ``input_df`` (the DataFrame the column
-    will be selected from) is provided and the optimizer's free size
-    statistic reads under ~64 MB, 1-2-field extractions take the exact
-    tier (the difference is immaterial below the crossover and exact
-    has zero envelope caveats). Unknown size — no ``input_df``, or
-    Spark Connect where plan stats are unreachable — is treated as
-    LARGE, mirroring ``cosine_topk(impl='auto')``. Both crossovers
-    (field count ~3, ~64 MB) measured round 15 at sf100.
-
-    .. versionchanged:: round 16
-       ``tier='auto'`` with **no** ``json_profile`` now resolves to
-       ``exact`` (previously auto assumed the permissive profile and
-       could pick a JVM tier). Results are identical either way, but
-       callers who passed ``tier='auto'`` explicitly without a profile
-       regain the ArrowEvalPython hop — a silent plan change. To keep
-       the JVM tier, pass ``json_profile=JsonProfile()`` (one line; it
-       IS the equivalence claim the old behavior silently assumed).
-       A runtime warning is not emitted because the explicit and
-       default spellings are indistinguishable at the call site and the
-       default (bare) call is the common, correctly-exact case.
+    ``json_profile`` is accepted and ignored (see :class:`JsonProfile`).
     """
-    if tier not in ("exact", "variant", "variant_perfield", "auto"):
-        raise ValueError(
-            f"unknown tier {tier!r}; expected "
-            "exact|variant|variant_perfield|auto"
-        )
     if isinstance(json_col, str):
         json_col = F.col(json_col)
     specs = []
@@ -418,18 +237,6 @@ def json_extract_multi(
                 f"of {sorted(FIELD_KINDS)}"
             )
         specs.append((name, kind, tuple(path)))
-    if tier == "auto":
-        tier = _auto_tier(specs, json_profile, input_df)
-    if tier in ("variant", "variant_perfield"):
-        bad = sorted({k for _, k, _ in specs if k not in _VARIANT_KINDS})
-        if bad:
-            raise ValueError(
-                f"kinds {bad} are not expressible on the variant tier; "
-                "use tier='exact'"
-            )
-        if tier == "variant_perfield":
-            return _variant_perfield(json_col, specs)
-        return _variant_multi(json_col, specs)
     ret = "struct<" + ",".join(f"`{n}`:{FIELD_KINDS[k]}" for n, k, _ in specs) + ">"
     # parse_constant: reject NaN/Infinity tokens like the reference's
     # jiter — such documents are invalid, every field takes the fallback
@@ -474,6 +281,7 @@ def json_extract_multi(
     from .kernels import _fast_mask as fast_mask  # closure-captured
 
     text_value = core.text_value
+    too_deep = core._may_nest_too_deep
 
     # Arrow output type per field (matches FIELD_KINDS / ret exactly)
     _pa_kind = {
@@ -499,6 +307,7 @@ def json_extract_multi(
                     "\\" in s
                     or any(s.count(q) > 1 for q in quoted_keys)
                     or (big_digits is not None and big_digits(s) is not None)
+                    or too_deep(s)
                 )
             if use_fast:
                 doc = fast_loads(s)
@@ -587,10 +396,7 @@ def json_extract_multi(
             children = [pc.take(c, idx) for c in children]
         return pa.StructArray.from_arrays(children, names=out_names)
 
-    if json_profile is None:
-        # the JVM exact tier serves the kinds that are single getters;
-        # the Arrow UDF above is the fallback
-        jvm = jvm_tier.multi(json_col, specs)
-        if jvm is not None:
-            return jvm
-    return _multi(json_col)
+    # the JVM exact tier serves every kind; the Arrow UDF above is the
+    # fallback
+    jvm = jvm_tier.multi(json_col, specs)
+    return _multi(json_col) if jvm is None else jvm

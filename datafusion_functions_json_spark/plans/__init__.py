@@ -78,8 +78,7 @@ def explain_str(df: DataFrame, mode: str = "simple") -> str:
 def plan_size_bytes(df: DataFrame):
     """The optimizer's ``sizeInBytes`` estimate for ``df`` — free (no
     action; file sources report summed file size). This is the shared
-    input-size statistic behind every ``'auto'`` tier choice
-    (``cosine_topk(impl='auto')``, ``json_extract_multi(tier='auto')``).
+    input-size statistic behind ``cosine_topk(impl='auto')``.
 
     Returns ``None`` when the JVM plan stats are unreachable — notably
     under **Spark Connect**, where ``df._jdf`` does not exist. Callers

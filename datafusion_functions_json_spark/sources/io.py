@@ -160,8 +160,8 @@ def load_table(
         # defaultParallelism — inputs above cores×task_bytes (any real
         # production input; sf1 already) get exactly the full-width
         # spread as before, so this is scale-adaptive, not a local[32]
-        # tune. NOT for per-row-heavy JVM tiers: the variant tier cannot
-        # dedup and needs all cores even on tiny inputs (measured 0.75 s
+        # tune. NOT for per-row-heavy JVM expressions: they cannot
+        # dedup and need all cores even on tiny inputs (measured 0.75 s
         # at 32 vs 3.6 s unspread on sf0.1 lineitem).
         task_bytes = int(
             os.environ.get("SPARK_GRAFT_SPREAD_TASK_BYTES", str(2 << 20))

@@ -371,33 +371,6 @@ def _arg_is_literal(arg_src: str) -> bool:
     return _LITERAL_ARG_RE.fullmatch(arg_src.strip()) is not None
 
 
-def _routed_fits(fn: str, args, routed) -> bool:
-    """Whether a call of ``fn`` with these arg texts can resolve against
-    the auto-tier-routed fixed ``(j STRING, k STRING)`` SQL UDF with
-    identical semantics: exactly one single-quoted STRING key whose
-    content is expressible in JSONPath (no guard characters — the routed
-    body ``raise_error``s on those where the exact tier answers), over a
-    plain non-call operand. Anything else must take the ``<name>_exact``
-    escape. Decided at EMISSION time, so calls later embedded into an
-    outer call's arg text already carry the right name."""
-    if fn not in routed:
-        return True  # canonical name IS the exact tier
-    if len(args) != 2 or "(" in args[0]:
-        return False
-    k = args[1].strip()
-    if len(k) < 2 or not (k.startswith("'") and k.endswith("'")):
-        return False  # int index / param / expression key
-    from .register import _JSONPATH_UNSAFE
-
-    content = k[1:-1].replace("''", "'")
-    if not content:
-        # empty key: JSONPath '$.' is invalid — the routed body would
-        # raise where the exact tier answers (json_get_int('{"":5}','')
-        # is 5 there); unroutable, take <name>_exact
-        return False
-    return not any(c in _JSONPATH_UNSAFE for c in content)
-
-
 # exact-arity functions: rewrite-time twin of the reference's signature
 # check (reference: tests/main.rs test_json_from_scalar_no_args /
 # test_json_from_scalar_too_many_args, src/json_from_scalar.rs signature)
@@ -504,24 +477,13 @@ def _collapse_cast_keys(toks) -> None:
         i += 1
 
 
-def rewrite_sql(query: str, routed=()) -> str:
+def rewrite_sql(query: str) -> str:
     """Rewrite ``->``/``->>``/``?`` into registered JSON function calls.
 
     Pure text-to-text (no SparkSession needed) — the testable core of
     :func:`sql`.
-
-    ``routed``: canonical names currently auto-tier-routed to the
-    fixed-signature ``(j, k)`` variant SQL UDFs
-    (:func:`~.register.register_all` with ``auto_tier=True`` records
-    them; :func:`sql` passes them through). Emitted calls that fit the
-    routed signature — exactly one single-quoted STRING key over a
-    non-call operand — keep the canonical (fast) name; everything else
-    the routed signature can't serve (multi-key chains, integer array
-    indexes, nested call operands) is emitted as ``<name>_exact``, the
-    reference-exact escape ``auto_tier`` registers alongside.
     """
     toks = _tokenize(query)
-    routed = frozenset(routed)
 
     # -- parenthesized/cast literal keys ---------------------------------
     # `j->('foo'::text)` and `j->('foo')` mean `j->'foo'` (reference:
@@ -612,8 +574,7 @@ def rewrite_sql(query: str, routed=()) -> str:
                 right.text,
             ]
         alias = f"{left['repr']} {_OP_SPELLING[t_op.kind]} {right.text}"
-        emit_fn = fn if _routed_fits(fn, args, routed) else f"{fn}_exact"
-        call_src = f"{emit_fn}({', '.join(args)})"
+        call_src = f"{fn}({', '.join(args)})"
         new_tok = _Tok(
             "call",
             call_src,
@@ -720,12 +681,7 @@ def rewrite_sql(query: str, routed=()) -> str:
                                     ):
                                         shell_type = toks[ty].text + params
             if new_fn:
-                emit_fn = (
-                    new_fn
-                    if _routed_fits(new_fn, t.args, routed)
-                    else f"{new_fn}_exact"
-                )
-                call_src = f"{emit_fn}({', '.join(t.args)})"
+                call_src = f"{new_fn}({', '.join(t.args)})"
                 if shell_type is not None:
                     call_src = f"cast({call_src} as {shell_type})"
                 toks[span_start : span_end + 1] = [
@@ -767,14 +723,6 @@ def rewrite_sql(query: str, routed=()) -> str:
                         _validate_arity(name, call_args)
                     else:
                         _validate_path_args(name, call_args)
-                    # user-written function-form calls of routed names:
-                    # steer shapes the routed (j, k) signature can't
-                    # serve to the exact escape, same rule as the
-                    # operator-emitted calls
-                    if name in routed and not _routed_fits(
-                        name, call_args, routed
-                    ):
-                        t.text += "_exact"
 
     # -- alias attachment for whole top-level select items --------------
     # The reference aliases the rewritten EXPRESSION node, so redundant
@@ -827,17 +775,5 @@ def sql(spark, query: str, **kwargs):
     ``spark.sql``. The JSON functions must be registered first
     (:func:`datafusion_functions_json_spark.register_all`). Extra kwargs
     (e.g. ``args`` for parameterized queries) pass through.
-
-    Composes with ``register_all(auto_tier=True)``: the session conf it
-    records steers the rewriter — single-string-key operator calls run
-    on the routed variant tier, shapes its fixed signature can't serve
-    fall back to the ``<name>_exact`` escape automatically.
     """
-    from .register import _ROUTED_CONF
-
-    try:
-        conf = spark.conf.get(_ROUTED_CONF, "")
-    except Exception:  # pragma: no cover - exotic session wrappers
-        conf = ""
-    routed = tuple(x for x in conf.split(",") if x)
-    return spark.sql(rewrite_sql(query, routed=routed), **kwargs)
+    return spark.sql(rewrite_sql(query), **kwargs)

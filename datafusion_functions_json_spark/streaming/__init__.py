@@ -56,9 +56,6 @@ def extract_json_stream(
     json_col: str,
     fields: dict,
     ts_col: str = "ts",
-    *,
-    tier: str = "exact",
-    json_profile=None,
 ) -> DataFrame:
     """Project typed fields out of a JSON column on a (possibly
     streaming) DataFrame. ``fields``: {out_name: (kind, *path)} with
@@ -68,19 +65,11 @@ def extract_json_stream(
     hop per document however many fields you pull (K separate getter
     calls would pay K parses and K JVM->Python round trips on the
     streaming hot path — the exact cost multi.py exists to remove).
-
-    ``tier``: ``"exact"`` (reference-faithful pandas kernel, default),
-    ``"variant"`` / ``"variant_perfield"`` (zero-Python JVM paths — the
-    right choice for streaming deployments without Python workers;
-    envelope caveats in functions/native.py), or ``"auto"`` (fastest
-    provably-equivalent given a ``json_profile`` claim about the data;
-    with no claim auto stays exact — see
-    :func:`~..functions.multi.json_extract_multi`). Streaming plans
-    carry tier choice unchanged — every tier is a stateless
-    projection."""
+    The extraction is a stateless projection, so streaming plans carry
+    it unchanged."""
     from ..functions.multi import json_extract_multi
 
-    u = json_extract_multi(json_col, fields, tier=tier, json_profile=json_profile)
+    u = json_extract_multi(json_col, fields)
     cols = [F.col(ts_col)] if ts_col in stream.columns else []
     cols += [F.col(c) for c in stream.columns if c not in (json_col, ts_col)]
     tmp = "_jx_fused"

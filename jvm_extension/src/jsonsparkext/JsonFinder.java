@@ -30,9 +30,11 @@ import java.util.List;
  * <li>raw slices are verbatim ({@code 4.2e-1}, {@code -0});</li>
  * <li>every value the finder skips or captures may nest at most
  *     {@link #DEPTH_LIMIT} containers deep, where CPython's recursion
- *     limit stops the Python finder, except on rows the Python kernels
- *     parse whole with orjson (see {@link #fastEligible}). Scanning is
- *     iterative, so no depth raises {@code StackOverflowError}.</li>
+ *     limit stops the Python finder; the Python kernels parse a row
+ *     whole with orjson only when it has fewer than {@link #DEPTH_LIMIT}
+ *     '{' and '[' characters, so the limit holds on every row.
+ *     Scanning is iterative, so no depth raises
+ *     {@code StackOverflowError}.</li>
  * </ul>
  */
 final class JsonFinder {
@@ -51,13 +53,12 @@ final class JsonFinder {
      * CPython's JSON scanner spends one unit of the 1000-frame recursion
      * limit per container, after the frames already on the stack, so the
      * Python finder gives up somewhere between about 900 and 1000 levels.
+     * core.DEPTH_LIMIT is the same number.
      */
     static final int DEPTH_LIMIT = 960;
 
     /** CPython's default {@code sys.get_int_max_str_digits()}. */
     static final int MAX_INT_DIGITS = 4300;
-
-    private static final int UNBOUNDED = Integer.MAX_VALUE;
 
     /** Malformed input: caught by the entry points and read as a miss. */
     private static final class Malformed extends RuntimeException {
@@ -72,9 +73,6 @@ final class JsonFinder {
 
     private final String s;
     private final int n;
-    private final int depthLimit;
-    /** A skipped or captured value nested deeper than the limit. */
-    private boolean depthExceeded;
     /** Whether the last scanned string held a backslash escape. */
     private boolean escaped;
     /** Kind of the last scanned literal or number. */
@@ -86,10 +84,9 @@ final class JsonFinder {
     int start;
     int end;
 
-    private JsonFinder(String s, int depthLimit) {
+    private JsonFinder(String s) {
         this.s = s;
         this.n = s.length();
-        this.depthLimit = depthLimit;
     }
 
     // ------------------------------------------------------------ paths
@@ -103,27 +100,22 @@ final class JsonFinder {
         final long[] indexes;
         /** A negative index: every row misses. */
         final boolean alwaysMissing;
-        /** {@code "key"} per key element: the Python kernels' guard. */
-        final String[] needles;
 
         Path(List<Object> elems) {
             int len = elems.size();
             keys = new String[len];
             indexes = new long[len];
             boolean missing = false;
-            List<String> quoted = new ArrayList<>();
             for (int k = 0; k < len; k++) {
                 Object e = elems.get(k);
                 if (e instanceof String) {
                     keys[k] = (String) e;
-                    quoted.add("\"" + e + "\"");
                 } else {
                     indexes[k] = ((Number) e).longValue();
                     missing |= indexes[k] < 0;
                 }
             }
             alwaysMissing = missing;
-            needles = quoted.toArray(new String[0]);
         }
 
         int length() {
@@ -152,7 +144,7 @@ final class JsonFinder {
         List<Object> out = new ArrayList<>();
         Long len = length(json, new Path(List.of()));
         for (long k = 0; len != null && k < len; k++) {
-            JsonFinder f = lookup(json, new Path(List.of(k)), UNBOUNDED);
+            JsonFinder f = lookup(json, new Path(List.of(k)));
             if (f.kind == STR) {
                 out.add(f.decodedString());
             } else if (f.kind == INT) {
@@ -168,8 +160,8 @@ final class JsonFinder {
     // ------------------------------------------------------ entry points
 
     /** core.find / core.find_raw: kind and raw slice of the value. */
-    private static JsonFinder lookup(String s, Path p, int depthLimit) {
-        JsonFinder f = new JsonFinder(s, depthLimit);
+    private static JsonFinder lookup(String s, Path p) {
+        JsonFinder f = new JsonFinder(s);
         if (p.alwaysMissing) {
             return f;
         }
@@ -184,75 +176,11 @@ final class JsonFinder {
         return f;
     }
 
-    /**
-     * The lookup the scalar getters, {@code json_contains} and
-     * {@code json_as_text} see. The Python kernels parse a row whole with
-     * orjson, which has no depth limit, when the row passes their guard
-     * ({@link #fastEligible}); otherwise they run the streaming finder.
-     * Both agree unless the streaming finder hit the depth limit, so only
-     * then is the row re-read without the limit.
-     */
-    private static JsonFinder lookupScalar(String s, Path p, boolean asText) {
-        JsonFinder f = lookup(s, p, DEPTH_LIMIT);
-        if (f.depthExceeded && fastEligible(s, p, asText) && wholeDocument(s)) {
-            return lookup(s, p, UNBOUNDED);
-        }
-        return f;
-    }
-
-    /**
-     * The Python kernels' guard for the whole-document parse: no
-     * backslash, every key of the path quoted at most once, and for
-     * {@code json_as_text} no run of 19 ASCII digits
-     * (core.find_scalar, kernels._fast_mask).
-     */
-    static boolean fastEligible(String s, Path p, boolean asText) {
-        if (s.indexOf('\\') >= 0) {
-            return false;
-        }
-        for (String needle : p.needles) {
-            int at = s.indexOf(needle);
-            if (at >= 0 && s.indexOf(needle, at + needle.length()) >= 0) {
-                return false;
-            }
-        }
-        if (asText) {
-            int run = 0;
-            for (int i = 0; i < s.length(); i++) {
-                char c = s.charAt(i);
-                run = c >= '0' && c <= '9' ? run + 1 : 0;
-                if (run >= 19) {
-                    return false;
-                }
-            }
-        }
-        return true;
-    }
-
-    /**
-     * Whether orjson parses the whole document: one strict value, any
-     * nesting depth, only whitespace after it, and no number that
-     * overflows a double.
-     */
-    static boolean wholeDocument(String s) {
-        JsonFinder f = new JsonFinder(s, UNBOUNDED);
-        try {
-            int i = f.skipWs(0);
-            int end = f.skipValue(i);
-            if (f.skipWs(end) != f.n) {
-                return false;
-            }
-            return !f.hasInfiniteNumber(i, end);
-        } catch (Malformed e) {
-            return false;
-        }
-    }
-
     static String getStr(String s, Path p) {
         if (s == null) {
             return null;
         }
-        JsonFinder f = lookupScalar(s, p, false);
+        JsonFinder f = lookup(s, p);
         return f.kind == STR ? f.outputString(f.start + 1, f.end - 1) : null;
     }
 
@@ -260,7 +188,7 @@ final class JsonFinder {
         if (s == null) {
             return null;
         }
-        JsonFinder f = lookupScalar(s, p, false);
+        JsonFinder f = lookup(s, p);
         if (f.kind == INT) {
             return parseLong(s.substring(f.start, f.end));
         }
@@ -271,7 +199,7 @@ final class JsonFinder {
         if (s == null) {
             return null;
         }
-        JsonFinder f = lookupScalar(s, p, false);
+        JsonFinder f = lookup(s, p);
         String raw = f.kind == MISSING ? null : s.substring(f.start, f.end);
         Double v;
         if (f.kind == FLOAT) {
@@ -294,7 +222,7 @@ final class JsonFinder {
         if (s == null) {
             return null;
         }
-        JsonFinder f = lookupScalar(s, p, false);
+        JsonFinder f = lookup(s, p);
         if (f.kind == BOOL) {
             return s.charAt(f.start) == 't';
         }
@@ -302,7 +230,7 @@ final class JsonFinder {
     }
 
     static boolean contains(String s, Path p) {
-        return s != null && lookupScalar(s, p, false).kind != MISSING;
+        return s != null && lookup(s, p).kind != MISSING;
     }
 
     /** json_get_json: the verbatim slice; JSON null is the text null. */
@@ -310,22 +238,19 @@ final class JsonFinder {
         if (s == null) {
             return null;
         }
-        JsonFinder f = lookup(s, p, DEPTH_LIMIT);
+        JsonFinder f = lookup(s, p);
         return f.kind == MISSING ? null : s.substring(f.start, f.end);
     }
 
     /**
      * json_as_text (kernels.kernel_json_as_text): strings unquoted, JSON
-     * null NULL, everything else as the document spells it. Floats, the
-     * integer zero and containers always come from the streaming finder's
-     * slice, so past the depth limit they read NULL even on rows the
-     * whole-document parse accepts.
+     * null NULL, everything else as the document spells it.
      */
     static String asText(String s, Path p) {
         if (s == null) {
             return null;
         }
-        JsonFinder f = lookupScalar(s, p, true);
+        JsonFinder f = lookup(s, p);
         switch (f.kind) {
             case STR:
                 return f.outputString(f.start + 1, f.end - 1);
@@ -333,13 +258,7 @@ final class JsonFinder {
             case NULL:
                 return null;
             default:
-                String raw = s.substring(f.start, f.end);
-                boolean sliced = f.kind == FLOAT || f.kind == ARRAY
-                    || f.kind == OBJECT || (f.kind == INT && isZero(raw));
-                if (sliced && f.depthLimit != DEPTH_LIMIT) {
-                    return null;
-                }
-                return raw;
+                return s.substring(f.start, f.end);
         }
     }
 
@@ -348,7 +267,7 @@ final class JsonFinder {
         if (s == null || p.alwaysMissing) {
             return null;
         }
-        JsonFinder f = new JsonFinder(s, DEPTH_LIMIT);
+        JsonFinder f = new JsonFinder(s);
         try {
             int i = f.navigate(p);
             if (i < 0 || i >= f.n) {
@@ -395,7 +314,7 @@ final class JsonFinder {
         if (s == null) {
             return null;
         }
-        JsonFinder f = lookupScalar(s, p, true);
+        JsonFinder f = lookup(s, p);
         Object v = f.unionValue();
         return v == null ? null : new Object[] {f.kind, v};
     }
@@ -408,7 +327,7 @@ final class JsonFinder {
         if (s == null) {
             return null;
         }
-        JsonFinder f = lookupScalar(s, p, true);
+        JsonFinder f = lookup(s, p);
         Object v = f.unionValue();
         return v == null ? null : unionText(f.kind, v);
     }
@@ -422,7 +341,7 @@ final class JsonFinder {
         if (s == null) {
             return true;
         }
-        JsonFinder f = lookupScalar(s, p, true);
+        JsonFinder f = lookup(s, p);
         switch (f.kind) {
             case MISSING:
             case NULL:
@@ -438,8 +357,7 @@ final class JsonFinder {
     /**
      * The value the union arm of the current lookup holds: Boolean, Long,
      * Double, String, or the verbatim slice of a container; null for the
-     * null arm. A container found only by the unbounded re-read is null:
-     * the Python kernels slice containers with the depth-limited finder.
+     * null arm.
      */
     private Object unionValue() {
         switch (kind) {
@@ -453,7 +371,7 @@ final class JsonFinder {
                 return outputString(start + 1, end - 1);
             case ARRAY:
             case OBJECT:
-                return depthLimit == DEPTH_LIMIT ? s.substring(start, end) : null;
+                return s.substring(start, end);
             default:
                 return null;
         }
@@ -484,7 +402,7 @@ final class JsonFinder {
         if (s == null || p.alwaysMissing) {
             return null;
         }
-        JsonFinder f = new JsonFinder(s, DEPTH_LIMIT);
+        JsonFinder f = new JsonFinder(s);
         try {
             int i = f.navigate(p);
             if (i < 0 || i >= f.n || s.charAt(i) != '[') {
@@ -522,7 +440,7 @@ final class JsonFinder {
         if (s == null || p.alwaysMissing) {
             return null;
         }
-        JsonFinder f = new JsonFinder(s, DEPTH_LIMIT);
+        JsonFinder f = new JsonFinder(s);
         try {
             int i = f.navigate(p);
             if (i < 0 || i >= f.n || s.charAt(i) != '{') {
@@ -791,10 +709,6 @@ final class JsonFinder {
         return v.bitLength() < 64 ? v.longValue() : null;
     }
 
-    private static boolean isZero(String raw) {
-        return raw.equals("0") || raw.equals("-0");
-    }
-
     // -------------------------------------------------------- scanning
 
     private int skipWs(int i) {
@@ -932,8 +846,7 @@ final class JsonFinder {
             }
             char c = s.charAt(i);
             if (c == '{' || c == '[') {
-                if (++depth > depthLimit) {
-                    depthExceeded = true;
+                if (++depth > DEPTH_LIMIT) {
                     throw MALFORMED;
                 }
                 if (depth >= stack.length) {
@@ -1048,23 +961,6 @@ final class JsonFinder {
 
     private static boolean isDigit(char c) {
         return c >= '0' && c <= '9';
-    }
-
-    /** Any number in [from, to) that overflows a double (orjson rejects). */
-    private boolean hasInfiniteNumber(int from, int to) {
-        for (int i = from; i < to; i++) {
-            char c = s.charAt(i);
-            if (c == '"') {
-                i = scanString(i + 1) - 1;
-            } else if (c == '-' || isDigit(c)) {
-                int end = scanScalar(i);
-                if (Double.isInfinite(Double.parseDouble(s.substring(i, end)))) {
-                    return true;
-                }
-                i = end - 1;
-            }
-        }
-        return false;
     }
 
     /**

@@ -463,62 +463,7 @@ public final class JsonOperatorRewriter {
 
     // ------------------------------------------------------------ rewrite
 
-    /** The session conf key register_all(auto_tier=True) records the
-     *  routed canonical names under; the parser wrapper reads it per
-     *  parse so the rewrite below composes with auto-tier routing the
-     *  same way the Python rewriter does. */
-    public static final String ROUTED_CONF =
-        "spark.datafusion_functions_json_spark.autoTierRouted";
-
-    private static final String JSONPATH_UNSAFE = ".[]'\"$*";
-
-    /** Java twin of sql.py::_routed_fits: whether a call of {@code fn}
-     *  with these arg texts can resolve against the auto-tier-routed
-     *  fixed {@code (j STRING, k STRING)} SQL UDF with identical
-     *  semantics — exactly one single-quoted non-empty STRING key with
-     *  no JSONPath guard characters, over a plain non-call operand.
-     *  KEEP IN SYNC with the Python (pinned by the routed differential
-     *  corpus in tests/test_jvm_extension.py). */
-    private static boolean routedFits(
-            String fn, List<String> args, Set<String> routed) {
-        if (!routed.contains(fn)) return true;
-        if (args.size() != 2 || args.get(0).contains("(")) return false;
-        String k = args.get(1).trim();
-        if (k.length() < 2 || !(k.startsWith("'") && k.endsWith("'"))) {
-            return false;
-        }
-        String content =
-            k.substring(1, k.length() - 1).replace("''", "'");
-        if (content.isEmpty()) return false;
-        for (int i = 0; i < content.length(); i++) {
-            if (JSONPATH_UNSAFE.indexOf(content.charAt(i)) >= 0) {
-                return false;
-            }
-        }
-        return true;
-    }
-
-    /** CSV entry point for the routed overload (py4j-friendly and used
-     *  by the parser wrapper, which reads the conf as a string). Its
-     *  EXISTENCE is also the capability probe: the Python
-     *  register_all(auto_tier=True) allows routing alongside the
-     *  extension only when this method resolves — an older jar without
-     *  it rewrites operators conf-blind and must refuse. */
-    public static String rewriteRouted(String query, String routedCsv) {
-        Set<String> routed = new HashSet<>();
-        if (routedCsv != null) {
-            for (String s : routedCsv.split(",")) {
-                if (!s.trim().isEmpty()) routed.add(s.trim());
-            }
-        }
-        return rewrite(query, routed);
-    }
-
     public static String rewrite(String query) {
-        return rewrite(query, java.util.Collections.<String>emptySet());
-    }
-
-    public static String rewrite(String query, Set<String> routed) {
         List<Tok> toks = tokenize(query);
         collapseCastKeys(toks);
 
@@ -585,9 +530,8 @@ public final class JsonOperatorRewriter {
             }
             String alias = left.repr + " " + OP_SPELLING.get(tOp.kind) + " "
                 + right.text;
-            String emitFn = routedFits(fn, args, routed) ? fn : fn + "_exact";
             Tok call = new Tok(
-                "call", emitFn + "(" + String.join(", ", args) + ")");
+                "call", fn + "(" + String.join(", ", args) + ")");
             call.fn = fn;
             call.args = args;
             call.alias = alias;
@@ -696,10 +640,8 @@ public final class JsonOperatorRewriter {
                     }
                 }
                 if (newFn != null) {
-                    String emitFn = routedFits(newFn, t.args, routed)
-                        ? newFn : newFn + "_exact";
                     String callSrc =
-                        emitFn + "(" + String.join(", ", t.args) + ")";
+                        newFn + "(" + String.join(", ", t.args) + ")";
                     if (shellType != null) {
                         callSrc = "cast(" + callSrc + " as " + shellType + ")";
                     }
@@ -745,14 +687,6 @@ public final class JsonOperatorRewriter {
                             validateArity(name, callArgs);
                         } else {
                             validatePathArgs(name, callArgs);
-                        }
-                        // user-written function-form calls of routed
-                        // names: steer shapes the routed (j, k)
-                        // signature can't serve to the exact escape,
-                        // same rule as the operator-emitted calls
-                        if (routed.contains(name)
-                                && !routedFits(name, callArgs, routed)) {
-                            t.text += "_exact";
                         }
                     }
                 }
@@ -809,11 +743,8 @@ public final class JsonOperatorRewriter {
      * raises writes {@code !ERR!<message>} instead. Lets the pytest
      * suite pin this port byte-for-byte against the Python
      * rewrite_sql over the whole test corpus without a JVM bridge.
-     * Optional argv[0]: a routed-names CSV — the harness then pins the
-     * routed overload against rewrite_sql(query, routed=...).
      */
     public static void main(String[] argv) throws java.io.IOException {
-        String routedCsv = argv.length > 0 ? argv[0] : "";
         byte[] all = System.in.readAllBytes();
         String[] queries = new String(all, java.nio.charset.StandardCharsets.UTF_8)
             .split("\u0000", -1);
@@ -821,7 +752,7 @@ public final class JsonOperatorRewriter {
         for (int i = 0; i < queries.length; i++) {
             if (i > 0) out.append('\u0000');
             try {
-                out.append(rewriteRouted(queries[i], routedCsv));
+                out.append(rewrite(queries[i]));
             } catch (RuntimeException e) {
                 out.append("!ERR!").append(e.getMessage());
             }

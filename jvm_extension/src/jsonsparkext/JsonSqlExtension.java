@@ -56,7 +56,7 @@ public class JsonSqlExtension
                 @Override
                 public ParserInterface apply(SparkSession session,
                                              ParserInterface delegate) {
-                    return wrap(session, delegate);
+                    return wrap(delegate);
                 }
             };
         extensions.injectParser(builder);
@@ -67,8 +67,7 @@ public class JsonSqlExtension
         Arrays.asList("parsePlan", "parseQuery", "parsePlanWithParameters",
                       "parseExpression"));
 
-    static ParserInterface wrap(SparkSession session,
-                                ParserInterface delegate) {
+    static ParserInterface wrap(ParserInterface delegate) {
         InvocationHandler handler = new InvocationHandler() {
             @Override
             public Object invoke(Object proxy, Method method, Object[] args)
@@ -76,24 +75,8 @@ public class JsonSqlExtension
                 if (args != null && args.length >= 1
                         && args[0] instanceof String
                         && REWRITE_METHODS.contains(method.getName())) {
-                    // auto-tier composition: read the routed-names conf
-                    // AT PARSE TIME (register_all(auto_tier=True) sets
-                    // it, plain register_all clears it) so operator
-                    // shapes the routed fixed (j, k) SQL UDFs can't
-                    // serve are emitted as <name>_exact — the same
-                    // contract as the Python jsonf.sql rewriter.
-                    String routedCsv = "";
-                    if (session != null) {
-                        try {
-                            routedCsv = session.conf().get(
-                                JsonOperatorRewriter.ROUTED_CONF, "");
-                        } catch (Exception e) {
-                            routedCsv = "";
-                        }
-                    }
                     args = args.clone();
-                    args[0] = JsonOperatorRewriter.rewriteRouted(
-                        (String) args[0], routedCsv);
+                    args[0] = JsonOperatorRewriter.rewrite((String) args[0]);
                 }
                 try {
                     return method.invoke(delegate, args);

@@ -10,7 +10,6 @@ path is covered by the ordinary tests (the paths are the same code).
 
 import pytest
 
-import datafusion_functions_json_spark as jsonf
 from datafusion_functions_json_spark.plans import plan_size_bytes
 
 
@@ -33,17 +32,6 @@ class TestPlanStatDegradation:
     def test_plan_size_bytes_missing_handle_is_none(self):
         assert plan_size_bytes(_NoHandles()) is None
         assert plan_size_bytes(_RaisingJdf()) is None
-
-    def test_multi_auto_treats_unknown_size_as_large(self):
-        # 2 fields + permissive claim + unreadable stats -> the
-        # conservative large-input tier (variant_perfield), never a
-        # crash (multi._auto_tier step 3)
-        from datafusion_functions_json_spark.functions.multi import _auto_tier
-
-        two = [("i", "int", ("a",)), ("s", "str", ("b",))]
-        claim = jsonf.JsonProfile()
-        assert _auto_tier(two, claim, _NoHandles()) == "variant_perfield"
-        assert _auto_tier(two, claim, _RaisingJdf()) == "variant_perfield"
 
     def test_cosine_topk_auto_resolves_hof_without_stats(self, spark):
         # similarity._plan_size_bytes -> None must resolve impl='auto'
@@ -201,14 +189,11 @@ try:
         "select json_get_str(j, 'a', 'c') as s from t"
     ).collect()
     assert [r.s for r in got] == ["x", None], got
-    # auto tier with the permissive claim: plan stats are unreachable
-    # under Connect, so 2 fields resolve to the conservative
-    # variant_perfield tier — and the RESULTS must still match exact
+    # fused extraction (json_profile is accepted and ignored)
     u = jsonf.json_extract_multi(
         "j",
         {"b": ("int", "a", "b"), "c": ("str", "a", "c")},
         json_profile=jsonf.JsonProfile(),
-        input_df=df,
     ).alias("u")
     out = df.select(u).select("u.*").collect()
     assert (out[0].b, out[0].c) == (3, "x"), out

@@ -333,3 +333,37 @@ class TestNonFiniteTokensRejected:
         import math
 
         assert math.isnan(core.parse_float_like_rust("NaN"))
+
+
+class TestDeepNesting:
+    def test_kernels_return_on_a_100k_deep_document(self):
+        # orjson 3.8 crashes the process (SIGSEGV) on this document, so no
+        # fast path may hand it over; run in a subprocess so a crash fails
+        # this test instead of the suite
+        import os
+        import subprocess
+        import sys
+
+        code = (
+            "import itertools, pyarrow as pa\n"
+            "from datafusion_functions_json_spark.functions import core, kernels\n"
+            "deep = '{\"a\":' * 100_000 + '1' + '}' * 100_000\n"
+            "print(kernels.kernel_json_get_int(\n"
+            "    pa.array([deep, '{\"b\": 3}']), itertools.repeat(('b',))))\n"
+            "print(core.find_scalar(deep, ('b',)))\n"
+            "print(core.make_find_scalar(('b',))(deep))\n"
+        )
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        proc = subprocess.run(
+            [sys.executable, "-c", code],
+            capture_output=True,
+            text=True,
+            timeout=120,
+            cwd=repo,
+        )
+        assert proc.returncode == 0, (proc.returncode, proc.stderr[-2000:])
+        assert proc.stdout.splitlines() == [
+            "[None, 3]",
+            f"({MISSING}, None)",
+            f"({MISSING}, None)",
+        ]

@@ -516,3 +516,32 @@ class TestReviewFindingsRound7e:
         # ('0'::int) is array index 0, not object key '0'
         row = jf.sql(spark, "select j->('0'::int) as v from fold_t").collect()[0]
         assert row.v.int == 10
+
+
+class TestPlanQuality:
+    """The scale claims from README: pruning and pushdown reach the
+    parquet scan THROUGH our pandas UDFs."""
+
+    def test_column_pruning_through_udf(self, spark, tmp_path):
+        from datafusion_functions_json_spark.plans import explain_str
+
+        p = str(tmp_path / "wide.parquet")
+        spark.createDataFrame(
+            [(1, '{"k": 1}', "x", 2.0)], "id long, j string, unused string, also double"
+        ).write.mode("overwrite").parquet(p)
+        df = spark.read.parquet(p)
+        plan = explain_str(df.select("id", jsonf.json_get_int("j", "k")))
+        assert "ReadSchema: struct<id:bigint,j:string>" in plan
+
+    def test_predicate_pushdown_past_udf_projection(self, spark, tmp_path):
+        from datafusion_functions_json_spark.plans import has_pushed_filter
+
+        p = str(tmp_path / "t2.parquet")
+        spark.createDataFrame(
+            [(i, '{"k": %d}' % i) for i in range(20)], "id long, j string"
+        ).write.mode("overwrite").parquet(p)
+        df = spark.read.parquet(p)
+        q = df.select("id", jsonf.json_get_int("j", "k").alias("k")).filter(
+            F.col("id") > 5
+        )
+        assert has_pushed_filter(q, "GreaterThan(id,5)")

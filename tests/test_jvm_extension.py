@@ -144,21 +144,19 @@ def _harvest_corpus():
     return found
 
 
-def _python_results(queries, routed=()):
+def _python_results(queries):
     out = []
     for q in queries:
         try:
-            out.append(rewrite_sql(q, routed=routed))
+            out.append(rewrite_sql(q))
         except ValueError as e:
             out.append("!ERR!" + str(e))
     return out
 
 
-def _java_results(queries, jar, routed=()):
+def _java_results(queries, jar):
     classes = os.path.join(BUILD, "classes")
     cmd = ["java", "-cp", classes, "jsonsparkext.JsonOperatorRewriter"]
-    if routed:
-        cmd.append(",".join(routed))
     proc = subprocess.run(
         cmd,
         input="\x00".join(queries).encode("utf-8"),
@@ -166,14 +164,6 @@ def _java_results(queries, jar, routed=()):
         check=True,
     )
     return proc.stdout.decode("utf-8").split("\x00")
-
-
-# the full routed set register_all(auto_tier=True) records — the worst
-# case for the routed differential (every steerable name steered)
-ROUTED_ALL = (
-    "json_get_str", "json_get_int", "json_get_float", "json_get_bool",
-    "json_get_json", "json_get_array", "json_as_text", "json_contains",
-)
 
 
 class TestRewriterDifferential:
@@ -185,31 +175,6 @@ class TestRewriterDifferential:
         assert len(py) == len(jv)
         for q, a, b in zip(corpus, py, jv):
             assert a == b, f"rewriter divergence on {q!r}:\n py={a!r}\n jv={b!r}"
-
-    def test_routed_corpus(self, ext_jar):
-        # round-13: the Java routedFits must match the Python
-        # _routed_fits byte-for-byte over the SAME corpus with every
-        # routable name routed — this is what makes auto_tier safe to
-        # combine with the extension (the parser wrapper reads the
-        # routed conf and calls this exact code path)
-        corpus = CURATED + _harvest_corpus() + [
-            "select j->>'' from t",            # empty key: exact escape
-            "select j->>0 from t",             # int index: exact escape
-            "select j->'a'->>'b' from t",      # chain: nested operand
-            "select json_as_text(j, 'k') from t",     # fits: routed
-            "select json_as_text(j, 0) from t",       # user-written int
-            "select json_get_int(j, 'a', 'b') from t",  # multi-key
-            "select json_get_int(j, 'a.b') from t",   # guard char
-            "select (j->'a')::int from t",     # cast elision retarget
-            "select (j->'arr'->0)::int from t",
-        ]
-        py = _python_results(corpus, routed=ROUTED_ALL)
-        jv = _java_results(corpus, ext_jar, routed=ROUTED_ALL)
-        assert len(py) == len(jv)
-        for q, a, b in zip(corpus, py, jv):
-            assert a == b, f"routed divergence on {q!r}:\n py={a!r}\n jv={b!r}"
-        # sanity: the routed set actually changes emissions somewhere
-        assert any("_exact(" in a for a in py)
 
     def test_token_soup_fuzz(self, ext_jar):
         # deterministic fuzz: random token soups heavy on the operator
@@ -233,14 +198,6 @@ class TestRewriterDifferential:
         jv = _java_results(corpus, ext_jar)
         for q, a, b in zip(corpus, py, jv):
             assert a == b, f"fuzz divergence on {q!r}:\n py={a!r}\n jv={b!r}"
-        # same soups under the full routed set: the steering decision
-        # must also agree on degenerate/adversarial token shapes
-        py = _python_results(corpus, routed=ROUTED_ALL)
-        jv = _java_results(corpus, ext_jar, routed=ROUTED_ALL)
-        for q, a, b in zip(corpus, py, jv):
-            assert a == b, (
-                f"routed fuzz divergence on {q!r}:\n py={a!r}\n jv={b!r}"
-            )
 
 
 E2E_SCRIPT = r"""
@@ -317,17 +274,11 @@ assert spark.sql(
 assert spark.sql("select transform(array(1,2), x -> x + 1)").collect()[0][0] == [2, 3]
 assert spark.sql("select ? + 1", args=[41]).collect()[0][0] == 42
 
-# auto_tier x parser-extension composition (round-13): the extension's
-# parser wrapper reads the routed-names conf at parse time and steers
-# operator shapes the routed fixed (j STRING, k STRING) SQL UDFs can't
-# serve (int indexes, chains, guard chars, empty keys) to <name>_exact
-# — so register_all(auto_tier=True) now composes instead of refusing.
-from datafusion_functions_json_spark.register import _parser_extension_state
-assert _parser_extension_state(spark) == "aware"
-routed = jsonf.register_all(spark, auto_tier=True)
-assert routed, routed
+# register_all(auto_tier=True) registers the same functions: every
+# operator shape keeps answering through the extension, int indexes,
+# chains and the empty key included
+jsonf.register_all(spark, auto_tier=True)
 spark.createDataFrame([('[{"k": 9}, 2]',)], "j string").createOrReplaceTempView("arr_t")
-# the r12 wrong-answer shapes, through PLAIN spark.sql with BOTH on:
 got = spark.sql("select j->>0 from arr_t").collect()[0][0]
 assert got is not None and "9" in got, got  # array elem 0, not key '0'
 got = spark.sql("select j->>1 from arr_t").collect()[0][0]
@@ -336,21 +287,10 @@ got = spark.sql("select j->0->>'k' from arr_t").collect()[0][0]
 assert got == "9", got
 got = spark.sql("select (j->0->'k')::int from arr_t").collect()[0][0]
 assert got == 9, got
-# empty key: parse-time steering to the exact tier, which answers
 spark.createDataFrame([('{"":5}',)], "j string").createOrReplaceTempView("ek_t")
 assert spark.sql("select j->>'' from ek_t").collect()[0][0] == "5"
-# single-string-key shapes actually ride the routed JVM tier: no
-# Python hop in the plan
 df = spark.sql("select j->>'k' from t")
 assert df.collect()[0][0] == "v"
-plan = df._jdf.queryExecution().explainString(
-    spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-assert "EvalPython" not in plan, plan
-# plain register_all restores the exact surface and clears the conf:
-# operators keep answering through the extension afterwards
-jsonf.register_all(spark)
-assert spark.sql("select j->>1 from arr_t").collect()[0][0] == "2"
-assert spark.sql("select j->>'k' from t").collect()[0][0] == "v"
 
 print("E2E_OK")
 """

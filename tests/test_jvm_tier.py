@@ -9,7 +9,8 @@ tier function over key, int-index and empty paths on seeded
 rows the parity tests pin: duplicate and escaped keys, ``1e400``, ``-0``,
 integers outside i64/u64 and beyond the double range, numeric strings,
 lone surrogates, invalid documents, trailing garbage, and nesting at
-depth 100 and at depth >= 1000. A disagreement is a bug in the Java port;
+depth 100, at depth >= 1000 and at depth 100,000. A disagreement is a bug
+in the Java port;
 no row is ever dropped to make it pass.
 """
 
@@ -40,9 +41,9 @@ pytestmark = pytest.mark.skipif(
 FNS = sorted(jvm_tier.TIER_FNS)
 
 
-def _corpus():
+def _perfbench(name):
     spec = importlib.util.spec_from_file_location(
-        "perfbench_corpus", os.path.join(REPO, "perfbench", "corpus.py")
+        f"perfbench_{name}", os.path.join(REPO, "perfbench", f"{name}.py")
     )
     mod = importlib.util.module_from_spec(spec)
     sys.modules[spec.name] = mod  # its dataclasses resolve their module
@@ -95,9 +96,10 @@ EDGE_DOCS = [
     # containers
     '{"k": [1, "x", null, true, {"a": [2]}]}', "[[1, 2], [3]]",
     '{"k": {"a": 1,  "b": [1, 2]}}', '[{"a": 1}, {"a": 2}]',
-    # nesting at depth 100 and at depth >= 1000
+    # nesting at depth 100 and at depth >= 1000; orjson crashes the
+    # process at 100,000
     _deep_obj(100), _deep_arr(100), _deep_obj(1000), _deep_arr(1000),
-    _deep_obj(2500), _deep_arr(2500),
+    _deep_obj(2500), _deep_arr(2500), _deep_obj(100_000),
     '{"deep": ' + _deep_arr(1000) + ', "k": 5}',
     '{"k": 5, "deep": ' + _deep_arr(1000) + "}",
     '{"k": ' + _deep_arr(1000) + "}", '{"k": ' + _deep_arr(100) + "}",
@@ -196,12 +198,12 @@ class TestDifferential:
         _diff(spark, EDGE_DOCS, EDGE_PATHS)
 
     def test_unique_corpus(self, spark, tier):
-        corpus = _corpus()
+        corpus = _perfbench("corpus")
         day = corpus.generate(corpus.SHAPES["unique"], 1)[0]
         _diff(spark, day.texts[:3000], CORPUS_PATHS)
 
     def test_repeated_corpus(self, spark, tier):
-        corpus = _corpus()
+        corpus = _perfbench("corpus")
         days = corpus.generate(corpus.SHAPES["repeated"], 2)
         docs = [t for d in days for t in d.texts]
         _diff(spark, docs, CORPUS_PATHS + [("config", "opt_7")])
@@ -295,7 +297,7 @@ class TestDifferential:
         assert not bad, f"{len(bad)} mismatches, first: {bad[:10]}"
 
     def test_multi(self, spark, tier, monkeypatch):
-        corpus = _corpus()
+        corpus = _perfbench("corpus")
         day = corpus.generate(corpus.SHAPES["unique"], 3)[0]
         docs = EDGE_DOCS + day.texts[:1000]
         fields = {
@@ -400,6 +402,47 @@ class TestRouting:
         )
         assert "ArrowEvalPython" in q._jdf.queryExecution().executedPlan().toString()
         assert q.collect()[0].v == 3
+
+    def test_compatibility_spellings_run_on_the_exact_tier(self, spark, tier):
+        # register_all(auto_tier=True), the <name>_exact SQL names and
+        # json_profile=JsonProfile() are accepted spellings of the plain
+        # calls: the same plans on the exact tier and the same rows
+        templates = _perfbench("templates")
+        corpus = _perfbench("corpus")
+        docs = corpus.generate(corpus.SHAPES["unique"], 1)[0].texts[:500]
+        spark.createDataFrame(
+            [(0, d) for d in docs + EDGE_DOCS], "day int, j string"
+        ).createOrReplaceTempView("docs")
+        queries = [templates._NATIVE_SQL, templates._REGISTER_SQL]
+        fields = {"ver": ("int", "ver"), "kind": ("str", "kind"), "ok": ("bool", "ok")}
+        df = spark.table("docs")
+
+        def run(register, queries, multi):
+            register()
+            outs = [spark.sql(q.format(day=0)) for q in queries]
+            outs.append(df.select(multi.alias("m")).select("m.*"))
+            for out in outs:
+                plan = out._jdf.queryExecution().toString()
+                assert "try_variant_get" not in plan and "EvalPython" not in plan
+            return [out.collect() for out in outs]
+
+        try:
+            want = run(
+                lambda: jsonf.register_all(spark),
+                [q.replace("_exact(", "(") for q in queries],
+                jsonf.json_extract_multi("j", fields),
+            )
+            got = run(
+                lambda: jsonf.register_all(spark, auto_tier=True),
+                queries,
+                jsonf.json_extract_multi(
+                    "j", fields, json_profile=jsonf.JsonProfile()
+                ),
+            )
+        finally:
+            jsonf.register_all(spark)
+        assert got == want
+        assert want[0][0][0] > 0  # the corpus rows do hold the keys
 
     def test_loader_off_uses_python_kernels(self, spark, python_tier):
         df = spark.createDataFrame([('{"a": 1}',), (None,)], "j string")

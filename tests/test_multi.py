@@ -196,130 +196,37 @@ class TestMultiEquivalence:
         )
         assert (r.x, r.has, r.len) == (20, False, 2)
 
-
-class TestVariantTierMulti:
-    """tier='variant': zero-hop JVM fused extraction. Agreement with the
-    exact tier inside the envelope; refusals pinned."""
-
-    def test_agrees_with_exact_on_envelope_fields(self, spark):
-        docs = [
-            ('{"a": {"b": [5, {"c": "R"}]}, "d": null}',),
-            ('{"a": {"b": []}}',),
-            ("{",),
-            (None,),
-        ]
-        df = spark.createDataFrame(docs, "j string")
-        fields = {
-            "b0": ("int", "a", "b", 0),
-            "flag": ("str", "a", "b", 1, "c"),
-            "d_text": ("text", "d"),
-            "len_ab": ("length", "a", "b"),
-            "has_d": ("exists", "d"),
-        }
-        exact = df.select(
-            jsonf.json_extract_multi("j", fields).alias("u")
-        ).select("u.*").collect()
-        var = df.select(
-            jsonf.json_extract_multi("j", fields, tier="variant").alias("u")
-        ).select("u.*").collect()
-        assert [tuple(r) for r in exact] == [tuple(r) for r in var]
-        # present-null d: exists TRUE, text NULL on both tiers
-        assert var[0].has_d is True and var[0].d_text is None
-
-    def test_variant_tier_is_zero_hop(self, spark):
-        from datafusion_functions_json_spark.plans import arrow_eval_count
-
-        df = spark.createDataFrame([('{"a": 1}',)], "j string")
-        out = df.select(
-            jsonf.json_extract_multi(
-                "j", {"x": ("int", "a"), "y": ("str", "a")}, tier="variant"
-            ).alias("u")
-        )
-        assert arrow_eval_count(out) == 0
-
-    def test_union_kinds_refused(self, spark):
-        import pytest
-
-        with pytest.raises(ValueError, match="not expressible"):
-            jsonf.json_extract_multi(
-                "j", {"t": ("union_text", "a")}, tier="variant"
-            )
-        with pytest.raises(ValueError, match="unknown tier"):
-            jsonf.json_extract_multi("j", {"x": ("int", "a")}, tier="native")
-
-
-class TestAutoTierMulti:
-    DOCS = [
-        ('{"a": 1, "b": "x", "c": [1, 2], "f": 0.5}',),
-        ('{"a": null}',),
-        ("not json",),
-        (None,),
-    ]
-    FIELDS = {
-        "i": ("int", "a"),
-        "s": ("str", "b"),
-        "n": ("length", "c"),
-        "e": ("exists", "a"),
-    }
-
-    def _df(self, spark):
-        return spark.createDataFrame(self.DOCS, "j string")
-
-    def test_auto_picks_variant_and_matches_exact(self, spark, python_tier):
-        from datafusion_functions_json_spark.functions.multi import _auto_tier
-        from datafusion_functions_json_spark.functions.native import JsonProfile
-
-        specs = [(n, k[0], tuple(k[1:])) for n, k in self.FIELDS.items()]
-        # r16: NO profile -> no data claim -> exact, always (the
-        # fidelity default that makes tier='auto' safe as THE default)
-        assert _auto_tier(specs, None) == "exact"
-        # the permissive CLAIM unlocks the JVM tiers (4 fields -> fused)
-        assert _auto_tier(specs, JsonProfile()) == "variant"
-        df = self._df(spark)
-        auto = df.select(
-            jsonf.json_extract_multi(
-                "j", self.FIELDS, tier="auto", json_profile=JsonProfile()
-            ).alias("u")
-        ).select("u.*").collect()
-        exact = df.select(
-            jsonf.json_extract_multi("j", self.FIELDS, tier="exact").alias("u")
-        ).select("u.*").collect()
-        assert auto == exact
-        # and the claimed auto plan carries no Python hop
-        plan = (
-            self._df(spark)
-            .select(jsonf.json_extract_multi(
-                "j", self.FIELDS, tier="auto", json_profile=JsonProfile()
-            ))
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "ArrowEvalPython" not in plan
-        # a BARE default call (no profile) stays on the exact tier
-        bare = (
-            self._df(spark)
-            .select(jsonf.json_extract_multi("j", self.FIELDS))
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "ArrowEvalPython" in bare
-
-    def test_bare_call_runs_on_jvm_exact_tier(self, spark):
-        # the bare (no profile) call on the JVM exact tier: no Python
-        # hop, and the same rows as the Python kernels
+    def test_jvm_exact_tier_matches_python_kernels(self, spark, monkeypatch):
+        # the call on the JVM exact tier: no Python hop, and the same rows
+        # as the Python kernels
         from datafusion_functions_json_spark.functions import jvm_tier
-        from datafusion_functions_json_spark.functions.native import JsonProfile
 
         if jvm_tier.load(spark.sparkContext) is None:
             pytest.skip("JVM exact tier unavailable")
-        out = self._df(spark).select(
-            jsonf.json_extract_multi("j", self.FIELDS).alias("u")
+        docs = [
+            ('{"a": 1, "b": "x", "c": [1, 2], "f": 0.5}',),
+            ('{"a": null}',),
+            ("not json",),
+            (None,),
+        ]
+        fields = {
+            "i": ("int", "a"),
+            "s": ("str", "b"),
+            "n": ("length", "c"),
+            "e": ("exists", "a"),
+        }
+        df = spark.createDataFrame(docs, "j string")
+        out = df.select(
+            jsonf.json_extract_multi("j", fields).alias("u")
         ).select("u.*")
         assert "EvalPython" not in out._jdf.queryExecution().executedPlan().toString()
-        exact = self._df(spark).select(
-            jsonf.json_extract_multi("j", self.FIELDS, tier="exact",
-                                     json_profile=JsonProfile.strict()).alias("u")
-        ).select("u.*")
-        assert "ArrowEvalPython" in exact._jdf.queryExecution().executedPlan().toString()
-        assert out.collect() == exact.collect()
+        with monkeypatch.context() as m:
+            m.setattr(jvm_tier, "load", lambda sc: None)
+            py = df.select(
+                jsonf.json_extract_multi("j", fields).alias("u")
+            ).select("u.*")
+        assert "ArrowEvalPython" in py._jdf.queryExecution().executedPlan().toString()
+        assert out.collect() == py.collect()
 
     def test_length_counts_members_like_json_length(self, spark, python_tier):
         # duplicate members and nesting past the finder's depth limit:
@@ -339,118 +246,6 @@ class TestAutoTierMulti:
         ).collect()
         assert [(r.u.n, r.u.c) for r in out] == [(r.n, r.c) for r in out]
         assert [(r.n, r.c) for r in out] == [(2, None), (1, 2), (None, None)]
-
-    def test_auto_falls_back_on_envelope(self, spark):
-        from datafusion_functions_json_spark.functions.multi import _auto_tier
-        from datafusion_functions_json_spark.functions.native import JsonProfile
-
-        specs = [("i", "int", ("a",))]
-        # typed-getter coercion concern -> exact
-        assert _auto_tier(specs, JsonProfile(mixed_types_at_paths=True)) == "exact"
-        # raw-slice concern hits text, not int; 1 field + unknown size
-        # -> the per-field variant form (r16 policy)
-        assert (
-            _auto_tier(specs, JsonProfile(needs_raw_slices=True))
-            == "variant_perfield"
-        )
-        assert (
-            _auto_tier([("t", "text", ("a",))], JsonProfile(needs_raw_slices=True))
-            == "exact"
-        )
-        # union kinds never ride auto-variant (even with the claim)
-        assert _auto_tier([("u", "union", ("a",))], JsonProfile()) == "exact"
-        # JSONPath-inexpressible key -> exact (silent, no raise)
-        assert _auto_tier([("i", "int", ("a.b",))], JsonProfile()) == "exact"
-        df = self._df(spark)
-        out = df.select(
-            jsonf.json_extract_multi(
-                "j", {"i": ("int", "a")}, tier="auto",
-                json_profile=JsonProfile.strict(),
-            ).alias("u")
-        ).select("u.*")
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" in plan  # strict profile -> exact tier
-
-    def test_auto_tier_policy(self, spark):
-        """Plan-pinned r16 auto policy (VERDICT r15 #4 — the
-        json_extract_multi twin of test_cosine_topk_auto_tier_policy):
-        field count picks fused-vs-perfield, the free plan-size
-        statistic picks exact on provably-small inputs, and
-        stat-unavailable (Spark Connect posture) degrades to the
-        conservative large-input tier."""
-        from datafusion_functions_json_spark.functions.multi import (
-            _HOF_MIN_FIELDS,
-            _SMALL_INPUT_BYTES,
-            _auto_tier,
-        )
-
-        from datafusion_functions_json_spark.functions.native import JsonProfile
-
-        claim = JsonProfile()
-        two = [("i", "int", ("a",)), ("s", "str", ("b",))]
-        three = two + [("e", "exists", ("a",))]
-        assert _HOF_MIN_FIELDS == 3
-        # no claim -> exact, whatever the shape (fidelity default)
-        assert _auto_tier(three, None) == "exact"
-        assert _auto_tier(two, None, self._df(spark)) == "exact"
-        # >= 3 expressible fields -> fused variant, regardless of size
-        assert _auto_tier(three, claim) == "variant"
-        assert _auto_tier(three, claim, self._df(spark)) == "variant"
-        # 1-2 fields, no input_df (size unknown) -> per-field variant
-        assert _auto_tier(two, claim) == "variant_perfield"
-        # a local relation reports Long.MaxValue stats -> unknown ->
-        # the conservative large-input tier
-        from datafusion_functions_json_spark.plans import plan_size_bytes
-
-        assert plan_size_bytes(self._df(spark)) is None
-        assert _auto_tier(two, claim, self._df(spark)) == "variant_perfield"
-        # 1-2 fields, known-small input (file source: real size stats)
-        # -> exact
-        import tempfile
-
-        with tempfile.TemporaryDirectory() as td:
-            path = f"{td}/small.parquet"
-            self._df(spark).write.parquet(path)
-            small = spark.read.parquet(path)
-            sz = plan_size_bytes(small)
-            assert sz is not None and sz < _SMALL_INPUT_BYTES
-            assert _auto_tier(two, claim, small) == "exact"
-        # stat unreachable (Connect: no _jdf) -> treated as LARGE
-        class _NoJdf:
-            pass
-
-        assert _auto_tier(two, claim, _NoJdf()) == "variant_perfield"
-
-    def test_perfield_tier_matches_exact_and_stays_codegen(self, spark):
-        from datafusion_functions_json_spark.functions.native import JsonProfile
-        from datafusion_functions_json_spark.plans import (
-            arrow_eval_count,
-            explain_str,
-        )
-
-        fields = {"i": ("int", "a"), "s": ("str", "b")}
-        df = self._df(spark)
-        per = df.select(
-            jsonf.json_extract_multi(
-                "j", fields, tier="variant_perfield"
-            ).alias("u")
-        ).select("u.*")
-        exact = df.select(
-            jsonf.json_extract_multi("j", fields, tier="exact").alias("u")
-        ).select("u.*")
-        assert per.collect() == exact.collect()
-        # no Python hop, and NOT the HOF-bound fused form: the per-field
-        # projection keeps variant_get out of any lambda binding
-        assert arrow_eval_count(per) == 0
-        assert "lambda" not in explain_str(per, "extended").lower()
-        # a claimed default-tier call on 2 fields routes here (auto)
-        auto = df.select(
-            jsonf.json_extract_multi(
-                "j", fields, json_profile=JsonProfile()
-            ).alias("u")
-        ).select("u.*")
-        assert auto.collect() == exact.collect()
-        assert arrow_eval_count(auto) == 0
 
 
 class TestEvalPerDistinct:

@@ -15,7 +15,7 @@ The reference's DataFusion plan-shape tests (test_plan_json_get_cte,
 test_plan_json_get_unnest, test_plan_json_get_int_unnest,
 test_plan_json_get_union_array_nested) assert ExprPlanner rewrite
 output; the Spark twins of those guarantees are the rewriter/plan
-asserts in test_sql_operators.py and test_native.py.
+asserts in test_sql_operators.py and test_functions.py::TestPlanQuality.
 """
 
 from __future__ import annotations

@@ -92,12 +92,28 @@ class TestSqlSurface:
         assert [(r.v, r.n) for r in rows] == [("7", False), (None, True)]
 
     def test_multi_literal_path_sql(self, spark):
-        df = spark.createDataFrame([('{"a": {"b": [9]}}',)], "j string")
-        df.createOrReplaceTempView("deep")
-        assert (
-            spark.sql("select json_get_int(j, 'a', 'b', 0L) v from deep").collect()[0].v
-            == 9
+        df = spark.createDataFrame(
+            [('{"a": {"b": [9]}}',), ('{"k": 5} trailing',), ('{"":5}',)],
+            "j string",
         )
+        df.createOrReplaceTempView("deep")
+        rows = spark.sql(
+            "select json_get_int(j, 'a', 'b', 0L) v, json_get_int(j, 'k') k, "
+            "json_get_int(j, '') e from deep"
+        ).collect()
+        # text after the value is never looked at; '' is a key like any other
+        assert [(r.v, r.k, r.e) for r in rows] == [
+            (9, None, None), (None, 5, None), (None, None, 5)
+        ]
+        assert [
+            r.v for r in jsonf.sql(spark, "select j->>'' as v from deep").collect()
+        ] == [None, None, "5"]
+        # every getter takes a multi-element literal path
+        for fn in (
+            "json_get_str", "json_get_int", "json_get_float", "json_get_bool",
+            "json_get_json", "json_get_array", "json_as_text", "json_contains",
+        ):
+            spark.sql(f"select {fn}(j, 'a', 'b') from deep").collect()
 
 
 class TestSqlPlanErrors:
@@ -255,316 +271,3 @@ class TestFromScalarNullParity:
             "from fs_null_t order by isn"
         ).collect()
         assert [(r.isn, r.txt) for r in rows] == [(False, "7"), (True, None)]
-
-
-class TestAutoTier:
-    """register_all(auto_tier=True): canonical SQL names route to the
-    Catalyst-inlined variant tier when the JsonProfile says the variant
-    semantics are safe; the displaced exact implementations stay
-    reachable as <name>_exact and answers agree inside the envelope."""
-
-    ROUTED = [
-        "json_get_str",
-        "json_get_int",
-        "json_get_float",
-        "json_get_bool",
-        "json_get_json",
-        "json_get_array",
-        "json_as_text",
-        "json_contains",
-    ]
-
-    # envelope-conformant corpus: plain object keys, no trailing
-    # garbage, consistently-typed values at each queried path, no
-    # integral floats, minified containers (exact raw slices == variant
-    # re-serialization on such docs)
-    DOCS = [
-        '{"k":"abc","n":42,"b":true,"f":0.5,"arr":[1,"x",null],"o":{"in":1}}',
-        '{"k":null,"n":null,"b":null,"f":null,"arr":null,"o":null}',
-        '{"other":1}',
-        ' {"k":"ws","n":-7,"b":false,"f":-2.25,"arr":[],"o":{}}',
-        "not json",
-        "",
-        None,
-    ]
-    PATH_FOR = {
-        "json_get_str": "k",
-        "json_get_int": "n",
-        "json_get_float": "f",
-        "json_get_bool": "b",
-        "json_get_json": "o",
-        "json_get_array": "arr",
-        "json_as_text": "k",
-        "json_contains": "k",
-    }
-
-    def test_routed_names_match_exact_and_are_python_free(self, spark):
-        import datafusion_functions_json_spark as jsonf
-        from datafusion_functions_json_spark.plans import explain_str
-
-        spark.createDataFrame(
-            [(i, d) for i, d in enumerate(self.DOCS)], "id int, j string"
-        ).createOrReplaceTempView("auto_tier_t")
-        routed = jsonf.register_all(spark, auto_tier=True)
-        try:
-            assert routed == self.ROUTED
-            for fn in self.ROUTED:
-                key = self.PATH_FOR[fn]
-                got = spark.sql(
-                    f"select id, {fn}(j, '{key}') as v "
-                    "from auto_tier_t order by id"
-                )
-                want = spark.sql(
-                    f"select id, {fn}_exact(j, '{key}') as v "
-                    "from auto_tier_t order by id"
-                ).collect()
-                assert [tuple(r) for r in got.collect()] == [
-                    tuple(r) for r in want
-                ], fn
-                # the routed plan is pure JVM: no Python/Arrow eval hop
-                plan = explain_str(got)
-                assert "EvalPython" not in plan, (fn, plan)
-        finally:
-            jsonf.register_all(spark)  # restore the reference-exact surface
-
-    def test_operator_rewriter_composes_with_auto_tier(self, spark):
-        # jsonf.sql's ->/->>/? rewriter emits canonical names; under
-        # auto_tier those have a fixed (j, k) STRING-key signature, so
-        # the rewriter must keep routed names only for single-string-key
-        # calls and steer chains / int indexes / nested operands to
-        # <name>_exact — same answers, no arity or semantics break
-        import datafusion_functions_json_spark as jsonf
-        from datafusion_functions_json_spark.plans import explain_str
-
-        spark.createDataFrame(
-            [('{"k": 7, "a": {"b": 5}, "arr": [10, 11]}',)], "j string"
-        ).createOrReplaceTempView("compose_t")
-        queries = [
-            # (query, expected single row)
-            ("select j->>'k' as v from compose_t", "7"),
-            ("select (j->'a'->'b')::int as v from compose_t", 5),
-            ("select j->'a'->>'b' as v from compose_t", "5"),
-            ("select j->>0 as v from compose_t", None),  # non-array doc
-            ("select j->'arr'->>0 as v from compose_t", "10"),
-            ("select j ? 'k' as v from compose_t", True),
-            # guard-char literal key: routed body would raise_error at
-            # runtime where the exact tier answers NULL (review finding)
-            ("select j->>'a.b' as v from compose_t", None),
-            ("select j ? 'x.y' as v from compose_t", False),
-            # user-written function-form calls (not operator-emitted):
-            # multi-key and int-index shapes must also take the escape
-            ("select json_get_int(j, 'a', 'b') as v from compose_t", 5),
-            ("select json_as_text(j, 0) as v from compose_t", None),
-        ]
-        # exact surface answers first
-        jsonf.register_all(spark)
-        want = [
-            jsonf.sql(spark, q).collect()[0].v for q, _ in queries
-        ]
-        assert want == [exp for _, exp in queries]
-        routed = jsonf.register_all(spark, auto_tier=True)
-        try:
-            assert routed
-            for (q, _), w in zip(queries, want):
-                df = jsonf.sql(spark, q)
-                assert df.collect()[0].v == w, q
-            # the single-string-key form actually rides the routed tier
-            plan = explain_str(jsonf.sql(spark, "select j->>'k' from compose_t"))
-            assert "EvalPython" not in plan
-            # inner call EMBEDDED into an outer call's arg text must
-            # already carry the right name (review finding: a post-pass
-            # over top-level tokens missed it — int index 0 silently
-            # became object key '0' on the routed tier)
-            spark.createDataFrame(
-                [('[{"k": 9}, 2]',)], "j string"
-            ).createOrReplaceTempView("compose_arr_t")
-            for chain in ("(j->>0)->>'k'", "(j->0)->>'k'"):
-                assert (
-                    jsonf.sql(
-                        spark,
-                        f"select {chain} as v from compose_arr_t",
-                    ).collect()[0].v
-                    == "9"
-                ), chain
-            # the chained form fell back to the exact escape (rewrite
-            # text check — session-independent)
-            from datafusion_functions_json_spark.sql import rewrite_sql
-
-            txt = rewrite_sql(
-                "select (j->'a'->'b')::int from t", routed=tuple(routed)
-            )
-            assert "json_get_int_exact(" in txt, txt
-            txt2 = rewrite_sql("select j->>'k' from t", routed=tuple(routed))
-            assert "json_as_text(" in txt2 and "_exact" not in txt2, txt2
-        finally:
-            jsonf.register_all(spark)
-
-    def test_mid_routing_failure_restores_exact_surface(self, spark):
-        # round-12 review: if a CREATE fails mid-routing (SQL UDFs
-        # unavailable/restricted), the dropped canonical name and every
-        # already-routed name must be restored to the exact tier — the
-        # session must never be left with unresolved functions
-        import datafusion_functions_json_spark as jsonf
-        from datafusion_functions_json_spark import register as regmod
-
-        real_sql = type(spark).sql
-        calls = {"n": 0}
-
-        def failing_sql(self_, q, *a, **kw):
-            if q.startswith("CREATE OR REPLACE TEMPORARY FUNCTION"):
-                calls["n"] += 1
-                if calls["n"] == 3:  # fail on the third routed name
-                    raise RuntimeError("SQL UDFs restricted")
-            return real_sql(self_, q, *a, **kw)
-
-        try:
-            try:
-                type(spark).sql = failing_sql
-                with pytest.raises(RuntimeError, match="restricted"):
-                    jsonf.register_all(spark, auto_tier=True)
-            finally:
-                type(spark).sql = real_sql
-            # every canonical name (routed-then-restored, dropped, or
-            # never reached) still resolves with its VARIADIC exact
-            # signature — a leftover routed (j, k) SQL UDF would throw
-            # an arity AnalysisException on the 3-arg call
-            spark.createDataFrame(
-                [('{"k": 5, "a": {"b": 2}} trailing',)], "j string"
-            ).createOrReplaceTempView("rollback_t")
-            for fn in regmod._AUTO_TIER_BODY:
-                spark.sql(
-                    f"select {fn}(j, 'a', 'b') as v from rollback_t"
-                ).collect()
-            # exact-tier semantics confirmed: the trailing-garbage doc
-            # still parses (the variant tier would yield NULL)
-            assert (
-                spark.sql("select json_get_int(j, 'k') v from rollback_t")
-                .collect()[0]
-                .v
-                == 5
-            )
-        finally:
-            jsonf.register_all(spark)  # restore the default surface
-
-    def test_guard_chars_route_to_exact(self, spark):
-        # the Python-side _JSONPATH_UNSAFE set must stay in sync with
-        # the RLIKE class in _JSONPATH_GUARD: every unsafe char both
-        # (a) trips the SQL guard's raise_error on the routed tier and
-        # (b) makes the rewriter emit <name>_exact instead
-        import datafusion_functions_json_spark as jsonf
-        from datafusion_functions_json_spark import register as regmod
-        from datafusion_functions_json_spark.sql import rewrite_sql
-
-        routed = jsonf.register_all(spark, auto_tier=True)
-        try:
-            for ch in regmod._JSONPATH_UNSAFE:
-                key_sql = ("x" + ch + "y").replace("'", "''")
-                with pytest.raises(Exception, match="not expressible"):
-                    spark.sql(
-                        f"select json_get_int('{{}}', '{key_sql}')"
-                    ).collect()
-                # (b) the rewriter steers the same literal to _exact
-                txt = rewrite_sql(
-                    f"select j->>'{key_sql}' from t", routed=tuple(routed)
-                )
-                assert "json_as_text_exact(" in txt, (ch, txt)
-        finally:
-            jsonf.register_all(spark)
-
-    def test_empty_key_unroutable(self, spark):
-        # round-13 ADVICE: '' slipped through both guards — _routed_fits
-        # accepted it (len==2 quote-delimited, no unsafe chars) and the
-        # RLIKE guard never trips on an empty string, so the routed body
-        # built JSONPath '$.' and crashed (INVALID_VARIANT_GET_PATH)
-        # where the exact tier answers. Pins: (a) the SQL guard now
-        # raises the descriptive error, (b) the rewriter steers j->>''
-        # to <name>_exact, (c) end-to-end jsonf.sql and the exact tier
-        # both return the value of the empty-string key
-        import datafusion_functions_json_spark as jsonf
-        from datafusion_functions_json_spark.sql import rewrite_sql
-
-        routed = jsonf.register_all(spark, auto_tier=True)
-        try:
-            with pytest.raises(Exception, match="not expressible"):
-                spark.sql(
-                    "select json_get_int('{\"\":5}', '')"
-                ).collect()
-            txt = rewrite_sql("select j->>'' from t", routed=tuple(routed))
-            assert "json_as_text_exact(" in txt, txt
-            spark.createDataFrame(
-                [('{"":5}',)], "j string"
-            ).createOrReplaceTempView("empty_key_t")
-            assert (
-                jsonf.sql(spark, "select j->>'' as v from empty_key_t")
-                .collect()[0]
-                .v
-                == "5"
-            )
-            assert (
-                spark.sql(
-                    "select json_get_int_exact(j, '') as v from empty_key_t"
-                )
-                .collect()[0]
-                .v
-                == 5
-            )
-        finally:
-            jsonf.register_all(spark)
-
-    def test_parser_extension_probe_negative_on_stock_session(self, spark):
-        # the auto_tier x parse-time-rewriter guard must NOT trip on a
-        # stock session: the conf is unset and the parser rejects ->>
-        from datafusion_functions_json_spark.register import (
-            _parser_extension_state,
-        )
-
-        assert _parser_extension_state(spark) is None
-
-    def test_auto_tier_refuses_legacy_parser_rewriter(
-        self, spark, monkeypatch
-    ):
-        # a conf-blind parse-time rewriter (old jsonsparkext jar or any
-        # third-party ->-rewriter) combined with routing is the silent
-        # wrong-answer envelope of VERDICT r12 — register_all must
-        # refuse loudly and leave the session's surface untouched
-        import datafusion_functions_json_spark as jsonf
-        from datafusion_functions_json_spark import register as regmod
-
-        monkeypatch.setattr(
-            regmod, "_parser_extension_state", lambda s: "legacy"
-        )
-        with pytest.raises(ValueError, match="routed-names conf"):
-            jsonf.register_all(spark, auto_tier=True)
-        monkeypatch.setattr(
-            regmod, "_parser_extension_state", lambda s: "aware"
-        )
-        try:
-            assert jsonf.register_all(spark, auto_tier=True)
-        finally:
-            monkeypatch.undo()
-            jsonf.register_all(spark)
-
-    def test_strict_profile_routes_nothing(self, spark):
-        import datafusion_functions_json_spark as jsonf
-        from datafusion_functions_json_spark.functions.native import (
-            JsonProfile,
-        )
-
-        try:
-            routed = jsonf.register_all(
-                spark, auto_tier=True, json_profile=JsonProfile.strict()
-            )
-            assert routed == []
-            # canonical name still the exact tier: trailing-garbage doc
-            # parses leading value (variant tier would yield NULL)
-            spark.createDataFrame(
-                [('{"k": 5} trailing',)], "j string"
-            ).createOrReplaceTempView("strict_t")
-            assert (
-                spark.sql("select json_get_int(j, 'k') v from strict_t")
-                .collect()[0]
-                .v
-                == 5
-            )
-        finally:
-            jsonf.register_all(spark)

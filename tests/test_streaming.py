@@ -567,44 +567,6 @@ class TestDecontaminateStream:
             )
 
 
-class TestExtractTiers:
-    def test_variant_and_auto_tiers_match_exact_in_stream(self, spark, json_dir):
-        stream = spark.readStream.schema(SCHEMA).json(json_dir)
-        results = {}
-        for tier in ("exact", "variant", "auto"):
-            out = js.extract_json_stream(
-                stream, "payload",
-                {"n2": ("int", "n"), "u": ("str", "user")},
-                tier=tier,
-            )
-            assert out.isStreaming
-            name = f"ext_{tier}"
-            q = (
-                out.writeStream.format("memory").queryName(name)
-                .outputMode("append").trigger(availableNow=True).start()
-            )
-            q.awaitTermination(120)
-            rows = spark.sql(
-                f"select n2, u from {name} order by n2 nulls first, u"
-            ).collect()
-            results[tier] = [(r.n2, r.u) for r in rows]
-        assert results["exact"] == results["variant"] == results["auto"]
-        # the variant plan must be Python-free
-        plan = (
-            js.extract_json_stream(
-                spark.read.schema(SCHEMA).json(json_dir), "payload",
-                {"n2": ("int", "n")}, tier="variant",
-            )._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "ArrowEvalPython" not in plan
-
-    def test_unknown_tier_raises(self, spark, json_dir):
-        stream = spark.readStream.schema(SCHEMA).json(json_dir)
-        with pytest.raises(ValueError, match="unknown tier"):
-            js.extract_json_stream(stream, "payload", {"n2": ("int", "n")},
-                                   tier="warp")
-
-
 class TestReviewFindingsRound7d:
     """Regression pins for the streaming/column/register review batch."""
 

@@ -67,24 +67,20 @@ OFFSET_TABLES = {
     # unchanged.
     "documents": ["doc_id"],
 }
-# the 5 floor-bound headliners BASELINE.md's claim is about, plus three
-# per-row-dominated controls: multi_extract (pandas-UDF JSON tier),
-# multi_extract_variant (zero-hop JVM variant tier — the 100 TB scale
-# path for JSON extraction), lang_id (regex scoring, Spark-favored),
+# the 5 floor-bound headliners BASELINE.md's claim is about, plus two
+# per-row-dominated controls: multi_extract (the fused JSON extraction)
+# and lang_id (regex scoring, Spark-favored),
 # plus the round-9 LLM-operator tier whose 100 TB story BASELINE.md
 # argues from docstrings: semantic_dedup (cluster-keyed SemDeDup over
 # 10x embeddings) and training_prep (curate→split→chunk→pack).
 QUERIES = [
     "tpch_q1", "events_hourly", "orders_join", "json_agg", "cosine_topk",
-    "multi_extract", "multi_extract_variant", "lang_id",
+    "multi_extract", "lang_id",
     "semantic_dedup", "training_prep",
     # round-11 ledger additions: kernels shared with queries that invert
     # at sf1 but never themselves measured beyond sf0.1 (VERDICT r10)
-    "json_get_int", "json_get_int_variant", "json_as_text_native",
+    "json_get_int",
     "token_count",
-    # round-12: decade rows for the slowest-falling weak query's JVM
-    # twin (VERDICT r11 item 4 — promote-or-adjudicate decision)
-    "json_agg_variant",
     # round-14: eval_per_distinct's N→D claim at sf1 (VERDICT r13
     # item 3) — dict_extract vs its per-row twin on events.props
     # (1M rows, 100 distinct at sf1: a 10,000:1 duplication ratio)
