@@ -37,11 +37,10 @@ def _register_pickle_by_value(*modules) -> None:
         pass
 
 
-from . import register as _register_mod  # noqa: E402
 from .functions import core as _core, kernels as _kernels  # noqa: E402
 from .functions import multi as _multi, udfs as _udfs  # noqa: E402
 
-_register_pickle_by_value(_core, _kernels, _udfs, _multi, _register_mod)
+_register_pickle_by_value(_core, _kernels, _udfs, _multi)
 
 from .column import JsonColumn, col
 from .functions.multi import JsonProfile, json_extract_multi

@@ -139,23 +139,13 @@ def _invoke(fn_key: str, json, path: tuple) -> Column:
     lit_path, key_col = _validate_path(fn_key, path)
     text_col, prov = _coerce_json_arg(json, key_col is None)
     if key_col is not None:
-        return udfs.column_path_udf(fn_key)(text_col, key_col)
+        return udfs.path_udf(fn_key)(text_col, key_col)
     if prov is not None:
         # Call un-nesting: f(json_get(j, 'a'), 'b') => f(j, 'a', 'b').
         # Fires only when the inner call is json_get (type-preserving) and
         # every path element is literal (reference: src/rewrite.rs:74-83).
         text_col, lit_path = prov[0], prov[1] + lit_path
     return _literal_call(fn_key, text_col, lit_path)
-
-
-def _union_at(text_col, lit_path: tuple) -> Column:
-    """The union struct of ``json_get(text_col, *lit_path)``, its null arm
-    a whole-struct NULL (the JVM tier returns it that way)."""
-    jvm = jvm_tier.column("json_get", text_col, lit_path)
-    if jvm is not None:
-        return jvm
-    raw = udfs.literal_path_udf("json_get", lit_path)(text_col)
-    return union_mod.mask_null_arm(raw)
 
 
 def json_get(json, *path):
@@ -171,14 +161,15 @@ def json_get(json, *path):
     if prov is not None:
         root, inner_path = prov
         full = inner_path + lit_path
-        return JsonColumn(_union_at(root, full), root=root, path=full)
+        return JsonColumn(
+            _literal_call("json_get", root, full), root=root, path=full
+        )
     if key_col is not None:
-        raw = udfs.column_path_udf("json_get")(text_col, key_col)
         # no LITERAL provenance (un-nesting requires literal paths) but
         # cast elision has no such guard — keep enough to rewrite
         # .cast('bigint') into json_get_int(text, key_col)
         return JsonColumn(
-            union_mod.mask_null_arm(raw),
+            udfs.path_udf("json_get")(text_col, key_col),
             root=None,
             path=None,
             cast_root=text_col,
@@ -186,7 +177,7 @@ def json_get(json, *path):
         )
     root = text_col if not isinstance(json, JsonColumn) else None
     return JsonColumn(
-        _union_at(text_col, lit_path),
+        _literal_call("json_get", text_col, lit_path),
         root=root,
         path=lit_path if root is not None else None,
     )

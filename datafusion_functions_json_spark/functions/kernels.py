@@ -187,7 +187,7 @@ def _dict_encode(json_vals, min_rows=1024, sample=256):
     parsing every row — and bit-identical, because every kernel is a
     pure per-row function.
 
-    Returns ``(distinct_vals + [None], idx)`` where ``idx`` is a numpy
+    Returns ``(distinct_vals + [None], idx)`` where ``idx`` is an Arrow
     index array mapping each input row to its distinct value (null
     rows map to the appended ``None`` slot, so kernels compute the
     null-row result themselves), or ``None`` when the shortcut does
@@ -220,12 +220,7 @@ def _dict_encode(json_vals, min_rows=1024, sample=256):
             return None
         if n < min_rows:
             return None
-        head = (
-            json_vals.iloc[:sample]
-            if hasattr(json_vals, "iloc")
-            else json_vals[:sample]
-        )
-        head = head.tolist() if hasattr(head, "tolist") else head
+        head = json_vals[:sample]
     try:
         distinct = len(set(head))
     except TypeError:
@@ -243,23 +238,6 @@ def _dict_encode(json_vals, min_rows=1024, sample=256):
         return None  # head lied (e.g. sorted input): direct path
     idx = pc.fill_null(enc.indices, d)
     return enc.dictionary.to_pylist() + [None], idx
-
-
-def _scatter(out_d, idx):
-    """Scatter per-distinct kernel outputs back to row order via numpy
-    fancy indexing on an object array (C-speed; measured 14x over the
-    per-row kernel on a 600k-row 30-distinct batch). ``idx`` is the
-    Arrow index array from :func:`_dict_encode`. Element-wise fill
-    keeps ragged values (lists from json_get_array / object_keys) as
-    single cells instead of letting numpy broadcast them. Arrow-native
-    callers (the arrow_udf wrappers) skip this and ``pc.take`` typed
-    arrays directly."""
-    import numpy as np
-
-    a = np.empty(len(out_d), dtype=object)
-    for i, v in enumerate(out_d):
-        a[i] = v
-    return a[idx.to_numpy()]
 
 
 def _scalar_pairs(json_vals, paths, *, check_big=True):

@@ -1,30 +1,30 @@
-"""Arrow-UDF construction over the kernels.
+"""The JSON functions' Python bodies: Arrow UDFs over the kernels.
 
-Two shapes, mirroring the reference's kernel dispatch (reference:
-src/common.rs:159-182 dispatches (json array|scalar) × (path
-scalars|array)):
+Every function has one batch body, shared by the Python API and the SQL
+names :func:`register_all` registers. The body reads the shapes of its
+arguments per batch, like the reference's one dispatch over (JSON array
+| union) x (scalar | array path) (reference: src/common.rs:159-182):
 
-* **literal path** (the dominant case): the path is closed over at plan
-  time, so ONLY the JSON column crosses the JVM→Python Arrow boundary.
-  UDF objects are cached per (function, path) so repeated plan references
-  reuse one PythonUDF expression.
-* **column path**: a single path element comes from a column (the
-  reference allows exactly one column path element and only alone —
-  reference: src/common.rs:129-133); both arrays cross the boundary and
-  the path tuple is built per row. A NULL key in the column yields a null
-  result, not an error (reference: src/common.rs:118-127 JsonPath::None).
+* **literal path** (:func:`literal_path_udf`, the API's literal calls):
+  the path is closed over at plan time, so ONLY the JSON column crosses
+  the JVM→Python Arrow boundary. UDF objects are cached per (function,
+  path) so repeated plan references reuse one PythonUDF expression.
+* **path columns** (:func:`path_udf`, the SQL names and the API's column
+  paths): ``(doc, *path_cols)``. The path arguments are checked per batch
+  by the reference's rules (:func:`_check_path_args`). A union-struct
+  document continues the lookup through its ``array``/``object`` text
+  (reference: src/common_union.rs:49-57). When every path column holds
+  one non-null value in the batch, the literal-path body runs; otherwise
+  the path tuple is built per row, and a NULL key yields a null result
+  (reference: src/common.rs:118-127 JsonPath::None).
 
-Since round 18 the wrappers are true **Arrow UDFs** (Spark 4.1
-``arrow_udf``: ``pyarrow.Array`` in, ``pyarrow.Array`` out) instead of
-pandas UDFs — the batch never materializes as a pandas object Series on
-either side of the boundary (guide §4.2: hand whole Arrow batches to the
-kernel layer), and outputs are built as explicitly-typed Arrow arrays
-(``from_pandas=True`` keeps the old pandas NaN→null coercion for float
-outputs bit-for-bit). On batches whose documents repeat, the per-batch
-dictionary shortcut (:func:`kernels._dict_encode` — the Arrow analog of
-the reference's dictionary-array evaluation, src/common.rs:310-327) runs
-the kernel on the DISTINCT documents only and scatters results back with
-one ``pc.take`` per output column.
+The literal-path body takes the per-batch dictionary shortcut
+(:func:`kernels._dict_encode` — the Arrow analog of the reference's
+dictionary-array evaluation, src/common.rs:310-327): on batches whose
+documents repeat, the kernel runs on the DISTINCT documents only and one
+``pc.take`` scatters the typed result back. Outputs are explicitly-typed
+Arrow arrays; ``json_get``'s null arm is a whole-struct NULL, as on the
+JVM tier.
 
 All UDFs are deterministic (never call ``asNondeterministic``) so Catalyst
 remains free to push/collapse projections containing them — the Spark
@@ -37,15 +37,21 @@ from __future__ import annotations
 import itertools
 from functools import lru_cache
 
-import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import functions as F
 
 from . import kernels
-from .kernels import UNION_FIELDS
+from .kernels import UNION_FIELDS, _dict_encode
 
-__all__ = ["literal_path_udf", "column_path_udf", "union_to_text_udf", "RETURN_TYPES"]
+__all__ = [
+    "literal_path_udf",
+    "path_udf",
+    "union_to_text_udf",
+    "union_is_null_udf",
+    "from_scalar_udf",
+    "RETURN_TYPES",
+]
 
 # Return types per function key. json_length returns LongType — Spark has
 # no unsigned (reference returns UInt64, SURVEY.md §2.1 #10).
@@ -87,15 +93,6 @@ _KERNELS = {
 _STRUCT_FNS = {"json_get"}
 
 
-def _wrap_result(fn_key: str, out):
-    """Pandas wrapping of a kernel result — kept for the SQL-surface
-    UDFs (register.py), which bridge through pandas for the nested
-    union-struct argument handling."""
-    if fn_key in _STRUCT_FNS:
-        return pd.DataFrame({name: out[name] for name in UNION_FIELDS})
-    return pd.Series(out, dtype=object)
-
-
 # Arrow output type per function key — matches RETURN_TYPES exactly.
 _PA_TYPES = {
     "json_get_str": pa.string(),
@@ -125,25 +122,37 @@ _UNION_PA_TYPES = (
 
 
 def _pa_col(values, pa_type):
-    """Typed Arrow array from kernel output. ``from_pandas=True`` keeps
-    the pandas-UDF era's NaN→null coercion (a float NaN from
-    parse_float_like_rust must stay SQL NULL, exactly as pandas object
-    Series produced)."""
+    """Typed Arrow array from kernel output. ``from_pandas=True`` turns a
+    float NaN into null: a NaN from parse_float_like_rust must stay SQL
+    NULL."""
     return pa.array(values, type=pa_type, from_pandas=True)
 
 
-def _union_struct(out, idx=None):
-    """Assemble the json_get union struct from the kernel's 7 member
-    lists; ``idx`` (from the dictionary shortcut) scatters each typed
-    member column via one C-speed take."""
-    import pyarrow.compute as pc
+def _to_arrow(fn_key: str, out, idx=None):
+    """Typed Arrow array of a kernel result; ``idx`` (from the dictionary
+    shortcut) scatters it to row order with one C-speed take. The union
+    struct's null arm (type_id 0) is a whole-struct NULL, so ``IS NULL``
+    holds for it (reference: tests/main.rs:1612-1729)."""
+    if fn_key in _STRUCT_FNS:
+        children = [
+            _pa_col(out[name], t) for name, t in zip(UNION_FIELDS, _UNION_PA_TYPES)
+        ]
+        arr = pa.StructArray.from_arrays(
+            children, names=list(UNION_FIELDS), mask=pc.equal(children[0], 0)
+        )
+    else:
+        arr = _pa_col(out, _PA_TYPES[fn_key])
+    return arr if idx is None else pc.take(arr, idx)
 
-    children = [
-        _pa_col(out[name], t) for name, t in zip(UNION_FIELDS, _UNION_PA_TYPES)
-    ]
-    if idx is not None:
-        children = [pc.take(c, idx) for c in children]
-    return pa.StructArray.from_arrays(children, names=list(UNION_FIELDS))
+
+def _eval_literal(fn_key: str, kernel, js: pa.Array, path: tuple) -> pa.Array:
+    """``kernel`` over the documents ``js`` at one ``path`` — on the
+    distinct documents only when the batch repeats them."""
+    pre = _dict_encode(js)
+    if pre is None:
+        return _to_arrow(fn_key, kernel(js.to_pylist(), itertools.repeat(path)))
+    dvals, idx = pre
+    return _to_arrow(fn_key, kernel(dvals, itertools.repeat(path)), idx)
 
 
 @lru_cache(maxsize=512)
@@ -156,102 +165,114 @@ def literal_path_udf(fn_key: str, path: tuple):
     reference: src/common_macros.rs:17-49).
     """
     kernel = _KERNELS[fn_key]
-    ret = RETURN_TYPES[fn_key]
-    # closure-captured for the foreign-cwd contract (like multi.py's
-    # fast_mask): the UDF body must not import package modules
-    dict_encode = kernels._dict_encode
-    pa_col = _pa_col
 
-    if fn_key in _STRUCT_FNS:
-        union_struct = _union_struct
-
-        def fn(js: pa.Array) -> pa.Array:
-            pre = dict_encode(js)
-            if pre is None:
-                return union_struct(
-                    kernel(js.to_pylist(), itertools.repeat(path))
-                )
-            dvals, idx = pre
-            return union_struct(
-                kernel(dvals, itertools.repeat(path)), idx
-            )
-
-    else:
-        pa_type = _PA_TYPES[fn_key]
-
-        def fn(js: pa.Array) -> pa.Array:
-            import pyarrow.compute as pc
-
-            pre = dict_encode(js)
-            if pre is None:
-                return pa_col(
-                    kernel(js.to_pylist(), itertools.repeat(path)), pa_type
-                )
-            dvals, idx = pre
-            out_d = kernel(dvals, itertools.repeat(path))
-            return pc.take(pa_col(out_d, pa_type), idx)
+    def fn(js: pa.Array) -> pa.Array:
+        return _eval_literal(fn_key, kernel, js, path)
 
     fn.__name__ = fn_key
-    return F.arrow_udf(fn, ret)
+    return F.arrow_udf(fn, RETURN_TYPES[fn_key])
 
 
-def _key_to_elem(v):
-    """Normalize one per-row key value from a column path: numpy ints →
-    int, None/NaN → None (null key ⇒ null result, reference:
-    src/common.rs:118-127). Booleans and datetimes are REJECTED like
-    the SQL surface and the reference's plan check — int()-coercing
-    them would silently turn ``True`` into array index 1 (defeating
-    core's bool guard, which fires on the path element, not here) and
-    a timestamp into a nanosecond 'index'."""
-    if v is None or v != v:  # NaN check for float keys from pandas
-        return None
-    if isinstance(v, str):
-        return v
-    if isinstance(v, (bool, np.bool_)):
+# DataFusion-style names for the argument-type error message (reference:
+# src/common.rs:106-141 rejects non-string/int path args at plan time with
+# the DataType debug name; tests/main.rs:291-298 pins the Null wording).
+_DF_TYPE_NAMES = {
+    "null": "Null",
+    "bool": "Boolean",
+    "float": "Float32",
+    "double": "Float64",
+    "date32[day]": "Date32",
+    "timestamp[us]": "Timestamp(Microsecond, None)",
+}
+
+
+def _check_path_args(fn_key: str, key_cols) -> tuple | None:
+    """Reference arg validation, applied per Arrow batch. Returns the path
+    as a tuple when every path column holds one non-null value in the
+    batch, else None (the path varies per row).
+
+    * A path argument whose Arrow type is ``null`` (Spark's untyped NULL
+      literal, VOID) or any non-string/int type is rejected with the
+      reference's planning message (reference: src/common.rs:106-141,
+      tests/main.rs:291-298). A *typed* null — ``cast(null as string)`` or
+      a nullable column — passes, and null values yield null rows, exactly
+      like the reference's ``ScalarValue::Utf8(None) => JsonPath::None``.
+    * With more than one path element, any argument that is demonstrably a
+      per-row column (≥2 distinct values, or any null, in the batch —
+      a literal is always constant and non-null) raises the reference's
+      execution error (reference: src/common.rs:129-133,
+      tests/main.rs:1095-1103). A column that is constant within every
+      batch is indistinguishable from a literal here and passes.
+    """
+    for i, k in enumerate(key_cols):
+        t = k.type
+        if not (
+            pa.types.is_string(t)
+            or pa.types.is_large_string(t)
+            or pa.types.is_integer(t)
+        ):
+            name = _DF_TYPE_NAMES.get(str(t), str(t).capitalize())
+            raise ValueError(
+                f"Unexpected argument type to '{fn_key}' at position {i + 2}, "
+                f"expected string or int, got {name}."
+            )
+    constant = [
+        len(k) > 0
+        and k.null_count == 0
+        and (len(k) == 1 or len(pc.unique(k)) == 1)
+        for k in key_cols
+    ]
+    if all(constant):
+        return tuple(k[0].as_py() for k in key_cols)
+    if len(key_cols) > 1 and any(
+        len(k) > 1 and not c for k, c in zip(key_cols, constant)
+    ):
         raise ValueError(
-            "Unexpected argument type at position 2, expected string or "
-            "int, got Boolean."
+            "More than 1 path element is not supported when "
+            "querying JSON using an array."
         )
-    if not isinstance(v, (int, float, np.integer, np.floating)):
-        raise ValueError(
-            "Unexpected argument type at position 2, expected string or "
-            f"int, got {type(v).__name__}."
-        )
-    return int(v)
+    return None
+
+
+def _members(u: pa.Array) -> dict:
+    """The union struct's members by name. flatten() masks each member by
+    the struct's own validity: a NULL struct (an outer-join miss) may
+    carry arbitrary member values."""
+    if isinstance(u, pa.ChunkedArray):
+        u = u.combine_chunks()
+    return dict(zip((f.name for f in u.type), u.flatten()))
+
+
+def _doc_text(js: pa.Array) -> pa.Array:
+    """The JSON text a lookup reads. A union-struct document (a nested
+    call like SQL ``json_get(json_get(j, 'a'), 'b')``) continues through
+    its container members, like the reference's nested_json_array
+    (reference: src/common_union.rs:49-57); scalar members => NULL =>
+    the nested lookup misses."""
+    if not pa.types.is_struct(js.type):
+        return js
+    members = _members(js)
+    return pc.coalesce(members["array"], members["object"])
 
 
 @lru_cache(maxsize=64)
-def column_path_udf(fn_key: str):
-    """Arrow UDF computing ``fn_key`` with a single column-valued path
-    element (reference: src/common.rs:106-110 Array path)."""
+def path_udf(fn_key: str):
+    """Arrow UDF computing ``fn_key(doc, *path_cols)`` — the body the SQL
+    name runs, and the API's column-path call (reference:
+    src/common.rs:106-110 Array path). The document is a JSON string or a
+    union struct; the path arguments are string or int columns."""
     kernel = _KERNELS[fn_key]
-    ret = RETURN_TYPES[fn_key]
-    pa_col = _pa_col
 
-    def _paths(keys):
-        return [
-            ((e,) if (e := _key_to_elem(k)) is not None else (None,))
-            for k in keys
-        ]
-
-    if fn_key in _STRUCT_FNS:
-        union_struct = _union_struct
-
-        def fn(js: pa.Array, keys: pa.Array) -> pa.Array:
-            return union_struct(
-                kernel(js.to_pylist(), _paths(keys.to_pylist()))
-            )
-
-    else:
-        pa_type = _PA_TYPES[fn_key]
-
-        def fn(js: pa.Array, keys: pa.Array) -> pa.Array:
-            return pa_col(
-                kernel(js.to_pylist(), _paths(keys.to_pylist())), pa_type
-            )
+    def fn(js: pa.Array, *key_cols: pa.Array) -> pa.Array:
+        path = _check_path_args(fn_key, key_cols)
+        js = _doc_text(js)
+        if path is not None:
+            return _eval_literal(fn_key, kernel, js, path)
+        paths = list(zip(*(k.to_pylist() for k in key_cols)))
+        return _to_arrow(fn_key, kernel(js.to_pylist(), paths))
 
     fn.__name__ = fn_key
-    return F.arrow_udf(fn, ret)
+    return F.arrow_udf(fn, RETURN_TYPES[fn_key])
 
 
 @lru_cache(maxsize=1)
@@ -263,16 +284,68 @@ def union_to_text_udf():
     the shortest round-trip form (Python ``repr``, ``1e10`` →
     '10000000000.0') where Spark writes '1.0E10'."""
     kernel = kernels.kernel_json_union_to_text
-    pa_col = _pa_col
 
     def fn(u: pa.Array) -> pa.Array:
-        if isinstance(u, pa.ChunkedArray):
-            u = u.combine_chunks()
-        # flatten() masks each member by the struct's own validity: a NULL
-        # struct (an outer-join miss) may carry arbitrary member values
-        members = dict(zip((f.name for f in u.type), u.flatten()))
+        members = _members(u)
         cols = [members[name].to_pylist() for name in UNION_FIELDS]
-        return pa_col(kernel(*cols), pa.string())
+        return _pa_col(kernel(*cols), pa.string())
 
     fn.__name__ = "json_union_to_text"
     return F.arrow_udf(fn, "string")
+
+
+@lru_cache(maxsize=1)
+def union_is_null_udf():
+    """json_is_null over the union struct: true for the null arm (JSON
+    null and lookup miss) and a NULL struct — the test
+    ``union.json_is_null`` builds for the API (reference:
+    tests/main.rs:1612-1729)."""
+
+    def fn(u: pa.Array) -> pa.Array:
+        return pc.fill_null(pc.equal(_members(u)["type_id"], 0), True)
+
+    fn.__name__ = "json_is_null"
+    return F.arrow_udf(fn, "boolean")
+
+
+# json_from_scalar's arm per accepted Arrow input type (type ids of the
+# union, reference: src/common_union.rs:176-182)
+_SCALAR_ARMS = (
+    (pa.types.is_boolean, 1),
+    (pa.types.is_integer, 2),
+    (pa.types.is_floating, 3),
+    (pa.types.is_string, 4),
+    (pa.types.is_large_string, 4),
+)
+
+
+@lru_cache(maxsize=1)
+def from_scalar_udf():
+    """SQL-surface json_from_scalar: the Arrow argument type drives the
+    dispatch, mirroring the reference's plan-time DataType match
+    (reference: src/json_from_scalar.rs:48-68). Because Arrow keeps
+    NaN/±Infinity as *values* (validity bit set) distinct from nulls,
+    non-finite floats land in the float arm exactly like the reference
+    (tests/main.rs:2550-2577); typed NULLs of any accepted type → null
+    arm, a whole-struct NULL like the API's. Unsupported types raise the
+    reference's message (src/json_from_scalar.rs:65)."""
+
+    def fn(s: pa.Array) -> pa.Array:
+        n = len(s)
+        children = [pa.nulls(n, t) for t in _UNION_PA_TYPES]
+        if not pa.types.is_null(s.type):
+            arm = next((a for is_t, a in _SCALAR_ARMS if is_t(s.type)), None)
+            if arm is None:
+                raise ValueError(
+                    f"Unsupported type for json_from_scalar: {s.type}."
+                )
+            children[arm] = s.cast(_UNION_PA_TYPES[arm])
+            children[0] = pc.if_else(
+                pc.is_valid(s), pa.scalar(arm, pa.int8()), children[0]
+            )
+        return pa.StructArray.from_arrays(
+            children, names=list(UNION_FIELDS), mask=pc.is_null(children[0])
+        )
+
+    fn.__name__ = "json_from_scalar"
+    return F.arrow_udf(fn, RETURN_TYPES["json_get"])

@@ -12,12 +12,12 @@ representation is a tagged struct (SURVEY.md §7.2):
 
 type_id values match the reference's union type-id constants (reference:
 src/common_union.rs:176-182). The null arm (JSON null AND lookup-miss —
-both collapse, reference: src/common_union.rs:53) is normalized to a
-WHOLE-STRUCT NULL at the Column-API layer so that ``IS NULL`` behaves like
-the reference's union-null (reference: tests/main.rs:1612-1729), matching
-the dictionary null-masking intent of src/common.rs:587-598. Struct rows
-with ``type_id = 0`` (possible via the SQL-registered surface, where no
-JVM-side rewrap happens) are treated as null-arm by every consumer here.
+both collapse, reference: src/common_union.rs:53) is a WHOLE-STRUCT NULL
+on every surface and tier, so that ``IS NULL`` behaves like the
+reference's union-null (reference: tests/main.rs:1612-1729), matching the
+dictionary null-masking intent of src/common.rs:587-598. A struct built
+by hand may still carry ``type_id = 0``; every consumer here treats such
+a row as the null arm.
 
 This struct round-trips through Parquet, shuffles, and Arrow batches in
 every Spark version — no custom datasource or Catalyst type needed.
@@ -39,7 +39,6 @@ __all__ = [
     "TYPE_ID_STR",
     "TYPE_ID_ARRAY",
     "TYPE_ID_OBJECT",
-    "mask_null_arm",
     "union_container_text",
     "json_is_null",
     "format_union_value",
@@ -69,17 +68,6 @@ UNION_DDL = (
     "struct<type_id:tinyint,bool:boolean,int:bigint,float:double,"
     "str:string,array:string,object:string>"
 )
-
-
-def mask_null_arm(u: Column) -> Column:
-    """Normalize null-arm rows (type_id=0) to a whole-struct NULL — the
-    Spark equivalent of the reference's dictionary null-masking
-    (reference: src/common.rs:587-598), giving ``IS NULL`` parity with the
-    union's null member (reference: tests/main.rs:1710-1729).
-
-    JVM-side CASE; cheap, stays inside whole-stage codegen.
-    """
-    return F.when(u.getField("type_id") == TYPE_ID_NULL, F.lit(None).cast(UNION_DDL)).otherwise(u)
 
 
 def union_container_text(u: Column) -> Column:

@@ -30,12 +30,23 @@ SCRIPT = textwrap.dedent(
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    # exact-tier pandas-UDF kernel (kernels/core/udfs by value)
+    # a JSON getter at a literal path (the JVM tier when it loads)
     df = spark.createDataFrame(
-        [('{{"k": 7}}',), ("{{",), (None,)], ["j"]
+        [('{{"k": 7}}', "k"), ("{{", "k"), (None, None)], ["j", "key"]
     )
     got = [r.k for r in df.select(jsonf.json_get_int("j", "k").alias("k")).collect()]
     assert got == [7, None, None], got
+    # column paths cross to the Python Arrow UDF on every tier (udfs,
+    # kernels and core by value): from the API, and from a SQL name
+    jsonf.register_all(spark)
+    df.createOrReplaceTempView("fc_docs")
+    for q in (
+        df.select(jsonf.json_get_int("j", F.col("key")).alias("k")),
+        spark.sql("select json_get_int(j, key) as k from fc_docs"),
+    ):
+        assert "ArrowEvalPython" in q._jdf.queryExecution().executedPlan().toString()
+        got = [r.k for r in q.collect()]
+        assert got == [7, None, None], got
     # fused multi (its own UDF closure)
     u = df.select(jsonf.json_extract_multi("j", {{"k": ("int", "k")}}).alias("u"))
     assert [r.u.k for r in u.collect()] == [7, None, None]

@@ -458,9 +458,19 @@ class TestReviewFindingsRound7e:
         assert got[0].v is None
 
     def test_boolean_column_key_rejected(self, spark):
-        df = spark.createDataFrame([('["x","y"]', True)], "j string, b boolean")
-        with pytest.raises(Exception, match="Boolean"):
-            df.select(jsonf.json_get_str("j", F.col("b"))).collect()
+        # BOOLEAN and DOUBLE key columns fail the reference's argument
+        # check (src/common.rs:106-141), with the SQL surface's message
+        df = spark.createDataFrame(
+            [("[5, 6, 7]", True, 1.9)], "j string, b boolean, d double"
+        )
+        for key, name in (("b", "Boolean"), ("d", "Float64")):
+            for fn in (jsonf.json_get_str, jsonf.json_get_int):
+                msg = (
+                    f"Unexpected argument type to '{fn.__name__}' at "
+                    f"position 2, expected string or int, got {name}\\."
+                )
+                with pytest.raises(Exception, match=msg):
+                    df.select(fn("j", F.col(key))).collect()
 
     def test_union_to_text_rejects_text_mode_jsoncolumn(self, spark):
         jc = jsonf.col("j")

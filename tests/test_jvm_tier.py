@@ -155,10 +155,28 @@ def _same(a, b) -> bool:
     return a == b
 
 
+# literal-path SQL calls over the edge rows, and the API names of the
+# SQL aliases among them
+SQL_CALLS = [
+    ("json_get_int", ("k", 0, "a")), ("json_get_str", ("k",)),
+    ("json_get_float", ("k",)), ("json_get_bool", ("k",)),
+    ("json_get_json", ("kk", "k")), ("json_as_text", ("k",)),
+    ("json_contains", ()), ("json_length", ()), ("json_len", ("k",)),
+    ("json_get", ("k",)), ("json_get", ("k", 0)),
+    ("json_get_array", ("k",)), ("json_object_keys", ()),
+    ("json_keys", ("k",)),
+]
+SQL_ALIASES = {"json_len": "json_length", "json_keys": "json_object_keys"}
+
+
+def _sql_call(fn, path):
+    args = ["j"] + [f"'{p}'" if isinstance(p, str) else str(p) for p in path]
+    return f"{fn}({', '.join(args)})"
+
+
 def _python_call(fn, path, col):
     """``fn`` at ``path`` on the Python tier, as the API builds it."""
-    out = udfs.literal_path_udf(fn, tuple(path))(col)
-    return union_mod.mask_null_arm(out) if fn == "json_get" else out
+    return udfs.literal_path_udf(fn, tuple(path))(col)
 
 
 def _tiers(spark, docs, calls):
@@ -213,30 +231,13 @@ class TestDifferential:
         docs = EDGE_DOCS[:-1] + ['{"k": [{"a": 3}], "kk": {"k": 2}}']
         spark.createDataFrame([(d,) for d in docs], "j string") \
             .createOrReplaceTempView("jvm_tier_edge")
-        calls = [
-            ("json_get_int", ("k", 0, "a")), ("json_get_str", ("k",)),
-            ("json_get_float", ("k",)), ("json_get_bool", ("k",)),
-            ("json_get_json", ("kk", "k")), ("json_as_text", ("k",)),
-            ("json_contains", ()), ("json_length", ()), ("json_len", ("k",)),
-            ("json_get", ("k",)), ("json_get", ("k", 0)),
-            ("json_get_array", ("k",)), ("json_object_keys", ()),
-            ("json_keys", ("k",)),
-        ]
-
-        def lit(p):
-            return f"'{p}'" if isinstance(p, str) else str(p)
-
-        select = ", ".join(
-            f"{fn}({', '.join(['j'] + [lit(p) for p in path])})"
-            for fn, path in calls
-        )
+        calls = SQL_CALLS
+        select = ", ".join(_sql_call(fn, path) for fn, path in calls)
         q = spark.sql(f"SELECT j, {select} FROM jvm_tier_edge")
         assert "EvalPython" not in q._jdf.queryExecution().executedPlan().toString()
         rows = q.collect()
-        alias = {"json_len": "json_length", "json_keys": "json_object_keys"}
-        want = [alias.get(fn, fn) for fn, _ in calls]
         _, py = _tiers(spark, [r.j for r in rows],
-                       [(fn, p) for fn, (_, p) in zip(want, calls)])
+                       [(SQL_ALIASES.get(fn, fn), p) for fn, p in calls])
         for k, (fn, _) in enumerate(calls):
             bad = [(r.j[:40], r[k + 1], w) for r, w in zip(rows, py[k])
                    if not _same(r[k + 1], w)]
@@ -464,6 +465,52 @@ class TestRouting:
             ("[1, 2.5]", False, ["1", "2.5"], ["a"], 5),
             (None, True, None, None, None),
         ]
+
+
+class TestPythonFallback:
+    def test_sql_names_match_the_api(self, spark, python_tier, monkeypatch):
+        # with the tier off every registered SQL name runs its Python UDF:
+        # each call must give the API's Python-tier value, row for row
+        docs = EDGE_DOCS + ['{"k": [{"a": 3}], "kk": {"k": 2}}',
+                            '{"a": {"b": 4}}', '{"a": [{"b": 5}]}']
+        keys = ["k", "foo", None, "a", "kk"]
+        spark.createDataFrame(
+            [(i, d, keys[i % len(keys)]) for i, d in enumerate(docs)],
+            "i long, j string, kc string",
+        ).createOrReplaceTempView("python_tier_edge")
+        extra_sql = [
+            "json_get_str(j, kc)",
+            "json_get_int(json_get(j, 'a'), 'b')",
+            "json_is_null(json_get(j, 'k'))",
+            "json_from_scalar(length(j))",
+        ]
+        api = [_python_call(SQL_ALIASES.get(fn, fn), p, F.col("j"))
+               for fn, p in SQL_CALLS] + [
+            jsonf.json_get_str("j", F.col("kc")),
+            jsonf.json_get_int(jsonf.json_get("j", "a"), "b"),
+            jsonf.json_is_null(jsonf.json_get("j", "k")),
+            jsonf.json_from_scalar(F.length("j")),
+        ]
+        sql = [_sql_call(fn, p) for fn, p in SQL_CALLS] + extra_sql
+        try:
+            jsonf.register_all(spark)
+            q = spark.sql(f"SELECT i, {', '.join(sql)} FROM python_tier_edge")
+            assert "ArrowEvalPython" in q._jdf.queryExecution().executedPlan().toString()
+            got = sorted(q.collect(), key=lambda r: r.i)
+        finally:
+            monkeypatch.undo()
+            jsonf.register_all(spark)
+        want = sorted(
+            spark.table("python_tier_edge").select(
+                "i", *(c.alias(f"c{k}") for k, c in enumerate(api))
+            ).collect(),
+            key=lambda r: r.i,
+        )
+        bad = [(sql[k], (docs[g.i] or "")[:40], g[k + 1], w[k + 1])
+               for g, w in zip(got, want) for k in range(len(sql))
+               if not _same(g[k + 1], w[k + 1])]
+        assert not bad, f"{len(bad)} mismatches, first: {bad[:10]}"
+        assert [r[-2] for r in got].count(False) > 10  # hits, not all misses
 
 
 class TestBuild:

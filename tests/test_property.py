@@ -1,7 +1,7 @@
 """Property-based differential tests: the streaming scanner in
 functions/core.py vs strict DOM navigation over arbitrary generated JSON.
 The reference ships no fuzz tests (SURVEY §5.8); this is our stronger
-replacement — pure Python, no SparkSession.
+replacement — pure Python; only the UDF-body check builds a SparkSession.
 """
 
 from __future__ import annotations
@@ -305,24 +305,13 @@ def test_batch_mask_duplicate_keys_and_escapes():
 
 
 # ------------------------------------------- per-batch dictionary shortcut
-# (round-18 optimization: kernels._dict_encode + kernels._scatter — the
-# Arrow analog of the reference's dictionary-array evaluation,
+# (kernels._dict_encode and the pc.take scatter in udfs._eval_literal —
+# the Arrow analog of the reference's dictionary-array evaluation,
 # src/common.rs:310-327)
 
-_ALL_LIST_KERNELS = [
-    kernels.kernel_json_get_str,
-    kernels.kernel_json_get_int,
-    kernels.kernel_json_get_float,
-    kernels.kernel_json_get_bool,
-    kernels.kernel_json_get_json,
-    kernels.kernel_json_get_array,
-    kernels.kernel_json_as_text,
-    kernels.kernel_json_contains,
-    kernels.kernel_json_length,
-    kernels.kernel_json_object_keys,
-    kernels.kernel_json_to_text_fused,
-    kernels.kernel_json_is_null_fused,
-]
+import pyarrow as pa  # noqa: E402
+
+from datafusion_functions_json_spark.functions import udfs  # noqa: E402
 
 
 def _dedup_eval(kernel, docs, path, min_rows):
@@ -332,7 +321,7 @@ def _dedup_eval(kernel, docs, path, min_rows):
     # the appended None slot makes the kernel compute the null row itself
     assert dvals[-1] is None
     out_d = kernel(dvals, kernels.repeat_path(path))
-    return list(kernels._scatter(out_d, idx))
+    return pa.array(out_d, from_pandas=True).take(idx).to_pylist()
 
 
 @settings(max_examples=100, deadline=None)
@@ -342,29 +331,21 @@ def _dedup_eval(kernel, docs, path, min_rows):
     pre=ws,
     post=ws,
 )
-def test_dict_shortcut_matches_direct(values, path, pre, post):
-    """Every kernel must be row-identical whether evaluated per row or
-    on the batch's distinct documents with results scattered back —
-    including null rows, duplicate-key docs, escapes and big ints
-    (whatever hypothesis generates), because the kernels are pure."""
+def test_dict_shortcut_matches_direct(spark, values, path, pre, post):
+    """Every literal-path UDF body must be row-identical whether its
+    kernel runs per row or on the batch's distinct documents with the
+    typed result scattered back — including null rows, duplicate-key
+    docs, escapes and big ints (whatever hypothesis generates), because
+    the kernels are pure. (``spark``: building a UDF needs a session.)"""
     pool = [pre + json.dumps(v) + post for v in values] + [None]
-    docs = [pool[i % len(pool)] for i in range(64)]  # force repetition
+    docs = [pool[i % len(pool)] for i in range(1024)]  # force repetition
+    batch = pa.array(docs, pa.string())
+    assert kernels._dict_encode(batch) is not None  # the shortcut runs
     p = tuple(path)
-    for kernel in _ALL_LIST_KERNELS:
-        direct = list(kernel(docs, kernels.repeat_path(p)))
-        dedup = _dedup_eval(kernel, docs, p, min_rows=16)
-        for a, b in zip(direct, dedup):
-            if isinstance(a, float) and isinstance(b, float):
-                assert a == b or (math.isnan(a) and math.isnan(b))
-            else:
-                assert a == b, kernel.__name__
-    # the struct kernel: member columns scatter independently
-    direct = kernels.kernel_json_get(docs, kernels.repeat_path(p))
-    pre_enc = kernels._dict_encode(docs, min_rows=16)
-    dvals, idx = pre_enc
-    out_d = kernels.kernel_json_get(dvals, kernels.repeat_path(p))
-    for f in kernels.UNION_FIELDS:
-        assert direct[f] == list(kernels._scatter(out_d[f], idx)), f
+    for fn in udfs._KERNELS:
+        got = udfs.literal_path_udf(fn, p).func(batch)
+        direct = udfs._to_arrow(fn, udfs._KERNELS[fn](docs, kernels.repeat_path(p)))
+        assert got.equals(direct), fn
 
 
 def test_dict_shortcut_gates():

@@ -141,6 +141,18 @@ class TestSqlPlanErrors:
     def test_non_string_int_path_raises(self, spark, test_df):
         with pytest.raises(Exception, match="expected string or int"):
             spark.sql("select json_get_str(json_data, 1.5) from test").collect()
+        # DOUBLE and BOOLEAN key columns: the same rule and message as the
+        # Python API
+        spark.createDataFrame(
+            [("[5, 6, 7]", 1.9, True)], "j string, d double, b boolean"
+        ).createOrReplaceTempView("typed_keys")
+        for key, name in (("d", "Float64"), ("b", "Boolean")):
+            msg = (
+                "Unexpected argument type to 'json_get_int' at position 2, "
+                f"expected string or int, got {name}\\."
+            )
+            with pytest.raises(Exception, match=msg):
+                spark.sql(f"select json_get_int(j, {key}) from typed_keys").collect()
 
     def test_multi_path_with_column_raises(self, spark):
         # reference tests/main.rs:1095-1103 test_multiple_lookup_arrays.

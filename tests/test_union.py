@@ -138,8 +138,8 @@ class TestNullMaskingInvariant:
     """Port of the reference's dictionary null-masking property
     (reference: tests/main.rs:1781-1845 check_for_null_dictionary_values:
     no non-null key may point to a null value). Spark analog: a json_get
-    result row is either a WHOLE-STRUCT NULL (null arm, masked by
-    mask_null_arm) or carries type_id 1-6 with exactly the active member
+    result row is either a WHOLE-STRUCT NULL (null arm, masked by the
+    json_get body) or carries type_id 1-6 with exactly the active member
     populated — never a present struct with type_id 0/NULL, never a
     populated inactive member."""
 
