@@ -134,12 +134,22 @@ def _literal_call(fn_key: str, text_col, lit_path: tuple) -> Column:
     return udfs.literal_path_udf(fn_key, lit_path)(text_col)
 
 
+def _column_call(fn_key: str, text_col, key_col) -> Column:
+    """``fn_key(text_col, key_col)`` with a column of keys, on the JVM
+    exact tier when it is loaded, else as an Arrow UDF over the Python
+    kernels (reference: src/common.rs:106-127)."""
+    jvm = jvm_tier.column_path(fn_key, text_col, key_col)
+    if jvm is not None:
+        return jvm
+    return udfs.path_udf(fn_key)(text_col, key_col)
+
+
 def _invoke(fn_key: str, json, path: tuple) -> Column:
     """Shared entry: validate, apply un-nesting, build the call."""
     lit_path, key_col = _validate_path(fn_key, path)
     text_col, prov = _coerce_json_arg(json, key_col is None)
     if key_col is not None:
-        return udfs.path_udf(fn_key)(text_col, key_col)
+        return _column_call(fn_key, text_col, key_col)
     if prov is not None:
         # Call un-nesting: f(json_get(j, 'a'), 'b') => f(j, 'a', 'b').
         # Fires only when the inner call is json_get (type-preserving) and
@@ -169,7 +179,7 @@ def json_get(json, *path):
         # cast elision has no such guard — keep enough to rewrite
         # .cast('bigint') into json_get_int(text, key_col)
         return JsonColumn(
-            udfs.path_udf("json_get")(text_col, key_col),
+            _column_call("json_get", text_col, key_col),
             root=None,
             path=None,
             cast_root=text_col,

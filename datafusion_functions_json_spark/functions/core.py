@@ -120,9 +120,10 @@ except ImportError:  # pragma: no cover
 # over-trigger; that's a conservative fallback, never a wrong answer.
 _BIG_DIGITS = re.compile(r"[0-9]{19}")
 
-# The streaming finder gives up on values nested deeper than about this
-# many containers (CPython's recursion limit; JsonFinder.DEPTH_LIMIT on
-# the JVM tier is the same number), and orjson 3.8 crashes the process
+# The streaming finder gives up on values nested deeper than this many
+# containers (about CPython's recursion limit, checked exactly by
+# _nests_too_deep; JsonFinder.DEPTH_LIMIT on the JVM tier is the same
+# number), and orjson 3.8 crashes the process
 # on documents some 70,000 levels deep. A document with fewer '{'/'['
 # characters than this cannot nest that deep, so only such documents
 # reach orjson; the rest take the streaming finder on both tiers.
@@ -182,12 +183,39 @@ def _skip_ws(s: str, i: int, n: int) -> int:
     return i
 
 
+# a JSON string, and a run of characters that are not brackets
+_STRING = re.compile(r'"(?:[^"\\]|\\.)*"')
+_NOT_BRACKETS = re.compile(r"[^\[\]{}]+")
+
+
+def _nests_too_deep(s: str, i: int, end: int) -> bool:
+    """Whether the decoded value ``s[i:end]`` nests more than DEPTH_LIMIT
+    containers. CPython's recursion limit alone stops the scanner
+    somewhere between about 900 and 1000 levels, depending on the frames
+    already on the stack; this check makes the limit exactly the JVM
+    tier's."""
+    if s.count("{", i, end) + s.count("[", i, end) <= DEPTH_LIMIT:
+        return False
+    depth = 0
+    for c in _NOT_BRACKETS.sub("", _STRING.sub("", s[i:end])):
+        if c in "[{":
+            depth += 1
+            if depth > DEPTH_LIMIT:
+                return True
+        else:
+            depth -= 1
+    return False
+
+
 def _skip_value(s: str, i: int) -> int:
     """Index just past the value starting at ``i``. The decoded object is
     discarded (the reference skips without materializing — jiter
     ``next_skip`` — but cost is O(len) either way; ours runs at C speed).
-    Raises ValueError on malformed input (callers convert to MISSING)."""
+    Raises ValueError on malformed input and on a value nested deeper
+    than DEPTH_LIMIT (callers convert both to MISSING)."""
     _, end = _raw_decode(s, i)
+    if _nests_too_deep(s, i, end):
+        raise ValueError("nested deeper than DEPTH_LIMIT")
     return end
 
 

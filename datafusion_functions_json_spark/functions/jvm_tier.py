@@ -1,10 +1,12 @@
-"""The JVM exact tier: the literal-path functions inside Spark's executor.
+"""The JVM exact tier: the JSON functions inside Spark's executor.
 
-Every function of :data:`TIER_FNS` at a literal path — the scalar getters,
-``json_get`` (the union struct), ``json_get_array``, ``json_object_keys``
-and the fused ``json_union_to_text``/``json_is_null`` over ``json_get`` —
-and ``json_union_to_text`` over any union struct run as Catalyst
-``ScalaUDF`` expressions over ``jsonsparkext.JsonFinder``, the Java port of
+Every call shape of the functions of :data:`TIER_FNS` — the scalar
+getters, ``json_get`` (the union struct), ``json_get_array``,
+``json_object_keys`` and the fused ``json_union_to_text``/``json_is_null``
+over ``json_get``, at a literal path or at a one-element path column,
+over a JSON string or a union-struct document — plus both union
+consumers over any union struct and ``json_from_scalar`` run as Catalyst
+expressions over ``jsonsparkext.JsonFinder``, the Java port of
 :mod:`.core`'s streaming finder (``jvm_extension/src/jsonsparkext/``). No
 document crosses the JVM→Python Arrow hop, which costs more than the JSON
 work itself. The Python kernels are the specification; the port is pinned
@@ -18,9 +20,7 @@ The jar is compiled from the repository's Java sources on first use, with
 Spark version and the Spark jars it compiles against, and written
 atomically. Spark Connect sessions, hosts
 without a JDK, installs without the Java sources and any failed build or
-load leave every call on the Python kernels. Call shapes the tier does
-not serve (column paths, a union-struct JSON argument in SQL) always use
-the Python kernels.
+load leave every call on the Python kernels (:mod:`.udfs`).
 """
 
 from __future__ import annotations
@@ -39,8 +39,8 @@ from pathlib import Path
 from .core import INT64_MAX, INT64_MIN
 
 __all__ = [
-    "TIER_FNS", "SQL_FNS", "MULTI_KIND_FNS", "load", "column",
-    "union_to_text", "multi", "bind_sql",
+    "TIER_FNS", "MULTI_KIND_FNS", "load", "column", "column_path",
+    "union_to_text", "multi", "register_all",
 ]
 
 TIER_FNS = frozenset({
@@ -49,10 +49,6 @@ TIER_FNS = frozenset({
     "json_contains", "json_length", "json_object_keys",
     "json_to_text_fused", "json_is_null_fused",
 })
-
-# what bind_sql serves: the literal-path functions, plus the two union
-# consumers over a union-struct argument
-SQL_FNS = TIER_FNS | {"json_union_to_text", "json_is_null"}
 
 # json_extract_multi field kinds the tier serves, as the function each
 # kind reads (multi.py pins every kind to its single-field kernel)
@@ -194,6 +190,15 @@ def column(fn_key: str, json_col, path: tuple):
     return _wrap(tier.column(fn_key, jc, _path_json(path)))
 
 
+def column_path(fn_key: str, json_col, key_col):
+    """``fn_key(json_col, key_col)`` with ``key_col`` a column of keys on
+    the tier, its type checked when the query is analyzed; None when the
+    tier is unavailable."""
+    jc, kc = getattr(json_col, "_jc", None), getattr(key_col, "_jc", None)
+    tier = None if jc is None or kc is None else _active_tier()
+    return None if tier is None else _wrap(tier.columnPath(fn_key, jc, kc))
+
+
 def union_to_text(u):
     """``json_union_to_text(u)`` over the union-struct column ``u`` on the
     tier, or None when the tier is unavailable."""
@@ -216,14 +221,13 @@ def multi(json_col, specs):
     return F.struct(*(c.alias(n) for c, (n, _, _) in zip(fields, specs)))
 
 
-def bind_sql(spark, names) -> bool:
-    """Route the session's registered SQL functions ``names`` (name →
-    function of :data:`SQL_FNS`) to the tier for the calls it serves; the
-    Python UDFs registered under those names keep every other call. False
-    when the tier is unavailable."""
+def register_all(spark, names) -> bool:
+    """Install the SQL functions ``names`` (SQL name → function) in the
+    session on the tier, in one call; False when the tier is
+    unavailable."""
     jsession = getattr(spark, "_jsparkSession", None)
     tier = None if jsession is None else load(spark.sparkContext)
-    if tier is None or not names:
+    if tier is None:
         return False
-    tier.bindSql(jsession, ",".join(f"{n}={fn}" for n, fn in names.items()))
+    tier.registerAll(jsession, ",".join(f"{n}={fn}" for n, fn in names.items()))
     return True

@@ -1,9 +1,13 @@
 """The JSON functions' Python bodies: Arrow UDFs over the kernels.
 
-Every function has one batch body, shared by the Python API and the SQL
-names :func:`register_all` registers. The body reads the shapes of its
-arguments per batch, like the reference's one dispatch over (JSON array
-| union) x (scalar | array path) (reference: src/common.rs:159-182):
+These are the bodies every call runs when the JVM exact tier
+(:mod:`.jvm_tier`) is not loaded — Spark Connect, no JDK, a failed
+build; with the tier loaded no call reaches them. Every function has one
+batch body, shared by the Python API and the SQL names
+:func:`register_all` registers without the tier. The body reads the
+shapes of its arguments per batch, like the reference's one dispatch
+over (JSON array | union) x (scalar | array path) (reference:
+src/common.rs:159-182):
 
 * **literal path** (:func:`literal_path_udf`, the API's literal calls):
   the path is closed over at plan time, so ONLY the JSON column crosses
@@ -203,7 +207,13 @@ def _check_path_args(fn_key: str, key_cols) -> tuple | None:
       execution error (reference: src/common.rs:129-133,
       tests/main.rs:1095-1103). A column that is constant within every
       batch is indistinguishable from a literal here and passes.
+    * ``json_contains`` without a path raises the reference's message
+      (reference: src/json_contains.rs:43-49).
     """
+    if fn_key == "json_contains" and not key_cols:
+        raise ValueError(
+            "The 'json_contains' function requires 2 or more arguments."
+        )
     for i, k in enumerate(key_cols):
         t = k.type
         if not (

@@ -8,24 +8,25 @@ hooks (SURVEY.md §2.2), so SQL users call the named functions:
     SELECT json_get_str(props, 'k'), count(*)
     FROM events WHERE json_contains(props, 'k') GROUP BY 1
 
-This module only names and registers UDFs; it runs on the driver. Each
-name is the Arrow UDF :mod:`.functions.udfs` builds for the function —
-the body the Python API runs too — re-bound to the JVM exact tier for
-the calls that tier serves. The UDFs check their path arguments by the
-reference's rules (``udfs._check_path_args``): an untyped NULL path
-literal or a non-string/int path argument raises the reference's
-planning message (reference: tests/main.rs:291-298), and >1 path element
-with a per-row column raises "More than 1 path element is not supported
-when querying JSON using an array." (reference: src/common.rs:129-133).
-Both surface as PythonException at execution — Spark has no plan-time
-hook for Python functions, but the message and the accepted/rejected
-inputs match.
+This module only names the functions; it runs on the driver. With the
+JVM exact tier loaded, every name is a function builder of the tier
+(:func:`.functions.jvm_tier.register_all`, one py4j call): it reads the
+argument types when the query is analyzed and raises the reference's
+argument errors there — an untyped NULL or a non-string/int path
+argument (reference: tests/main.rs:291-298), >1 path element with a
+non-literal argument ("More than 1 path element is not supported when
+querying JSON using an array.", reference: src/common.rs:129-133), and
+``json_contains`` without a path (reference: src/json_contains.rs:43-49).
 
-Delta from the Python API, inherent to the SQL boundary (documented,
-SURVEY.md §7.4): a path *column* that is constant and non-null within
-every Arrow batch is indistinguishable from a literal, so the
->1-path-element error can miss it (a varying or nullable column is
-always caught).
+Without the tier (Spark Connect, no JDK, a failed build) every name is
+the Arrow UDF :mod:`.functions.udfs` builds for the function — the body
+the Python API runs too. Those UDFs check their arguments by the same
+rules per Arrow batch (``udfs._check_path_args``) and raise them as
+PythonException at execution, with one delta inherent to a per-batch
+check (documented, SURVEY.md §7.4): a path *column* that is constant and
+non-null within every Arrow batch is indistinguishable from a literal,
+so the >1-path-element error can miss it (a varying or nullable column
+is always caught).
 """
 
 from __future__ import annotations
@@ -66,6 +67,32 @@ _EXACT_ALIASES = (
 )
 
 
+# every SQL name, mapped to the function it calls; the aliases are the
+# reference's (src/json_length.rs:29, src/json_object_keys.rs:29,
+# src/json_from_scalar.rs:31)
+_SQL_NAMES = {
+    **{fn_key: fn_key for fn_key in _FUNCTIONS},
+    **{f"{fn_key}_exact": fn_key for fn_key in _EXACT_ALIASES},
+    "json_len": "json_length",
+    "json_keys": "json_object_keys",
+    "json_union_to_text": "json_union_to_text",
+    "json_is_null": "json_is_null",
+    "json_from_scalar": "json_from_scalar",
+    "scalar_to_json": "json_from_scalar",
+}
+
+
+def _python_udf(fn: str):
+    """The Arrow UDF over the Python kernels that runs ``fn`` in SQL."""
+    if fn == "json_union_to_text":
+        return udfs.union_to_text_udf()
+    if fn == "json_is_null":
+        return udfs.union_is_null_udf()
+    if fn == "json_from_scalar":
+        return udfs.from_scalar_udf()
+    return udfs.path_udf(fn)
+
+
 def register_all(
     spark: SparkSession,
     *,
@@ -75,36 +102,18 @@ def register_all(
     """Register every JSON function for the SQL surface (reference:
     src/lib.rs:69-96 — aliases included).
 
-    Each name has one implementation: the JVM exact tier for the calls
-    it serves (a string document and literal path arguments), the
-    Python kernels for every other call and whenever the tier's jar is
-    unavailable. ``json_get_str_exact`` and the other seven
-    ``<name>_exact`` names are aliases of their canonical names.
+    Each name has one implementation: the JVM exact tier's builder for
+    every call when the tier's jar loads, else the Python kernels' Arrow
+    UDF. ``json_get_str_exact`` and the other seven ``<name>_exact``
+    names are aliases of their canonical names.
 
     ``auto_tier`` and ``json_profile`` are accepted and ignored, so
     existing callers keep working.
     """
-    names = {fn_key: udfs.path_udf(fn_key) for fn_key in _FUNCTIONS}
-    for fn_key in _EXACT_ALIASES:
-        names[f"{fn_key}_exact"] = names[fn_key]
-    names["json_len"] = names["json_length"]  # reference: src/json_length.rs:29
-    names["json_keys"] = names["json_object_keys"]  # src/json_object_keys.rs:29
-    names["json_union_to_text"] = udfs.union_to_text_udf()
-    names["json_is_null"] = udfs.union_is_null_udf()
-    names["json_from_scalar"] = udfs.from_scalar_udf()
-    names["scalar_to_json"] = names["json_from_scalar"]  # src/json_from_scalar.rs:31
-    for name, udf in names.items():
-        spark.udf.register(name, udf)
-    # calls the JVM exact tier serves (a string document and a literal
-    # path, or one union-struct argument for json_union_to_text and
-    # json_is_null, which then becomes a plain Catalyst null test) skip
-    # the Python UDFs registered above; they keep every other call
-    alias = {"json_len": "json_length", "json_keys": "json_object_keys"}
-    jvm_tier.bind_sql(spark, {
-        name: fn for name in names
-        if (fn := alias.get(name, name.removesuffix("_exact")))
-        in jvm_tier.SQL_FNS
-    })
+    if jvm_tier.register_all(spark, _SQL_NAMES):
+        return
+    for name, fn in _SQL_NAMES.items():
+        spark.udf.register(name, _python_udf(fn))
 
 
 def _pipeline_sql_bodies() -> dict:

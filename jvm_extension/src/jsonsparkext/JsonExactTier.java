@@ -2,33 +2,47 @@ package jsonsparkext;
 
 import java.io.Serializable;
 import java.util.ArrayList;
+import java.util.Arrays;
 import java.util.List;
 import java.util.Map;
 import java.util.concurrent.ConcurrentHashMap;
 
+import org.apache.spark.sql.AnalysisException;
 import org.apache.spark.sql.Column;
 import org.apache.spark.sql.Row;
 import org.apache.spark.sql.RowFactory;
-import org.apache.spark.sql.catalyst.FunctionIdentifier;
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry;
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry$;
+import org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry;
+import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction;
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder;
+import org.apache.spark.sql.catalyst.expressions.Cast;
+import org.apache.spark.sql.catalyst.expressions.CreateNamedStruct;
 import org.apache.spark.sql.catalyst.expressions.EqualTo;
 import org.apache.spark.sql.catalyst.expressions.Expression;
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo;
 import org.apache.spark.sql.catalyst.expressions.GetStructField;
+import org.apache.spark.sql.catalyst.expressions.If;
 import org.apache.spark.sql.catalyst.expressions.IsNull;
 import org.apache.spark.sql.catalyst.expressions.Literal;
 import org.apache.spark.sql.catalyst.expressions.Or;
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF;
+import org.apache.spark.sql.catalyst.expressions.SortOrder;
 import org.apache.spark.sql.classic.ExpressionUtils;
 import org.apache.spark.sql.classic.SparkSession;
+import org.apache.spark.sql.types.BooleanType;
 import org.apache.spark.sql.types.ByteType;
 import org.apache.spark.sql.types.DataType;
 import org.apache.spark.sql.types.DataTypes;
+import org.apache.spark.sql.types.DateType;
+import org.apache.spark.sql.types.DecimalType;
+import org.apache.spark.sql.types.DoubleType;
+import org.apache.spark.sql.types.FloatType;
 import org.apache.spark.sql.types.IntegerType;
 import org.apache.spark.sql.types.LongType;
+import org.apache.spark.sql.types.NullType;
 import org.apache.spark.sql.types.ShortType;
 import org.apache.spark.sql.types.StringType;
+import org.apache.spark.sql.types.StructField;
 import org.apache.spark.sql.types.StructType;
 
 import scala.Function1;
@@ -59,27 +73,30 @@ import scala.jdk.javaapi.CollectionConverters;
 import scala.runtime.AbstractFunction1;
 
 /**
- * The JVM exact tier: the literal-path JSON functions evaluated by
- * {@link JsonFinder} inside Spark's executor, as {@code ScalaUDF}
- * expressions, instead of across the Python worker hop.
+ * The JVM exact tier: the JSON functions evaluated by {@link JsonFinder}
+ * inside Spark's executor, as Catalyst expressions, instead of across the
+ * Python worker hop.
  *
- * <p>Serves {@code json_get} (the union struct), {@code json_get_str/int/
- * float/bool}, {@code json_get_json}, {@code json_get_array},
- * {@code json_as_text}, {@code json_contains}, {@code json_length},
- * {@code json_object_keys} and the fused {@code json_union_to_text} and
- * {@code json_is_null} over {@code json_get} when the JSON argument is a
- * string and every path element is a non-null string or integer literal,
- * and {@code json_union_to_text} over any union struct. The Python
- * package loads this class at run time
- * (datafusion_functions_json_spark/functions/jvm_tier.py) and keeps its
- * Arrow UDFs for every other call shape:
+ * <p>Serves every call shape of {@code json_get} (the union struct),
+ * {@code json_get_str/int/float/bool}, {@code json_get_json},
+ * {@code json_get_array}, {@code json_as_text}, {@code json_contains},
+ * {@code json_length} and {@code json_object_keys}: a JSON string or a
+ * union-struct document (read through its {@code array} and
+ * {@code object} members, reference src/common_union.rs:49-57), at a
+ * literal path of any length or at a one-element per-row path column
+ * (reference src/common.rs:106-127). It also serves the fused
+ * {@code json_union_to_text} and {@code json_is_null} over
+ * {@code json_get}, both union consumers over any union struct, and
+ * {@code json_from_scalar}. The Python package loads this class at run
+ * time (datafusion_functions_json_spark/functions/jvm_tier.py):
  * <ul>
  * <li>{@link #column} and {@link #unionToText(Column)} build the Python
- *     API's columns;</li>
- * <li>{@link #bindSql} wraps the SQL functions {@code register_all}
- *     registered, so a call whose arguments fit runs here and any other
- *     call goes to the Python UDF it wraps; SQL {@code json_is_null} over
- *     a union struct becomes a plain Catalyst null test.</li>
+ *     API's literal-path and union columns, and {@link #columnPath} its
+ *     column-path calls;</li>
+ * <li>{@link #registerAll} installs the SQL names, one
+ *     {@link SqlBuilder} each, which reads the argument types when the
+ *     query is analyzed and raises the reference's argument errors
+ *     there.</li>
  * </ul>
  */
 public final class JsonExactTier {
@@ -120,54 +137,107 @@ public final class JsonExactTier {
     private static final int MAX_ARITY = 22;
 
     /**
-     * One function object per (name, function, path, arity), so repeated
-     * call sites build equal expressions that Catalyst can share.
+     * The prefix of the internal function names {@link #columnPath} calls;
+     * internal names are reachable from the Column API only, never from
+     * SQL text.
+     */
+    private static final String INTERNAL = "jsonsparkext.";
+
+    /**
+     * One function object per (name, function, path, document members,
+     * arity), so repeated call sites build equal expressions that Catalyst
+     * can share.
      */
     private static final Map<List<Object>, Object> FUNCTIONS =
         new ConcurrentHashMap<>();
 
-    /** One function at one path, applied to a document per row. */
+    /**
+     * Registers the builders {@link #columnPath} calls, in the JVM-wide
+     * registry of internal functions; the package makes one instance per
+     * JVM.
+     */
+    public JsonExactTier() {
+        SimpleFunctionRegistry internal = FunctionRegistry$.MODULE$.internal();
+        for (String fn : RESULT_TYPES.keySet()) {
+            if (!fn.endsWith("_fused")) {
+                internal.createOrReplaceTempFunction(
+                    INTERNAL + fn, new SqlBuilder(fn, fn), "scala_udf");
+            }
+        }
+    }
+
+    /**
+     * One function at one path, applied to a document per row. The path
+     * is the literal {@code path}, or the second argument's key per row
+     * when {@code path} is null. A union-struct document is read through
+     * its container members at {@code arrayOrdinal} and
+     * {@code objectOrdinal}.
+     */
     static final class Getter implements Serializable {
         private static final long serialVersionUID = 1L;
 
         private final String fn;
         private final JsonFinder.Path path;
+        private final int arrayOrdinal;
+        private final int objectOrdinal;
 
-        Getter(String fn, JsonFinder.Path path) {
+        Getter(String fn, JsonFinder.Path path, List<Integer> members) {
             this.fn = fn;
             this.path = path;
+            this.arrayOrdinal = members == null ? -1 : members.get(0);
+            this.objectOrdinal = members == null ? -1 : members.get(1);
         }
 
         Object eval(Object doc) {
-            // a non-string document misses, like core.find_scalar
-            String s = doc instanceof String ? (String) doc : null;
+            return at(text(doc), path);
+        }
+
+        Object eval(Object doc, Object key) {
+            return at(text(doc), path != null ? path : JsonFinder.Path.ofKey(key));
+        }
+
+        /**
+         * The JSON text to read: the document, or a union struct's array or
+         * object member (udfs._doc_text); scalar members miss. A non-string
+         * document misses, like core.find_scalar.
+         */
+        private String text(Object doc) {
+            if (doc instanceof Row) {
+                Row u = (Row) doc;
+                doc = u.isNullAt(arrayOrdinal) ? u.get(objectOrdinal)
+                                               : u.get(arrayOrdinal);
+            }
+            return doc instanceof String ? (String) doc : null;
+        }
+
+        private Object at(String s, JsonFinder.Path p) {
             switch (fn) {
                 case "json_get_str":
-                    return JsonFinder.getStr(s, path);
+                    return JsonFinder.getStr(s, p);
                 case "json_get_int":
-                    return JsonFinder.getInt(s, path);
+                    return JsonFinder.getInt(s, p);
                 case "json_get_float":
-                    return JsonFinder.getFloat(s, path);
+                    return JsonFinder.getFloat(s, p);
                 case "json_get_bool":
-                    return JsonFinder.getBool(s, path);
+                    return JsonFinder.getBool(s, p);
                 case "json_get_json":
-                    return JsonFinder.getJson(s, path);
+                    return JsonFinder.getJson(s, p);
                 case "json_as_text":
-                    return JsonFinder.asText(s, path);
+                    return JsonFinder.asText(s, p);
                 case "json_contains":
-                    return JsonFinder.contains(s, path);
+                    return JsonFinder.contains(s, p);
                 case "json_length":
-                    return JsonFinder.length(s, path);
+                    return JsonFinder.length(s, p);
                 case "json_get":
-                    return unionRow(JsonFinder.getUnion(s, path));
+                    return unionRow(JsonFinder.getUnion(s, p));
                 case "json_get_array":
-                    return JsonFinder.getArray(s, path);
+                    return JsonFinder.getArray(s, p);
                 case "json_object_keys":
-                    return JsonFinder.objectKeys(s, path);
+                    return JsonFinder.objectKeys(s, p);
                 case "json_to_text_fused":
-                    return JsonFinder.toTextFused(s, path);
+                    return JsonFinder.toTextFused(s, p);
                 case "json_is_null_fused":
-                    return JsonFinder.isNullFused(s, path);
+                    return JsonFinder.isNullFused(s, p);
                 default:
                     throw new IllegalArgumentException(fn);
             }
@@ -241,131 +311,284 @@ public final class JsonExactTier {
     /** {@code fn(doc, *path)} for the Python API, as a Column. */
     public Column column(String fn, Column doc, String pathJson) {
         JsonFinder.Path path = new JsonFinder.Path(JsonFinder.parseElements(pathJson));
-        return ExpressionUtils.column(
-            udf(fn, fn, path, seq(List.of(ExpressionUtils.expression(doc)))));
+        return ExpressionUtils.column(udf(fn, fn, path, null,
+            seq(List.of(ExpressionUtils.expression(doc)))));
     }
 
     /**
-     * Wraps each registered SQL function {@code name} (bindings
-     * {@code name=fn,...}) so that calls this tier can serve run here and
-     * every other call reaches the builder it replaces.
+     * {@code fn(doc, key)} for the Python API, with {@code key} a column:
+     * a call of the internal function that {@link SqlBuilder} builds once
+     * the argument types are known, so the key's type is checked when the
+     * query is analyzed, as in SQL.
      */
-    public void bindSql(SparkSession session, String bindings) {
+    public Column columnPath(String fn, Column doc, Column key) {
+        return ExpressionUtils.column(new UnresolvedFunction(
+            seq(List.of(INTERNAL + fn)),
+            seq(List.of(ExpressionUtils.expression(doc),
+                        ExpressionUtils.expression(key))),
+            false, Option.empty(), false, seq(List.<SortOrder>of()), true));
+    }
+
+    /**
+     * Installs the SQL functions {@code bindings} ({@code name=fn,...}),
+     * replacing any function of the same name in the session.
+     */
+    public void registerAll(SparkSession session, String bindings) {
         FunctionRegistry registry = session.sessionState().functionRegistry();
         for (String binding : bindings.split(",")) {
             String[] nameFn = binding.split("=");
-            FunctionIdentifier id = FunctionIdentifier.apply(nameFn[0]);
-            Option<Function1<Seq<Expression>, Expression>> prev =
-                registry.lookupFunctionBuilder(id);
-            Option<ExpressionInfo> info = registry.lookupFunction(id);
-            if (prev.isDefined() && info.isDefined()) {
-                registry.registerFunction(id, info.get(),
-                    new SqlBuilder(nameFn[0], nameFn[1], prev.get()));
-            }
+            registry.createOrReplaceTempFunction(
+                nameFn[0], new SqlBuilder(nameFn[0], nameFn[1]), "scala_udf");
         }
     }
 
-    /** The SQL function builder: this tier when the arguments fit. */
+    /**
+     * The function builder of one SQL name: the expression for the
+     * argument types the analyzer resolved, or the reference's error for
+     * arguments it rejects (reference src/common.rs:106-141).
+     */
     private static final class SqlBuilder
             extends AbstractFunction1<Seq<Expression>, Expression> {
         private final String name;
         private final String fn;
-        private final Function1<Seq<Expression>, Expression> fallback;
 
-        SqlBuilder(String name, String fn,
-                   Function1<Seq<Expression>, Expression> fallback) {
+        SqlBuilder(String name, String fn) {
             this.name = name;
             this.fn = fn;
-            this.fallback = fallback;
         }
 
         @Override
         public Expression apply(Seq<Expression> args) {
-            if (fn.equals("json_union_to_text") || fn.equals("json_is_null")) {
-                int typeId = typeIdOrdinal(args);
-                if (typeId < 0) {
-                    return fallback.apply(args);
+            switch (fn) {
+                case "json_union_to_text":
+                case "json_is_null": {
+                    Expression u = single(args);
+                    int typeId = typeIdOrdinal(u.dataType());
+                    if (typeId < 0) {
+                        throw argumentError(1, "a JSON union", u.dataType());
+                    }
+                    return fn.equals("json_is_null") ? isNullArm(u, typeId)
+                                                     : unionToTextUdf(args);
                 }
-                return fn.equals("json_is_null") ? isNullArm(args.apply(0), typeId)
-                                                 : unionToTextUdf(args);
+                case "json_from_scalar":
+                    return fromScalar(single(args));
+                default:
+                    return getter(args);
             }
-            JsonFinder.Path path = literalPath(args);
-            return path == null ? fallback.apply(args)
-                                : udf(name, fn, path, args);
+        }
+
+        private Expression single(Seq<Expression> args) {
+            if (args.size() != 1) {
+                throw error("The '" + fn + "' function requires 1 argument.");
+            }
+            return args.apply(0);
         }
 
         /**
-         * The ordinal of the {@code type_id} field when the one argument is
-         * a union struct, else -1.
+         * A getter over a string or union-struct document, at a literal
+         * path or at one per-row key.
          */
-        private static int typeIdOrdinal(Seq<Expression> args) {
-            if (args.size() != 1 || !args.apply(0).resolved()
-                    || !(args.apply(0).dataType() instanceof StructType)) {
-                return -1;
-            }
-            StructType t = (StructType) args.apply(0).dataType();
-            Option<Object> k = t.getFieldIndex("type_id");
-            return k.isDefined() && t.fields()[(Integer) k.get()].dataType()
-                instanceof ByteType ? (Integer) k.get() : -1;
-        }
-
-        /**
-         * {@code u IS NULL OR u.type_id IS NULL OR u.type_id = 0}, the
-         * null test union.json_is_null builds for the Python API.
-         */
-        private static Expression isNullArm(Expression u, int typeId) {
-            Expression tid = new GetStructField(u, typeId, Option.apply("type_id"));
-            return new Or(new Or(new IsNull(u), new IsNull(tid)),
-                new EqualTo(tid, Literal.create((byte) 0, DataTypes.ByteType)));
-        }
-
-        /** The path when the document is a string and the rest literals. */
-        private static JsonFinder.Path literalPath(Seq<Expression> args) {
+        private Expression getter(Seq<Expression> args) {
             int n = args.size();
-            if (n == 0 || n > MAX_ARITY) {
-                return null;
+            if (fn.equals("json_contains") && n < 2) {
+                // reference src/json_contains.rs:43-49
+                throw error("The 'json_contains' function requires 2 or more arguments.");
+            }
+            if (n == 0) {
+                throw error("The '" + fn + "' function requires one or more arguments.");
             }
             Expression doc = args.apply(0);
-            if (!doc.resolved() || !(doc.dataType() instanceof StringType)) {
-                return null;
+            List<Integer> members = null;
+            DataType docType = doc.dataType();
+            if (docType instanceof StructType) {
+                members = containerOrdinals((StructType) docType);
+            }
+            if (members == null && !(docType instanceof StringType)
+                    && !(docType instanceof NullType)) {
+                throw argumentError(1, "a string", docType);
+            }
+            boolean literal = true;
+            for (int k = 1; k < n; k++) {
+                DataType t = args.apply(k).dataType();
+                if (!(t instanceof StringType || isIntegral(t))) {
+                    throw argumentError(k + 1, "string or int", t);
+                }
+                literal &= args.apply(k).foldable();
+            }
+            if (!literal) {
+                if (n > 2) {
+                    // reference src/common.rs:129-133
+                    throw error("More than 1 path element is not supported when "
+                        + "querying JSON using an array.");
+                }
+                return udf(name, fn, null, members, args);
             }
             List<Object> elems = new ArrayList<>();
             for (int k = 1; k < n; k++) {
-                Expression arg = args.apply(k);
-                if (!arg.resolved() || !arg.foldable()) {
-                    return null;
-                }
-                DataType t = arg.dataType();
-                Object v;
-                try {
-                    v = arg.eval(null);
-                } catch (RuntimeException e) {
-                    return null;
-                }
-                if (v != null && t instanceof StringType) {
-                    elems.add(v.toString());
-                } else if (v != null && (t instanceof ByteType || t instanceof ShortType
-                        || t instanceof IntegerType || t instanceof LongType)) {
-                    elems.add(((Number) v).longValue());
+                Object v = args.apply(k).eval(null);
+                elems.add(v == null || v instanceof Number ? v : v.toString());
+            }
+            JsonFinder.Path path = new JsonFinder.Path(elems);
+            if (n <= MAX_ARITY) {
+                return udf(name, fn, path, members, args);
+            }
+            // past ScalaUDF's arity the path literals are left out of the
+            // children
+            return udf(name, fn, path, members, seq(List.of(doc)));
+        }
+
+        /**
+         * {@code json_from_scalar(v)} as the tree api.json_from_scalar(col,
+         * dtype) builds: the union arm picked by {@code v}'s type, a
+         * whole-struct NULL for a NULL {@code v} (reference
+         * src/json_from_scalar.rs:48-68).
+         */
+        private Expression fromScalar(Expression v) {
+            DataType t = v.dataType();
+            if (t instanceof NullType) {
+                return Literal.create(null, UNION);
+            }
+            int arm;
+            if (t instanceof BooleanType) {
+                arm = 1;
+            } else if (isIntegral(t)) {
+                arm = 2;
+            } else if (t instanceof FloatType || t instanceof DoubleType) {
+                arm = 3;
+            } else if (t instanceof StringType) {
+                arm = 4;
+            } else {
+                throw error("Unsupported type for json_from_scalar: " + typeName(t) + ".");
+            }
+            List<Expression> fields = new ArrayList<>();
+            for (int k = 0; k < UNION.size(); k++) {
+                StructField f = UNION.fields()[k];
+                fields.add(Literal.create(f.name(), DataTypes.StringType));
+                if (k == 0) {
+                    fields.add(Literal.create((byte) arm, DataTypes.ByteType));
+                } else if (k != arm) {
+                    fields.add(Literal.create(null, f.dataType()));
+                } else if (t.equals(f.dataType())) {
+                    fields.add(v);
                 } else {
-                    return null;
+                    fields.add(new Cast(v, f.dataType(), Option.empty()));
                 }
             }
-            return new JsonFinder.Path(elems);
+            return new If(new IsNull(v), Literal.create(null, UNION),
+                new CreateNamedStruct(seq(fields)));
+        }
+
+        private RuntimeException argumentError(int position, String expected,
+                                               DataType got) {
+            return error("Unexpected argument type to '" + fn + "' at position "
+                + position + ", expected " + expected + ", got " + typeName(got) + ".");
+        }
+
+        /**
+         * Throws an AnalysisException reading exactly {@code message} (the
+         * legacy error condition Spark raises its own free-text analysis
+         * errors with); declared to return so that callers can write
+         * {@code throw error(...)}.
+         */
+        private static RuntimeException error(String message) {
+            throw SqlBuilder.<RuntimeException>unchecked(new AnalysisException(
+                "_LEGACY_ERROR_TEMP_1332",
+                new scala.collection.immutable.Map.Map1<String, String>(
+                    "errorMessage", message)));
+        }
+
+        /** {@code t} thrown past Java's checked-exception rule, as Scala throws it. */
+        @SuppressWarnings("unchecked")
+        private static <T extends Throwable> T unchecked(Throwable t) throws T {
+            throw (T) t;
         }
     }
 
     /**
-     * {@code name(children)} computing {@code fn} at {@code path} from the
-     * first child; the others are the path literals, kept as children so
-     * the expression prints like the Python UDF it replaces.
+     * The ordinal of the {@code type_id} field when {@code t} is a union
+     * struct, else -1.
+     */
+    private static int typeIdOrdinal(DataType t) {
+        if (!(t instanceof StructType)) {
+            return -1;
+        }
+        Option<Object> k = ((StructType) t).getFieldIndex("type_id");
+        return k.isDefined() && ((StructType) t).fields()[(Integer) k.get()].dataType()
+            instanceof ByteType ? (Integer) k.get() : -1;
+    }
+
+    /**
+     * The ordinals of a union struct's string members {@code array} and
+     * {@code object}, or null when {@code t} has no such members.
+     */
+    private static List<Integer> containerOrdinals(StructType t) {
+        Option<Object> a = t.getFieldIndex("array");
+        Option<Object> o = t.getFieldIndex("object");
+        if (a.isEmpty() || o.isEmpty()
+                || !(t.fields()[(Integer) a.get()].dataType() instanceof StringType)
+                || !(t.fields()[(Integer) o.get()].dataType() instanceof StringType)) {
+            return null;
+        }
+        return List.of((Integer) a.get(), (Integer) o.get());
+    }
+
+    /**
+     * {@code u IS NULL OR u.type_id IS NULL OR u.type_id = 0}, the null
+     * test union.json_is_null builds for the Python API.
+     */
+    private static Expression isNullArm(Expression u, int typeId) {
+        Expression tid = new GetStructField(u, typeId, Option.apply("type_id"));
+        return new Or(new Or(new IsNull(u), new IsNull(tid)),
+            new EqualTo(tid, Literal.create((byte) 0, DataTypes.ByteType)));
+    }
+
+    private static boolean isIntegral(DataType t) {
+        return t instanceof ByteType || t instanceof ShortType
+            || t instanceof IntegerType || t instanceof LongType;
+    }
+
+    /** A type as the reference's messages name it (DataFusion's names). */
+    private static String typeName(DataType t) {
+        if (t instanceof NullType) {
+            return "Null";
+        } else if (t instanceof BooleanType) {
+            return "Boolean";
+        } else if (t instanceof ByteType) {
+            return "Int8";
+        } else if (t instanceof ShortType) {
+            return "Int16";
+        } else if (t instanceof IntegerType) {
+            return "Int32";
+        } else if (t instanceof LongType) {
+            return "Int64";
+        } else if (t instanceof FloatType) {
+            return "Float32";
+        } else if (t instanceof DoubleType) {
+            return "Float64";
+        } else if (t instanceof StringType) {
+            return "Utf8";
+        } else if (t instanceof DateType) {
+            return "Date32";
+        } else if (t instanceof DecimalType) {
+            DecimalType d = (DecimalType) t;
+            return "Decimal128(" + d.precision() + ", " + d.scale() + ")";
+        }
+        String s = t.simpleString();
+        return Character.toUpperCase(s.charAt(0)) + s.substring(1);
+    }
+
+    /**
+     * {@code name(children)} computing {@code fn} from the first child at
+     * {@code path}, or at the second child's key per row when {@code path}
+     * is null; literal path elements stay children so the expression
+     * prints like the call it is.
      */
     private static Expression udf(String name, String fn, JsonFinder.Path path,
-                                  Seq<Expression> children) {
+                                  List<Integer> members, Seq<Expression> children) {
         int arity = children.size();
         Object function = FUNCTIONS.computeIfAbsent(
-            List.of(name, fn, path, arity),
-            key -> function(new Getter(fn, path), arity));
+            Arrays.asList(name, fn, path, members, arity),
+            key -> function(new Getter(fn, path, members), arity));
         return new ScalaUDF(function, RESULT_TYPES.get(fn), children,
             seq(List.<Option<ExpressionEncoder<?>>>of()), Option.empty(),
             Option.apply(name), true, true);
@@ -375,12 +598,15 @@ public final class JsonExactTier {
         return CollectionConverters.asScala(items).toSeq();
     }
 
-    /** A Scala function of {@code arity} arguments reading the first. */
+    /**
+     * A Scala function of {@code arity} arguments reading the first, and
+     * the second too when there are two (a per-row key).
+     */
     @SuppressWarnings("rawtypes")
     private static Object function(Getter g, int arity) {
         switch (arity) {
             case 1: return (Function1 & Serializable) (d) -> g.eval(d);
-            case 2: return (Function2 & Serializable) (d, a1) -> g.eval(d);
+            case 2: return (Function2 & Serializable) (d, a1) -> g.eval(d, a1);
             case 3: return (Function3 & Serializable) (d, a1, a2) -> g.eval(d);
             case 4: return (Function4 & Serializable) (d, a1, a2, a3) -> g.eval(d);
             case 5: return (Function5 & Serializable) (d, a1, a2, a3, a4) -> g.eval(d);

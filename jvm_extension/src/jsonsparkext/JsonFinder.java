@@ -6,6 +6,7 @@ import java.math.MathContext;
 import java.math.RoundingMode;
 import java.util.ArrayList;
 import java.util.Arrays;
+import java.util.Collections;
 import java.util.List;
 
 /**
@@ -91,17 +92,20 @@ final class JsonFinder {
 
     // ------------------------------------------------------------ paths
 
-    /** A literal path: str keys and non-negative int indexes. */
+    /**
+     * A path: str keys and int indexes; a negative index or a null element
+     * (a NULL key, reference src/common.rs:118-127) misses on every row.
+     */
     static final class Path implements java.io.Serializable {
         private static final long serialVersionUID = 1L;
 
         /** Key per element, or null where the element is an index. */
         final String[] keys;
         final long[] indexes;
-        /** A negative index: every row misses. */
+        /** A negative index or a null element: every row misses. */
         final boolean alwaysMissing;
 
-        Path(List<Object> elems) {
+        Path(List<?> elems) {
             int len = elems.size();
             keys = new String[len];
             indexes = new long[len];
@@ -111,11 +115,17 @@ final class JsonFinder {
                 if (e instanceof String) {
                     keys[k] = (String) e;
                 } else {
-                    indexes[k] = ((Number) e).longValue();
+                    // a null element reads as index -1, which never matches
+                    indexes[k] = e == null ? -1 : ((Number) e).longValue();
                     missing |= indexes[k] < 0;
                 }
             }
             alwaysMissing = missing;
+        }
+
+        /** The one-element path of a per-row key: a String, an integer or null. */
+        static Path ofKey(Object key) {
+            return new Path(Collections.singletonList(key));
         }
 
         int length() {

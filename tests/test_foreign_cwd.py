@@ -36,17 +36,29 @@ SCRIPT = textwrap.dedent(
     )
     got = [r.k for r in df.select(jsonf.json_get_int("j", "k").alias("k")).collect()]
     assert got == [7, None, None], got
-    # column paths cross to the Python Arrow UDF on every tier (udfs,
-    # kernels and core by value): from the API, and from a SQL name
-    jsonf.register_all(spark)
+    # column paths, from the API and from a SQL name: on the JVM tier no
+    # Python UDF; with the tier forced off, the Python Arrow UDF (udfs,
+    # kernels and core by value)
+    from datafusion_functions_json_spark.functions import jvm_tier
     df.createOrReplaceTempView("fc_docs")
-    for q in (
-        df.select(jsonf.json_get_int("j", F.col("key")).alias("k")),
-        spark.sql("select json_get_int(j, key) as k from fc_docs"),
-    ):
-        assert "ArrowEvalPython" in q._jdf.queryExecution().executedPlan().toString()
-        got = [r.k for r in q.collect()]
-        assert got == [7, None, None], got
+    tier_load = jvm_tier.load
+    with_tier = [True] if tier_load(spark.sparkContext) is not None else []
+    for tier_on in with_tier + [False]:
+        jvm_tier.load = tier_load if tier_on else (lambda sc: None)
+        jsonf.register_all(spark)
+        for q in (
+            df.select(jsonf.json_get_int("j", F.col("key")).alias("k")),
+            spark.sql("select json_get_int(j, key) as k from fc_docs"),
+        ):
+            plan = q._jdf.queryExecution().executedPlan().toString()
+            if tier_on:
+                assert "EvalPython" not in plan, plan
+            else:
+                assert "ArrowEvalPython" in plan, plan
+            got = [r.k for r in q.collect()]
+            assert got == [7, None, None], got
+    jvm_tier.load = tier_load
+    jsonf.register_all(spark)
     # fused multi (its own UDF closure)
     u = df.select(jsonf.json_extract_multi("j", {{"k": ("int", "k")}}).alias("u"))
     assert [r.u.k for r in u.collect()] == [7, None, None]

@@ -358,10 +358,10 @@ class TestErrorParity:
 
     def test_no_args_sql(self, spark, test_df):
         # reference: tests/main.rs test_no_args — json_len() with no
-        # arguments must be rejected, not return garbage. At the SQL-UDF
-        # boundary Spark rejects at EXECUTION time (PythonException from
-        # the missing positional arg), not planning — documented delta;
-        # the jsonf.sql surface has no operator form that can produce a
+        # arguments must be rejected, not return garbage. The JVM tier's
+        # builder rejects it at analysis; the Python UDFs (tier off) at
+        # execution (PythonException from the missing positional arg).
+        # The jsonf.sql surface has no operator form that can produce a
         # zero-arg call.
         jsonf.register_all(spark)
         with pytest.raises(Exception, match="json_len|positional argument"):
@@ -370,9 +370,9 @@ class TestErrorParity:
     def test_from_scalar_arg_count_sql(self, spark, test_df):
         # reference: tests/main.rs:2643-2660 — json_from_scalar() and
         # json_from_scalar(1, 2) are both rejected. Raw spark.sql rejects
-        # at execution (python arity error); the jsonf.sql surface
-        # rejects at rewrite time (test_sql_operators) — documented delta
-        # matching test_no_args_sql above.
+        # at analysis on the JVM tier, at execution on the Python UDFs
+        # (python arity error); the jsonf.sql surface rejects at rewrite
+        # time (test_sql_operators), like test_no_args_sql above.
         jsonf.register_all(spark)
         with pytest.raises(Exception, match="json_from_scalar|positional argument"):
             spark.sql("select json_from_scalar()").collect()

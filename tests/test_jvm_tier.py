@@ -127,6 +127,9 @@ EDGE_PATHS = [
     (0, 1), (0, "a"), ("a",), ("a", "a"), ("a", "k"), ("deep",),
     ("deep", 0), ("k", -1), ('k"q',), ("a\nb",), ("",),
     ("a",) * 100, ("a",) * 1000,
+    # in the 1000-deep documents, the value 961 and 960 containers deep:
+    # one past the depth limit on both tiers, and the deepest one found
+    ("a",) * 39, ("a",) * 40,
 ]
 
 # the perfbench corpora: the templates' key paths plus index paths
@@ -161,7 +164,7 @@ SQL_CALLS = [
     ("json_get_int", ("k", 0, "a")), ("json_get_str", ("k",)),
     ("json_get_float", ("k",)), ("json_get_bool", ("k",)),
     ("json_get_json", ("kk", "k")), ("json_as_text", ("k",)),
-    ("json_contains", ()), ("json_length", ()), ("json_len", ("k",)),
+    ("json_contains", ("k",)), ("json_length", ()), ("json_len", ("k",)),
     ("json_get", ("k",)), ("json_get", ("k", 0)),
     ("json_get_array", ("k",)), ("json_object_keys", ()),
     ("json_keys", ("k",)),
@@ -259,7 +262,7 @@ class TestDifferential:
         )
         plan = q._jdf.queryExecution().executedPlan().toString()
         assert "json_is_null" not in plan  # no UDF: a Catalyst null test
-        assert plan.count("ArrowEvalPython") == 1  # json_from_scalar only
+        assert "EvalPython" not in plan  # json_from_scalar is Catalyst too
         rows = q.collect()
         u = _python_call("json_get", ("k",), F.col("j"))
         py = spark.createDataFrame([(r.j,) for r in rows], "j string").select(
@@ -374,35 +377,92 @@ class TestRouting:
         assert r.text == '{"b": [5, null]}'
         assert (r.m.t, r.m.n) == ("[5, null]", True)
 
-    def test_other_call_shapes_keep_python(self, spark, tier):
-        df = spark.createDataFrame([('{"a": 1}', "a")], "j string, k string")
-        for col in (
-            jsonf.json_get_int("j", F.col("k")),  # column path
-            jsonf.json_get("j", F.col("k")),
-            jsonf.json_get_array("j", F.col("k")),
-        ):
-            plan = df.select(col)._jdf.queryExecution().executedPlan().toString()
-            assert "ArrowEvalPython" in plan
+    def test_column_paths_run_on_the_tier(self, spark, tier):
+        # API column paths, cast elision over one included, are tier calls
+        df = spark.createDataFrame(
+            [(0, '{"a": [[1, 2]], "b": "7"}', "a"), (1, '{"b": "7"}', "b"),
+             (2, "[3]", None)],
+            "i long, j string, k string",
+        )
+        out = df.select(
+            "i",
+            jsonf.json_get_int("j", F.col("k")).alias("n"),
+            jsonf.json_get("j", F.col("k")).alias("u"),
+            jsonf.json_get_array("j", F.col("k")).alias("a"),
+            jsonf.col("j").get(F.col("k")).cast("string").alias("s"),
+            jsonf.json_length(jsonf.json_get("j", F.col("k")), 0).alias("len"),
+        )
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "EvalPython" not in plan
+        rows = [(r.n, jsonf.format_union_value(r.u), r.a, r.s, r.len)
+                for r in sorted(out.collect())]
+        assert rows == [
+            (None, "{array=[[1, 2]]}", ["[1, 2]"], None, 2),
+            (7, "{str=7}", None, "7", None),
+            (None, "{null=}", None, None, None),
+        ]
 
-    def test_sql_fallback_for_non_literal_paths(self, spark, tier):
+    def test_sql_column_keys_run_on_the_tier(self, spark, tier):
         jsonf.register_all(spark)
         spark.createDataFrame(
             [('{"a": 1, "b": 2}', "b"), ("[7]", None)], "j string, k string"
         ).createOrReplaceTempView("jvm_tier_keys")
         q = spark.sql("SELECT json_get_int(j, k) AS v FROM jvm_tier_keys")
-        assert "ArrowEvalPython" in q._jdf.queryExecution().executedPlan().toString()
+        assert "EvalPython" not in q._jdf.queryExecution().executedPlan().toString()
         assert [r.v for r in q.collect()] == [2, None]
         q = spark.sql("SELECT json_get_int(j, 0) AS v FROM jvm_tier_keys")
         assert "EvalPython" not in q._jdf.queryExecution().executedPlan().toString()
         assert [r.v for r in q.collect()] == [None, 7]
 
-    def test_sql_union_struct_document_keeps_python(self, spark, tier):
+    def test_sql_union_struct_document_runs_on_the_tier(self, spark, tier):
         jsonf.register_all(spark)
         q = spark.sql(
             """SELECT json_get_int(json_get('{"a": {"b": 3}}', 'a'), 'b') AS v"""
         )
-        assert "ArrowEvalPython" in q._jdf.queryExecution().executedPlan().toString()
+        assert "EvalPython" not in q._jdf.queryExecution().executedPlan().toString()
         assert q.collect()[0].v == 3
+
+    def test_sql_argument_errors_at_analysis(self, spark, tier):
+        # the reference's plan-time errors, raised by spark.sql() itself
+        jsonf.register_all(spark)
+        spark.createDataFrame(
+            [('{"a": {"b": 1}}', "a", "b", 1.5, True)],
+            "j string, k1 string, k2 string, d double, b boolean",
+        ).createOrReplaceTempView("jvm_tier_bad_args")
+        arg = ("Unexpected argument type to '{}' at position {}, expected "
+               "string or int, got {}.")
+        cases = {
+            "json_get_str(j, null)": arg.format("json_get_str", 2, "Null"),
+            "json_get_int(j, d)": arg.format("json_get_int", 2, "Float64"),
+            "json_get_int(j, b)": arg.format("json_get_int", 2, "Boolean"),
+            "json_len(j, 'a', 1.5)": arg.format(
+                "json_length", 3, "Decimal128(2, 1)"),
+            "json_get(j, k1, k2)": "More than 1 path element is not "
+                                   "supported when querying JSON using an array.",
+            "json_get_str(j, 'a', k2)": "More than 1 path element",
+            "json_contains(j)": "The 'json_contains' function requires 2 or "
+                                "more arguments.",
+            "json_from_scalar(date'2020-01-01')":
+                "Unsupported type for json_from_scalar: Date32.",
+            "json_union_to_text(j)": "Unexpected argument type to "
+                                     "'json_union_to_text' at position 1",
+            "json_is_null(j)": "Unexpected argument type to 'json_is_null' "
+                               "at position 1",
+        }
+        for call, message in cases.items():
+            with pytest.raises(Exception) as err:
+                spark.sql(f"SELECT {call} FROM jvm_tier_bad_args")
+            assert message in str(err.value), (call, str(err.value)[:300])
+
+    def test_constant_path_columns_raise_on_the_tier(self, spark, tier):
+        # two path columns, each constant within the only partition: a
+        # literal to a per-batch check, but not foldable to the analyzer
+        jsonf.register_all(spark)
+        spark.createDataFrame(
+            [('{"a": {"b": 1}}', "a", "b")] * 3, "j string, k1 string, k2 string"
+        ).coalesce(1).createOrReplaceTempView("jvm_tier_constant_keys")
+        with pytest.raises(Exception, match="More than 1 path element"):
+            spark.sql("SELECT json_get_int(j, k1, k2) FROM jvm_tier_constant_keys")
 
     def test_compatibility_spellings_run_on_the_exact_tier(self, spark, tier):
         # register_all(auto_tier=True), the <name>_exact SQL names and
@@ -467,6 +527,119 @@ class TestRouting:
         ]
 
 
+# key columns over the edge rows: strings, ints and NULLs
+KEY_ROWS = [("k", 0), ("foo", 1), (None, None), ("a", -1), ("kk", 2)]
+LONG_PATH = ("a",) * 25  # past ScalaUDF's 22 arguments
+
+
+def _edge_keys_view(spark, name):
+    docs = EDGE_DOCS + ['{"k": [{"a": 3}], "kk": {"k": 2}}',
+                        '{"a": {"b": 4}}', '{"a": [{"b": 5}]}']
+    spark.createDataFrame(
+        [(i, d) + KEY_ROWS[i % len(KEY_ROWS)] for i, d in enumerate(docs)],
+        "i long, j string, kc string, ki int",
+    ).createOrReplaceTempView(name)
+    return docs
+
+
+class TestNoPython:
+    """With the tier loaded no call shape of any SQL name or API function
+    plans a Python UDF, and each gives the Python tier's rows."""
+
+    SQL = [_sql_call(fn, p) for fn, p in SQL_CALLS] + [
+        "json_get_str(j, kc)", "json_get_int(j, ki)", "json_get(j, kc)",
+        "json_contains(j, kc)", "json_get_array(j, ki)", "json_len(j, kc)",
+        "json_keys(j, kc)", "json_as_text(j, ki)", "json_get_json_exact(j, kc)",
+        "json_get_float(j, kc)", "json_get_bool(j, ki)",
+        "json_get_int(json_get(j, 'a'), 'b')",
+        "json_get_json(json_get(j, 'k'), ki)",
+        "json_get_int(json_get(j, kc), 'b')",
+        "json_is_null(json_get(j, 'k'))", "json_is_null(json_get(j, kc))",
+        "json_union_to_text(json_get(j, kc))",
+        "json_from_scalar(length(j))", "scalar_to_json(kc)",
+        "json_from_scalar(ki)", "json_from_scalar(i / 7)",
+        "json_from_scalar(cast(if(i % 2 = 0, 'NaN', '-Infinity') as float))",
+        "json_from_scalar(i % 2 = 0)", "json_from_scalar(null)",
+        _sql_call("json_get_str", LONG_PATH),
+        _sql_call("json_contains", LONG_PATH),
+    ]
+
+    def _sql_rows(self, spark):
+        q = spark.sql(f"SELECT i, {', '.join(self.SQL)} FROM no_python_edge")
+        plan = q._jdf.queryExecution().executedPlan().toString()
+        return sorted(q.collect(), key=lambda r: r.i), plan
+
+    def test_sql_names_match_the_python_tier(self, spark, tier, monkeypatch):
+        docs = _edge_keys_view(spark, "no_python_edge")
+        jsonf.register_all(spark)
+        got, plan = self._sql_rows(spark)
+        assert "EvalPython" not in plan
+        monkeypatch.setattr(jvm_tier, "load", lambda sc: None)
+        try:
+            jsonf.register_all(spark)
+            want, plan = self._sql_rows(spark)
+            assert "ArrowEvalPython" in plan
+        finally:
+            monkeypatch.undo()
+            jsonf.register_all(spark)
+        bad = [(self.SQL[k], (docs[g.i] or "")[:40], g[k + 1], w[k + 1])
+               for g, w in zip(got, want) for k in range(len(self.SQL))
+               if not _same(g[k + 1], w[k + 1])]
+        assert not bad, f"{len(bad)} mismatches, first: {bad[:10]}"
+        hits = [r[self.SQL.index("json_get_str(j, kc)") + 1] for r in got]
+        assert sum(v is not None for v in hits) > 3  # hits, not all misses
+
+    def test_api_matches_the_python_tier(self, spark, tier, monkeypatch):
+        docs = _edge_keys_view(spark, "no_python_api_edge")
+        df = spark.table("no_python_api_edge")
+
+        def calls():
+            return [
+                jsonf.json_get_str("j", F.col("kc")),
+                jsonf.json_get_int("j", F.col("ki")),
+                jsonf.json_contains("j", F.col("kc")),
+                jsonf.json_get_array("j", F.col("ki")),
+                jsonf.json_get("j", F.col("kc")),
+                jsonf.col("j").get(F.col("kc")).cast("bigint"),
+                jsonf.json_get_int(jsonf.json_get("j", F.col("kc")), "b"),
+                jsonf.json_get_int(jsonf.json_get("j", "a"), "b"),
+                jsonf.json_is_null(jsonf.json_get("j", "k")),
+                jsonf.json_from_scalar(F.length("j")),
+                jsonf.json_get_str("j", *LONG_PATH),
+                jsonf.json_object_keys("j", *LONG_PATH),
+            ]
+
+        def rows(cols):
+            out = df.select("i", *(c.alias(f"c{k}") for k, c in enumerate(cols)))
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            return sorted(out.collect(), key=lambda r: r.i), plan
+
+        got, plan = rows(calls())
+        assert "EvalPython" not in plan
+        monkeypatch.setattr(jvm_tier, "load", lambda sc: None)
+        want, plan = rows(calls())
+        assert "ArrowEvalPython" in plan
+        n = len(calls())
+        bad = [(k, (docs[g.i] or "")[:40], g[k + 1], w[k + 1])
+               for g, w in zip(got, want) for k in range(n)
+               if not _same(g[k + 1], w[k + 1])]
+        assert not bad, f"{len(bad)} mismatches, first: {bad[:10]}"
+
+    def test_register_all_registers_no_python_udf(self, spark, tier, monkeypatch):
+        from pyspark.sql.udf import UDFRegistration
+
+        def boom(*args, **kwargs):
+            raise AssertionError("a Python UDF was built or registered")
+
+        monkeypatch.setattr(UDFRegistration, "register", boom)
+        for name in ("path_udf", "union_to_text_udf", "union_is_null_udf",
+                     "from_scalar_udf"):
+            monkeypatch.setattr(udfs, name, boom)
+        jsonf.register_all(spark)
+        q = spark.sql("""SELECT json_get_int('{"a": 2}', 'a') AS v""")
+        assert q.collect()[0].v == 2
+
+
 class TestPythonFallback:
     def test_sql_names_match_the_api(self, spark, python_tier, monkeypatch):
         # with the tier off every registered SQL name runs its Python UDF:
@@ -511,6 +684,18 @@ class TestPythonFallback:
                if not _same(g[k + 1], w[k + 1])]
         assert not bad, f"{len(bad)} mismatches, first: {bad[:10]}"
         assert [r[-2] for r in got].count(False) > 10  # hits, not all misses
+
+
+    def test_sql_json_contains_requires_a_path(self, spark, python_tier,
+                                              monkeypatch):
+        try:
+            jsonf.register_all(spark)
+            with pytest.raises(Exception, match="The 'json_contains' "
+                               "function requires 2 or more arguments."):
+                spark.sql("""SELECT json_contains('{"a": 1}')""").collect()
+        finally:
+            monkeypatch.undo()
+            jsonf.register_all(spark)
 
 
 class TestBuild:

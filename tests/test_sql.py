@@ -118,14 +118,15 @@ class TestSqlSurface:
 
 class TestSqlPlanErrors:
     """The reference's argument checks, enforced on the registered SQL
-    surface via Arrow argument types (reference: tests/main.rs:291-298,
-    src/common.rs:106-141)."""
+    surface from the argument types: at analysis by the JVM tier's
+    builders, per Arrow batch by the Python UDFs when the tier is off
+    (reference: tests/main.rs:291-298, src/common.rs:106-141)."""
 
     def test_null_literal_path_raises(self, spark, test_df):
         # reference tests/main.rs:291-298 — untyped NULL literal path is
-        # rejected with the planning message (here at execution: Spark has
-        # no plan hook for Python functions, but Arrow's `null` type still
-        # identifies the VOID literal exactly).
+        # rejected with the planning message (Spark's NullType on the JVM
+        # tier, Arrow's `null` type on the Python UDFs: both identify the
+        # VOID literal exactly).
         with pytest.raises(Exception, match=r"Unexpected argument type to 'json_get_str' at position 2, expected string or int, got Null\."):
             spark.sql("select json_get_str(json_data, null) from test").collect()
 
@@ -157,7 +158,8 @@ class TestSqlPlanErrors:
     def test_multi_path_with_column_raises(self, spark):
         # reference tests/main.rs:1095-1103 test_multiple_lookup_arrays.
         # Single partition so the varying key columns share one Arrow batch
-        # (detection is batch-local; a 1-row batch can't prove column-ness).
+        # when the Python UDFs run (their detection is batch-local; a 1-row
+        # batch can't prove column-ness); the JVM tier raises at analysis.
         df = spark.createDataFrame(
             [('{"a":{"aa":"x"}}', "a", "aa"), ('{"b":{"bb":"y"}}', "b", "bb")],
             "j string, k1 string, k2 string",
