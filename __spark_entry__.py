@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import datafusion_functions_json_spark as jsonf  # noqa: E402
-from datafusion_functions_json_spark.operators import (  # noqa: E402
+from spark_pipeline_ops.operators import (  # noqa: E402
     bpe,
     cdc,
     dedup,
@@ -43,7 +43,7 @@ from datafusion_functions_json_spark.operators import (  # noqa: E402
     stats,
     text,
 )
-from datafusion_functions_json_spark import oracle_twin  # noqa: E402
+from spark_pipeline_ops import oracle_twin  # noqa: E402
 from datafusion_functions_json_spark.sources import load_table  # noqa: E402
 
 # ---------------------------------------------------------------------------
@@ -716,7 +716,7 @@ def _q_skew_report(spark, sf_dir):
     # shuffle-planning diagnosis: hottest user_ids with share and
     # x-over-uniform ratio — one keyed partial agg + 1-row broadcast +
     # global top-k, no collect
-    from datafusion_functions_json_spark.operators import stats
+    from spark_pipeline_ops.operators import stats
 
     ev = load_table(spark, sf_dir, "events")
     return stats.skew_report(ev, "user_id", k=20)
@@ -891,7 +891,7 @@ def _q_hash_split(spark, sf_dir):
     # reproducible train/val/test assignment: pure projection (md5 →
     # u32 fraction → threshold case), zero shuffles — scan-speed at any
     # scale. Counts per split keep the oracle output compact.
-    from datafusion_functions_json_spark.operators import split as split_ops
+    from spark_pipeline_ops.operators import split as split_ops
 
     docs = load_table(spark, sf_dir, "documents")
     lab = split_ops.hash_split(
@@ -907,7 +907,7 @@ def _q_domain_cap(spark, sf_dir):
     # 10 longest docs (ties -> min doc_id). The rank<=k filter plans as
     # WindowGroupLimit — map-side top-k per group BEFORE the shuffle, so
     # no group ever transfers more than ~k rows per input partition.
-    from datafusion_functions_json_spark.operators import split as split_ops
+    from spark_pipeline_ops.operators import split as split_ops
 
     docs = _docs(spark, sf_dir)
     return split_ops.cap_per_group(
@@ -958,7 +958,7 @@ def _q_kmeans(spark, sf_dir):
 def _q_stratified_sample(spark, sf_dir):
     # exact-count per-stratum sample: rank over the md5 hash fraction —
     # one shuffle on the stratum key; selection reproducible from ids
-    from datafusion_functions_json_spark.operators import split as split_ops
+    from spark_pipeline_ops.operators import split as split_ops
 
     docs = load_table(spark, sf_dir, "documents")
     return split_ops.stratified_sample(
@@ -983,7 +983,7 @@ def _q_stream_decontam(spark, sf_dir):
     # keep every doc, so the per-doc overlap COUNTS (zeros included,
     # unlike batch decontaminate's hits-only frame) are what the oracle
     # hashes. Same bench/train split and n=4 grams as `decontam`.
-    from datafusion_functions_json_spark import streaming as js
+    from spark_pipeline_ops import streaming as js
 
     docs = _docs(spark, sf_dir)
     bench = docs.filter(F.col("doc_id") % 20 == 0)
@@ -997,7 +997,7 @@ def _q_stream_decontam(spark, sf_dir):
 def _q_mixture_sample(spark, sf_dir):
     # training-mix composition: per-source sampling rates decided by a
     # pure hash projection — reproducible on any engine, no shuffle
-    from datafusion_functions_json_spark.operators import split as split_ops
+    from spark_pipeline_ops.operators import split as split_ops
 
     docs = load_table(spark, sf_dir, "documents")
     mix = split_ops.mixture_sample(
@@ -1015,7 +1015,7 @@ def _q_mixture_sample(spark, sf_dir):
 
 def _q_mixture_resample(spark, sf_dir):
     # upsampling mixture: rate>1 duplicates rows deterministically
-    from datafusion_functions_json_spark.operators import split as split_ops
+    from spark_pipeline_ops.operators import split as split_ops
 
     docs = load_table(spark, sf_dir, "documents")
     mix = split_ops.mixture_resample(
@@ -1035,7 +1035,7 @@ def _q_mixture_resample(spark, sf_dir):
 def _q_pack_batches(spark, sf_dir):
     # token-budget batch packing: shard-local window prefix sum (mod
     # shard key for cross-engine determinism; xxhash64 default at scale)
-    from datafusion_functions_json_spark.operators import split as split_ops
+    from spark_pipeline_ops.operators import split as split_ops
 
     docs = load_table(spark, sf_dir, "documents")
     packed = split_ops.pack_batches(
@@ -1090,7 +1090,7 @@ def _q_sessionize_batch(spark, sf_dir):
     # batch gap sessionization: lag + running-sum windows and the
     # session agg all over ONE user-keyed exchange (unspread: window
     # shuffles anyway, a pre-spread would just add an exchange)
-    from datafusion_functions_json_spark import streaming as js
+    from spark_pipeline_ops import streaming as js
 
     ev = load_table(spark, sf_dir, "events")
     return js.sessionize_batch(ev, "user_id", "ts", gap_seconds=600)
@@ -1125,7 +1125,7 @@ def _q_neardedup_compact_twin(spark, sf_dir):
     import shutil
     import tempfile
 
-    from datafusion_functions_json_spark import streaming as js
+    from spark_pipeline_ops import streaming as js
 
     docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 300).select(
         "doc_id", "text"
@@ -1369,7 +1369,7 @@ def _q_pack_positions(spark, sf_dir):
     # packing + within-batch token spans (loss-mask / block-attention
     # boundaries): same single shard-keyed prefix-sum exchange as
     # pack_batches; spans derive from the same prefix
-    from datafusion_functions_json_spark.operators import split as split_ops
+    from spark_pipeline_ops.operators import split as split_ops
 
     docs = load_table(spark, sf_dir, "documents")
     return split_ops.pack_positions(
@@ -1487,7 +1487,7 @@ def _q_curriculum(spark, sf_dir):
     # buckets rank in parallel, a 64-row offset table broadcasts back.
     # The oracle is the single-partition row_number the operator must
     # equal exactly.
-    from datafusion_functions_json_spark.operators import split as split_ops
+    from spark_pipeline_ops.operators import split as split_ops
 
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
@@ -1523,7 +1523,7 @@ def _q_temperature_sample(spark, sf_dir):
     # multilingual-style α-temperature mixture (α=0.5 upweights small
     # sources): per-source counts → α-share targets broadcast back →
     # one source-keyed rank window; selection reproducible from ids
-    from datafusion_functions_json_spark.operators import split as split_ops
+    from spark_pipeline_ops.operators import split as split_ops
 
     docs = load_table(spark, sf_dir, "documents")
     return split_ops.temperature_sample(
@@ -2651,7 +2651,7 @@ def _q_weighted_sample(spark, sf_dir):
     # key + TakeOrderedAndProject partial top-k — no full sort, no
     # shuffle; the salted-md5 draw makes the exact selection
     # reproducible on any engine (DuckDB twin picks identical rows)
-    from datafusion_functions_json_spark.operators import split as split_ops
+    from spark_pipeline_ops.operators import split as split_ops
 
     docs = load_table(spark, sf_dir, "documents")
     wdf = docs.select(
@@ -2981,7 +2981,7 @@ def _q_data_quality(spark, sf_dir):
     # scan + 1-row reduce regardless of check count), then a plan-time
     # explode to one row per check. The between bound is deliberately
     # violated by real rows so the metric is falsifiable, not all-zero.
-    from datafusion_functions_json_spark.operators import validate
+    from spark_pipeline_ops.operators import validate
 
     orders = load_table(spark, sf_dir, "orders")
     return validate.check_constraints(
@@ -3208,7 +3208,7 @@ def _q_random_project(spark, sf_dir):
 
 
 def _random_project_oracle() -> str:
-    from datafusion_functions_json_spark.operators.similarity import (
+    from spark_pipeline_ops.operators.similarity import (
         projection_matrix,
     )
 
@@ -3482,7 +3482,7 @@ def _q_media_features_jpeg(spark, sf_dir):
     def gen(it):
         import numpy as np
 
-        from datafusion_functions_json_spark.operators._codecs import (
+        from spark_pipeline_ops.operators._codecs import (
             encode_jpeg,
         )
 
@@ -3597,7 +3597,7 @@ def _q_video_features(spark, sf_dir):
     # package registers _codecs for cloudpickle by-value, so the
     # function ships inside the closure and workers need no repo on
     # sys.path — a module-name import on the worker would not resolve
-    from datafusion_functions_json_spark.operators._codecs import encode_avi
+    from spark_pipeline_ops.operators._codecs import encode_avi
 
     @F.pandas_udf("binary")
     def _avi_payload(doc_id):
@@ -3825,7 +3825,7 @@ def _q_leakage_split(spark, sf_dir):
         .filter(F.col("jac") >= 0.8)
         .select("src", "dst")
     )
-    from datafusion_functions_json_spark.operators import split as split_ops
+    from spark_pipeline_ops.operators import split as split_ops
 
     out = split_ops.leakage_safe_split(
         docs.select("doc_id"),

@@ -1,18 +1,20 @@
 """datafusion_functions_json_spark — a PySpark-native JSON query engine
-with the query capabilities of ``datafusion-functions-json`` (reference at
-/root/reference, studied behaviorally; architecture is Spark-first — see
-SURVEY.md).
+with the query capabilities of ``datafusion-functions-json`` (reference
+studied behaviorally; architecture is Spark-first — see SURVEY.md).
 
 Public surface:
 
 * the 13 scalar JSON functions + aliases (``functions``/top level);
 * ``col()`` / ``JsonColumn`` — the python operator sugar standing in for
   the reference's ``->`` / ``->>`` / ``?`` SQL operators;
+* ``sql()`` / ``rewrite_sql()`` — SQL text with those operators;
 * ``register_all(spark)`` — SQL-surface registration;
-* ``operators`` — large-scale data-pipeline operators (dedup, similarity
-  search, text analysis, multimodal) built on the same Spark-first rules;
-* ``sources`` / ``streaming`` — IO + structured-streaming composition
-  helpers.
+* ``sources`` — the readers and sinks the shared testdata and the
+  benchmark's write job use.
+
+The training-data pipeline operators live in the sibling package
+``spark_pipeline_ops``, which imports this one; this package never
+imports it.
 """
 
 def _register_pickle_by_value(*modules) -> None:
@@ -25,8 +27,9 @@ def _register_pickle_by_value(*modules) -> None:
     or --py-files needed on executors. Only modules whose code runs
     inside workers belong here; the pure-API modules (api/column/union)
     are driver-side and stay reference-pickled. The JSON engine registers
-    its kernel modules below; ``operators`` and ``streaming`` register
-    theirs when they are imported.
+    its kernel modules below; ``spark_pipeline_ops.operators`` and
+    ``spark_pipeline_ops.streaming`` register theirs, through this
+    helper, when they are imported.
     """
     try:
         from pyspark import cloudpickle
@@ -64,7 +67,7 @@ from .functions.api import (
     scalar_to_json,
 )
 from .functions.distinct_eval import eval_per_distinct
-from .register import register_all, register_pipeline
+from .register import register_all
 from .sql import rewrite_sql, sql
 from .union import UNION_DDL, UNION_SCHEMA, format_union_value
 
@@ -92,7 +95,6 @@ __all__ = [
     "eval_per_distinct",
     "JsonProfile",
     "register_all",
-    "register_pipeline",
     "rewrite_sql",
     "sql",
     "UNION_SCHEMA",

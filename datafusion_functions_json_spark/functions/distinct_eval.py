@@ -36,12 +36,11 @@ The duplication ratio alone does NOT decide the win: dict's own cost
 rises with document BYTES (the distinct's hash-aggregate and the join
 probe both touch the full doc string as key), while its saving is the
 per-doc kernel cost times (1 - D/N). On 32 local cores the Arrow hop
-over tiny (<~0.5 KB) docs is cheaper than that bookkeeping — the sf1
-ledger pins the tiny-doc case honestly (dict_extract 0.72 s vs its
-per-row twin 0.52 s on 9-byte events.props at 10,000:1 duplication,
-BASELINE.md round-14). The win case is the column this spelling
-exists for: KB-sized low-cardinality documents (config blobs, schema'd
-payloads), where per-row parse dominates. An earlier local[8]
+over tiny (<~0.5 KB) docs is cheaper than that bookkeeping (measured
+at sf1: dict_extract 0.72 s vs its per-row twin 0.52 s on 9-byte
+events.props at 10,000:1 duplication). The win case is the column this
+spelling exists for: KB-sized low-cardinality documents (config blobs,
+schema'd payloads), where per-row parse dominates. An earlier local[8]
 measurement (1.2M rows, 1000 distinct ~50-byte docs: 1.10 s -> 0.61 s)
 showed the same crossover shifted left — with fewer cores the per-row
 side inflates first, which is also the 100 TB reading: the dictionary

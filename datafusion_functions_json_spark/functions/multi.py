@@ -1,13 +1,14 @@
-"""Fused multi-field JSON extraction — parse each document ONCE for N
-fields.
+"""Multi-field JSON extraction — N typed fields out of one JSON column
+as one struct.
 
 The reference evaluates one UDF per extraction, re-parsing the document
 per call (mitigated by its call un-nesting for chained lookups;
-SURVEY.md §2.3). For the analytics pattern "project 5 typed fields out
-of one JSON column", our engine can do strictly better than both the
-reference and naive per-field UDFs: a single pandas UDF that parses each
-document once (C-accelerated ``json.loads``) and emits a struct — one
-JVM→Python Arrow hop, one parse, N fields.
+SURVEY.md §2.3). With the JVM exact tier loaded, each field is one of
+the tier's columns (:func:`.jvm_tier.multi`), so the document is scanned
+once per field inside the executor and never crosses to Python. Without
+the tier, one Arrow UDF parses each document once (C-accelerated
+``json.loads``) and emits the struct — one JVM→Python Arrow hop, one
+parse, N fields.
 
 Semantics per field mirror the single-field kernels exactly (same
 coercion and null taxonomy); documents where strict full-document

@@ -5,12 +5,14 @@ import java.util.ArrayList;
 import java.util.Arrays;
 import java.util.List;
 import java.util.Map;
+import java.util.Objects;
 import java.util.concurrent.ConcurrentHashMap;
 
 import org.apache.spark.sql.AnalysisException;
 import org.apache.spark.sql.Column;
 import org.apache.spark.sql.Row;
 import org.apache.spark.sql.RowFactory;
+import org.apache.spark.sql.catalyst.InternalRow;
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry;
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry$;
 import org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry;
@@ -24,9 +26,14 @@ import org.apache.spark.sql.catalyst.expressions.GetStructField;
 import org.apache.spark.sql.catalyst.expressions.If;
 import org.apache.spark.sql.catalyst.expressions.IsNull;
 import org.apache.spark.sql.catalyst.expressions.Literal;
+import org.apache.spark.sql.catalyst.expressions.NonSQLExpression;
 import org.apache.spark.sql.catalyst.expressions.Or;
+import org.apache.spark.sql.catalyst.expressions.RuntimeReplaceable;
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF;
 import org.apache.spark.sql.catalyst.expressions.SortOrder;
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext;
+import org.apache.spark.sql.catalyst.expressions.codegen.ExprCode;
+import org.apache.spark.sql.catalyst.trees.TreePattern$;
 import org.apache.spark.sql.classic.ExpressionUtils;
 import org.apache.spark.sql.classic.SparkSession;
 import org.apache.spark.sql.types.BooleanType;
@@ -45,6 +52,7 @@ import org.apache.spark.sql.types.StringType;
 import org.apache.spark.sql.types.StructField;
 import org.apache.spark.sql.types.StructType;
 
+import scala.Enumeration;
 import scala.Function1;
 import scala.Function2;
 import scala.Function3;
@@ -68,6 +76,7 @@ import scala.Function20;
 import scala.Function21;
 import scala.Function22;
 import scala.Option;
+import scala.collection.immutable.IndexedSeq;
 import scala.collection.immutable.Seq;
 import scala.jdk.javaapi.CollectionConverters;
 import scala.runtime.AbstractFunction1;
@@ -367,13 +376,44 @@ public final class JsonExactTier {
                     if (typeId < 0) {
                         throw argumentError(1, "a JSON union", u.dataType());
                     }
-                    return fn.equals("json_is_null") ? isNullArm(u, typeId)
+                    return fn.equals("json_is_null") ? namedCall(args)
                                                      : unionToTextUdf(args);
                 }
                 case "json_from_scalar":
-                    return fromScalar(single(args));
+                    single(args);
+                    return namedCall(args);
                 default:
                     return getter(args);
+            }
+        }
+
+        /**
+         * The call of this function over {@code args} that prints as the
+         * call and runs as {@link #replacement}, built now so that its
+         * argument errors are raised at analysis.
+         */
+        private Expression namedCall(Seq<Expression> args) {
+            NamedCall call = new NamedCall(name, args, this);
+            call.replacement();
+            return call;
+        }
+
+        /**
+         * The Catalyst tree a {@link NamedCall} of this function runs as,
+         * for arguments {@link #apply} checked: {@code json_is_null(u)},
+         * {@code json_from_scalar(v)}, or a getter at a literal path too
+         * long to keep the path in the ScalaUDF's children.
+         */
+        Expression replacement(Seq<Expression> args) {
+            Expression v = args.apply(0);
+            switch (fn) {
+                case "json_is_null":
+                    return isNullArm(v, typeIdOrdinal(v.dataType()));
+                case "json_from_scalar":
+                    return fromScalar(v);
+                default:
+                    return udf(name, fn, literalPath(args), members(v.dataType()),
+                        seq(List.of(v)));
             }
         }
 
@@ -397,12 +437,8 @@ public final class JsonExactTier {
             if (n == 0) {
                 throw error("The '" + fn + "' function requires one or more arguments.");
             }
-            Expression doc = args.apply(0);
-            List<Integer> members = null;
-            DataType docType = doc.dataType();
-            if (docType instanceof StructType) {
-                members = containerOrdinals((StructType) docType);
-            }
+            DataType docType = args.apply(0).dataType();
+            List<Integer> members = members(docType);
             if (members == null && !(docType instanceof StringType)
                     && !(docType instanceof NullType)) {
                 throw argumentError(1, "a string", docType);
@@ -423,18 +459,22 @@ public final class JsonExactTier {
                 }
                 return udf(name, fn, null, members, args);
             }
+            if (n <= MAX_ARITY) {
+                return udf(name, fn, literalPath(args), members, args);
+            }
+            // past ScalaUDF's arity the path literals are left out of the
+            // udf's children; the call around it prints the whole path
+            return namedCall(args);
+        }
+
+        /** The literal path of a getter call: its arguments after the first. */
+        private static JsonFinder.Path literalPath(Seq<Expression> args) {
             List<Object> elems = new ArrayList<>();
-            for (int k = 1; k < n; k++) {
+            for (int k = 1; k < args.size(); k++) {
                 Object v = args.apply(k).eval(null);
                 elems.add(v == null || v instanceof Number ? v : v.toString());
             }
-            JsonFinder.Path path = new JsonFinder.Path(elems);
-            if (n <= MAX_ARITY) {
-                return udf(name, fn, path, members, args);
-            }
-            // past ScalaUDF's arity the path literals are left out of the
-            // children
-            return udf(name, fn, path, members, seq(List.of(doc)));
+            return new JsonFinder.Path(elems);
         }
 
         /**
@@ -505,6 +545,137 @@ public final class JsonExactTier {
     }
 
     /**
+     * A call of {@code name} that prints as the call, like a
+     * {@link ScalaUDF}, and runs as the Catalyst tree its builder makes of
+     * the arguments, which the optimizer puts in its place: an unaliased
+     * call names its column after the call, as the Python tier's UDFs do,
+     * also inside another call. The tree is built on first use: the
+     * copies Spark makes to print the call hold arguments that cannot be
+     * evaluated.
+     */
+    static final class NamedCall extends Expression
+            implements RuntimeReplaceable, NonSQLExpression {
+        private static final long serialVersionUID = 1L;
+
+        private static final Seq<Enumeration.Value> NODE_PATTERNS =
+            seq(List.of(TreePattern$.MODULE$.RUNTIME_REPLACEABLE()));
+
+        private final String name;
+        private final Seq<Expression> children;
+        private final SqlBuilder builder;
+        private Expression replacement;
+
+        public NamedCall(String name, Seq<Expression> children, SqlBuilder builder) {
+            this.name = name;
+            this.children = children;
+            this.builder = builder;
+        }
+
+        @Override
+        public Expression replacement() {
+            if (replacement == null) {
+                replacement = builder.replacement(children);
+            }
+            return replacement;
+        }
+
+        @Override
+        public Seq<Expression> children() {
+            return children;
+        }
+
+        @Override
+        public Expression withNewChildrenInternal(IndexedSeq<Expression> newChildren) {
+            return new NamedCall(name, newChildren, builder);
+        }
+
+        @Override
+        public String prettyName() {
+            return name;
+        }
+
+        @Override
+        public String toString() {
+            return name + children.mkString("(", ", ", ")");
+        }
+
+        // the traits' members that Expression also declares: Java picks
+        // the class's, so each is passed on to its trait explicitly
+
+        @Override
+        public String sql() {
+            return NonSQLExpression.super.sql();
+        }
+
+        @Override
+        public boolean nullable() {
+            return RuntimeReplaceable.super.nullable();
+        }
+
+        @Override
+        public DataType dataType() {
+            return RuntimeReplaceable.super.dataType();
+        }
+
+        @Override
+        public Expression canonicalized() {
+            return RuntimeReplaceable.super.canonicalized();
+        }
+
+        @Override
+        public Object eval(InternalRow input) {
+            return RuntimeReplaceable.super.eval(input);
+        }
+
+        @Override
+        public ExprCode doGenCode(CodegenContext ctx, ExprCode ev) {
+            return RuntimeReplaceable.super.doGenCode(ctx, ev);
+        }
+
+        @Override
+        public Seq<Enumeration.Value> nodePatterns() {
+            return NODE_PATTERNS;
+        }
+
+        @Override
+        public void org$apache$spark$sql$catalyst$expressions$RuntimeReplaceable$_setter_$nodePatterns_$eq(
+                Seq<Enumeration.Value> patterns) {
+            // nodePatterns is the constant above
+        }
+
+        @Override
+        public int productArity() {
+            return 3;
+        }
+
+        @Override
+        public Object productElement(int n) {
+            switch (n) {
+                case 0: return name;
+                case 1: return children;
+                case 2: return builder;
+                default: throw new IndexOutOfBoundsException(String.valueOf(n));
+            }
+        }
+
+        @Override
+        public boolean canEqual(Object that) {
+            return that instanceof NamedCall;
+        }
+
+        @Override
+        public boolean equals(Object that) {
+            return that instanceof NamedCall && name.equals(((NamedCall) that).name)
+                && children.equals(((NamedCall) that).children);
+        }
+
+        @Override
+        public int hashCode() {
+            return Objects.hash(name, children);
+        }
+    }
+
+    /**
      * The ordinal of the {@code type_id} field when {@code t} is a union
      * struct, else -1.
      */
@@ -515,6 +686,14 @@ public final class JsonExactTier {
         Option<Object> k = ((StructType) t).getFieldIndex("type_id");
         return k.isDefined() && ((StructType) t).fields()[(Integer) k.get()].dataType()
             instanceof ByteType ? (Integer) k.get() : -1;
+    }
+
+    /**
+     * The container members a document of type {@code t} is read
+     * through: a union struct's, or null for any other type.
+     */
+    private static List<Integer> members(DataType t) {
+        return t instanceof StructType ? containerOrdinals((StructType) t) : null;
     }
 
     /**

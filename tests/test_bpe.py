@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from datafusion_functions_json_spark.operators import bpe
+from spark_pipeline_ops.operators import bpe
 
 
 @pytest.fixture(scope="module")
@@ -383,7 +383,7 @@ class TestBpeBatchedTraining:
 
 class TestRound8Guards:
     def test_scd2_valid_from_same_as_eff(self, spark):
-        from datafusion_functions_json_spark.operators import cdc
+        from spark_pipeline_ops.operators import cdc
 
         ch = spark.createDataFrame(
             [(1, "a", 10), (1, "b", 20)], "id bigint, v string, eff bigint"
@@ -393,7 +393,7 @@ class TestRound8Guards:
         assert rows == {"a": (10, 20), "b": (20, None)}
 
     def test_leakage_split_with_node_comp_columns(self, spark):
-        from datafusion_functions_json_spark.operators import split as split_ops
+        from spark_pipeline_ops.operators import split as split_ops
 
         df = spark.createDataFrame(
             [(1, 99, 98), (2, 99, 98), (3, 99, 98)],
@@ -409,7 +409,7 @@ class TestRound8Guards:
 
 class TestBpeStats:
     def test_compression_and_oov(self, spark):
-        from datafusion_functions_json_spark.operators import bpe
+        from spark_pipeline_ops.operators import bpe
 
         # train on docs 1,2; doc 0 contributes the OOV words
         docs = spark.createDataFrame(

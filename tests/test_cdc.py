@@ -4,7 +4,7 @@ scd2_history, snapshot_diff, and rrf_fuse."""
 import pytest
 from pyspark.sql import functions as F
 
-from datafusion_functions_json_spark.operators import cdc, rank
+from spark_pipeline_ops.operators import cdc, rank
 
 
 @pytest.fixture(scope="module")
@@ -159,7 +159,7 @@ class TestRrfFuse:
 
 class TestLeakageSafeSplit:
     def test_components_share_split(self, spark):
-        from datafusion_functions_json_spark.operators import split as split_ops
+        from spark_pipeline_ops.operators import split as split_ops
 
         df = spark.createDataFrame([(i,) for i in range(1, 21)], "doc_id bigint")
         # chain 1-2-3 and pair 10-11; everything else singleton
@@ -178,7 +178,7 @@ class TestLeakageSafeSplit:
         assert len(out) == 20
 
     def test_matches_hash_split_on_group(self, spark):
-        from datafusion_functions_json_spark.operators import split as split_ops
+        from spark_pipeline_ops.operators import split as split_ops
 
         df = spark.createDataFrame([(i,) for i in range(1, 9)], "doc_id bigint")
         edges = spark.createDataFrame([(4, 5)], "src bigint, dst bigint")
@@ -194,7 +194,7 @@ class TestLeakageSafeSplit:
 
 class TestDistributionDrift:
     def test_identical_corpora_zero_drift(self, spark):
-        from datafusion_functions_json_spark.operators import stats
+        from spark_pipeline_ops.operators import stats
 
         docs = spark.createDataFrame(
             [(1, "aa bb cc"), (2, "bb cc dd")], "doc_id bigint, text string"
@@ -207,7 +207,7 @@ class TestDistributionDrift:
     def test_known_drift_math(self, spark):
         import math
 
-        from datafusion_functions_json_spark.operators import stats
+        from spark_pipeline_ops.operators import stats
 
         old = spark.createDataFrame([(1, "a a b")], "doc_id bigint, text string")
         new = spark.createDataFrame([(1, "a b b b")], "doc_id bigint, text string")
@@ -221,7 +221,7 @@ class TestDistributionDrift:
         assert 0 < r.js < r.kl_old_new  # JS is the bounded symmetric one
 
     def test_alpha_validation(self, spark):
-        from datafusion_functions_json_spark.operators import stats
+        from spark_pipeline_ops.operators import stats
 
         docs = spark.createDataFrame([(1, "a")], "doc_id bigint, text string")
         with pytest.raises(ValueError, match="alpha"):
@@ -230,7 +230,7 @@ class TestDistributionDrift:
 
 class TestPsi:
     def test_identical_is_zero(self, spark):
-        from datafusion_functions_json_spark.operators import stats
+        from spark_pipeline_ops.operators import stats
 
         df = spark.createDataFrame(
             [(float(i),) for i in range(100)], "x double"
@@ -239,7 +239,7 @@ class TestPsi:
         assert r.psi == 0.0 and r.n_old == r.n_new == 100
 
     def test_shift_detected_and_nulls_dropped(self, spark):
-        from datafusion_functions_json_spark.operators import stats
+        from spark_pipeline_ops.operators import stats
 
         old = spark.createDataFrame(
             [(float(i % 10),) for i in range(100)] + [(None,)], "x double"
@@ -252,7 +252,7 @@ class TestPsi:
         assert r.psi > 0.25   # half the mass moved out of [0,5)
 
     def test_overflow_underflow_buckets(self, spark):
-        from datafusion_functions_json_spark.operators import stats
+        from spark_pipeline_ops.operators import stats
 
         old = spark.createDataFrame([(5.0,)] * 10, "x double")
         new = spark.createDataFrame(
@@ -262,7 +262,7 @@ class TestPsi:
         assert r.psi > 1.0  # all mass left the grid
 
     def test_validation(self, spark):
-        from datafusion_functions_json_spark.operators import stats
+        from spark_pipeline_ops.operators import stats
 
         df = spark.createDataFrame([(1.0,)], "x double")
         with pytest.raises(ValueError, match="bins"):
@@ -386,7 +386,7 @@ class TestCdcDuckDifferential:
 
 class TestIvfDistributed:
     def test_deterministic_and_self_consistent(self, spark):
-        from datafusion_functions_json_spark.operators import similarity
+        from spark_pipeline_ops.operators import similarity
 
         rows = []
         for c, base in enumerate([0.0, 10.0, -10.0]):
@@ -416,7 +416,7 @@ class TestIvfDistributed:
             assert d[cl] == min(d)
 
     def test_probe_returns_list_members(self, spark):
-        from datafusion_functions_json_spark.operators import similarity
+        from spark_pipeline_ops.operators import similarity
 
         rows = [(i, [float(i), float(-i)]) for i in range(12)]
         df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
@@ -435,7 +435,7 @@ class TestIvfDistributed:
 
 class TestGroupedDrift:
     def test_group_absent_on_one_side_still_reports(self, spark):
-        from datafusion_functions_json_spark.operators import stats
+        from spark_pipeline_ops.operators import stats
 
         # s2's counts are deliberately SKEWED: a uniform old
         # distribution would exactly match the empty side's
@@ -454,7 +454,7 @@ class TestGroupedDrift:
         assert rows["s2"].tv > 0.3  # the turned-off source IS drift
 
     def test_matches_global_for_single_group(self, spark):
-        from datafusion_functions_json_spark.operators import stats
+        from spark_pipeline_ops.operators import stats
 
         old = spark.createDataFrame(
             [("g", "a a b c"), ("g", "b c d")], "src string, text string"
@@ -471,7 +471,7 @@ class TestGroupedDrift:
 
 class TestGroupedDriftNullGroups:
     def test_null_group_is_a_reported_slice(self, spark):
-        from datafusion_functions_json_spark.operators import stats
+        from spark_pipeline_ops.operators import stats
 
         # unattributed (NULL-source) docs are a legitimate slice: the
         # plain equi-joins used to split its counts across rows and

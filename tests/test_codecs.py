@@ -15,7 +15,7 @@ import zlib
 import numpy as np
 import pytest
 
-from datafusion_functions_json_spark.operators._codecs import (
+from spark_pipeline_ops.operators._codecs import (
     FEATURE_DIM,
     decode_avi_frame,
     decode_image_bytes,
@@ -353,7 +353,7 @@ class TestJpegCodec:
         assert decode_image_bytes(payload) == (48, 64, 3, None)
 
     def test_garbage_never_raises(self):
-        from datafusion_functions_json_spark.operators._codecs import (
+        from spark_pipeline_ops.operators._codecs import (
             _decode_jpeg,
         )
 
@@ -371,7 +371,7 @@ class TestJpegCodec:
         # plane would be ~32 GiB. The decoder must reject on the padded
         # PIXEL bound before allocating; the header sniff still serves
         # dims-only.
-        from datafusion_functions_json_spark.operators._codecs import (
+        from spark_pipeline_ops.operators._codecs import (
             _decode_jpeg,
         )
 

@@ -10,7 +10,7 @@ path is covered by the ordinary tests (the paths are the same code).
 
 import pytest
 
-from datafusion_functions_json_spark.plans import plan_size_bytes
+from spark_pipeline_ops.plans import plan_size_bytes
 
 
 class _NoHandles:
@@ -38,7 +38,7 @@ class TestPlanStatDegradation:
         # to 'hof' (the 100 TB tier). We can't strip _jdf from a live
         # classic DataFrame without breaking .select, so pin the
         # resolution rule itself plus the shared helper's None path.
-        from datafusion_functions_json_spark.operators.similarity import (
+        from spark_pipeline_ops.operators.similarity import (
             _plan_size_bytes,
         )
 
@@ -48,7 +48,7 @@ class TestPlanStatDegradation:
         assert impl == "hof"
         # and the hof tier itself is a pure-Column path (no JVM handle
         # use outside normal DataFrame ops) — run it end-to-end
-        from datafusion_functions_json_spark.operators.similarity import (
+        from spark_pipeline_ops.operators.similarity import (
             cosine_topk,
         )
 
@@ -63,7 +63,7 @@ class TestPlanStatDegradation:
 
 class TestMetricsDegradation:
     def test_report_skips_jvm_wait_without_handles(self):
-        from datafusion_functions_json_spark.operators.metrics import (
+        from spark_pipeline_ops.operators.metrics import (
             StageMetrics,
         )
 
@@ -78,7 +78,7 @@ class TestMetricsDegradation:
         assert out == {"stage_a": {"rows": 7}}
 
     def test_report_with_jo_but_no_jvm_does_not_crash(self):
-        from datafusion_functions_json_spark.operators.metrics import (
+        from spark_pipeline_ops.operators.metrics import (
             StageMetrics,
         )
 
@@ -97,7 +97,7 @@ class TestMetricsDegradation:
         import threading
         import time
 
-        from datafusion_functions_json_spark.operators.metrics import (
+        from spark_pipeline_ops.operators.metrics import (
             StageMetrics,
         )
 
@@ -116,7 +116,7 @@ class TestMetricsDegradation:
             m.report(strict=True, timeout_s=0.3)
 
     def test_connect_raising_get_maps_to_pending(self):
-        from datafusion_functions_json_spark.operators.metrics import (
+        from spark_pipeline_ops.operators.metrics import (
             StageMetrics,
         )
 

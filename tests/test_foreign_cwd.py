@@ -22,7 +22,7 @@ SCRIPT = textwrap.dedent(
     sys.path.insert(0, {repo!r})
     from pyspark.sql import SparkSession, functions as F
     import datafusion_functions_json_spark as jsonf
-    from datafusion_functions_json_spark.operators import multimodal, text
+    from spark_pipeline_ops.operators import multimodal, text
 
     spark = (
         SparkSession.builder.master("local[2]")
@@ -63,7 +63,7 @@ SCRIPT = textwrap.dedent(
     u = df.select(jsonf.json_extract_multi("j", {{"k": ("int", "k")}}).alias("u"))
     assert [r.u.k for r in u.collect()] == [7, None, None]
     # mapInPandas media path (multimodal + _codecs by value)
-    from datafusion_functions_json_spark.operators._codecs import encode_avi
+    from spark_pipeline_ops.operators._codecs import encode_avi
     import numpy as np
     frames = [np.full((8, 8, 3), 9, np.uint8)]
     rows = [(1, "video", bytearray(encode_avi(frames)), "video/avi",
@@ -72,7 +72,7 @@ SCRIPT = textwrap.dedent(
     out = multimodal.extract_video_features(media, every_ms=1000).collect()
     assert len(out) == 1 and out[0].features is not None, out
     # mapInPandas Misra-Gries path (sketch by value)
-    from datafusion_functions_json_spark.operators import sketch
+    from spark_pipeline_ops.operators import sketch
     items = spark.createDataFrame(
         [("a",)] * 5 + [("b",)] * 2 + [("c",)], ["item"]
     )
@@ -86,7 +86,7 @@ SCRIPT = textwrap.dedent(
     # applyInPandasWithState sessionizer (streaming module by value:
     # its fn closure references module-level _session_frame)
     import json as _json, os as _os, time as _time
-    from datafusion_functions_json_spark import streaming as js
+    from spark_pipeline_ops import streaming as js
     from pyspark.sql import types as T
     _sd = "sess_in"
     _os.makedirs(_sd, exist_ok=True)

@@ -533,7 +533,7 @@ class TestPlanQuality:
     parquet scan THROUGH our pandas UDFs."""
 
     def test_column_pruning_through_udf(self, spark, tmp_path):
-        from datafusion_functions_json_spark.plans import explain_str
+        from spark_pipeline_ops.plans import explain_str
 
         p = str(tmp_path / "wide.parquet")
         spark.createDataFrame(
@@ -544,7 +544,7 @@ class TestPlanQuality:
         assert "ReadSchema: struct<id:bigint,j:string>" in plan
 
     def test_predicate_pushdown_past_udf_projection(self, spark, tmp_path):
-        from datafusion_functions_json_spark.plans import has_pushed_filter
+        from spark_pipeline_ops.plans import has_pushed_filter
 
         p = str(tmp_path / "t2.parquet")
         spark.createDataFrame(

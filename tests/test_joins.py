@@ -10,7 +10,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from datafusion_functions_json_spark.operators import joins
+from spark_pipeline_ops.operators import joins
 
 
 def ts(s):
@@ -431,7 +431,7 @@ class TestBloomPrefilterJoin:
 
 class TestSkewReport:
     def test_counts_shares_and_skew(self, spark):
-        from datafusion_functions_json_spark.operators import stats
+        from spark_pipeline_ops.operators import stats
 
         rows = [("hot",)] * 80 + [("warm",)] * 15 + [("cold",)] * 5
         df = spark.createDataFrame(rows, "k string").repartition(4)
@@ -444,7 +444,7 @@ class TestSkewReport:
         assert top.skew_vs_uniform == 2.4
 
     def test_tie_break_is_deterministic(self, spark):
-        from datafusion_functions_json_spark.operators import stats
+        from spark_pipeline_ops.operators import stats
 
         df = spark.createDataFrame(
             [("b",), ("a",), ("c",), ("a",), ("b",), ("c",)], "k string"

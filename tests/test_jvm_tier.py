@@ -560,6 +560,8 @@ class TestNoPython:
         "json_from_scalar(ki)", "json_from_scalar(i / 7)",
         "json_from_scalar(cast(if(i % 2 = 0, 'NaN', '-Infinity') as float))",
         "json_from_scalar(i % 2 = 0)", "json_from_scalar(null)",
+        "json_from_scalar(cast(i as float))",
+        "named_struct('u', json_from_scalar(ki))",
         _sql_call("json_get_str", LONG_PATH),
         _sql_call("json_contains", LONG_PATH),
     ]
@@ -567,17 +569,17 @@ class TestNoPython:
     def _sql_rows(self, spark):
         q = spark.sql(f"SELECT i, {', '.join(self.SQL)} FROM no_python_edge")
         plan = q._jdf.queryExecution().executedPlan().toString()
-        return sorted(q.collect(), key=lambda r: r.i), plan
+        return sorted(q.collect(), key=lambda r: r.i), plan, q.columns
 
     def test_sql_names_match_the_python_tier(self, spark, tier, monkeypatch):
         docs = _edge_keys_view(spark, "no_python_edge")
         jsonf.register_all(spark)
-        got, plan = self._sql_rows(spark)
+        got, plan, got_columns = self._sql_rows(spark)
         assert "EvalPython" not in plan
         monkeypatch.setattr(jvm_tier, "load", lambda sc: None)
         try:
             jsonf.register_all(spark)
-            want, plan = self._sql_rows(spark)
+            want, plan, want_columns = self._sql_rows(spark)
             assert "ArrowEvalPython" in plan
         finally:
             monkeypatch.undo()
@@ -586,6 +588,9 @@ class TestNoPython:
                for g, w in zip(got, want) for k in range(len(self.SQL))
                if not _same(g[k + 1], w[k + 1])]
         assert not bad, f"{len(bad)} mismatches, first: {bad[:10]}"
+        # each call names its column after the call, nested calls and
+        # paths past ScalaUDF's arity included
+        assert got_columns == want_columns
         hits = [r[self.SQL.index("json_get_str(j, kc)") + 1] for r in got]
         assert sum(v is not None for v in hits) > 3  # hits, not all misses
 

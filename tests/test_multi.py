@@ -153,7 +153,7 @@ class TestMultiEquivalence:
         assert [tuple(r) for r in fused] == [tuple(r) for r in unfused]
 
     def test_single_arrow_eval(self, spark, python_tier):
-        from datafusion_functions_json_spark.plans import arrow_eval_count
+        from spark_pipeline_ops.plans import arrow_eval_count
 
         df = spark.createDataFrame([('{"a": 1, "b": "x"}',)], "j string")
         out = df.select(
@@ -165,7 +165,7 @@ class TestMultiEquivalence:
 
     def test_no_arrow_eval_on_jvm_exact_tier(self, spark):
         from datafusion_functions_json_spark.functions import jvm_tier
-        from datafusion_functions_json_spark.plans import arrow_eval_count
+        from spark_pipeline_ops.plans import arrow_eval_count
 
         if jvm_tier.load(spark.sparkContext) is None:
             pytest.skip("JVM exact tier unavailable")
@@ -320,7 +320,7 @@ class TestEvalPerDistinct:
         assert acc.value <= n_distinct + 1, acc.value
 
     def test_join_modes_and_validation(self, spark):
-        from datafusion_functions_json_spark.plans import explain_str
+        from spark_pipeline_ops.plans import explain_str
 
         df = self._df(spark)
         exprs = {"k": lambda c: jsonf.json_get_int(c, "k")}

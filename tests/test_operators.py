@@ -5,7 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from datafusion_functions_json_spark.operators import (
+from spark_pipeline_ops.operators import (
     dedup,
     graph,
     multimodal,
@@ -348,7 +348,7 @@ class TestDecontaminate:
         assert got == want
 
     def test_benchmark_side_is_broadcast(self, documents):
-        from datafusion_functions_json_spark.plans import explain_str
+        from spark_pipeline_ops.plans import explain_str
 
         bench = documents.filter(F.col("doc_id") % 20 == 0)
         plan = explain_str(
@@ -406,7 +406,7 @@ class TestExactDedup:
     def test_dup_groups_max_ids_single_exchange(self, spark):
         # the ranking window must REUSE the aggregation's key
         # partitioning — one shuffle total
-        from datafusion_functions_json_spark.plans import explain_str
+        from spark_pipeline_ops.plans import explain_str
 
         df = spark.createDataFrame(
             [(i, f"t{i % 3}") for i in range(30)], "doc_id long, text string"
@@ -1179,7 +1179,7 @@ class TestSimilarity:
         # reads LARGE (hof is never catastrophically wrong small, the
         # reverse is). Assert through the PHYSICAL plan: the vectorized
         # tier has an ArrowEvalPython node, the hof tier has none.
-        from datafusion_functions_json_spark.plans import arrow_eval_count
+        from spark_pipeline_ops.plans import arrow_eval_count
 
         q = [0.1] * 64
         # small plan-stat -> vectorized (one Arrow hop)
@@ -1254,7 +1254,7 @@ class TestSimilarity:
         assigned = similarity.centroid_assign(
             embeddings, "vec_id", "embedding", cent
         )
-        from datafusion_functions_json_spark.plans import explain_str
+        from spark_pipeline_ops.plans import explain_str
 
         # default (numpy) path: scan-shaped — one ArrowEvalPython, no join,
         # no exchange of the N-row side
@@ -1392,7 +1392,7 @@ class TestSimilarity:
         # per-row SQL cost is non-trivial (k>=2 and k*dim>=32) and the
         # pure-JVM sql formulation below that; both produce identical
         # assignments
-        from datafusion_functions_json_spark.plans import explain_str
+        from spark_pipeline_ops.plans import explain_str
 
         df = spark.createDataFrame(
             [(i, [float(i % 5), float(i % 3)]) for i in range(20)],
@@ -1555,7 +1555,7 @@ class TestNewOperatorPlans:
     must NOT shuffle doesn't, and scans stay pruned."""
 
     def test_chunk_documents_no_exchange(self, documents):
-        from datafusion_functions_json_spark.plans import explain_str
+        from spark_pipeline_ops.plans import explain_str
 
         plan = explain_str(
             text.chunk_documents(
@@ -1567,13 +1567,13 @@ class TestNewOperatorPlans:
         assert "title" not in plan.split("ReadSchema")[-1]
 
     def test_hash_split_no_exchange(self, documents):
-        from datafusion_functions_json_spark.plans import explain_str
+        from spark_pipeline_ops.plans import explain_str
 
         plan = explain_str(split.hash_split(documents, "doc_id"))
         assert "Exchange" not in plan
 
     def test_pack_batches_single_shuffle(self, spark):
-        from datafusion_functions_json_spark.plans import explain_str
+        from spark_pipeline_ops.plans import explain_str
 
         df = spark.createDataFrame([(i, 10) for i in range(50)], "id long, nt int")
         plan = explain_str(split.pack_batches(df, "id", "nt", budget=100, shards=4))
@@ -1582,7 +1582,7 @@ class TestNewOperatorPlans:
         assert "rangepartitioning" not in plan
 
     def test_tf_idf_two_aggregate_shuffles_only(self, documents):
-        from datafusion_functions_json_spark.plans import explain_str
+        from spark_pipeline_ops.plans import explain_str
 
         plan = explain_str(text.tf_idf(documents, "doc_id", "text"))
         # no ArrowEvalPython (pure Catalyst) and the 1-row corpus count
@@ -1609,7 +1609,7 @@ class TestRecall:
 
 class TestPipeline:
     def test_curate_end_to_end(self, spark, documents):
-        from datafusion_functions_json_spark.operators import pipeline
+        from spark_pipeline_ops.operators import pipeline
 
         kept = pipeline.curate(
             documents, min_tokens=5, quality_threshold=0.0, near_dedup=True
@@ -1624,7 +1624,7 @@ class TestPipeline:
         assert stats.n_out == len(rows) and 0 < stats.survival_rate <= 1
 
     def test_curate_balanced_caps_each_source(self, spark, documents):
-        from datafusion_functions_json_spark.operators import pipeline
+        from spark_pipeline_ops.operators import pipeline
 
         strict = pipeline.curate_strict(
             documents,
@@ -1662,7 +1662,7 @@ class TestPipeline:
                 assert min(kept_scores) >= max(dropped)
 
     def test_training_prep_end_to_end(self, spark, documents):
-        from datafusion_functions_json_spark.operators import pipeline
+        from spark_pipeline_ops.operators import pipeline
 
         prep = pipeline.training_prep(
             documents,
@@ -1691,7 +1691,7 @@ class TestPipeline:
     def test_identical_corpus_skew(self, spark):
         # degenerate skew: ALL documents identical -> one LSH mega-bucket;
         # must still complete and keep exactly one
-        from datafusion_functions_json_spark.operators import pipeline
+        from spark_pipeline_ops.operators import pipeline
 
         df = spark.createDataFrame(
             [(i, "the same exact document body with enough tokens to pass the gate") for i in range(200)],
@@ -1842,7 +1842,7 @@ class TestMultimodal:
 
 class TestCheckConstraints:
     def test_all_kinds_and_metrics(self, spark):
-        from datafusion_functions_json_spark.operators import validate
+        from spark_pipeline_ops.operators import validate
 
         rows = [
             (1, 10.0, "F", "1-URGENT"),
@@ -1882,7 +1882,7 @@ class TestCheckConstraints:
         # every check must fold into ONE aggregate over ONE scan — the
         # plan has exactly one pair of partial/final HashAggregate (plus
         # the Expand that countDistinct adds), never per-check subtrees
-        from datafusion_functions_json_spark.operators import validate
+        from spark_pipeline_ops.operators import validate
 
         df = spark.createDataFrame([(1, "a")], "id long, s string")
         out = validate.check_constraints(
@@ -1899,7 +1899,7 @@ class TestCheckConstraints:
         assert plan.count("Scan") <= 2
 
     def test_errors(self, spark):
-        from datafusion_functions_json_spark.operators import validate
+        from spark_pipeline_ops.operators import validate
 
         df = spark.createDataFrame([(1,)], "id long")
         import pytest as _pytest
@@ -2148,7 +2148,7 @@ class TestGramTiles:
 
     @staticmethod
     def _naive(V):
-        from datafusion_functions_json_spark.operators.similarity import (
+        from spark_pipeline_ops.operators.similarity import (
             _round6_half_up,
         )
 
@@ -2158,7 +2158,7 @@ class TestGramTiles:
 
     @staticmethod
     def _assemble(ids, V, fn, **kw):
-        from datafusion_functions_json_spark.operators.similarity import (
+        from spark_pipeline_ops.operators.similarity import (
             _gram_chunks,
             _gram_tiles,
         )
@@ -2192,7 +2192,7 @@ class TestGramTiles:
     def test_assembled_chunks_bit_equal_naive(self):
         # chunk interacting with the internal i-subtile every way:
         # smaller, equal, larger-non-multiple, and the degenerate 1
-        from datafusion_functions_json_spark.operators import similarity
+        from spark_pipeline_ops.operators import similarity
 
         rng = np.random.RandomState(23)
         base = rng.rand(41, 16)
@@ -2245,7 +2245,7 @@ class TestGramTilesThresh:
 
     @staticmethod
     def _thresh_pairs(ids, V, threshold, **kw):
-        from datafusion_functions_json_spark.operators.similarity import (
+        from spark_pipeline_ops.operators.similarity import (
             _gram_tiles_thresh,
         )
 
@@ -2418,7 +2418,7 @@ class TestHeavyHitters:
         return spark.createDataFrame(rows, "item string").repartition(8)
 
     def test_exact_topk_under_trimming(self, spark):
-        from datafusion_functions_json_spark.operators import sketch
+        from spark_pipeline_ops.operators import sketch
 
         df = self._skewed(spark)
         # capacity 30 < 40 distinct items forces real MG trimming, and
@@ -2430,7 +2430,7 @@ class TestHeavyHitters:
         ]
 
     def test_candidate_bound_and_lower_bounds(self, spark):
-        from datafusion_functions_json_spark.operators import sketch
+        from spark_pipeline_ops.operators import sketch
 
         df = self._skewed(spark)
         cand = sketch.misra_gries_candidates(df, "item", 10).toPandas()
@@ -2442,7 +2442,7 @@ class TestHeavyHitters:
             assert 0 < r.lb <= truth[r.item]
 
     def test_nulls_ignored_and_ties_deterministic(self, spark):
-        from datafusion_functions_json_spark.operators import sketch
+        from spark_pipeline_ops.operators import sketch
 
         df = spark.createDataFrame(
             [("a",), ("a",), ("b",), ("b",), ("c",), (None,)], "item string"
@@ -2451,7 +2451,7 @@ class TestHeavyHitters:
         assert [(r.item, r.cnt) for r in got] == [("a", 2), ("b", 2)]
 
     def test_errors(self, spark):
-        from datafusion_functions_json_spark.operators import sketch
+        from spark_pipeline_ops.operators import sketch
 
         df = spark.createDataFrame([("a",)], "item string")
         with pytest.raises(ValueError):
@@ -2653,7 +2653,7 @@ class TestImageDhash:
         return rows
 
     def test_dhash_known_patterns(self, spark):
-        from datafusion_functions_json_spark.operators.multimodal import (
+        from spark_pipeline_ops.operators.multimodal import (
             _dhash_from_pixels,
         )
         import numpy as np
@@ -2694,7 +2694,7 @@ class TestImageDhash:
         # dHash, so a JPEG re-encode of an image perceptually matches
         # its lossless encoding (dHash's whole selling point)
         import numpy as np
-        from datafusion_functions_json_spark.operators._codecs import (
+        from spark_pipeline_ops.operators._codecs import (
             encode_jpeg,
         )
 
@@ -2716,7 +2716,7 @@ class TestImageDhash:
 
     def test_hamming_blocked_join(self, spark):
         import numpy as np
-        from datafusion_functions_json_spark.operators.multimodal import (
+        from spark_pipeline_ops.operators.multimodal import (
             _dhash_from_pixels,
         )
 
@@ -2963,7 +2963,7 @@ class TestRoundSixEdges:
     called on empty filters and tiny corpora; none of these may throw."""
 
     def test_heavy_hitters_empty(self, spark):
-        from datafusion_functions_json_spark.operators import sketch
+        from spark_pipeline_ops.operators import sketch
 
         df = spark.createDataFrame([], "item string")
         assert sketch.heavy_hitters(df, "item", 3).count() == 0
@@ -3110,7 +3110,7 @@ class TestCurateStrict:
     )
 
     def _base(self, spark):
-        from datafusion_functions_json_spark.operators import pipeline
+        from spark_pipeline_ops.operators import pipeline
 
         rows = [
             (1, self.EN),
@@ -3215,7 +3215,7 @@ class TestHeavyHittersDifferential:
         import random
         from collections import Counter
 
-        from datafusion_functions_json_spark.operators import sketch
+        from spark_pipeline_ops.operators import sketch
 
         rng = random.Random(11)
         for trial in range(3):
@@ -3280,7 +3280,7 @@ class TestRoundSixPlans:
     or an unbounded nested loop."""
 
     def test_quality_gates_no_exchange_no_python(self, documents):
-        from datafusion_functions_json_spark.plans import explain_str
+        from spark_pipeline_ops.plans import explain_str
 
         df = documents.select(
             text.gopher_quality_flags("text").alias("g"),
@@ -3295,7 +3295,7 @@ class TestRoundSixPlans:
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
     def test_blocklist_no_nested_loop(self, spark, documents):
-        from datafusion_functions_json_spark.plans import explain_str
+        from spark_pipeline_ops.plans import explain_str
 
         bl = spark.createDataFrame([("x.org",)], "domain string")
         plan = explain_str(
@@ -3305,7 +3305,7 @@ class TestRoundSixPlans:
         assert "BroadcastNestedLoopJoin" not in plan
 
     def test_semantic_dedup_pairs_keyed_not_bnlj(self, embeddings):
-        from datafusion_functions_json_spark.plans import explain_str
+        from spark_pipeline_ops.plans import explain_str
 
         plan = explain_str(
             similarity.semantic_dedup(
@@ -3330,8 +3330,8 @@ class TestRoundSixPlans:
         assert _re.search(r"hashpartitioning\(cluster", plan), plan
 
     def test_heavy_hitters_partial_topk_and_broadcast(self, spark):
-        from datafusion_functions_json_spark.operators import sketch
-        from datafusion_functions_json_spark.plans import explain_str
+        from spark_pipeline_ops.operators import sketch
+        from spark_pipeline_ops.plans import explain_str
 
         df = spark.createDataFrame([("a",)] * 5, "item string")
         plan = explain_str(sketch.heavy_hitters(df, "item", 2, capacity=4))
@@ -3340,7 +3340,7 @@ class TestRoundSixPlans:
         assert "CartesianProduct" not in plan
 
     def test_curriculum_no_single_partition_sort(self, spark):
-        from datafusion_functions_json_spark.plans import explain_str
+        from spark_pipeline_ops.plans import explain_str
 
         df = spark.createDataFrame([(i, 0.5) for i in range(10)], "id long, s double")
         plan = explain_str(split.curriculum_rank(df, "id", "s", n_buckets=4))
@@ -3372,7 +3372,7 @@ class TestSentences:
 
 class TestCurateStrictMetrics:
     def test_stage_counts_ride_one_action(self, spark):
-        from datafusion_functions_json_spark.operators import metrics, pipeline
+        from spark_pipeline_ops.operators import metrics, pipeline
 
         rows = [
             (1, "The quick brown fox jumps over the lazy dog to be of use "
@@ -3535,7 +3535,7 @@ class TestReviewFindingsRound7b:
             "noise fragment with no terminal punctuation at all here"
         )
         df = spark.createDataFrame([(1, good)], "doc_id long, text string")
-        from datafusion_functions_json_spark.operators import pipeline
+        from spark_pipeline_ops.operators import pipeline
 
         out = pipeline.curate_strict(
             df, min_tokens=5,
@@ -3572,7 +3572,7 @@ class TestReviewFindingsRound7b:
         assert ranks[1] > ranks[4]  # 1 has in-links, 4 has none
 
     def test_salted_join_column_order_matches_plain(self, spark):
-        from datafusion_functions_json_spark.operators import joins
+        from spark_pipeline_ops.operators import joins
 
         left = spark.createDataFrame([(10, 1)], "lid long, k long")
         right = spark.createDataFrame([(1, "x")], "k long, v string")
@@ -3581,7 +3581,7 @@ class TestReviewFindingsRound7b:
         assert salted.columns == plain.columns  # key hoisted first
 
     def test_range_join_rejects_nonpositive_bucket(self, spark):
-        from datafusion_functions_json_spark.operators import joins
+        from spark_pipeline_ops.operators import joins
 
         pts = spark.createDataFrame([(1, 5.0)], "id long, ts double")
         iv = spark.createDataFrame([(1, 0.0, 10.0)], "iid long, s double, e double")
@@ -3593,7 +3593,7 @@ class TestReviewFindingsRound7b:
             split.hash_split(documents, "doc_id", {"train": 1.5, "val": -0.5})
 
     def test_pack_batches_positions_share_assignment(self, spark, documents):
-        from datafusion_functions_json_spark.operators import text as t
+        from spark_pipeline_ops.operators import text as t
 
         base = documents.select(
             "doc_id", t.token_count("text").alias("nt")
@@ -3605,7 +3605,7 @@ class TestReviewFindingsRound7b:
         assert bb == pp  # one shared prefix-sum core
 
     def test_curation_stats_single_job(self, spark, documents):
-        from datafusion_functions_json_spark.operators import pipeline
+        from spark_pipeline_ops.operators import pipeline
 
         kept = documents.filter(F.col("doc_id") % 2 == 0)
         row = pipeline.curation_stats(documents, kept).collect()[0]
@@ -3616,7 +3616,7 @@ class TestReviewFindingsRound7b:
     def test_curation_stats_empty_input(self, spark, documents):
         # F.sum over zero rows is NULL — an empty docs frame must
         # still produce a (0, 0, 0.0) row, not a TypeError
-        from datafusion_functions_json_spark.operators import pipeline
+        from spark_pipeline_ops.operators import pipeline
 
         empty = documents.filter(F.lit(False))
         row = pipeline.curation_stats(empty, empty).collect()[0]

@@ -23,8 +23,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from datafusion_functions_json_spark import oracle_twin as tw
-from datafusion_functions_json_spark.operators import dedup
+from spark_pipeline_ops import oracle_twin as tw
+from spark_pipeline_ops.operators import dedup
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TESTS", "/root/testdata/sf0.001")
 
@@ -128,7 +128,7 @@ class TestXXH64VsSpark:
             "nb sp stays", "tab\tand\nnewline\rcr \x0b \x0c end",
         ]
         df = spark.createDataFrame([(v,) for v in vals], "s string")
-        from datafusion_functions_json_spark.operators.text import tokens
+        from spark_pipeline_ops.operators.text import tokens
 
         got = {r.s: r.t for r in df.select("s", tokens("s").alias("t")).collect()}
         for v in vals:

@@ -16,6 +16,7 @@ tomllib = pytest.importorskip("tomllib")
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "datafusion_functions_json_spark"
+OPS = "spark_pipeline_ops"
 
 
 def _pyproject():
@@ -41,15 +42,20 @@ def test_every_package_dir_has_init_and_is_discoverable():
     # setuptools packages.find walks dirs with __init__.py; a data dir
     # or a missing __init__ drops a subpackage from the wheel silently
     found = []
-    for root, dirs, files in os.walk(os.path.join(REPO, PKG)):
-        dirs[:] = [d for d in dirs if d != "__pycache__"]
-        rel = os.path.relpath(root, REPO)
-        assert "__init__.py" in files, f"{rel} would be dropped from the wheel"
-        found.append(rel.replace(os.sep, "."))
+    for pkg in (PKG, OPS):
+        for root, dirs, files in os.walk(os.path.join(REPO, pkg)):
+            dirs[:] = [d for d in dirs if d != "__pycache__"]
+            rel = os.path.relpath(root, REPO)
+            assert "__init__.py" in files, f"{rel} would be dropped from the wheel"
+            found.append(rel.replace(os.sep, "."))
     # the subpackages the docs promise
-    for sub in (PKG, f"{PKG}.operators", f"{PKG}.functions",
-                f"{PKG}.sources", f"{PKG}.streaming", f"{PKG}.plans"):
+    for sub in (PKG, f"{PKG}.functions", f"{PKG}.sources", OPS,
+                f"{OPS}.operators", f"{OPS}.streaming", f"{OPS}.plans"):
         assert sub in found, sub
+    # and pyproject ships both packages
+    include = _pyproject()["tool"]["setuptools"]["packages"]["find"]["include"]
+    for pkg in (PKG, OPS):
+        assert pkg in include and f"{pkg}.*" in include, pkg
 
 
 def test_setup_py_is_a_metadata_free_shim():
@@ -82,3 +88,35 @@ def test_package_imports_without_repo_root_side_effects():
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "clean" in out.stdout
+
+
+def test_json_package_stands_alone(tmp_path):
+    # the JSON engine never imports the pipeline operators: importing it
+    # loads no spark_pipeline_ops module, the operator suite is not one
+    # of its subpackages, and it registers only its own modules for
+    # by-value pickling
+    import subprocess
+    import sys
+
+    code = (
+        "import sys, importlib.util; sys.path.insert(0, %r); "
+        "import datafusion_functions_json_spark; "
+        "from pyspark import cloudpickle; "
+        "ops = [m for m in sys.modules if m.split('.')[0] == %r]; "
+        "assert not ops, ops; "
+        "gone = [s for s in ('operators', 'streaming', 'oracle_twin', 'plans') "
+        "if importlib.util.find_spec('datafusion_functions_json_spark.' + s)]; "
+        "assert not gone, gone; "
+        "reg = sorted(cloudpickle.list_registry_pickle_by_value()); "
+        "assert reg == sorted('datafusion_functions_json_spark.functions.' + m "
+        "for m in ('core', 'kernels', 'udfs', 'multi')), reg; "
+        "print('alone')" % (REPO, OPS)
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        cwd=str(tmp_path),
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "alone" in out.stdout

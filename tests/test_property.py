@@ -431,7 +431,7 @@ def test_pretoken_pattern_portable(txt):
 
     import duckdb
 
-    from datafusion_functions_json_spark.operators.text import (
+    from spark_pipeline_ops.operators.text import (
         BPE_PRETOKEN_PATTERN,
     )
 
@@ -465,7 +465,7 @@ def test_normalize_text_portable(txt):
     """normalize_text's fold→lower→punct→ws chain must produce identical
     strings under DuckDB's translate/lower/regexp_replace — the oracle
     twin's exact recipe."""
-    from datafusion_functions_json_spark.operators.text import (
+    from spark_pipeline_ops.operators.text import (
         ACCENT_FOLD_DST,
         ACCENT_FOLD_SRC,
     )

@@ -10,7 +10,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from datafusion_functions_json_spark.operators import joins, rank, text
+from spark_pipeline_ops.operators import joins, rank, text
 
 
 class TestTopKPerGroup:
@@ -162,7 +162,7 @@ class TestRangeJoinTimestampTypes:
 
 class TestZorder:
     def test_key_interleaves_bits(self, spark):
-        from datafusion_functions_json_spark.operators import layout
+        from spark_pipeline_ops.operators import layout
 
         df = spark.createDataFrame([(1, 0), (0, 1), (3, 3)], "x long, y long")
         got = [
@@ -177,7 +177,7 @@ class TestZorder:
     def test_sql_twin_matches(self, spark):
         import duckdb
 
-        from datafusion_functions_json_spark.operators import layout
+        from spark_pipeline_ops.operators import layout
 
         rows = [(a, b) for a in range(8) for b in range(8)]
         df = spark.createDataFrame(rows, "x long, y long")
@@ -200,14 +200,14 @@ class TestZorder:
         assert s == d
 
     def test_mask_wraps_out_of_range(self, spark):
-        from datafusion_functions_json_spark.operators import layout
+        from spark_pipeline_ops.operators import layout
 
         df = spark.createDataFrame([(5 + 16,)], "x long")
         got = df.select(layout.zorder_key(["x"], bits=4).alias("z")).collect()
         assert got[0].z == 5
 
     def test_cluster_sorts_within_range_partitions(self, spark):
-        from datafusion_functions_json_spark.operators import layout
+        from spark_pipeline_ops.operators import layout
 
         rows = [(i % 7, (i * 3) % 11) for i in range(200)]
         df = spark.createDataFrame(rows, "x long, y long")
@@ -227,7 +227,7 @@ class TestZorder:
             assert hi1 <= lo2
 
     def test_bad_args(self, spark):
-        from datafusion_functions_json_spark.operators import layout
+        from spark_pipeline_ops.operators import layout
 
         with pytest.raises(ValueError):
             layout.zorder_key([], bits=4)
@@ -328,7 +328,7 @@ class TestBM25:
 
 class TestIncrementalMinhash:
     def test_new_batch_matches_index(self, spark):
-        from datafusion_functions_json_spark.operators import dedup
+        from spark_pipeline_ops.operators import dedup
 
         corpus = [
             (1, "the quick brown fox jumps over the lazy dog again and again"),
@@ -357,7 +357,7 @@ class TestIncrementalMinhash:
             assert 0.5 <= r.jaccard <= 1.0
 
     def test_identical_ids_not_self_matched(self, spark):
-        from datafusion_functions_json_spark.operators import dedup
+        from spark_pipeline_ops.operators import dedup
 
         df = spark.createDataFrame(
             [(1, "same text body for the self match exclusion test case here")],
@@ -370,7 +370,7 @@ class TestIncrementalMinhash:
         assert pairs == []
 
     def test_indivisible_bands_raise(self, spark):
-        from datafusion_functions_json_spark.operators import dedup
+        from spark_pipeline_ops.operators import dedup
 
         df = spark.createDataFrame([(1, "some text")], "id long, t string")
         with pytest.raises(ValueError, match="multiple of"):
@@ -382,7 +382,7 @@ class TestIncrementalMinhash:
             )
 
     def test_incompatible_index_family_raises(self, spark):
-        from datafusion_functions_json_spark.operators import dedup
+        from spark_pipeline_ops.operators import dedup
 
         df = spark.createDataFrame([(1, "some text body here")], "id long, t string")
         idx = dedup.minhash_index(df, "id", "t", num_perm=32, seed=7, mode="word", n=2)
@@ -396,7 +396,7 @@ class TestIncrementalMinhash:
             )
 
     def test_index_metadata_survives_parquet(self, spark, tmp_path):
-        from datafusion_functions_json_spark.operators import dedup
+        from spark_pipeline_ops.operators import dedup
 
         df = spark.createDataFrame(
             [(1, "text that round trips through parquet for the metadata check")],
@@ -423,7 +423,7 @@ class TestGroupedPercentiles:
     def test_exact_matches_duckdb_quantile_cont(self, spark):
         import duckdb
 
-        from datafusion_functions_json_spark.operators import stats
+        from spark_pipeline_ops.operators import stats
 
         rows = [("a", float(i)) for i in range(101)] + [
             ("b", float(i * i)) for i in range(50)
@@ -448,7 +448,7 @@ class TestGroupedPercentiles:
         assert got == want
 
     def test_approx_within_rank_error(self, spark):
-        from datafusion_functions_json_spark.operators import stats
+        from spark_pipeline_ops.operators import stats
 
         rows = [("a", float(i)) for i in range(10000)]
         df = spark.createDataFrame(rows, "g string, v double")
@@ -462,7 +462,7 @@ class TestGroupedPercentiles:
 
 class TestZorderRoundtrip:
     def test_deinterleave_recovers_inputs(self, spark):
-        from datafusion_functions_json_spark.operators import layout
+        from spark_pipeline_ops.operators import layout
 
         rows = [(a * 37 % 256, a * 91 % 256) for a in range(300)]
         df = spark.createDataFrame(rows, "x long, y long")
@@ -482,7 +482,7 @@ class TestCohortRetention:
     def test_hand_built_cohorts(self, spark):
         import datetime as dtm
 
-        from datafusion_functions_json_spark.operators import stats
+        from spark_pipeline_ops.operators import stats
 
         d0 = dtm.datetime(2024, 1, 1)
         day = dtm.timedelta(days=1)
@@ -530,7 +530,7 @@ class TestPageRank:
         return r
 
     def test_matches_python_reference(self, spark):
-        from datafusion_functions_json_spark.operators import graph
+        from spark_pipeline_ops.operators import graph
 
         edges = [(1, 2), (2, 3), (3, 1), (4, 3), (2, 1)]
         df = spark.createDataFrame(edges, "src long, dst long")
@@ -545,7 +545,7 @@ class TestPageRank:
         assert sum(got.values()) == pytest.approx(1.0, abs=1e-4)
 
     def test_hub_outranks_leaf(self, spark):
-        from datafusion_functions_json_spark.operators import graph
+        from spark_pipeline_ops.operators import graph
 
         # star pointing at node 0
         edges = [(i, 0) for i in range(1, 8)] + [(0, 1)]
@@ -554,7 +554,7 @@ class TestPageRank:
         assert got[0] == max(got.values())
 
     def test_empty_graph(self, spark):
-        from datafusion_functions_json_spark.operators import graph
+        from spark_pipeline_ops.operators import graph
 
         df = spark.createDataFrame([], "src long, dst long")
         assert graph.pagerank(df, iters=2).collect() == []
@@ -562,7 +562,7 @@ class TestPageRank:
 
 class TestWeightedSample:
     def test_deterministic_and_weight_biased(self, spark):
-        from datafusion_functions_json_spark.operators import split as sp
+        from spark_pipeline_ops.operators import split as sp
 
         # 200 rows; ids 0..99 weight 1, ids 100..199 weight 20
         rows = [(i, 1.0 if i < 100 else 20.0) for i in range(200)]
@@ -577,7 +577,7 @@ class TestWeightedSample:
     def test_matches_duckdb_selection(self, spark):
         import duckdb
 
-        from datafusion_functions_json_spark.operators import split as sp
+        from spark_pipeline_ops.operators import split as sp
 
         rows = [(i, float(1 + i % 7)) for i in range(300)]
         df = spark.createDataFrame(rows, "id long, w double")
@@ -602,7 +602,7 @@ class TestWeightedSample:
         # selection (the A-ES key shifts by -ln(c) uniformly). The old
         # pow-based key collapsed to 1.0 for w >~ 1e11, silently
         # degrading to id-order selection.
-        from datafusion_functions_json_spark.operators import split as sp
+        from spark_pipeline_ops.operators import split as sp
 
         rows = [(i, float(1 + i % 7)) for i in range(300)]
         small = spark.createDataFrame(rows, "id long, w double")
@@ -619,7 +619,7 @@ class TestWeightedSample:
         assert got_big != sorted(range(25))  # not id-order degradation
 
     def test_zero_and_null_weights_excluded(self, spark):
-        from datafusion_functions_json_spark.operators import split as sp
+        from spark_pipeline_ops.operators import split as sp
 
         df = spark.createDataFrame(
             [(1, 0.0), (2, None), (3, 5.0)], "id long, w double"
@@ -628,7 +628,7 @@ class TestWeightedSample:
         assert got == [3]
 
     def test_bad_k(self, spark):
-        from datafusion_functions_json_spark.operators import split as sp
+        from spark_pipeline_ops.operators import split as sp
 
         df = spark.createDataFrame([(1, 1.0)], "id long, w double")
         with pytest.raises(ValueError):
@@ -637,7 +637,7 @@ class TestWeightedSample:
 
 class TestKnnGraph:
     def test_neighbors_stay_in_cluster(self, spark):
-        from datafusion_functions_json_spark.operators import similarity
+        from spark_pipeline_ops.operators import similarity
 
         # two tight clusters in 8-dim space
         import random
@@ -660,7 +660,7 @@ class TestKnnGraph:
             assert r.cosine > 0.9
 
     def test_k_bound_and_determinism(self, spark):
-        from datafusion_functions_json_spark.operators import similarity
+        from spark_pipeline_ops.operators import similarity
 
         rows = [(i, [float(i % 3 == j) for j in range(3)]) for i in range(12)]
         df = spark.createDataFrame(rows, "id long, v array<double>")
@@ -674,7 +674,7 @@ class TestKnnGraph:
         assert all(n <= 2 for n in per_id.values())
 
     def test_bad_args(self, spark):
-        from datafusion_functions_json_spark.operators import similarity
+        from spark_pipeline_ops.operators import similarity
 
         df = spark.createDataFrame([(1, [1.0])], "id long, v array<double>")
         import pytest as _pt
@@ -692,7 +692,7 @@ class TestKnnGraph:
         # 6-decimal rounding
         import random
 
-        from datafusion_functions_json_spark.operators import similarity
+        from spark_pipeline_ops.operators import similarity
         from pyspark.sql import functions as F
 
         rnd = random.Random(23)
@@ -739,7 +739,7 @@ class TestKnnGraph:
         cos = similarity.dot(F.col("va"), F.col("vb")) / (
             similarity.l2_norm(F.col("va")) * similarity.l2_norm(F.col("vb"))
         )
-        from datafusion_functions_json_spark.operators.rank import (
+        from spark_pipeline_ops.operators.rank import (
             top_k_per_group,
         )
 
@@ -766,7 +766,7 @@ class TestKnnGraph:
         # review-found hole: the per-bucket cut must keep k DISTINCT
         # neighbor ids — a duplicated id consuming two rows of a
         # single-table bucket must not evict the true 2nd neighbor
-        from datafusion_functions_json_spark.operators import similarity
+        from spark_pipeline_ops.operators import similarity
 
         # near-parallel vectors: one random hyperplane almost surely
         # gives every row the same sign, i.e. ONE bucket (deterministic
@@ -813,7 +813,7 @@ class TestKnnGraph:
         # pairs, so value or pair-identity divergence cannot hide
         import random
 
-        from datafusion_functions_json_spark.operators import similarity
+        from spark_pipeline_ops.operators import similarity
         from pyspark.sql import functions as F
 
         rnd = random.Random(31)
@@ -1078,7 +1078,7 @@ class TestWeightedSampleHugeWeightsDifferential:
     def test_matches_duckdb_at_1e12(self, spark):
         import duckdb
 
-        from datafusion_functions_json_spark.operators import split as sp
+        from spark_pipeline_ops.operators import split as sp
 
         rows = [(i, float(1 + i % 7) * 1e12) for i in range(300)]
         df = spark.createDataFrame(rows, "id long, w double")

@@ -19,7 +19,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from datafusion_functions_json_spark.operators import similarity
+from spark_pipeline_ops.operators import similarity
 
 
 def _rand_rows(n, dim, seed=7, near_dup_every=10):

@@ -43,7 +43,7 @@ class TestSinks:
         back = spark.read.parquet(out)
         assert back.count() == 1000
         # partition pruning works on the written layout
-        from datafusion_functions_json_spark.plans import explain_str
+        from spark_pipeline_ops.plans import explain_str
 
         plan = explain_str(back.filter(F.col("event_type") == "click"))
         assert "PartitionFilters" in plan
@@ -60,7 +60,7 @@ class TestSinks:
         write_bucketed(ev, "ev_bucketed", bucket_by=["user_id"], num_buckets=4)
         t = spark.table("ev_bucketed")
         agg = t.groupBy("user_id").agg(F.count("*").alias("n"))
-        from datafusion_functions_json_spark.plans import explain_str
+        from spark_pipeline_ops.plans import explain_str
 
         # aggregation on the bucket key needs NO exchange
         assert "Exchange" not in explain_str(agg)
@@ -71,7 +71,7 @@ class TestSinks:
         # join key with the same bucket count → co-located join, no
         # Exchange on either side (the shuffle was paid once at write
         # time and amortizes over every subsequent join)
-        from datafusion_functions_json_spark.plans import explain_str
+        from spark_pipeline_ops.plans import explain_str
 
         cust = load_table(spark, SF_DIR, "customer").select("c_custkey", "c_name")
         orders = load_table(spark, SF_DIR, "orders").select(
@@ -169,7 +169,7 @@ class TestTrainingShards:
     def test_shard_layout_and_in_file_order(self, spark, tmp_path):
         from pyspark.sql import functions as F
 
-        from datafusion_functions_json_spark.operators import split as sp
+        from spark_pipeline_ops.operators import split as sp
         from datafusion_functions_json_spark.sources import (
             write_training_shards,
         )
@@ -317,7 +317,7 @@ class TestReviewFindingsRound7c:
         assert len(bad) == 1 and "broken" in bad[0]._corrupt_record
 
     def test_zorder_accepts_bare_string(self, spark):
-        from datafusion_functions_json_spark.operators import layout
+        from spark_pipeline_ops.operators import layout
         from pyspark.sql import functions as F
 
         df = spark.createDataFrame([(5,), (1,)], "price long")
@@ -326,7 +326,7 @@ class TestReviewFindingsRound7c:
         assert "price" in layout.zorder_key_sql("price", bits=8)
 
     def test_stage_metrics_no_deadlock_and_empty_zero(self, spark):
-        from datafusion_functions_json_spark.operators import metrics
+        from spark_pipeline_ops.operators import metrics
         from pyspark.sql import functions as F
 
         st = metrics.StageMetrics()

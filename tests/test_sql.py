@@ -198,8 +198,8 @@ class TestRegisterPipeline:
     def test_equivalent_to_column_api(self, spark):
         from pyspark.sql import functions as F
 
-        from datafusion_functions_json_spark.operators import text
-        from datafusion_functions_json_spark.register import register_pipeline
+        from spark_pipeline_ops.operators import text
+        from spark_pipeline_ops.register import register_pipeline
         from datafusion_functions_json_spark.sources import load_table
 
         register_pipeline(spark)
@@ -224,7 +224,7 @@ class TestRegisterPipeline:
         assert a == b
 
     def test_inlined_no_python(self, spark):
-        from datafusion_functions_json_spark.register import register_pipeline
+        from spark_pipeline_ops.register import register_pipeline
 
         register_pipeline(spark)
         df = spark.sql(
@@ -235,8 +235,8 @@ class TestRegisterPipeline:
         assert df.collect()[0].l == "en"
 
     def test_canonical_url_sql_matches_column_api(self, spark):
-        from datafusion_functions_json_spark.operators import text
-        from datafusion_functions_json_spark.register import register_pipeline
+        from spark_pipeline_ops.operators import text
+        from spark_pipeline_ops.register import register_pipeline
 
         register_pipeline(spark)
         urls = [

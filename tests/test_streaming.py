@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datafusion_functions_json_spark import streaming as js
+from spark_pipeline_ops import streaming as js
 
 
 @pytest.fixture()
@@ -80,7 +80,7 @@ class TestStreaming:
         }
 
     def test_sessionize_batch_single_exchange(self, spark):
-        from datafusion_functions_json_spark.plans import explain_str
+        from spark_pipeline_ops.plans import explain_str
 
         df = spark.createDataFrame([("a", 0)], "user string, sec long").select(
             "user", F.col("sec").cast("timestamp").alias("ts")
@@ -299,7 +299,7 @@ class TestStreamingCuration:
         unbounded stream."""
         import json as _json
 
-        from datafusion_functions_json_spark.operators import text as t_ops
+        from spark_pipeline_ops.operators import text as t_ops
 
         rows = [
             {"ts": "2024-01-01T00:00:01", "payload": _json.dumps(
@@ -408,7 +408,7 @@ class TestCurateStream:
 
 class TestContaminationAlerts:
     def test_stream_static_minhash_alerts(self, spark, tmp_path):
-        from datafusion_functions_json_spark.operators import dedup
+        from spark_pipeline_ops.operators import dedup
 
         bench_rows = [
             (100, "the secret benchmark question about gravity waves today"),
@@ -454,7 +454,7 @@ class TestContaminationAlerts:
         assert all(r.jaccard >= 0.6 for r in got)
 
     def test_family_mismatch_raises(self, spark, tmp_path):
-        from datafusion_functions_json_spark.operators import dedup
+        from spark_pipeline_ops.operators import dedup
 
         bench = spark.createDataFrame(
             [(1, "abc def ghi")], "doc_id bigint, text string"
@@ -525,7 +525,7 @@ class TestDecontaminateStream:
     def test_batch_equivalence_with_decontaminate_filter(self, spark):
         # the same plan runs on batch frames; its keep-set must match
         # the batch operator's anti-join keep-set on identical inputs
-        from datafusion_functions_json_spark.operators import text as optext
+        from spark_pipeline_ops.operators import text as optext
 
         docs = spark.createDataFrame(
             [
@@ -701,7 +701,7 @@ class TestUpsertSink:
         assert len(vs) <= 2 and os.path.exists(os.path.join(tgt, "_LATEST"))
 
     def test_cdc_mode_compacts_log(self, spark, tmp_path):
-        from datafusion_functions_json_spark.operators import cdc
+        from spark_pipeline_ops.operators import cdc
 
         src = tmp_path / "cdc_in"
         src.mkdir()
@@ -1590,7 +1590,7 @@ class TestStatelessOpsOnStreams:
         # the split/mixture primitives are pure projections, so the SAME
         # code paths run unchanged on a streaming frame — the claim the
         # operator docstrings make, pinned here end-to-end
-        from datafusion_functions_json_spark.operators import split
+        from spark_pipeline_ops.operators import split
 
         src = tmp_path / "sp_in"
         src.mkdir()
@@ -1765,7 +1765,7 @@ class TestDriftMonitorSink:
     def test_metrics_row_per_batch_matches_batch_drift(
         self, spark, tmp_path
     ):
-        from datafusion_functions_json_spark.operators import stats
+        from spark_pipeline_ops.operators import stats
 
         src = tmp_path / "dm_in"
         src.mkdir()
