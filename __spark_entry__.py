@@ -2733,7 +2733,7 @@ def _q_cohort_retention(spark, sf_dir):
 
 # -- twin-oracled LSH tier (round 11): the xxhash64-keyed pipelines have
 # no DuckDB-computable oracle, so the EXPECTED pair sets are computed
-# driver-side by datafusion_functions_json_spark/oracle_twin.py — an
+# outside Spark by spark_pipeline_ops/oracle_twin.py — an
 # independent pure-Python re-implementation of the whole pipeline (XXH64
 # from the public spec through banding and verification) — and inlined
 # into the oracle SQL as literal VALUES rows. The driver then hash-checks
@@ -2852,8 +2852,8 @@ def _q_minhash_candidates(spark, sf_dir):
     # round-17 (VERDICT r16 #2): the pre-verification join volume of
     # minhash banding — the quantity that blows up when banding
     # parameters are too loose for the corpus's near-dup density
-    # (measured linear in planted density at the registry config;
-    # BASELINE.md round-17 planted-density section). Value-checked
+    # (measured linear in planted density at the registry config).
+    # Value-checked
     # against the pure-Python oracle_twin bucket reduction.
     _TWIN_RUN_SF["minhash_candidates"] = sf_dir
     fam = {k: _MINHASH_CFG[k] for k in ("num_perm", "seed", "n")}
@@ -2869,8 +2869,7 @@ def _q_minhash_candidates(spark, sf_dir):
 def _q_simhash_candidates(spark, sf_dir):
     # round-17: simhash block-join volume under the registry config —
     # the background (birthday + block-skew) term that dominates at
-    # corpus scale (grows ~ n^2 / 2^block_bits per block; BASELINE.md
-    # round-17 guidance).
+    # corpus scale (grows ~ n^2 / 2^block_bits per block).
     _TWIN_RUN_SF["simhash_candidates"] = sf_dir
     s = dedup.simhash_candidate_stats(
         _docs(spark, sf_dir),

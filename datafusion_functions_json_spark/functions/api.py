@@ -95,13 +95,14 @@ def _validate_path(fn_name: str, path: tuple):
 
 
 def _coerce_json_arg(json, literal: bool):
-    """Resolve the JSON argument to (text_column, provenance).
+    """Resolve the JSON argument to ``(document, provenance, is_union)``.
 
     provenance is ``(root_col, literal_path)`` when the input is a
     JsonColumn produced by json_get over an all-literal path and the
     outer path is ``literal`` too — the precondition for call un-nesting
-    (reference: src/rewrite.rs:74-83) — else None. The text column is
-    None when un-nesting makes it unnecessary.
+    (reference: src/rewrite.rs:74-83) — else None. The document is None
+    when un-nesting makes it unnecessary; ``is_union`` marks a union
+    struct, which the lookup reads through its container text.
     """
     from ..column import JsonColumn  # local import to avoid a cycle
     from ..column import Column as ClassicColumn
@@ -109,53 +110,45 @@ def _coerce_json_arg(json, literal: bool):
     if isinstance(json, JsonColumn):
         prov = json._flatten_provenance() if literal else None
         if prov is not None:
-            return None, prov
-        plain = ClassicColumn(json._jc)  # strip the JsonColumn __getitem__
-        if json._is_text:
-            return plain, None
-        return union_mod.union_container_text(plain), None
+            return None, prov, False
+        # strip the JsonColumn __getitem__
+        return ClassicColumn(json._jc), None, not json._is_text
     if isinstance(json, str):
-        return F.col(json), None
+        return F.col(json), None, False
     if _is_column(json):
-        return json, None
+        return json, None, False
     raise ValueError(
         f"Unexpected argument type at position 1, expected a string "
         f"column of JSON, got {type(json).__name__}."
     )
 
 
-def _literal_call(fn_key: str, text_col, lit_path: tuple) -> Column:
-    """``fn_key(text_col, *lit_path)`` on the JVM exact tier
-    (:mod:`.jvm_tier`) when it is loaded, else as an Arrow UDF over the
-    Python kernels."""
-    jvm = jvm_tier.column(fn_key, text_col, lit_path)
+def _call(fn_key: str, doc, path=(), key_col=None, union=False) -> Column:
+    """``fn_key(doc, *path)``, or ``fn_key(doc, key_col)`` with a column
+    of keys (reference: src/common.rs:106-127): on the JVM exact tier
+    (:mod:`.jvm_tier`) when it is loaded, built by the function's SQL
+    builder, else as an Arrow UDF over the Python kernels. A ``union``
+    document is read through its container text."""
+    jvm = jvm_tier.call(fn_key, doc, path, key_col)
     if jvm is not None:
         return jvm
-    return udfs.literal_path_udf(fn_key, lit_path)(text_col)
-
-
-def _column_call(fn_key: str, text_col, key_col) -> Column:
-    """``fn_key(text_col, key_col)`` with a column of keys, on the JVM
-    exact tier when it is loaded, else as an Arrow UDF over the Python
-    kernels (reference: src/common.rs:106-127)."""
-    jvm = jvm_tier.column_path(fn_key, text_col, key_col)
-    if jvm is not None:
-        return jvm
-    return udfs.path_udf(fn_key)(text_col, key_col)
+    if union:
+        doc = union_mod.union_container_text(doc)
+    if key_col is not None:
+        return udfs.path_udf(fn_key)(doc, key_col)
+    return udfs.literal_path_udf(fn_key, path)(doc)
 
 
 def _invoke(fn_key: str, json, path: tuple) -> Column:
     """Shared entry: validate, apply un-nesting, build the call."""
     lit_path, key_col = _validate_path(fn_key, path)
-    text_col, prov = _coerce_json_arg(json, key_col is None)
-    if key_col is not None:
-        return _column_call(fn_key, text_col, key_col)
+    doc, prov, union = _coerce_json_arg(json, key_col is None)
     if prov is not None:
         # Call un-nesting: f(json_get(j, 'a'), 'b') => f(j, 'a', 'b').
         # Fires only when the inner call is json_get (type-preserving) and
         # every path element is literal (reference: src/rewrite.rs:74-83).
-        text_col, lit_path = prov[0], prov[1] + lit_path
-    return _literal_call(fn_key, text_col, lit_path)
+        doc, lit_path = prov[0], prov[1] + lit_path
+    return _call(fn_key, doc, lit_path, key_col, union)
 
 
 def json_get(json, *path):
@@ -167,30 +160,19 @@ def json_get(json, *path):
     from ..column import JsonColumn
 
     lit_path, key_col = _validate_path("json_get", path)
-    text_col, prov = _coerce_json_arg(json, key_col is None)
+    doc, prov, union = _coerce_json_arg(json, key_col is None)
     if prov is not None:
-        root, inner_path = prov
-        full = inner_path + lit_path
-        return JsonColumn(
-            _literal_call("json_get", root, full), root=root, path=full
-        )
+        root, full = prov[0], prov[1] + lit_path
+        return JsonColumn(_call("json_get", root, full), root=root, path=full)
+    out = _call("json_get", doc, lit_path, key_col, union)
     if key_col is not None:
         # no LITERAL provenance (un-nesting requires literal paths) but
         # cast elision has no such guard — keep enough to rewrite
-        # .cast('bigint') into json_get_int(text, key_col)
-        return JsonColumn(
-            _column_call("json_get", text_col, key_col),
-            root=None,
-            path=None,
-            cast_root=text_col,
-            cast_path=tuple(path),
-        )
-    root = text_col if not isinstance(json, JsonColumn) else None
-    return JsonColumn(
-        _literal_call("json_get", text_col, lit_path),
-        root=root,
-        path=lit_path if root is not None else None,
-    )
+        # .cast('bigint') into json_get_int(json, key_col)
+        return JsonColumn(out, root=None, path=None, cast_root=json,
+                          cast_path=tuple(path))
+    root = None if union else doc
+    return JsonColumn(out, root=root, path=None if union else lit_path)
 
 
 def json_get_str(json, *path) -> Column:
@@ -379,11 +361,9 @@ def json_union_to_text(u) -> Column:
             )
         prov = u._flatten_provenance()
         if prov is not None:
-            return _literal_call("json_to_text_fused", *prov)
-    jvm = jvm_tier.union_to_text(u)
-    if jvm is not None:
-        return jvm
-    return udfs.union_to_text_udf()(u)
+            return _call("json_to_text_fused", *prov)
+    jvm = jvm_tier.call("json_union_to_text", u)
+    return udfs.union_to_text_udf()(u) if jvm is None else jvm
 
 
 def json_is_null(u) -> Column:
@@ -404,6 +384,6 @@ def json_is_null(u) -> Column:
             )
         prov = u._flatten_provenance()
         if prov is not None:
-            return _literal_call("json_is_null_fused", *prov)
+            return _call("json_is_null_fused", *prov)
         u = ClassicColumn(u._jc)
     return union_mod.json_is_null(u)

@@ -1,16 +1,23 @@
 """The JVM exact tier: the JSON functions inside Spark's executor.
 
-Every call shape of the functions of :data:`TIER_FNS` — the scalar
-getters, ``json_get`` (the union struct), ``json_get_array``,
-``json_object_keys`` and the fused ``json_union_to_text``/``json_is_null``
-over ``json_get``, at a literal path or at a one-element path column,
-over a JSON string or a union-struct document — plus both union
-consumers over any union struct and ``json_from_scalar`` run as Catalyst
-expressions over ``jsonsparkext.JsonFinder``, the Java port of
-:mod:`.core`'s streaming finder (``jvm_extension/src/jsonsparkext/``). No
-document crosses the JVM→Python Arrow hop, which costs more than the JSON
-work itself. The Python kernels are the specification; the port is pinned
-to them by tests/test_jvm_tier.py.
+Every call shape of every function — the scalar getters, ``json_get``
+(the union struct), ``json_get_array`` and ``json_object_keys`` over a
+JSON string or a union-struct document, at a literal path or at a
+one-element path column; ``json_union_to_text`` and ``json_is_null`` over
+any union struct; ``json_from_scalar`` — runs as Catalyst expressions over
+``jsonsparkext.JsonFinder``, the Java port of :mod:`.core`'s streaming
+finder (``jvm_extension/src/jsonsparkext/``). No document crosses the
+JVM→Python Arrow hop, which costs more than the JSON work itself. The
+Python kernels are the specification; the port is pinned to them by
+tests/test_jvm_tier.py.
+
+Each function has one builder on the JVM, ``JsonExactTier.SqlBuilder``:
+it reads the argument types when the query is analyzed, raises the
+reference's argument errors there and builds the call. Both surfaces go
+through it. :func:`register_all` installs the builders under the SQL
+names, and :func:`call` builds the Python API's calls as calls of the
+same builders (one py4j call each), so the two spellings of a call get the
+same plan, column name and errors.
 
 The tier is on exactly when its jar loads into the running SparkContext.
 The jar is compiled from the repository's Java sources on first use, with
@@ -36,19 +43,7 @@ import threading
 import weakref
 from pathlib import Path
 
-from .core import INT64_MAX, INT64_MIN
-
-__all__ = [
-    "TIER_FNS", "MULTI_KIND_FNS", "load", "column", "column_path",
-    "union_to_text", "multi", "register_all",
-]
-
-TIER_FNS = frozenset({
-    "json_get", "json_get_str", "json_get_int", "json_get_float",
-    "json_get_bool", "json_get_json", "json_get_array", "json_as_text",
-    "json_contains", "json_length", "json_object_keys",
-    "json_to_text_fused", "json_is_null_fused",
-})
+__all__ = ["MULTI_KIND_FNS", "load", "call", "multi", "register_all"]
 
 # json_extract_multi field kinds the tier serves, as the function each
 # kind reads (multi.py pins every kind to its single-field kernel)
@@ -164,47 +159,26 @@ def _active_tier():
     return None if sc is None else load(sc)
 
 
-def _path_json(path) -> str:
-    # ints beyond i64 never match; -1 keeps them missing in Java's long
-    return json.dumps([
-        p if isinstance(p, str) or INT64_MIN <= p <= INT64_MAX else -1
-        for p in path
-    ])
+def call(fn_key: str, doc, path=(), key=None):
+    """``fn_key(doc, *path)``, or ``fn_key(doc, key)`` with ``key`` a
+    column of keys, on the tier; None when the tier is unavailable.
 
-
-def _wrap(jcol):
+    One py4j call, with the literal path as JSON text, builds a call of
+    the tier's internal function ``fn_key``; the function's SQL builder
+    resolves it when the query is analyzed, as it resolves the SQL name.
+    """
     from ..column import Column
 
-    return Column(jcol)
-
-
-def column(fn_key: str, json_col, path: tuple):
-    """``fn_key(json_col, *path)`` on the tier, or None when the tier is
-    unavailable or does not serve ``fn_key``."""
-    jc = getattr(json_col, "_jc", None)
-    if fn_key not in TIER_FNS or jc is None:
+    jc = getattr(doc, "_jc", None)
+    kc = None if key is None else getattr(key, "_jc", None)
+    if jc is None or (key is not None and kc is None):
         return None
     tier = _active_tier()
     if tier is None:
         return None
-    return _wrap(tier.column(fn_key, jc, _path_json(path)))
-
-
-def column_path(fn_key: str, json_col, key_col):
-    """``fn_key(json_col, key_col)`` with ``key_col`` a column of keys on
-    the tier, its type checked when the query is analyzed; None when the
-    tier is unavailable."""
-    jc, kc = getattr(json_col, "_jc", None), getattr(key_col, "_jc", None)
-    tier = None if jc is None or kc is None else _active_tier()
-    return None if tier is None else _wrap(tier.columnPath(fn_key, jc, kc))
-
-
-def union_to_text(u):
-    """``json_union_to_text(u)`` over the union-struct column ``u`` on the
-    tier, or None when the tier is unavailable."""
-    jc = getattr(u, "_jc", None)
-    tier = None if jc is None else _active_tier()
-    return None if tier is None else _wrap(tier.unionToText(jc))
+    # an int outside i64 never matches: the tier reads it as index -1
+    path_json = None if key is not None else json.dumps(list(path))
+    return Column(tier.call(fn_key, jc, path_json, kc))
 
 
 def multi(json_col, specs):
@@ -213,7 +187,7 @@ def multi(json_col, specs):
     kind is not one it serves."""
     if any(k not in MULTI_KIND_FNS for _, k, _ in specs):
         return None
-    fields = [column(MULTI_KIND_FNS[k], json_col, p) for _, k, p in specs]
+    fields = [call(MULTI_KIND_FNS[k], json_col, p) for _, k, p in specs]
     if not fields or fields[0] is None:
         return None
     from pyspark.sql import functions as F

@@ -202,11 +202,12 @@ def _check_path_args(fn_key: str, key_cols) -> tuple | None:
       a nullable column — passes, and null values yield null rows, exactly
       like the reference's ``ScalarValue::Utf8(None) => JsonPath::None``.
     * With more than one path element, any argument that is demonstrably a
-      per-row column (≥2 distinct values, or any null, in the batch —
-      a literal is always constant and non-null) raises the reference's
+      per-row column (≥2 distinct values, or a null beside a value, in the
+      batch — a literal is the same in every row) raises the reference's
       execution error (reference: src/common.rs:129-133,
-      tests/main.rs:1095-1103). A column that is constant within every
-      batch is indistinguishable from a literal here and passes.
+      tests/main.rs:1095-1103). A column that is constant, or NULL
+      throughout, within every batch is indistinguishable from a literal
+      here and passes; a NULL element makes the row NULL.
     * ``json_contains`` without a path raises the reference's message
       (reference: src/json_contains.rs:43-49).
     """
@@ -235,7 +236,8 @@ def _check_path_args(fn_key: str, key_cols) -> tuple | None:
     if all(constant):
         return tuple(k[0].as_py() for k in key_cols)
     if len(key_cols) > 1 and any(
-        len(k) > 1 and not c for k, c in zip(key_cols, constant)
+        len(k) > 1 and not c and k.null_count < len(k)
+        for k, c in zip(key_cols, constant)
     ):
         raise ValueError(
             "More than 1 path element is not supported when "

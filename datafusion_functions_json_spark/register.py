@@ -23,10 +23,11 @@ the Arrow UDF :mod:`.functions.udfs` builds for the function — the body
 the Python API runs too. Those UDFs check their arguments by the same
 rules per Arrow batch (``udfs._check_path_args``) and raise them as
 PythonException at execution, with one delta inherent to a per-batch
-check (documented, SURVEY.md §7.4): a path *column* that is constant and
-non-null within every Arrow batch is indistinguishable from a literal,
-so the >1-path-element error can miss it (a varying or nullable column
-is always caught).
+check (documented, SURVEY.md §7.4): a path *column* that is constant, or
+NULL throughout, within every Arrow batch is indistinguishable from a
+literal, so the >1-path-element error can miss it (a column that varies
+within a batch is always caught); a NULL element gives NULL, as a typed
+NULL literal does.
 """
 
 from __future__ import annotations

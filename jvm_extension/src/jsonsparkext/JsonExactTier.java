@@ -19,6 +19,7 @@ import org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry;
 import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction;
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder;
 import org.apache.spark.sql.catalyst.expressions.Cast;
+import org.apache.spark.sql.catalyst.expressions.Coalesce;
 import org.apache.spark.sql.catalyst.expressions.CreateNamedStruct;
 import org.apache.spark.sql.catalyst.expressions.EqualTo;
 import org.apache.spark.sql.catalyst.expressions.Expression;
@@ -55,26 +56,6 @@ import org.apache.spark.sql.types.StructType;
 import scala.Enumeration;
 import scala.Function1;
 import scala.Function2;
-import scala.Function3;
-import scala.Function4;
-import scala.Function5;
-import scala.Function6;
-import scala.Function7;
-import scala.Function8;
-import scala.Function9;
-import scala.Function10;
-import scala.Function11;
-import scala.Function12;
-import scala.Function13;
-import scala.Function14;
-import scala.Function15;
-import scala.Function16;
-import scala.Function17;
-import scala.Function18;
-import scala.Function19;
-import scala.Function20;
-import scala.Function21;
-import scala.Function22;
 import scala.Option;
 import scala.collection.immutable.IndexedSeq;
 import scala.collection.immutable.Seq;
@@ -86,26 +67,23 @@ import scala.runtime.AbstractFunction1;
  * inside Spark's executor, as Catalyst expressions, instead of across the
  * Python worker hop.
  *
- * <p>Serves every call shape of {@code json_get} (the union struct),
- * {@code json_get_str/int/float/bool}, {@code json_get_json},
- * {@code json_get_array}, {@code json_as_text}, {@code json_contains},
- * {@code json_length} and {@code json_object_keys}: a JSON string or a
- * union-struct document (read through its {@code array} and
- * {@code object} members, reference src/common_union.rs:49-57), at a
- * literal path of any length or at a one-element per-row path column
- * (reference src/common.rs:106-127). It also serves the fused
- * {@code json_union_to_text} and {@code json_is_null} over
- * {@code json_get}, both union consumers over any union struct, and
- * {@code json_from_scalar}. The Python package loads this class at run
- * time (datafusion_functions_json_spark/functions/jvm_tier.py):
+ * <p>Every call is built in one place, the function's {@link SqlBuilder},
+ * like the reference's one singleton UDF per function
+ * (src/common_macros.rs:17-49). The builder reads the argument types when
+ * the query is analyzed, raises the reference's argument errors there
+ * (src/common.rs:106-141), and returns a {@link NamedCall} that prints as
+ * the call and runs as one ScalaUDF over the document, plus the key when
+ * the path is a per-row column (src/common.rs:106-127). A union-struct
+ * document is read through its {@code array} and {@code object} text
+ * (src/common_union.rs:49-57). The Python package
+ * (datafusion_functions_json_spark/functions/jvm_tier.py) reaches the
+ * builders two ways:
  * <ul>
- * <li>{@link #column} and {@link #unionToText(Column)} build the Python
- *     API's literal-path and union columns, and {@link #columnPath} its
- *     column-path calls;</li>
- * <li>{@link #registerAll} installs the SQL names, one
- *     {@link SqlBuilder} each, which reads the argument types when the
- *     query is analyzed and raises the reference's argument errors
- *     there.</li>
+ * <li>{@link #registerAll} installs them under the SQL names;</li>
+ * <li>{@link #call} builds the Python API's calls, as calls of the
+ *     internal functions {@code jsonsparkext.<fn>} that this class's
+ *     constructor registers. So the API and SQL spellings of a call
+ *     resolve to the same plan, column name and errors.</li>
  * </ul>
  */
 public final class JsonExactTier {
@@ -126,7 +104,7 @@ public final class JsonExactTier {
     private static final DataType STRINGS =
         DataTypes.createArrayType(DataTypes.StringType, true);
 
-    /** The result type per function, as udfs.RETURN_TYPES declares it. */
+    /** The result type per getter, as udfs.RETURN_TYPES declares it. */
     private static final Map<String, DataType> RESULT_TYPES = Map.ofEntries(
         Map.entry("json_get", UNION),
         Map.entry("json_get_str", DataTypes.StringType),
@@ -138,85 +116,68 @@ public final class JsonExactTier {
         Map.entry("json_as_text", DataTypes.StringType),
         Map.entry("json_contains", DataTypes.BooleanType),
         Map.entry("json_length", DataTypes.LongType),
-        Map.entry("json_object_keys", STRINGS),
-        Map.entry("json_to_text_fused", DataTypes.StringType),
-        Map.entry("json_is_null_fused", DataTypes.BooleanType));
-
-    /** Largest argument count a ScalaUDF takes. */
-    private static final int MAX_ARITY = 22;
+        Map.entry("json_object_keys", STRINGS));
 
     /**
-     * The prefix of the internal function names {@link #columnPath} calls;
+     * The Python API's fused union consumers over {@code json_get}
+     * (udfs.RETURN_TYPES), each the consumer it composes with
+     * {@code json_get}.
+     */
+    private static final Map<String, String> FUSED = Map.of(
+        "json_to_text_fused", "json_union_to_text",
+        "json_is_null_fused", "json_is_null");
+
+    /**
+     * The prefix of the internal function names {@link #call} calls;
      * internal names are reachable from the Column API only, never from
      * SQL text.
      */
     private static final String INTERNAL = "jsonsparkext.";
 
     /**
-     * One function object per (name, function, path, document members,
-     * arity), so repeated call sites build equal expressions that Catalyst
-     * can share.
+     * One function object per (function, path), so repeated call sites
+     * build equal expressions that Catalyst can share.
      */
     private static final Map<List<Object>, Object> FUNCTIONS =
         new ConcurrentHashMap<>();
 
     /**
-     * Registers the builders {@link #columnPath} calls, in the JVM-wide
-     * registry of internal functions; the package makes one instance per
-     * JVM.
+     * Registers the builders {@link #call} calls, in the JVM-wide registry
+     * of internal functions; the package makes one instance per JVM.
      */
     public JsonExactTier() {
         SimpleFunctionRegistry internal = FunctionRegistry$.MODULE$.internal();
-        for (String fn : RESULT_TYPES.keySet()) {
-            if (!fn.endsWith("_fused")) {
-                internal.createOrReplaceTempFunction(
-                    INTERNAL + fn, new SqlBuilder(fn, fn), "scala_udf");
-            }
+        List<String> fns = new ArrayList<>(RESULT_TYPES.keySet());
+        fns.addAll(FUSED.keySet());
+        fns.add("json_union_to_text");
+        for (String fn : fns) {
+            internal.createOrReplaceTempFunction(
+                INTERNAL + fn, new SqlBuilder(fn, fn, false), "scala_udf");
         }
     }
 
     /**
-     * One function at one path, applied to a document per row. The path
-     * is the literal {@code path}, or the second argument's key per row
-     * when {@code path} is null. A union-struct document is read through
-     * its container members at {@code arrayOrdinal} and
-     * {@code objectOrdinal}.
+     * One getter at one path, applied to a JSON text per row. The path is
+     * the literal {@code path}, or the second argument's key per row when
+     * {@code path} is null.
      */
     static final class Getter implements Serializable {
         private static final long serialVersionUID = 1L;
 
         private final String fn;
         private final JsonFinder.Path path;
-        private final int arrayOrdinal;
-        private final int objectOrdinal;
 
-        Getter(String fn, JsonFinder.Path path, List<Integer> members) {
+        Getter(String fn, JsonFinder.Path path) {
             this.fn = fn;
             this.path = path;
-            this.arrayOrdinal = members == null ? -1 : members.get(0);
-            this.objectOrdinal = members == null ? -1 : members.get(1);
         }
 
         Object eval(Object doc) {
-            return at(text(doc), path);
+            return at((String) doc, path);
         }
 
         Object eval(Object doc, Object key) {
-            return at(text(doc), path != null ? path : JsonFinder.Path.ofKey(key));
-        }
-
-        /**
-         * The JSON text to read: the document, or a union struct's array or
-         * object member (udfs._doc_text); scalar members miss. A non-string
-         * document misses, like core.find_scalar.
-         */
-        private String text(Object doc) {
-            if (doc instanceof Row) {
-                Row u = (Row) doc;
-                doc = u.isNullAt(arrayOrdinal) ? u.get(objectOrdinal)
-                                               : u.get(arrayOrdinal);
-            }
-            return doc instanceof String ? (String) doc : null;
+            return at((String) doc, JsonFinder.Path.ofKey(key));
         }
 
         private Object at(String s, JsonFinder.Path p) {
@@ -243,10 +204,6 @@ public final class JsonExactTier {
                     return JsonFinder.getArray(s, p);
                 case "json_object_keys":
                     return JsonFinder.objectKeys(s, p);
-                case "json_to_text_fused":
-                    return JsonFinder.toTextFused(s, p);
-                case "json_is_null_fused":
-                    return JsonFinder.isNullFused(s, p);
                 default:
                     throw new IllegalArgumentException(fn);
             }
@@ -274,10 +231,6 @@ public final class JsonExactTier {
         if (u == null) {
             return null;
         }
-        if (!(u instanceof Row)) {
-            throw new IllegalArgumentException(
-                "json_union_to_text expects a union struct (a json_get result)");
-        }
         Row r = (Row) u;
         Object tid = r.get(r.fieldIndex("type_id"));
         int kind = tid == null ? 0 : ((Number) tid).intValue();
@@ -286,18 +239,6 @@ public final class JsonExactTier {
         }
         Object v = r.get(r.fieldIndex(UNION.fields()[kind].name()));
         return v == null ? null : JsonFinder.unionText(kind, v);
-    }
-
-    /** {@code json_union_to_text(u)} for the Python API, as a Column. */
-    public Column unionToText(Column u) {
-        return ExpressionUtils.column(unionToTextUdf(
-            seq(List.of(ExpressionUtils.expression(u)))));
-    }
-
-    private static Expression unionToTextUdf(Seq<Expression> children) {
-        return new ScalaUDF(UNION_TO_TEXT, DataTypes.StringType, children,
-            seq(List.<Option<ExpressionEncoder<?>>>of()), Option.empty(),
-            Option.apply("json_union_to_text"), true, true);
     }
 
     private static final Object UNION_TO_TEXT =
@@ -317,25 +258,40 @@ public final class JsonExactTier {
         return b.toString();
     }
 
-    /** {@code fn(doc, *path)} for the Python API, as a Column. */
-    public Column column(String fn, Column doc, String pathJson) {
-        JsonFinder.Path path = new JsonFinder.Path(JsonFinder.parseElements(pathJson));
-        return ExpressionUtils.column(udf(fn, fn, path, null,
-            seq(List.of(ExpressionUtils.expression(doc)))));
+    /**
+     * {@code fn(doc, *path)} for the Python API, with the literal path as
+     * a JSON array ({@code ["a", 0]}); or {@code fn(doc, key)} when
+     * {@code key} is a column of keys ({@code pathJson} is then null). The
+     * call is one of the internal function {@code fn}, which its
+     * {@link SqlBuilder} builds once the argument types are known, as it
+     * builds the SQL name's call.
+     */
+    public Column call(String fn, Column doc, String pathJson, Column key) {
+        List<Expression> args = new ArrayList<>();
+        args.add(ExpressionUtils.expression(doc));
+        if (key != null) {
+            args.add(ExpressionUtils.expression(key));
+        } else {
+            for (Object e : JsonFinder.parseElements(pathJson)) {
+                args.add(literal(e));
+            }
+        }
+        return ExpressionUtils.column(new UnresolvedFunction(
+            seq(List.of(INTERNAL + fn)), seq(args), false, Option.empty(), false,
+            seq(List.<SortOrder>of()), true));
     }
 
     /**
-     * {@code fn(doc, key)} for the Python API, with {@code key} a column:
-     * a call of the internal function that {@link SqlBuilder} builds once
-     * the argument types are known, so the key's type is checked when the
-     * query is analyzed, as in SQL.
+     * A path element as SQL types its literal: a string, or an integer as
+     * INT, BIGINT past the int range.
      */
-    public Column columnPath(String fn, Column doc, Column key) {
-        return ExpressionUtils.column(new UnresolvedFunction(
-            seq(List.of(INTERNAL + fn)),
-            seq(List.of(ExpressionUtils.expression(doc),
-                        ExpressionUtils.expression(key))),
-            false, Option.empty(), false, seq(List.<SortOrder>of()), true));
+    private static Literal literal(Object e) {
+        if (e instanceof String) {
+            return Literal.create(e, DataTypes.StringType);
+        }
+        long v = (Long) e;
+        return v == (int) v ? Literal.create((int) v, DataTypes.IntegerType)
+                            : Literal.create(v, DataTypes.LongType);
     }
 
     /**
@@ -347,23 +303,31 @@ public final class JsonExactTier {
         for (String binding : bindings.split(",")) {
             String[] nameFn = binding.split("=");
             registry.createOrReplaceTempFunction(
-                nameFn[0], new SqlBuilder(nameFn[0], nameFn[1]), "scala_udf");
+                nameFn[0], new SqlBuilder(nameFn[0], nameFn[1], true), "scala_udf");
         }
     }
 
     /**
-     * The function builder of one SQL name: the expression for the
-     * argument types the analyzer resolved, or the reference's error for
-     * arguments it rejects (reference src/common.rs:106-141).
+     * The function builder of one function, under its SQL name or its
+     * internal name: the expression for the argument types the analyzer
+     * resolved, or the reference's error for arguments it rejects
+     * (reference src/common.rs:106-141).
      */
     private static final class SqlBuilder
             extends AbstractFunction1<Seq<Expression>, Expression> {
         private final String name;
         private final String fn;
+        /**
+         * Whether this is a SQL name's builder: SQL {@code json_contains}
+         * requires a path, while the Python API checks its own calls and
+         * json_extract_multi's {@code exists} field may read the root.
+         */
+        private final boolean sql;
 
-        SqlBuilder(String name, String fn) {
+        SqlBuilder(String name, String fn, boolean sql) {
             this.name = name;
             this.fn = fn;
+            this.sql = sql;
         }
 
         @Override
@@ -372,16 +336,26 @@ public final class JsonExactTier {
                 case "json_union_to_text":
                 case "json_is_null": {
                     Expression u = single(args);
-                    int typeId = typeIdOrdinal(u.dataType());
-                    if (typeId < 0) {
+                    if (typeIdOrdinal(u.dataType()) < 0) {
                         throw argumentError(1, "a JSON union", u.dataType());
                     }
-                    return fn.equals("json_is_null") ? namedCall(args)
-                                                     : unionToTextUdf(args);
+                    if (fn.equals("json_is_null")) {
+                        return namedCall(args);
+                    }
+                    return new ScalaUDF(UNION_TO_TEXT, DataTypes.StringType, args,
+                        seq(List.<Option<ExpressionEncoder<?>>>of()), Option.empty(),
+                        Option.apply(name), true, true);
                 }
                 case "json_from_scalar":
                     single(args);
                     return namedCall(args);
+                case "json_to_text_fused":
+                case "json_is_null_fused": {
+                    // the consumer over json_get, as SQL spells the composition
+                    String outer = FUSED.get(fn);
+                    Expression u = new SqlBuilder("json_get", "json_get", sql).apply(args);
+                    return new SqlBuilder(outer, outer, sql).apply(seq(List.of(u)));
+                }
                 default:
                     return getter(args);
             }
@@ -401,8 +375,8 @@ public final class JsonExactTier {
         /**
          * The Catalyst tree a {@link NamedCall} of this function runs as,
          * for arguments {@link #apply} checked: {@code json_is_null(u)},
-         * {@code json_from_scalar(v)}, or a getter at a literal path too
-         * long to keep the path in the ScalaUDF's children.
+         * {@code json_from_scalar(v)}, or a getter's ScalaUDF over the
+         * document text, plus the key when the path is a column.
          */
         Expression replacement(Seq<Expression> args) {
             Expression v = args.apply(0);
@@ -412,8 +386,14 @@ public final class JsonExactTier {
                 case "json_from_scalar":
                     return fromScalar(v);
                 default:
-                    return udf(name, fn, literalPath(args), members(v.dataType()),
-                        seq(List.of(v)));
+                    boolean keyColumn = args.size() == 2 && !args.apply(1).foldable();
+                    List<Expression> children = new ArrayList<>();
+                    children.add(v.dataType() instanceof StructType
+                        ? containerText(v, (StructType) v.dataType()) : v);
+                    if (keyColumn) {
+                        children.add(args.apply(1));
+                    }
+                    return udf(fn, keyColumn ? null : literalPath(args), seq(children));
             }
         }
 
@@ -430,7 +410,7 @@ public final class JsonExactTier {
          */
         private Expression getter(Seq<Expression> args) {
             int n = args.size();
-            if (fn.equals("json_contains") && n < 2) {
+            if (sql && fn.equals("json_contains") && n < 2) {
                 // reference src/json_contains.rs:43-49
                 throw error("The 'json_contains' function requires 2 or more arguments.");
             }
@@ -438,9 +418,8 @@ public final class JsonExactTier {
                 throw error("The '" + fn + "' function requires one or more arguments.");
             }
             DataType docType = args.apply(0).dataType();
-            List<Integer> members = members(docType);
-            if (members == null && !(docType instanceof StringType)
-                    && !(docType instanceof NullType)) {
+            if (!(docType instanceof StringType || docType instanceof NullType
+                    || docType instanceof StructType && hasContainers((StructType) docType))) {
                 throw argumentError(1, "a string", docType);
             }
             boolean literal = true;
@@ -451,19 +430,11 @@ public final class JsonExactTier {
                 }
                 literal &= args.apply(k).foldable();
             }
-            if (!literal) {
-                if (n > 2) {
-                    // reference src/common.rs:129-133
-                    throw error("More than 1 path element is not supported when "
-                        + "querying JSON using an array.");
-                }
-                return udf(name, fn, null, members, args);
+            if (!literal && n > 2) {
+                // reference src/common.rs:129-133
+                throw error("More than 1 path element is not supported when "
+                    + "querying JSON using an array.");
             }
-            if (n <= MAX_ARITY) {
-                return udf(name, fn, literalPath(args), members, args);
-            }
-            // past ScalaUDF's arity the path literals are left out of the
-            // udf's children; the call around it prints the whole path
             return namedCall(args);
         }
 
@@ -689,26 +660,31 @@ public final class JsonExactTier {
     }
 
     /**
-     * The container members a document of type {@code t} is read
-     * through: a union struct's, or null for any other type.
+     * Whether {@code t} has the string members {@code array} and
+     * {@code object} that a union-struct document is read through.
      */
-    private static List<Integer> members(DataType t) {
-        return t instanceof StructType ? containerOrdinals((StructType) t) : null;
+    private static boolean hasContainers(StructType t) {
+        for (String m : List.of("array", "object")) {
+            Option<Object> k = t.getFieldIndex(m);
+            if (k.isEmpty()
+                    || !(t.fields()[(Integer) k.get()].dataType() instanceof StringType)) {
+                return false;
+            }
+        }
+        return true;
     }
 
     /**
-     * The ordinals of a union struct's string members {@code array} and
-     * {@code object}, or null when {@code t} has no such members.
+     * {@code coalesce(u.array, u.object)}: the JSON text a lookup reads in
+     * the union-struct document {@code u} (udfs._doc_text); a scalar
+     * member misses.
      */
-    private static List<Integer> containerOrdinals(StructType t) {
-        Option<Object> a = t.getFieldIndex("array");
-        Option<Object> o = t.getFieldIndex("object");
-        if (a.isEmpty() || o.isEmpty()
-                || !(t.fields()[(Integer) a.get()].dataType() instanceof StringType)
-                || !(t.fields()[(Integer) o.get()].dataType() instanceof StringType)) {
-            return null;
+    private static Expression containerText(Expression u, StructType t) {
+        List<Expression> members = new ArrayList<>();
+        for (String m : List.of("array", "object")) {
+            members.add(new GetStructField(u, t.fieldIndex(m), Option.apply(m)));
         }
-        return List.of((Integer) a.get(), (Integer) o.get());
+        return new Coalesce(seq(members));
     }
 
     /**
@@ -757,82 +733,23 @@ public final class JsonExactTier {
     }
 
     /**
-     * {@code name(children)} computing {@code fn} from the first child at
-     * {@code path}, or at the second child's key per row when {@code path}
-     * is null; literal path elements stay children so the expression
-     * prints like the call it is.
+     * {@code fn} over the JSON text in {@code children}'s first at
+     * {@code path}, or at the second's key per row when {@code path} is
+     * null.
      */
-    private static Expression udf(String name, String fn, JsonFinder.Path path,
-                                  List<Integer> members, Seq<Expression> children) {
-        int arity = children.size();
-        Object function = FUNCTIONS.computeIfAbsent(
-            Arrays.asList(name, fn, path, members, arity),
-            key -> function(new Getter(fn, path, members), arity));
+    private static Expression udf(String fn, JsonFinder.Path path,
+                                  Seq<Expression> children) {
+        Object function = FUNCTIONS.computeIfAbsent(Arrays.asList(fn, path), key -> {
+            Getter g = new Getter(fn, path);
+            return path != null ? (Function1<Object, Object> & Serializable) g::eval
+                : (Function2<Object, Object, Object> & Serializable) g::eval;
+        });
         return new ScalaUDF(function, RESULT_TYPES.get(fn), children,
             seq(List.<Option<ExpressionEncoder<?>>>of()), Option.empty(),
-            Option.apply(name), true, true);
+            Option.apply(fn), true, true);
     }
 
     private static <T> Seq<T> seq(List<T> items) {
         return CollectionConverters.asScala(items).toSeq();
-    }
-
-    /**
-     * A Scala function of {@code arity} arguments reading the first, and
-     * the second too when there are two (a per-row key).
-     */
-    @SuppressWarnings("rawtypes")
-    private static Object function(Getter g, int arity) {
-        switch (arity) {
-            case 1: return (Function1 & Serializable) (d) -> g.eval(d);
-            case 2: return (Function2 & Serializable) (d, a1) -> g.eval(d, a1);
-            case 3: return (Function3 & Serializable) (d, a1, a2) -> g.eval(d);
-            case 4: return (Function4 & Serializable) (d, a1, a2, a3) -> g.eval(d);
-            case 5: return (Function5 & Serializable) (d, a1, a2, a3, a4) -> g.eval(d);
-            case 6: return (Function6 & Serializable) (
-                d, a1, a2, a3, a4, a5) -> g.eval(d);
-            case 7: return (Function7 & Serializable) (
-                d, a1, a2, a3, a4, a5, a6) -> g.eval(d);
-            case 8: return (Function8 & Serializable) (
-                d, a1, a2, a3, a4, a5, a6, a7) -> g.eval(d);
-            case 9: return (Function9 & Serializable) (
-                d, a1, a2, a3, a4, a5, a6, a7, a8) -> g.eval(d);
-            case 10: return (Function10 & Serializable) (
-                d, a1, a2, a3, a4, a5, a6, a7, a8, a9) -> g.eval(d);
-            case 11: return (Function11 & Serializable) (
-                d, a1, a2, a3, a4, a5, a6, a7, a8, a9, a10) -> g.eval(d);
-            case 12: return (Function12 & Serializable) (
-                d, a1, a2, a3, a4, a5, a6, a7, a8, a9, a10, a11) -> g.eval(d);
-            case 13: return (Function13 & Serializable) (
-                d, a1, a2, a3, a4, a5, a6, a7, a8, a9, a10, a11, a12) -> g.eval(d);
-            case 14: return (Function14 & Serializable) (
-                d, a1, a2, a3, a4, a5, a6, a7, a8, a9, a10, a11, a12, a13) ->
-                g.eval(d);
-            case 15: return (Function15 & Serializable) (
-                d, a1, a2, a3, a4, a5, a6, a7, a8, a9, a10, a11, a12, a13, a14) ->
-                g.eval(d);
-            case 16: return (Function16 & Serializable) (
-                d, a1, a2, a3, a4, a5, a6, a7, a8, a9, a10, a11, a12, a13, a14, a15)
-                -> g.eval(d);
-            case 17: return (Function17 & Serializable) (
-                d, a1, a2, a3, a4, a5, a6, a7, a8, a9, a10, a11, a12, a13, a14, a15,
-                a16) -> g.eval(d);
-            case 18: return (Function18 & Serializable) (
-                d, a1, a2, a3, a4, a5, a6, a7, a8, a9, a10, a11, a12, a13, a14, a15,
-                a16, a17) -> g.eval(d);
-            case 19: return (Function19 & Serializable) (
-                d, a1, a2, a3, a4, a5, a6, a7, a8, a9, a10, a11, a12, a13, a14, a15,
-                a16, a17, a18) -> g.eval(d);
-            case 20: return (Function20 & Serializable) (
-                d, a1, a2, a3, a4, a5, a6, a7, a8, a9, a10, a11, a12, a13, a14, a15,
-                a16, a17, a18, a19) -> g.eval(d);
-            case 21: return (Function21 & Serializable) (
-                d, a1, a2, a3, a4, a5, a6, a7, a8, a9, a10, a11, a12, a13, a14, a15,
-                a16, a17, a18, a19, a20) -> g.eval(d);
-            case 22: return (Function22 & Serializable) (
-                d, a1, a2, a3, a4, a5, a6, a7, a8, a9, a10, a11, a12, a13, a14, a15,
-                a16, a17, a18, a19, a20, a21) -> g.eval(d);
-            default: throw new IllegalArgumentException("arity " + arity);
-        }
     }
 }

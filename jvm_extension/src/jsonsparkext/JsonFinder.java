@@ -330,41 +330,6 @@ final class JsonFinder {
     }
 
     /**
-     * json_union_to_text(json_get(doc, path)) in one pass
-     * (kernels.kernel_json_to_text_fused).
-     */
-    static String toTextFused(String s, Path p) {
-        if (s == null) {
-            return null;
-        }
-        JsonFinder f = lookup(s, p);
-        Object v = f.unionValue();
-        return v == null ? null : unionText(f.kind, v);
-    }
-
-    /**
-     * json_is_null(json_get(doc, path)) in one pass
-     * (kernels.kernel_json_is_null_fused): whether the union holds the
-     * null arm. Containers never do, so they are not sliced.
-     */
-    static boolean isNullFused(String s, Path p) {
-        if (s == null) {
-            return true;
-        }
-        JsonFinder f = lookup(s, p);
-        switch (f.kind) {
-            case MISSING:
-            case NULL:
-                return true;
-            case INT:
-            case STR:
-                return f.unionValue() == null;
-            default:
-                return false;
-        }
-    }
-
-    /**
      * The value the union arm of the current lookup holds: Boolean, Long,
      * Double, String, or the verbatim slice of a container; null for the
      * null arm.

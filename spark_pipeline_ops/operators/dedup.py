@@ -453,10 +453,10 @@ def band_candidate_stats(
       task, the first thing to check when join_rows looks pathological.
     - ``buckets_multi``: buckets with ≥ 2 members.
 
-    Scale guidance (measured round 17, planted-density fixture —
-    BASELINE.md): candidate volume is linear in planted near-dup
-    density for minhash banding (num_perm=32/bands=8: join_rows ≈
-    bands x true_pairs + O(1) background on a 50k-doc corpus) and for
+    Scale guidance (measured round 17 on a planted-density fixture):
+    candidate volume is linear in planted near-dup density for
+    minhash banding (num_perm=32/bands=8: join_rows ≈ bands x
+    true_pairs + O(1) background on a 50k-doc corpus) and for
     simhash 16-bit blocking at ≥ 100k docs the BACKGROUND term
     dominates instead: join_rows grows ~ n²/2^block_bits x n_blocks
     from birthday collisions alone — raise block_bits (more, smaller
@@ -1230,17 +1230,16 @@ def simhash_dup_pairs(
     ~ n²·n_blocks/2^block_bits (birthday) PLUS a block-value skew term
     from template-shared tokens — measured round 17 on the planted
     fixture: 500k docs produced **1.41e9 join rows** (max bucket
-    12,168 → 74M rows from ONE bucket) for 467k verified pairs
-    (PLANTED_r17.json; BASELINE.md round 17). Raising block_bits is
-    not available (pigeonhole needs ≥ max_hamming+1 blocks). Recall
+    12,168 → 74M rows from ONE bucket) for 467k verified pairs.
+    Raising block_bits is not available (pigeonhole needs
+    ≥ max_hamming+1 blocks). Recall
     contract: a true pair is lost only if EVERY block the two hashes
     agree on is capped-hot. MEASURED on the planted 500k fixture:
     cap=2,000 cut wall 524 s → 250 s (~2.1x) at recall **0.849** — the
     loss concentrates exactly in template-heavy docs whose every block
     is hot, so the cap is an explicit recall trade, not a free win;
-    prefer sharding/pre-partitioning (BASELINE.md round-17 guidance)
-    when full recall matters. ``None`` (default) keeps exact
-    pigeonhole semantics.
+    prefer sharding/pre-partitioning when full recall matters.
+    ``None`` (default) keeps exact pigeonhole semantics.
 
     Cache contract: same as :func:`minhash_dup_pairs` — the simhash base
     is read by both sides of the self-join; ``materialize=True``

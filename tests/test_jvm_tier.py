@@ -38,7 +38,7 @@ pytestmark = pytest.mark.skipif(
     reason="no JDK: the JVM tier falls back to the Python kernels",
 )
 
-FNS = sorted(jvm_tier.TIER_FNS)
+FNS = sorted(udfs.RETURN_TYPES)  # every function at a path
 
 
 def _perfbench(name):
@@ -188,7 +188,7 @@ def _tiers(spark, docs, calls):
     the kernels in Spark's Python workers exactly as a fallback call
     does. Returns ``(jvm, python)``, one list of values per call."""
     df = spark.createDataFrame(list(enumerate(docs)), "i long, j string")
-    jvm = [jvm_tier.column(fn, F.col("j"), p) for fn, p in calls]
+    jvm = [jvm_tier.call(fn, F.col("j"), p) for fn, p in calls]
     py = [_python_call(fn, p, F.col("j")) for fn, p in calls]
     cols = [c.alias(f"c{k}") for k, c in enumerate(jvm + py)]
     rows = sorted(df.select("i", *cols).collect(), key=lambda r: r.i)
@@ -291,7 +291,7 @@ class TestDifferential:
         structs = [u, f, built, wider]
         out = df.select("i", *(
             c.alias(f"c{k}") for k, c in enumerate(
-                [jvm_tier.union_to_text(x) for x in structs]
+                [jvm_tier.call("json_union_to_text", x) for x in structs]
                 + [udfs.union_to_text_udf()(x) for x in structs]
             )
         ))
@@ -311,6 +311,7 @@ class TestDifferential:
             "value": ("text", "event", "value"), "k": ("text", "k"),
             "ki": ("int", "k"), "kf": ("float", "k"), "kb": ("bool", "k"),
             "n": ("length",), "nk": ("length", "k"), "has": ("exists", "k"),
+            "root": ("exists",),
             "qty": ("int", "event", "items", 0, "qty"),
             "ut": ("union_text", "k"), "un": ("union_isnull", "k"),
             "vt": ("union_text", "event", "value"),
@@ -425,10 +426,11 @@ class TestRouting:
     def test_sql_argument_errors_at_analysis(self, spark, tier):
         # the reference's plan-time errors, raised by spark.sql() itself
         jsonf.register_all(spark)
-        spark.createDataFrame(
+        df = spark.createDataFrame(
             [('{"a": {"b": 1}}', "a", "b", 1.5, True)],
             "j string, k1 string, k2 string, d double, b boolean",
-        ).createOrReplaceTempView("jvm_tier_bad_args")
+        )
+        df.createOrReplaceTempView("jvm_tier_bad_args")
         arg = ("Unexpected argument type to '{}' at position {}, expected "
                "string or int, got {}.")
         cases = {
@@ -448,11 +450,29 @@ class TestRouting:
                                      "'json_union_to_text' at position 1",
             "json_is_null(j)": "Unexpected argument type to 'json_is_null' "
                                "at position 1",
+            "json_union_to_text(named_struct('a', 1))":
+                "Unexpected argument type to 'json_union_to_text' at position "
+                "1, expected a JSON union, got Struct<a:int>.",
+            "json_get_int(cast(d as bigint), 'a')":
+                "Unexpected argument type to 'json_get_int' at position 1, "
+                "expected a string, got Int64.",
         }
         for call, message in cases.items():
             with pytest.raises(Exception) as err:
                 spark.sql(f"SELECT {call} FROM jvm_tier_bad_args")
             assert message in str(err.value), (call, str(err.value)[:300])
+        # the API spellings raise the same message when select() analyzes
+        # the query, before any job runs
+        api = {
+            "json_union_to_text(named_struct('a', 1))":
+                lambda: jsonf.json_union_to_text(F.struct(F.lit(1).alias("a"))),
+            "json_get_int(cast(d as bigint), 'a')":
+                lambda: jsonf.json_get_int(F.col("d").cast("bigint"), "a"),
+        }
+        for call, build in api.items():
+            with pytest.raises(Exception) as err:
+                df.select(build())
+            assert cases[call] in str(err.value), (call, str(err.value)[:300])
 
     def test_constant_path_columns_raise_on_the_tier(self, spark, tier):
         # two path columns, each constant within the only partition: a
@@ -556,6 +576,8 @@ class TestNoPython:
         "json_get_int(json_get(j, kc), 'b')",
         "json_is_null(json_get(j, 'k'))", "json_is_null(json_get(j, kc))",
         "json_union_to_text(json_get(j, kc))",
+        "json_union_to_text(json_get(j, 'k'))",
+        "json_get_int(j, 'a', cast(null as string))",
         "json_from_scalar(length(j))", "scalar_to_json(kc)",
         "json_from_scalar(ki)", "json_from_scalar(i / 7)",
         "json_from_scalar(cast(if(i % 2 = 0, 'NaN', '-Infinity') as float))",
@@ -565,6 +587,31 @@ class TestNoPython:
         _sql_call("json_get_str", LONG_PATH),
         _sql_call("json_contains", LONG_PATH),
     ]
+
+    # the Python API's spelling of each call shape that has one: literal
+    # paths, paths past ScalaUDF's 22 arguments, key columns, union-struct
+    # documents and the fused union consumers over json_get
+    API = {
+        **{_sql_call(fn, p): (lambda fn=fn, p=p: getattr(jsonf, fn)("j", *p))
+           for fn, p in SQL_CALLS + [("json_get_str", LONG_PATH),
+                                     ("json_contains", LONG_PATH)]
+           if fn not in SQL_ALIASES},
+        **{f"{fn}(j, {k})": (lambda fn=fn, k=k: getattr(jsonf, fn)("j", F.col(k)))
+           for fn, k in [("json_get_str", "kc"), ("json_get_int", "ki"),
+                         ("json_get", "kc"), ("json_contains", "kc"),
+                         ("json_get_array", "ki"), ("json_as_text", "ki"),
+                         ("json_get_float", "kc"), ("json_get_bool", "ki")]},
+        "json_get_json(json_get(j, 'k'), ki)":
+            lambda: jsonf.json_get_json(jsonf.json_get("j", "k"), F.col("ki")),
+        "json_get_int(json_get(j, kc), 'b')":
+            lambda: jsonf.json_get_int(jsonf.json_get("j", F.col("kc")), "b"),
+        "json_is_null(json_get(j, 'k'))":
+            lambda: jsonf.json_is_null(jsonf.json_get("j", "k")),
+        "json_union_to_text(json_get(j, 'k'))":
+            lambda: jsonf.json_union_to_text(jsonf.json_get("j", "k")),
+        "json_union_to_text(json_get(j, kc))":
+            lambda: jsonf.json_union_to_text(jsonf.json_get("j", F.col("kc"))),
+    }
 
     def _sql_rows(self, spark):
         q = spark.sql(f"SELECT i, {', '.join(self.SQL)} FROM no_python_edge")
@@ -576,6 +623,15 @@ class TestNoPython:
         jsonf.register_all(spark)
         got, plan, got_columns = self._sql_rows(spark)
         assert "EvalPython" not in plan
+        # the API builds each call as the SQL name does: the same column
+        # name and the same optimized plan
+        df = spark.table("no_python_edge")
+        for sql, api in self.API.items():
+            assert sql in self.SQL
+            s, a = spark.sql(f"SELECT {sql} FROM no_python_edge"), df.select(api())
+            assert a.columns == s.columns, sql
+            assert a._jdf.queryExecution().optimizedPlan().sameResult(
+                s._jdf.queryExecution().optimizedPlan()), sql
         monkeypatch.setattr(jvm_tier, "load", lambda sc: None)
         try:
             jsonf.register_all(spark)
@@ -714,7 +770,7 @@ class TestBuild:
         monkeypatch.setattr(jvm_tier, "_jar", None)
         monkeypatch.setattr(jvm_tier, "_tiers", weakref.WeakKeyDictionary())
         assert jvm_tier.load(spark.sparkContext) is None
-        assert jvm_tier.column("json_get_int", F.col("j"), ("a",)) is None
+        assert jvm_tier.call("json_get_int", F.col("j"), ("a",)) is None
         df = spark.createDataFrame([('{"a": 3}',)], "j string")
         assert df.select(jsonf.json_get_int("j", "a")).collect()[0][0] == 3
 

@@ -759,7 +759,7 @@ class TestSimhash:
 class TestCandidateStats:
     """band_candidate_stats: the pre-verification join volume — the
     quantity that blows up under loose banding at high dup density
-    (VERDICT r16 #2); planted-density measurements in BASELINE.md."""
+    (VERDICT r16 #2)."""
 
     def test_join_rows_and_skew(self, spark):
         # bucket A holds 3 ids -> C(3,2)=3 join rows; bucket B holds 2
@@ -1173,7 +1173,7 @@ class TestQuantize:
 
 class TestSimilarity:
     def test_cosine_topk_auto_tier_policy(self, embeddings, monkeypatch):
-        # round-15 crossover (BASELINE.md): numpy's lower fixed cost
+        # round-15 crossover: numpy's lower fixed cost
         # wins under ~200k rows (~64 MB of 64-dim floats), the JVM HOF
         # twin's ~2.7x-cheaper per-row cost wins above; unknown size
         # reads LARGE (hof is never catastrophically wrong small, the

@@ -1,4 +1,4 @@
-"""Pins for datafusion_functions_json_spark/oracle_twin.py — the
+"""Pins for spark_pipeline_ops/oracle_twin.py — the
 pure-Python twin that generates literal VALUES oracles for the
 xxhash64-keyed LSH registry entries (minhash_pairs / simhash_pairs /
 minhash_incremental), the last rows-only class of the correctness gate.
