@@ -13,8 +13,10 @@ lives on a Column subclass instead (SURVEY.md §2.2):
     jcol.contains('foo') # json_data ?  'foo'      (json_contains)
     jcol['foo'].cast('bigint')   # cast elision → json_get_int(j, 'foo')
 
-The two optimizer passes of the reference run EAGERLY here, at expression
-construction time:
+A JsonColumn is a description of one JSON value — ``json_get(doc, *path)``,
+``json_get(doc, key)`` or a wrapped column — and builds its Spark column
+once, when it is first used. The two optimizer passes of the reference
+read that description, so an intermediate step of a chain builds nothing:
 
 * **call un-nesting** (reference: src/rewrite.rs:57-91): ``jcol['a']['b']``
   builds ``json_get(j, 'a', 'b')`` — ONE parse per row instead of two.
@@ -26,14 +28,15 @@ construction time:
   struct is never materialized.
 
 JsonColumn subclasses ``pyspark.sql.Column`` so it drops into ``select`` /
-``filter`` / ``groupBy`` unchanged; results are auto-aliased in the
-reference's operator rendering (``json_data -> 'foo'``, reference:
-src/rewrite.rs:146-171).
+``filter`` / ``groupBy`` unchanged; ``[]`` results with a literal key are
+named in the reference's operator rendering (``json_data -> 'foo'``,
+reference: src/rewrite.rs:146-171).
 """
 
 from __future__ import annotations
 
 import re
+from functools import cached_property
 
 from pyspark.sql import types as T
 
@@ -47,82 +50,68 @@ __all__ = ["JsonColumn", "col"]
 _COLNAME_RE = re.compile(r"^Column<'(.*)'>$")
 
 
-def _render_path_elem(p) -> str:
-    # reference renders keys as 'key' and indexes bare (src/rewrite.rs:146-171)
-    if isinstance(p, str):
-        return f"'{p}'"
-    return str(p)
-
-
-def _col_display_name(c: Column) -> str:
-    m = _COLNAME_RE.match(str(c))
+def _render(x) -> str:
+    """``x`` in the reference's operator spelling (``expr_to_sql_repr``,
+    src/rewrite.rs:146-171): a key as ``'key'``, an index bare, a column
+    by its name, a JSON value as the lookups that make it."""
+    if isinstance(x, JsonColumn):
+        return x._render()
+    if isinstance(x, str):
+        return f"'{x}'"
+    if isinstance(x, int):
+        return str(x)
+    m = _COLNAME_RE.match(str(x))
     return m.group(1) if m else "json"
 
 
 class JsonColumn(Column):
-    """A ``Column`` carrying JSON provenance for eager rewrites.
+    """A ``Column`` described as one JSON value, built on first use.
 
-    Two flavors:
-
-    * wrapping a **raw JSON text column** (``jsonf.col(df.j)``): path=()
-      and lookups produce union structs via json_get;
-    * wrapping a **json_get result** (union struct): provenance
-      ``(root, path)`` drives flattening; ``None`` provenance (column
-      keys / scalar-lifted values) disables it, matching the reference's
-      guards.
+    The description is ``json_get(doc, *path)`` with a tuple of literal
+    path elements, ``json_get(doc, key)`` with a column of keys (``path``
+    None), or a wrapped column ``doc`` (``path`` and ``key`` None): a union
+    value such as ``json_from_scalar``'s, or raw JSON text (``jsonf.col``),
+    which lookups and casts read as the document at the empty path.
+    ``doc`` is a column of JSON text or union structs, or a JsonColumn.
     """
 
-    def __init__(
-        self,
-        underlying: Column,
-        *,
-        root=None,
-        path=None,
-        is_text=False,
-        cast_root=None,
-        cast_path=None,
-    ):
-        # Classic-mode Column wraps a py4j java column handle.
-        super().__init__(underlying._jc)
-        self._root = root
-        self._path = path  # tuple of literals, or None (= not flattenable)
-        self._is_text = is_text  # True when wrapping raw JSON text
-        # cast-elision provenance: like (root, path) but may carry a
-        # COLUMN key — the reference's cast elision (rewrite.rs:36-54)
-        # has no literal-path guard (that guard belongs to call
-        # un-nesting only), so json_get(j, col).cast('bigint') must
-        # still rewrite to json_get_int(j, col) instead of attempting
-        # a real (failing) struct cast
-        self._cast_root = cast_root if cast_root is not None else root
-        self._cast_path = cast_path if cast_path is not None else path
+    def __init__(self, doc, path=None, key=None, *, text=False):
+        # every field is set here and Column.__init__ never runs: _jc is
+        # built on first use, and Column.__getattr__ would read an unset
+        # attribute as a struct field
+        self._doc = doc
+        self._path = () if text else path
+        self._key = key
+        self._text = text
+        self._named = False  # named in the operator spelling (j -> 'a')
 
-    # -- provenance ----------------------------------------------------
+    @cached_property
+    def _column(self) -> Column:
+        """The column described, without its operator name."""
+        if self._text or self._path is None and self._key is None:
+            return self._doc
+        from .functions import api
 
-    def _flatten_provenance(self):
-        """(root, literal_path) when call un-nesting may fire, else None
-        (guards: reference src/rewrite.rs:74-83)."""
-        if self._root is not None and self._path is not None:
-            return self._root, self._path
-        return None
+        return api._call("json_get", self._doc, self._path, self._key)
 
-    def _json_source(self):
-        """What to hand the functions layer as the JSON argument."""
-        if self._is_text:
-            return Column(self._jc)
-        return self  # union struct; api layer continues via array/object
+    @cached_property
+    def _jc(self):
+        c = self._column
+        return (c.alias(self._render()) if self._named else c)._jc
 
-    def _arrow_alias(self, op: str, key) -> str:
-        base = (
-            _col_display_name(self._root)
-            if self._root is not None and self._path is not None
-            else _col_display_name(self)
-        )
-        parts = list(self._path or ())
-        rendered = base
-        for p in parts:
-            rendered += f" -> {_render_path_elem(p)}"
-        rendered += f" {op} {_render_path_elem(key)}"
-        return rendered
+    def _inner_call(self):
+        """``(doc, path)`` when a lookup over this value may un-nest into
+        one call of ``doc`` (reference: src/rewrite.rs:74-83): this is
+        ``json_get`` over a literal path, and ``doc`` a column rather than
+        another JSON value (a narrower guard than the reference's, which
+        would un-nest over any literal-path ``json_get``). Else None."""
+        if self._path is None or isinstance(self._doc, JsonColumn):
+            return None
+        return self._doc, self._path
+
+    def _render(self) -> str:
+        steps = (self._key,) if self._key is not None else self._path or ()
+        return " -> ".join([_render(self._doc), *map(_render, steps)])
 
     # -- operator surface ----------------------------------------------
 
@@ -131,87 +120,78 @@ class JsonColumn(Column):
         112-133). Chains left-associatively; flattens when allowed."""
         from .functions import api
 
-        out = api.json_get(self._json_source(), key)
-        if isinstance(key, (str, int)) and not isinstance(key, bool):
-            out = JsonColumn(
-                out.alias(self._arrow_alias("->", key)),
-                root=out._root,
-                path=out._path,
-            )
+        out = api.json_get(self, key)
+        out._named = not isinstance(key, Column)  # before its first use
+        return out
+
+    def _operator(self, op: str, fn_key: str, path) -> Column:
+        from .functions import api
+
+        out = getattr(api, fn_key)(self, *path)
+        if len(path) == 1 and not isinstance(path[0], Column):
+            out = out.alias(f"{self._render()} {op} {_render(path[0])}")
         return out
 
     def get(self, *path):
         """Explicit json_get with a multi-element path."""
         from .functions import api
 
-        return api.json_get(self._json_source(), *path)
+        return api.json_get(self, *path)
 
     def as_text(self, *path) -> Column:
         """``json ->> key`` (reference: src/rewrite.rs:118,129)."""
-        from .functions import api
-
-        out = api.json_as_text(self._json_source(), *path)
-        if len(path) == 1 and isinstance(path[0], (str, int)):
-            out = out.alias(self._arrow_alias("->>", path[0]))
-        return out
+        return self._operator("->>", "json_as_text", path)
 
     def contains(self, *path) -> Column:
         """``json ? key`` (reference: src/rewrite.rs:119,130)."""
-        from .functions import api
-
-        out = api.json_contains(self._json_source(), *path)
-        if len(path) == 1 and isinstance(path[0], (str, int)):
-            out = out.alias(self._arrow_alias("?", path[0]))
-        return out
+        return self._operator("?", "json_contains", path)
 
     def get_str(self, *path) -> Column:
         from .functions import api
 
-        return api.json_get_str(self._json_source(), *path)
+        return api.json_get_str(self, *path)
 
     def get_int(self, *path) -> Column:
         from .functions import api
 
-        return api.json_get_int(self._json_source(), *path)
+        return api.json_get_int(self, *path)
 
     def get_float(self, *path) -> Column:
         from .functions import api
 
-        return api.json_get_float(self._json_source(), *path)
+        return api.json_get_float(self, *path)
 
     def get_bool(self, *path) -> Column:
         from .functions import api
 
-        return api.json_get_bool(self._json_source(), *path)
+        return api.json_get_bool(self, *path)
 
     def get_json(self, *path) -> Column:
         from .functions import api
 
-        return api.json_get_json(self._json_source(), *path)
+        return api.json_get_json(self, *path)
 
     def get_array(self, *path) -> Column:
         from .functions import api
 
-        return api.json_get_array(self._json_source(), *path)
+        return api.json_get_array(self, *path)
 
     def length(self, *path) -> Column:
         from .functions import api
 
-        return api.json_length(self._json_source(), *path)
+        return api.json_length(self, *path)
 
     def keys(self, *path) -> Column:
         from .functions import api
 
-        return api.json_object_keys(self._json_source(), *path)
+        return api.json_object_keys(self, *path)
 
     def to_text(self) -> Column:
         """Flatten this union value to canonical JSON text (reference:
         src/json_union_to_text.rs)."""
         from .functions import api
 
-        if self._is_text:
-            return Column(self._jc)
-        return api.json_union_to_text(self)
+        return self._doc if self._text else api.json_union_to_text(self)
 
     def is_json_null(self) -> Column:
         from .functions import api
@@ -235,58 +215,46 @@ class JsonColumn(Column):
         "str": "json_get_str",
     }
 
+    # each width keeps ITS name, so a DataType target narrows like its
+    # string spelling: cast(T.IntegerType()) and cast('int') are both INT
+    _TYPE_NAMES = {
+        T.LongType: "bigint",
+        T.IntegerType: "int",
+        T.ShortType: "smallint",
+        T.ByteType: "tinyint",
+        T.BooleanType: "boolean",
+        T.FloatType: "float",
+        T.DoubleType: "double",
+        T.DecimalType: "double",
+        T.StringType: "string",
+    }
+
+    # targets narrower than the getter's result, re-cast after it
+    _NARROW = {"tinyint", "smallint", "int", "integer", "float"}
+
     def cast(self, dataType):
         """Cast elision (reference: src/rewrite.rs:36-54): a cast of a
         json_get result to int/float/bool/string becomes the typed getter
-        over the SAME args — the union struct is never built. Unknown
-        target types fall back to a real Spark cast of the struct (which
-        Spark will reject, like DataFusion would)."""
+        over the SAME args — the union struct is never built; a column key
+        is no obstacle (that guard belongs to call un-nesting only).
+        Unknown target types fall back to a real Spark cast of the struct
+        (which Spark will reject, like DataFusion would)."""
         from .functions import api
 
-        name = None
         if isinstance(dataType, str):
             name = dataType.lower()
-        elif isinstance(dataType, T.LongType):
-            name = "bigint"
-        elif isinstance(dataType, T.IntegerType):
-            # each width keeps ITS name so the narrowing re-cast below
-            # fires for DataType instances exactly like for strings —
-            # mapping them all to "bigint" made cast(T.IntegerType())
-            # silently return a BIGINT column while cast('int')
-            # returned INT (same expression, two schemas)
-            name = "int"
-        elif isinstance(dataType, T.ShortType):
-            name = "smallint"
-        elif isinstance(dataType, T.ByteType):
-            name = "tinyint"
-        elif isinstance(dataType, T.BooleanType):
-            name = "boolean"
-        elif isinstance(dataType, T.FloatType):
-            name = "float"
-        elif isinstance(dataType, T.DoubleType | T.DecimalType):
-            name = "double"
-        elif isinstance(dataType, T.StringType):
-            name = "string"
-        fn_key = self._CAST_MAP.get(name) if name else None
-        if (
-            fn_key is not None
-            and self._cast_root is not None
-            and self._cast_path is not None
-        ):
-            fn = getattr(api, fn_key)
-            out = fn(self._cast_root, *self._cast_path)
-            # Decimal targets re-cast the float result (reference
-            # rewrite keeps the cast shell for decimals, rs:46-48)
-            if isinstance(dataType, T.DecimalType):
-                out = Column(out._jc).cast(dataType)
-            elif fn_key == "json_get_int" and name in ("tinyint", "smallint", "int", "integer"):
-                out = Column(out._jc).cast(dataType)
-            elif fn_key == "json_get_float" and name == "float":
-                # the float getter returns DOUBLE; a float target must
-                # narrow like a plain Spark cast would
-                out = Column(out._jc).cast(dataType)
-            return out
-        return super().cast(dataType)
+        else:
+            name = self._TYPE_NAMES.get(type(dataType))
+        fn_key = self._CAST_MAP.get(name)
+        if fn_key is None or self._path is None and self._key is None:
+            return super().cast(dataType)
+        steps = (self._key,) if self._key is not None else self._path
+        out = getattr(api, fn_key)(self._doc, *steps)
+        # Decimal targets re-cast the float result (reference rewrite
+        # keeps the cast shell for decimals, rs:46-48)
+        if isinstance(dataType, T.DecimalType) or name in self._NARROW:
+            out = out.cast(dataType)
+        return out
 
     astype = cast
 
@@ -298,4 +266,4 @@ def col(c) -> JsonColumn:
         from pyspark.sql import functions as F
 
         c = F.col(c)
-    return JsonColumn(c, root=c, path=(), is_text=True)
+    return JsonColumn(c, text=True)

@@ -14,14 +14,16 @@ Validation mirrors the reference's plan-time errors:
 * more than one path element where any is a Column raises the reference's
   exec error (reference: src/common.rs:129-133).
 
-Eager rewrites (the reference's optimizer passes, reimplemented at
-expression-construction time because PySpark exposes no planner hooks —
-SURVEY.md §2.3):
+The reference's optimizer passes (SURVEY.md §2.3 — PySpark exposes no
+planner hooks) read the description a :class:`JsonColumn` keeps, not a
+built column. A JsonColumn builds its column when it is first used, so
+a lookup step that un-nests or a cast that is elided builds nothing:
 
 * **cast elision** lives on ``JsonColumn.cast`` (reference:
   src/rewrite.rs:36-54);
-* **call un-nesting** lives on ``JsonColumn.__getitem__`` / the JSON-arg
-  coercion here (reference: src/rewrite.rs:57-91).
+* **call un-nesting** lives in the JSON-argument lookup here
+  (:func:`_lookup`, reference: src/rewrite.rs:57-91), so ``json_get``
+  over a ``json_get`` result extends its path instead of building a call.
 """
 
 from __future__ import annotations
@@ -32,6 +34,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .. import union as union_mod
+from ..column import JsonColumn
 from . import jvm_tier, udfs
 
 __all__ = [
@@ -94,85 +97,62 @@ def _validate_path(fn_name: str, path: tuple):
     return tuple(out), None
 
 
-def _coerce_json_arg(json, literal: bool):
-    """Resolve the JSON argument to ``(document, provenance, is_union)``.
-
-    provenance is ``(root_col, literal_path)`` when the input is a
-    JsonColumn produced by json_get over an all-literal path and the
-    outer path is ``literal`` too — the precondition for call un-nesting
-    (reference: src/rewrite.rs:74-83) — else None. The document is None
-    when un-nesting makes it unnecessary; ``is_union`` marks a union
-    struct, which the lookup reads through its container text.
-    """
-    from ..column import JsonColumn  # local import to avoid a cycle
-    from ..column import Column as ClassicColumn
-
-    if isinstance(json, JsonColumn):
-        prov = json._flatten_provenance() if literal else None
-        if prov is not None:
-            return None, prov, False
-        # strip the JsonColumn __getitem__
-        return ClassicColumn(json._jc), None, not json._is_text
+def _coerce_json_arg(json) -> Column:
+    """The JSON argument as a column: a column name, a ``Column`` of JSON
+    text or union structs, or a JsonColumn."""
     if isinstance(json, str):
-        return F.col(json), None, False
+        return F.col(json)
     if _is_column(json):
-        return json, None, False
+        return json
     raise ValueError(
         f"Unexpected argument type at position 1, expected a string "
         f"column of JSON, got {type(json).__name__}."
     )
 
 
-def _call(fn_key: str, doc, path=(), key_col=None, union=False) -> Column:
+def _lookup(fn_key: str, json, path: tuple):
+    """Validate ``fn_key(json, *path)``; its ``(doc, path, key)``.
+
+    Call un-nesting: ``f(json_get(j, 'a'), 'b')`` reads ``f(j, 'a', 'b')``
+    when the inner value allows it (:meth:`JsonColumn._inner_call`) and
+    the outer path is literal too (reference: src/rewrite.rs:74-83)."""
+    lit_path, key_col = _validate_path(fn_key, path)
+    doc = _coerce_json_arg(json)
+    inner = doc._inner_call() if isinstance(doc, JsonColumn) else None
+    if inner is not None and key_col is None:
+        doc, lit_path = inner[0], inner[1] + lit_path
+    return doc, lit_path, key_col
+
+
+def _call(fn_key: str, doc, path=(), key_col=None) -> Column:
     """``fn_key(doc, *path)``, or ``fn_key(doc, key_col)`` with a column
     of keys (reference: src/common.rs:106-127): on the JVM exact tier
     (:mod:`.jvm_tier`) when it is loaded, built by the function's SQL
-    builder, else as an Arrow UDF over the Python kernels. A ``union``
-    document is read through its container text."""
+    builder, else as an Arrow UDF over the Python kernels. Both read a
+    union-struct document through its container text."""
+    if isinstance(doc, JsonColumn):
+        doc = doc._column  # an argument carries no operator name
     jvm = jvm_tier.call(fn_key, doc, path, key_col)
     if jvm is not None:
         return jvm
-    if union:
-        doc = union_mod.union_container_text(doc)
     if key_col is not None:
         return udfs.path_udf(fn_key)(doc, key_col)
     return udfs.literal_path_udf(fn_key, path)(doc)
 
 
 def _invoke(fn_key: str, json, path: tuple) -> Column:
-    """Shared entry: validate, apply un-nesting, build the call."""
-    lit_path, key_col = _validate_path(fn_key, path)
-    doc, prov, union = _coerce_json_arg(json, key_col is None)
-    if prov is not None:
-        # Call un-nesting: f(json_get(j, 'a'), 'b') => f(j, 'a', 'b').
-        # Fires only when the inner call is json_get (type-preserving) and
-        # every path element is literal (reference: src/rewrite.rs:74-83).
-        doc, lit_path = prov[0], prov[1] + lit_path
-    return _call(fn_key, doc, lit_path, key_col, union)
+    """Shared entry: validate, un-nest, build the call."""
+    return _call(fn_key, *_lookup(fn_key, json, path))
 
 
-def json_get(json, *path):
+def json_get(json, *path) -> JsonColumn:
     """Traverse the path and return the value as a JSON union struct
     (reference: src/json_get.rs:26-151; SURVEY.md §2.1 #1). Missing path /
     type mismatch / invalid JSON / JSON null → NULL (the union's null arm,
     surfaced as a whole-struct NULL for ``IS NULL`` parity, reference:
-    tests/main.rs:1612-1729)."""
-    from ..column import JsonColumn
-
-    lit_path, key_col = _validate_path("json_get", path)
-    doc, prov, union = _coerce_json_arg(json, key_col is None)
-    if prov is not None:
-        root, full = prov[0], prov[1] + lit_path
-        return JsonColumn(_call("json_get", root, full), root=root, path=full)
-    out = _call("json_get", doc, lit_path, key_col, union)
-    if key_col is not None:
-        # no LITERAL provenance (un-nesting requires literal paths) but
-        # cast elision has no such guard — keep enough to rewrite
-        # .cast('bigint') into json_get_int(json, key_col)
-        return JsonColumn(out, root=None, path=None, cast_root=json,
-                          cast_path=tuple(path))
-    root = None if union else doc
-    return JsonColumn(out, root=root, path=None if union else lit_path)
+    tests/main.rs:1612-1729). The call is built when the column is first
+    used, so a chain of lookups over it builds one call."""
+    return JsonColumn(*_lookup("json_get", json, path))
 
 
 def json_get_str(json, *path) -> Column:
@@ -250,18 +230,24 @@ json_keys = json_object_keys
 
 def json_from_scalar(col, dtype: str | None = None):
     """Lift a SQL scalar column into the union struct (reference:
-    src/json_from_scalar.rs:21-221). Pure Column expressions — no UDF.
+    src/json_from_scalar.rs:21-221).
 
     ``dtype``: optional Spark type name of the input ('bigint', 'double',
     'string', 'boolean', …). When omitted, a runtime ``typeof`` dispatch
     covers the accepted scalar types (reference accepts Null/Bool/ints/
     floats/strings — src/json_from_scalar.rs:48-68). Typed NULLs → null
     arm (whole-struct NULL).
-    """
-    from ..column import JsonColumn
 
+    Without ``dtype``, on the JVM exact tier, this is a call of the
+    tier's ``json_from_scalar``: named like its SQL spelling, and an
+    unsupported type is the reference's error at analysis. Otherwise it
+    is pure Column expressions — no UDF.
+    """
     if isinstance(col, str):
         col = F.col(col)
+    jvm = None if dtype is not None else jvm_tier.call("json_from_scalar", col)
+    if jvm is not None:
+        return JsonColumn(jvm)
 
     def build(tid: int, member: str, value: Column) -> Column:
         members = {
@@ -333,10 +319,28 @@ def json_from_scalar(col, dtype: str | None = None):
                 ).cast(union_mod.UNION_DDL)
             )
         )
-    return JsonColumn(out, root=None, path=None)
+    return JsonColumn(out)
 
 
 scalar_to_json = json_from_scalar
+
+
+def _union_arg(fn_key: str, u):
+    """``(u, inner)``: the union argument of ``fn_key`` as a column, and
+    ``(doc, path)`` when ``u`` is ``json_get(doc, *path)`` and the two
+    calls fuse into one (the guards of call un-nesting)."""
+    if isinstance(u, str):
+        return F.col(u), None
+    if not isinstance(u, JsonColumn):
+        return u, None
+    if u._text:
+        raise TypeError(
+            f"{fn_key} expects a union struct (a json_get result), got a "
+            "raw JSON text column; pass json_get(col), or use the text "
+            "column itself (col.isNull() for SQL-null text)"
+        )
+    inner = u._inner_call()
+    return (u._column if inner is None else None), inner
 
 
 def json_union_to_text(u) -> Column:
@@ -347,43 +351,19 @@ def json_union_to_text(u) -> Column:
     fuses into ONE call (find + canonicalize — no intermediate struct):
     the reference's un-nesting philosophy extended to the union
     consumers."""
-    from ..column import JsonColumn
-
-    if isinstance(u, str):
-        u = F.col(u)
-    if isinstance(u, JsonColumn):
-        if u._is_text:
-            raise TypeError(
-                "json_union_to_text expects a union struct (a json_get "
-                "result), got a raw JSON text column — a text-mode "
-                "JsonColumn would crash the kernel at runtime; pass "
-                "json_get(col) or use the text column directly"
-            )
-        prov = u._flatten_provenance()
-        if prov is not None:
-            return _call("json_to_text_fused", *prov)
+    u, inner = _union_arg("json_union_to_text", u)
+    if inner is not None:
+        return _call("json_to_text_fused", *inner)
     jvm = jvm_tier.call("json_union_to_text", u)
     return udfs.union_to_text_udf()(u) if jvm is None else jvm
 
 
 def json_is_null(u) -> Column:
     """IS NULL over the union — true for JSON null AND lookup miss
-    (reference: tests/main.rs:1612-1729)."""
-    from ..column import Column as ClassicColumn
-    from ..column import JsonColumn
-
-    if isinstance(u, str):
-        u = F.col(u)
-    if isinstance(u, JsonColumn):
-        if u._is_text:
-            raise TypeError(
-                "json_is_null expects a union struct (a json_get "
-                "result), got a raw JSON text column — use "
-                "col.isNull() for SQL-null text, or json_get(col) "
-                "first for JSON-null semantics"
-            )
-        prov = u._flatten_provenance()
-        if prov is not None:
-            return _call("json_is_null_fused", *prov)
-        u = ClassicColumn(u._jc)
-    return union_mod.json_is_null(u)
+    (reference: tests/main.rs:1612-1729). Fuses with a literal-path
+    ``json_get`` like :func:`json_union_to_text`."""
+    u, inner = _union_arg("json_is_null", u)
+    if inner is not None:
+        return _call("json_is_null_fused", *inner)
+    jvm = jvm_tier.call("json_is_null", u)
+    return union_mod.json_is_null(u) if jvm is None else jvm

@@ -15,12 +15,14 @@ src/common.rs:159-182):
   path) so repeated plan references reuse one PythonUDF expression.
 * **path columns** (:func:`path_udf`, the SQL names and the API's column
   paths): ``(doc, *path_cols)``. The path arguments are checked per batch
-  by the reference's rules (:func:`_check_path_args`). A union-struct
-  document continues the lookup through its ``array``/``object`` text
-  (reference: src/common_union.rs:49-57). When every path column holds
-  one non-null value in the batch, the literal-path body runs; otherwise
-  the path tuple is built per row, and a NULL key yields a null result
-  (reference: src/common.rs:118-127 JsonPath::None).
+  by the reference's rules (:func:`_check_path_args`). When every path
+  column holds one non-null value in the batch, the literal-path body
+  runs; otherwise the path tuple is built per row, and a NULL key yields
+  a null result (reference: src/common.rs:118-127 JsonPath::None).
+
+Both read a union-struct document (a nested call, or a stored
+``json_get`` column) through its ``array``/``object`` text
+(:func:`_doc_text`, reference: src/common_union.rs:49-57).
 
 The literal-path body takes the per-batch dictionary shortcut
 (:func:`kernels._dict_encode` — the Arrow analog of the reference's
@@ -171,7 +173,7 @@ def literal_path_udf(fn_key: str, path: tuple):
     kernel = _KERNELS[fn_key]
 
     def fn(js: pa.Array) -> pa.Array:
-        return _eval_literal(fn_key, kernel, js, path)
+        return _eval_literal(fn_key, kernel, _doc_text(js), path)
 
     fn.__name__ = fn_key
     return F.arrow_udf(fn, RETURN_TYPES[fn_key])

@@ -26,7 +26,6 @@ every Spark version — no custom datasource or Catalyst type needed.
 from __future__ import annotations
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 __all__ = [
@@ -39,7 +38,6 @@ __all__ = [
     "TYPE_ID_STR",
     "TYPE_ID_ARRAY",
     "TYPE_ID_OBJECT",
-    "union_container_text",
     "json_is_null",
     "format_union_value",
 ]
@@ -68,14 +66,6 @@ UNION_DDL = (
     "struct<type_id:tinyint,bool:boolean,int:bigint,float:double,"
     "str:string,array:string,object:string>"
 )
-
-
-def union_container_text(u: Column) -> Column:
-    """Raw JSON text of the union's container members — used to continue a
-    path lookup into a union value (reference: src/common_union.rs:49-57
-    ``nested_json_array`` extracts only array/object members; scalar
-    members yield NULL => nested lookup misses)."""
-    return F.coalesce(u.getField("array"), u.getField("object"))
 
 
 def json_is_null(u: Column) -> Column:

@@ -149,7 +149,7 @@ public final class JsonExactTier {
         SimpleFunctionRegistry internal = FunctionRegistry$.MODULE$.internal();
         List<String> fns = new ArrayList<>(RESULT_TYPES.keySet());
         fns.addAll(FUSED.keySet());
-        fns.add("json_union_to_text");
+        fns.addAll(List.of("json_union_to_text", "json_is_null", "json_from_scalar"));
         for (String fn : fns) {
             internal.createOrReplaceTempFunction(
                 INTERNAL + fn, new SqlBuilder(fn, fn, false), "scala_udf");

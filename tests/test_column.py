@@ -1,6 +1,6 @@
-"""JsonColumn operator surface + the two eager rewrites (reference:
-src/rewrite.rs; plan-shape assertions mirror reference tests/main.rs:
-984-1136 which capture EXPLAIN output)."""
+"""JsonColumn operator surface + the two rewrites it applies before it
+builds its column (reference: src/rewrite.rs; plan-shape assertions
+mirror reference tests/main.rs:984-1136 which capture EXPLAIN output)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -49,6 +49,73 @@ class TestOperatorSugar:
         n = df.filter(jc.as_text("a") == "x").count()
         assert n == 1
 
+    def test_column_key_chain_alias(self, spark):
+        # a chain that cannot un-nest is named from its lookups, the key
+        # column by its name (reference: src/rewrite.rs:146-171)
+        df = spark.createDataFrame([('{"k": {"x": 1}}', "k")], "j string, kc string")
+        jc = jsonf.col("j")
+        for out in (df.select(jc[F.col("kc")]["x"]),
+                    df.select(jc.get(F.col("kc"))["x"])):
+            assert out.columns == ["j -> kc -> 'x'"]
+            assert jsonf.format_union_value(out.collect()[0][0]) == "{int=1}"
+
+
+@pytest.mark.usefixtures("python_tier")
+class TestOperatorSugarPythonTier(TestOperatorSugar):
+    """The operator sugar on the Python kernels."""
+
+
+def _column_chain(c):
+    """perfbench's column_chain aggregates (perfbench/templates.py), over
+    the chain spelling ``c`` (a JsonColumn) or, with ``c`` None, the
+    direct one."""
+    if c is None:
+        city = jsonf.json_get_str("j", "user", "address", "city")
+        qty = jsonf.json_get_int("j", "event", "items", 0, "qty")
+        lat = jsonf.json_get_float("j", "user", "address", "geo", "lat")
+    else:
+        city = c["user"]["address"]["city"].cast("string")
+        qty = c["event"]["items"][0]["qty"].cast("bigint")
+        lat = c["user"]["address"]["geo"]["lat"].cast("double")
+    return F.count_distinct(city), F.sum(qty), F.sum(lat)
+
+
+class TestBuildOnce:
+    """A JsonColumn builds its column once, on first use: the steps of a
+    chain that un-nests or elides its cast build nothing."""
+
+    def test_column_chain_builds_one_call_per_expression(self, spark, monkeypatch):
+        from pyspark.sql.classic.column import Column
+
+        if jsonf_jvm_tier.load(spark.sparkContext) is None:
+            pytest.skip("JVM exact tier unavailable")
+        calls, aliases = [], []
+        call, alias = jsonf_jvm_tier.call, Column.alias
+        monkeypatch.setattr(jsonf_jvm_tier, "call", lambda *a, **k: (
+            calls.append(a[0]), call(*a, **k))[1])
+        monkeypatch.setattr(Column, "alias", lambda self, *a, **k: (
+            aliases.append(a), alias(self, *a, **k))[1])
+        df = spark.createDataFrame([], "j string")
+        df.agg(*_column_chain(jsonf.col("j")))
+        assert calls == ["json_get_str", "json_get_int", "json_get_float"]
+        assert aliases == []
+
+    @pytest.mark.parametrize("python", [False, True], ids=["jvm", "python"])
+    def test_chain_plans_like_direct_spelling(self, spark, request, python):
+        if python:
+            request.getfixturevalue("python_tier")
+        elif jsonf_jvm_tier.load(spark.sparkContext) is None:
+            pytest.skip("JVM exact tier unavailable")
+        df = spark.createDataFrame(
+            [('{"user": {"address": {"city": "x", "geo": {"lat": 1.5}}}, '
+              '"event": {"items": [{"qty": 2}]}}',)], "j string")
+        chain = df.agg(*_column_chain(jsonf.col("j")))
+        direct = df.agg(*_column_chain(None))
+        assert chain.columns == direct.columns
+        assert chain._jdf.queryExecution().optimizedPlan().sameResult(
+            direct._jdf.queryExecution().optimizedPlan())
+        assert chain.collect() == direct.collect() == [(1, 2, 1.5)]
+
 
 class TestCallUnnesting:
     def test_literal_chain_single_udf(self, spark, python_tier):
@@ -79,8 +146,10 @@ class TestCallUnnesting:
         jc = jsonf.col("j")
         inner = jc.get(F.col("k"))
         plan = physical_plan(df.select(jsonf.json_get(inner, "b")))
-        # two dependent UDF evaluations -> two ArrowEvalPython nodes
-        assert plan.count("ArrowEvalPython") == 2
+        # two dependent UDF evaluations: the outer call reads the inner
+        # one's struct, so Spark chains both in one Python hop
+        assert plan.count("ArrowEvalPython") == 1
+        assert "json_get(json_get(j#" in plan
 
     def test_column_key_blocks_flattening_jvm_tier(self, spark):
         # on the JVM exact tier both the column-key inner call and the
@@ -162,6 +231,11 @@ class TestCastElision:
         assert raised
 
 
+@pytest.mark.usefixtures("python_tier")
+class TestCastElisionPythonTier(TestCastElision):
+    """Cast elision on the Python kernels."""
+
+
 class TestDeterminismPushdown:
     def test_filter_pushes_below_projection(self, spark, tmp_path):
         # Catalyst stand-in for the reference's leaf-ward placement hint
@@ -209,3 +283,8 @@ class TestCastElisionReviewFixes:
         )
         assert out.schema["v"].dataType.simpleString() == "bigint"
         assert [r.v for r in out.collect()] == [7, 8]
+
+
+@pytest.mark.usefixtures("python_tier")
+class TestCastElisionReviewFixesPythonTier(TestCastElisionReviewFixes):
+    """The same fixes on the Python kernels."""

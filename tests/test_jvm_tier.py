@@ -607,6 +607,9 @@ class TestNoPython:
             lambda: jsonf.json_get_int(jsonf.json_get("j", F.col("kc")), "b"),
         "json_is_null(json_get(j, 'k'))":
             lambda: jsonf.json_is_null(jsonf.json_get("j", "k")),
+        "json_is_null(json_get(j, kc))":
+            lambda: jsonf.json_is_null(jsonf.json_get("j", F.col("kc"))),
+        "json_from_scalar(ki)": lambda: jsonf.json_from_scalar(F.col("ki")),
         "json_union_to_text(json_get(j, 'k'))":
             lambda: jsonf.json_union_to_text(jsonf.json_get("j", "k")),
         "json_union_to_text(json_get(j, kc))":
@@ -664,6 +667,8 @@ class TestNoPython:
                 jsonf.col("j").get(F.col("kc")).cast("bigint"),
                 jsonf.json_get_int(jsonf.json_get("j", F.col("kc")), "b"),
                 jsonf.json_get_int(jsonf.json_get("j", "a"), "b"),
+                # a getter over a stored json_get struct column
+                jsonf.json_get_int(F.col("u"), "b"),
                 jsonf.json_is_null(jsonf.json_get("j", "k")),
                 jsonf.json_from_scalar(F.length("j")),
                 jsonf.json_get_str("j", *LONG_PATH),
@@ -671,7 +676,8 @@ class TestNoPython:
             ]
 
         def rows(cols):
-            out = df.select("i", *(c.alias(f"c{k}") for k, c in enumerate(cols)))
+            out = df.select("*", jsonf.json_get("j", "a").alias("u")).select(
+                "i", *(c.alias(f"c{k}") for k, c in enumerate(cols)))
             plan = out._jdf.queryExecution().executedPlan().toString()
             return sorted(out.collect(), key=lambda r: r.i), plan
 
