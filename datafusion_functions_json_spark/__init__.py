@@ -66,7 +66,6 @@ from .functions.api import (
     json_union_to_text,
     scalar_to_json,
 )
-from .functions.distinct_eval import eval_per_distinct
 from .register import register_all
 from .sql import rewrite_sql, sql
 from .union import UNION_DDL, UNION_SCHEMA, format_union_value
@@ -92,7 +91,6 @@ __all__ = [
     "json_union_to_text",
     "json_is_null",
     "json_extract_multi",
-    "eval_per_distinct",
     "JsonProfile",
     "register_all",
     "rewrite_sql",

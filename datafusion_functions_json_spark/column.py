@@ -70,12 +70,13 @@ class JsonColumn(Column):
     The description is ``json_get(doc, *path)`` with a tuple of literal
     path elements, ``json_get(doc, key)`` with a column of keys (``path``
     None), or a wrapped column ``doc`` (``path`` and ``key`` None): a union
-    value such as ``json_from_scalar``'s, or raw JSON text (``jsonf.col``),
-    which lookups and casts read as the document at the empty path.
+    value such as ``json_from_scalar``'s (``call`` is its function name
+    and argument), or raw JSON text (``jsonf.col``), which lookups and
+    casts read as the document at the empty path.
     ``doc`` is a column of JSON text or union structs, or a JsonColumn.
     """
 
-    def __init__(self, doc, path=None, key=None, *, text=False):
+    def __init__(self, doc, path=None, key=None, *, text=False, call=None):
         # every field is set here and Column.__init__ never runs: _jc is
         # built on first use, and Column.__getattr__ would read an unset
         # attribute as a struct field
@@ -83,6 +84,7 @@ class JsonColumn(Column):
         self._path = () if text else path
         self._key = key
         self._text = text
+        self._call = call  # (fn, arg) of a wrapped column, for its name
         self._named = False  # named in the operator spelling (j -> 'a')
 
     @cached_property
@@ -101,15 +103,13 @@ class JsonColumn(Column):
 
     def _inner_call(self):
         """``(doc, path)`` when a lookup over this value may un-nest into
-        one call of ``doc`` (reference: src/rewrite.rs:74-83): this is
-        ``json_get`` over a literal path, and ``doc`` a column rather than
-        another JSON value (a narrower guard than the reference's, which
-        would un-nest over any literal-path ``json_get``). Else None."""
-        if self._path is None or isinstance(self._doc, JsonColumn):
-            return None
-        return self._doc, self._path
+        one call of ``doc``: this is ``json_get`` over a literal path
+        (reference: src/rewrite.rs:74-83). Else None."""
+        return None if self._path is None else (self._doc, self._path)
 
     def _render(self) -> str:
+        if self._call is not None:
+            return f"{self._call[0]}({_render(self._call[1])})"
         steps = (self._key,) if self._key is not None else self._path or ()
         return " -> ".join([_render(self._doc), *map(_render, steps)])
 

@@ -228,101 +228,72 @@ json_len = json_length
 json_keys = json_object_keys
 
 
-def json_from_scalar(col, dtype: str | None = None):
+def json_from_scalar(col):
     """Lift a SQL scalar column into the union struct (reference:
-    src/json_from_scalar.rs:21-221).
+    src/json_from_scalar.rs:21-221; ``Signature::any(1)``, one argument).
 
-    ``dtype``: optional Spark type name of the input ('bigint', 'double',
-    'string', 'boolean', …). When omitted, a runtime ``typeof`` dispatch
-    covers the accepted scalar types (reference accepts Null/Bool/ints/
-    floats/strings — src/json_from_scalar.rs:48-68). Typed NULLs → null
-    arm (whole-struct NULL).
+    The arm is read from the input's type, as the reference reads its
+    DataType at planning (src/json_from_scalar.rs:48-68): boolean, the
+    integer types, float/double and string; typed NULLs give the null arm
+    (a whole-struct NULL). To choose the arm, cast the input:
+    ``json_from_scalar(col.cast("bigint"))``.
 
-    Without ``dtype``, on the JVM exact tier, this is a call of the
-    tier's ``json_from_scalar``: named like its SQL spelling, and an
-    unsupported type is the reference's error at analysis. Otherwise it
-    is pure Column expressions — no UDF.
+    On the JVM exact tier this is a call of the tier's
+    ``json_from_scalar``, as the SQL name is: the tier's builder reads the
+    type at analysis, the column is named like its SQL spelling, and an
+    unsupported type raises the reference's error at analysis. Without
+    the tier it is pure Column expressions dispatching on ``typeof`` (no
+    UDF); an unsupported type raises the reference's error at execution.
     """
     if isinstance(col, str):
         col = F.col(col)
-    jvm = None if dtype is not None else jvm_tier.call("json_from_scalar", col)
-    if jvm is not None:
-        return JsonColumn(jvm)
+    jvm = jvm_tier.call("json_from_scalar", col)
+    out = _from_scalar_by_typeof(col) if jvm is None else jvm
+    return JsonColumn(out, call=("json_from_scalar", col))
+
+
+scalar_to_json = json_from_scalar
+
+
+def _from_scalar_by_typeof(col: Column) -> Column:
+    """``json_from_scalar(col)`` without the tier: a ``CASE`` over
+    ``typeof(col)`` building the union struct."""
 
     def build(tid: int, member: str, value: Column) -> Column:
-        members = {
-            "bool": F.lit(None).cast("boolean"),
-            "int": F.lit(None).cast("bigint"),
-            "float": F.lit(None).cast("double"),
-            "str": F.lit(None).cast("string"),
-            "array": F.lit(None).cast("string"),
-            "object": F.lit(None).cast("string"),
-        }
-        members[member] = value
         s = F.struct(
             F.lit(tid).cast("tinyint").alias("type_id"),
-            members["bool"].alias("bool"),
-            members["int"].alias("int"),
-            members["float"].alias("float"),
-            members["str"].alias("str"),
-            members["array"].alias("array"),
-            members["object"].alias("object"),
+            *(
+                (value if f.name == member else F.lit(None).cast(f.dataType))
+                .alias(f.name)
+                for f in union_mod.UNION_SCHEMA.fields[1:]
+            ),
         )
         # typed NULL input -> null arm -> whole-struct NULL
         return F.when(value.isNull(), F.lit(None).cast(union_mod.UNION_DDL)).otherwise(s)
 
-    simple = {
-        "boolean": (1, "bool", "boolean"),
-        "tinyint": (2, "int", "bigint"),
-        "smallint": (2, "int", "bigint"),
-        "int": (2, "int", "bigint"),
-        "bigint": (2, "int", "bigint"),
-        "float": (3, "float", "double"),
-        "double": (3, "float", "double"),
-        "string": (4, "str", "string"),
-    }
-    if dtype is not None:
-        d = dtype.lower()
-        if d in ("void", "null"):
-            out = F.lit(None).cast(union_mod.UNION_DDL)
-        else:
-            if d not in simple:
-                raise ValueError(
-                    f"Unexpected argument type to 'json_from_scalar', got {dtype}."
-                )
-            tid, member, cast_to = simple[d]
-            out = build(tid, member, col.cast(cast_to))
-    else:
-        t = F.typeof(col)
-        out = (
-            F.when(t == "boolean", build(1, "bool", col.cast("boolean")))
-            .when(
-                t.isin("tinyint", "smallint", "int", "bigint"),
-                build(2, "int", col.cast("bigint")),
-            )
-            .when(t.isin("float", "double"), build(3, "float", col.cast("double")))
-            .when(t == "string", build(4, "str", col.cast("string")))
-            .when(t.isin("void", "null"), F.lit(None).cast(union_mod.UNION_DDL))
-            # unsupported type: raise the reference's plan-error text at
-            # execution (the SQL surface and reference both ERROR here —
-            # a silent all-null-arm column hid the mistake entirely)
-            .otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "Unexpected argument type to "
-                            "'json_from_scalar', got "
-                        ),
-                        t,
-                        F.lit("."),
-                    )
-                ).cast(union_mod.UNION_DDL)
-            )
+    t = F.typeof(col)
+    return (
+        F.when(t == "boolean", build(1, "bool", col.cast("boolean")))
+        .when(
+            t.isin("tinyint", "smallint", "int", "bigint"),
+            build(2, "int", col.cast("bigint")),
         )
-    return JsonColumn(out)
-
-
-scalar_to_json = json_from_scalar
+        .when(t.isin("float", "double"), build(3, "float", col.cast("double")))
+        .when(t == "string", build(4, "str", col.cast("string")))
+        .when(t.isin("void", "null"), F.lit(None).cast(union_mod.UNION_DDL))
+        # unsupported type: raise the reference's plan-error text at
+        # execution (the SQL surface and reference both ERROR here —
+        # a silent all-null-arm column hid the mistake entirely)
+        .otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit("Unexpected argument type to 'json_from_scalar', got "),
+                    t,
+                    F.lit("."),
+                )
+            ).cast(union_mod.UNION_DDL)
+        )
+    )
 
 
 def _union_arg(fn_key: str, u):

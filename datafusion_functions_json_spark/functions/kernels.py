@@ -240,6 +240,36 @@ def _dict_encode(json_vals, min_rows=1024, sample=256):
     return enc.dictionary.to_pylist() + [None], idx
 
 
+def _jvm_replace(e: UnicodeDecodeError):
+    """Decode error handler reading a bad sequence as one U+FFFD, the
+    JVM's way: as Python's ``replace`` does, except that an encoded
+    surrogate (``ED`` then ``A0``-``BF``) is one sequence, not three."""
+    b, i = e.object, e.start
+    if b[i] == 0xED and b[i + 1:i + 2] and 0xA0 <= b[i + 1] <= 0xBF:
+        whole = b[i + 2:i + 3] and 0x80 <= b[i + 2] <= 0xBF
+        return "\ufffd", i + (3 if whole else 2)
+    return "\ufffd", e.end
+
+
+def _repair_utf8(body, js):
+    """``body(js)`` over an Arrow batch of JSON text. When decoding the
+    batch hits invalid UTF-8 (a string column cast from binary), ``body``
+    runs again over the batch with each bad sequence read as U+FFFD, as
+    the JVM reads a Spark string (``UTF8String.toString``); only such a
+    batch pays for the repair."""
+    try:
+        return body(js)
+    except UnicodeDecodeError:
+        import codecs
+
+        import pyarrow as pa
+
+        codecs.register_error("jvm_replace", _jvm_replace)
+        raw = js.view(pa.binary()).to_pylist()
+        fixed = [b if b is None else b.decode("utf-8", "jvm_replace") for b in raw]
+        return body(pa.array(fixed, pa.string()))
+
+
 def _scalar_pairs(json_vals, paths, *, check_big=True):
     """(kind, value) per row via ``find_scalar``. When ``paths`` is a
     constant ``itertools.repeat`` — the literal-path UDF shape — the

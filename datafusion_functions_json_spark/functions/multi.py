@@ -280,6 +280,7 @@ def json_extract_multi(
     needs_big = any(k in ("union_text", "union_isnull") for _, k, _ in specs)
     from .kernels import _dict_encode as dict_encode  # closure-captured
     from .kernels import _fast_mask as fast_mask  # closure-captured
+    from .kernels import _repair_utf8 as repair_utf8  # closure-captured
 
     text_value = core.text_value
     too_deep = core._may_nest_too_deep
@@ -346,49 +347,30 @@ def json_extract_multi(
                 out.append(_coerce(k, found, v))
         return tuple(out)
 
-    @F.arrow_udf(ret)
-    def _multi(js: pa.Array) -> pa.Array:
-        # round-17: the textual guards run batch-vectorized over the
-        # Arrow buffer (kernels._fast_mask, guide §4.2) — identical
-        # conditions, one pyarrow.compute pass instead of 2+K C-string
-        # calls per row; the big-digit term only when a union kind
-        # observes it (see needs_big above). mask=None (no pyarrow /
-        # exotic batch) keeps the per-row guard path bit-identically.
-        # fast_mask is CLOSURE-captured, never imported here: a module
-        # import inside the UDF body would need the package on the
-        # worker's sys.path (foreign-cwd contract, __init__.py).
-        # round-18: (a) true Arrow UDF — the batch never materializes
-        # as pandas on either side; typed pa.array outputs
-        # (from_pandas=True keeps the pandas NaN→null coercion);
-        # (b) dictionary shortcut (kernels._dict_encode): when the
-        # batch's documents repeat, parse+extract only the DISTINCT
-        # documents (plus one None for the null-row tuple) and scatter
-        # the per-field columns back via one pc.take each —
-        # bit-identical because extract_row is a pure per-row function
-        # (the reference's dictionary-array evaluation,
-        # src/common.rs:310-327).
+    def extract(js: pa.Array) -> pa.Array:
+        """Every field over one batch. The textual guards run over the
+        whole Arrow batch (``fast_mask``; None keeps the per-row guards),
+        and a batch that repeats its documents parses only the distinct
+        ones, then one ``pc.take`` per field scatters them back
+        (``dict_encode``, the reference's dictionary-array evaluation,
+        src/common.rs:310-327). The helpers are closure-captured: an
+        import of the package inside the body would need it on the
+        worker's sys.path (foreign-cwd contract, __init__.py)."""
         import pyarrow.compute as pc
 
         pre = dict_encode(js)
-        if pre is None:
-            idx = None
-            vals = js.to_pylist()
-            mask = fast_mask(
-                js, quoted_keys, needs_big and big_digits is not None
-            )
-        else:
-            vals, idx = pre
-            mask = fast_mask(
-                vals, quoted_keys, needs_big and big_digits is not None
-            )
+        vals, idx = (js.to_pylist(), None) if pre is None else pre
+        mask = fast_mask(
+            js if idx is None else vals, quoted_keys,
+            needs_big and big_digits is not None,
+        )
         if mask is None:
             rows = [extract_row(s) for s in vals]
         else:
-            rows = [
-                extract_row(s, bool(ok)) for s, ok in zip(vals, mask)
-            ]
+            rows = [extract_row(s, bool(ok)) for s, ok in zip(vals, mask)]
         # column-wise assembly: zip(*rows) transposes at C speed
         data = list(zip(*rows)) if rows else [[] for _ in specs]
+        # from_pandas=True: a float NaN from the coercions stays SQL NULL
         children = [
             pa.array(col, type=t, from_pandas=True)
             for col, t in zip(data, out_types)
@@ -396,6 +378,11 @@ def json_extract_multi(
         if idx is not None:
             children = [pc.take(c, idx) for c in children]
         return pa.StructArray.from_arrays(children, names=out_names)
+
+    @F.arrow_udf(ret)
+    def _multi(js: pa.Array) -> pa.Array:
+        # a batch holding invalid UTF-8 is read as the JVM tier reads it
+        return repair_utf8(extract, js)
 
     # the JVM exact tier serves every kind; the Arrow UDF above is the
     # fallback

@@ -22,7 +22,9 @@ src/common.rs:159-182):
 
 Both read a union-struct document (a nested call, or a stored
 ``json_get`` column) through its ``array``/``object`` text
-(:func:`_doc_text`, reference: src/common_union.rs:49-57).
+(:func:`_doc_text`, reference: src/common_union.rs:49-57), and read a
+batch holding invalid UTF-8 with each bad sequence as U+FFFD, as the JVM
+tier does (:func:`kernels._repair_utf8`).
 
 The literal-path body takes the per-batch dictionary shortcut
 (:func:`kernels._dict_encode` — the Arrow analog of the reference's
@@ -48,7 +50,7 @@ import pyarrow.compute as pc
 from pyspark.sql import functions as F
 
 from . import kernels
-from .kernels import UNION_FIELDS, _dict_encode
+from .kernels import UNION_FIELDS, _dict_encode, _repair_utf8
 
 __all__ = [
     "literal_path_udf",
@@ -151,14 +153,21 @@ def _to_arrow(fn_key: str, out, idx=None):
     return arr if idx is None else pc.take(arr, idx)
 
 
-def _eval_literal(fn_key: str, kernel, js: pa.Array, path: tuple) -> pa.Array:
-    """``kernel`` over the documents ``js`` at one ``path`` — on the
-    distinct documents only when the batch repeats them."""
-    pre = _dict_encode(js)
-    if pre is None:
-        return _to_arrow(fn_key, kernel(js.to_pylist(), itertools.repeat(path)))
-    dvals, idx = pre
-    return _to_arrow(fn_key, kernel(dvals, itertools.repeat(path)), idx)
+def _eval(fn_key: str, kernel, js: pa.Array, path, paths=None) -> pa.Array:
+    """``kernel`` over the JSON text of ``js`` (:func:`_doc_text`) at one
+    ``path``, on the distinct documents only when the batch repeats
+    them, or at ``paths``, one per row. A batch holding invalid UTF-8 is
+    read as the JVM tier reads it (:func:`kernels._repair_utf8`)."""
+
+    def body(docs: pa.Array) -> pa.Array:
+        pre = None if paths is not None else _dict_encode(docs)
+        if pre is None:
+            each = itertools.repeat(path) if paths is None else paths
+            return _to_arrow(fn_key, kernel(docs.to_pylist(), each))
+        dvals, idx = pre
+        return _to_arrow(fn_key, kernel(dvals, itertools.repeat(path)), idx)
+
+    return _repair_utf8(body, _doc_text(js))
 
 
 @lru_cache(maxsize=512)
@@ -173,7 +182,7 @@ def literal_path_udf(fn_key: str, path: tuple):
     kernel = _KERNELS[fn_key]
 
     def fn(js: pa.Array) -> pa.Array:
-        return _eval_literal(fn_key, kernel, _doc_text(js), path)
+        return _eval(fn_key, kernel, js, path)
 
     fn.__name__ = fn_key
     return F.arrow_udf(fn, RETURN_TYPES[fn_key])
@@ -279,11 +288,10 @@ def path_udf(fn_key: str):
 
     def fn(js: pa.Array, *key_cols: pa.Array) -> pa.Array:
         path = _check_path_args(fn_key, key_cols)
-        js = _doc_text(js)
         if path is not None:
-            return _eval_literal(fn_key, kernel, js, path)
+            return _eval(fn_key, kernel, js, path)
         paths = list(zip(*(k.to_pylist() for k in key_cols)))
-        return _to_arrow(fn_key, kernel(js.to_pylist(), paths))
+        return _eval(fn_key, kernel, js, None, paths)
 
     fn.__name__ = fn_key
     return F.arrow_udf(fn, RETURN_TYPES[fn_key])
@@ -301,7 +309,8 @@ def union_to_text_udf():
 
     def fn(u: pa.Array) -> pa.Array:
         members = _members(u)
-        cols = [members[name].to_pylist() for name in UNION_FIELDS]
+        # a str member cast from binary may hold invalid UTF-8
+        cols = [_repair_utf8(pa.Array.to_pylist, members[n]) for n in UNION_FIELDS]
         return _pa_col(kernel(*cols), pa.string())
 
     fn.__name__ = "json_union_to_text"

@@ -59,6 +59,13 @@ class TestOperatorSugar:
             assert out.columns == ["j -> kc -> 'x'"]
             assert jsonf.format_union_value(out.collect()[0][0]) == "{int=1}"
 
+    def test_wrapped_union_chain_alias(self, spark):
+        # a wrapped union value is named by its call, as SQL names it
+        df = spark.createDataFrame([('{"a": 2}',)], "s string")
+        out = df.select(jsonf.json_from_scalar(F.col("s"))["a"])
+        assert out.columns == ["json_from_scalar(s) -> 'a'"]
+        assert out.collect()[0][0] is None  # a string arm has no members
+
 
 @pytest.mark.usefixtures("python_tier")
 class TestOperatorSugarPythonTier(TestOperatorSugar):
@@ -167,6 +174,34 @@ class TestCallUnnesting:
         assert "json_get(coalesce(json_get(j#" in plan
         assert plan.count("json_get(") == 3
         assert out.collect()[0].v.int == 1
+
+    @pytest.mark.parametrize("python", [False, True], ids=["jvm", "python"])
+    def test_literal_steps_un_nest_over_a_column_key_call(self, spark, request,
+                                                          python):
+        # the outer literal steps extend the path of any literal-path
+        # json_get, its document a call or a column (reference:
+        # src/rewrite.rs:74-83): json_get(json_get(j, kc), 'x', 'c')
+        if python:
+            request.getfixturevalue("python_tier")
+        elif jsonf_jvm_tier.load(spark.sparkContext) is None:
+            pytest.skip("JVM exact tier unavailable")
+        df = spark.createDataFrame(
+            [('{"k": {"x": {"c": 5}}}', "k"), ('{"k": {"x": [1]}}', "k"),
+             ('{"y": {"x": {"c": 6}}}', "y"), ('{"y": 1}', None)],
+            "j string, kc string")
+        inner = jsonf.json_get("j", F.col("kc"))
+        chain = df.select(jsonf.json_get(inner, "x")["c"])
+        direct = df.select(jsonf.json_get(inner, "x", "c"))
+        assert chain._jdf.queryExecution().optimizedPlan().sameResult(
+            direct._jdf.queryExecution().optimizedPlan())
+        # two calls, the inner one printed twice on the JVM tier (the
+        # outer call reads its container text); 7 before un-nesting
+        plan = chain._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("json_get(") == (2 if python else 3)
+        assert chain.columns == ["j -> kc -> 'x' -> 'c'"]
+        rows = [jsonf.format_union_value(r[0]) if r[0] else None
+                for r in chain.collect()]
+        assert rows == ["{int=5}", None, "{int=6}", None]
 
     def test_typed_getter_after_chain_flattens(self, spark, python_tier):
         df = spark.createDataFrame([('{"a": {"b": 2}}',)], "j string")

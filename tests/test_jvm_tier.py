@@ -24,7 +24,7 @@ import sys
 import weakref
 
 import pytest
-from pyspark.sql import Row
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 import datafusion_functions_json_spark as jsonf
@@ -183,11 +183,13 @@ def _python_call(fn, path, col):
 
 
 def _tiers(spark, docs, calls):
-    """Every ``(fn, path)`` of ``calls`` over ``docs`` on both tiers in one
-    query: the JVM tier, and the Python tier's own Arrow UDF, which runs
-    the kernels in Spark's Python workers exactly as a fallback call
-    does. Returns ``(jvm, python)``, one list of values per call."""
-    df = spark.createDataFrame(list(enumerate(docs)), "i long, j string")
+    """Every ``(fn, path)`` of ``calls`` over ``docs`` (texts, or a frame
+    of ``(i, j)`` rows) on both tiers in one query: the JVM tier, and the
+    Python tier's own Arrow UDF, which runs the kernels in Spark's Python
+    workers exactly as a fallback call does. Returns ``(jvm, python)``,
+    one list of values per call."""
+    df = docs if isinstance(docs, DataFrame) else spark.createDataFrame(
+        list(enumerate(docs)), "i long, j string")
     jvm = [jvm_tier.call(fn, F.col("j"), p) for fn, p in calls]
     py = [_python_call(fn, p, F.col("j")) for fn, p in calls]
     cols = [c.alias(f"c{k}") for k, c in enumerate(jvm + py)]
@@ -278,7 +280,7 @@ class TestDifferential:
         docs = EDGE_DOCS + ['{"k": 1.5}', '{"k": -0.0}', '{"k": 1e22}']
         df = spark.createDataFrame(list(enumerate(docs)), "i long, j string")
         u = jsonf.json_get("j", "k")
-        f = jsonf.json_from_scalar(F.col("i") / 7, "double")
+        f = jsonf.json_from_scalar(F.col("i") / 7)
         built = F.struct(
             (F.col("i") % 9 - 1).cast("tinyint").alias("type_id"),
             (F.col("i") % 3 == 0).alias("bool"),
@@ -330,6 +332,81 @@ class TestDifferential:
                 if not _same(r.jvm[name], r.py[name]):
                     bad.append((name, (docs[r.i] or "")[:60], r.jvm[name], r.py[name]))
         assert not bad, f"{len(bad)} mismatches, first: {bad[:10]}"
+
+
+# invalid UTF-8, as it reaches a string column through CAST(binary AS
+# STRING): both tiers read each bad sequence as U+FFFD, the JVM through
+# UTF8String.toString and the Python bodies through kernels._repair_utf8
+BAD_UTF8_HEX = [
+    "7B2261223A317D80",  # {"a":1} then 0x80
+    "7B2261223A2280FF227D",  # {"a":"<80 FF>"}
+    "7B2280223A317D",  # {"<80>":1}
+    "7B2261223A2263C3A980E282227D",  # {"a":"cé<80><E2 82>"}
+    "7B2278223A22C0AFEDA080F4908080222C2261223A327D",  # overlong, surrogate, > U+10FFFF
+    "5B80",  # [<80>
+    "7B2261223A22EDA0EDBFBF78EDA0A0A0227D",  # truncated and whole surrogates
+    None,
+]
+BAD_UTF8_PATHS = [(), ("a",), (0,)]
+
+
+def _bad_utf8(spark):
+    return spark.createDataFrame(
+        list(enumerate(BAD_UTF8_HEX)), "i long, h string"
+    ).selectExpr("i", "cast(unhex(h) as string) AS j")
+
+
+class TestBadUtf8:
+    """Bad UTF-8 never fails a task, and both tiers give the same rows."""
+
+    def test_getters(self, spark, tier):
+        calls = [(fn, p) for fn in FNS for p in BAD_UTF8_PATHS]
+        jvm, py = _tiers(spark, _bad_utf8(spark), calls)
+        bad = [(fn, path, i, g, w)
+               for (fn, path), got, want in zip(calls, jvm, py)
+               for i, (g, w) in enumerate(zip(got, want)) if not _same(g, w)]
+        assert not bad, f"{len(bad)} mismatches, first: {bad[:10]}"
+        pinned = [jvm[calls.index(c)][:3] for c in (
+            ("json_get_int", ("a",)), ("json_get_str", ("a",)),
+            ("json_get_json", ("a",)), ("json_length", ()))]
+        assert list(zip(*pinned)) == [
+            (1, None, "1", 1),
+            (None, "\ufffd\ufffd", '"\ufffd\ufffd"', 1),
+            (None, None, None, 1),
+        ]
+
+    def test_sql(self, spark, tier, monkeypatch):
+        _bad_utf8(spark).createOrReplaceTempView("bad_utf8")
+        q = ("SELECT i, json_get_int(j, 'a'), json_get_str(j, 'a'),"
+             " json_get_json(j, 'a'), json_length(j), json_as_text(j, 'x'),"
+             " json_object_keys(j), json_get_json(j, 0),"
+             " json_union_to_text(json_get(j, 'a')),"
+             " json_union_to_text(json_from_scalar(j)) FROM bad_utf8")
+        jsonf.register_all(spark)
+        got = sorted(spark.sql(q).collect())
+        monkeypatch.setattr(jvm_tier, "load", lambda sc: None)
+        try:
+            jsonf.register_all(spark)
+            plan = spark.sql(q)._jdf.queryExecution().executedPlan().toString()
+            assert "ArrowEvalPython" in plan
+            want = sorted(spark.sql(q).collect())
+        finally:
+            monkeypatch.undo()
+            jsonf.register_all(spark)
+        assert got == want
+
+    def test_multi(self, spark, tier, monkeypatch):
+        fields = {"a": ("int", "a"), "s": ("str", "a"), "t": ("text", "a"),
+                  "x": ("text", "x"), "n": ("length",), "e": ("exists", "a"),
+                  "u": ("union_text", "a")}
+        df = _bad_utf8(spark)
+        jvm = jsonf.json_extract_multi("j", fields)
+        monkeypatch.setattr(jvm_tier, "load", lambda sc: None)
+        py = jsonf.json_extract_multi("j", fields)
+        rows = df.select("i", jvm.alias("jvm"), py.alias("py")).collect()
+        assert len(rows) == len(BAD_UTF8_HEX)
+        bad = [(r.i, r.jvm, r.py) for r in rows if not _same(r.jvm, r.py)]
+        assert not bad, bad
 
 
 class TestRouting:

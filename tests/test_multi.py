@@ -246,134 +246,3 @@ class TestMultiEquivalence:
         ).collect()
         assert [(r.u.n, r.u.c) for r in out] == [(r.n, r.c) for r in out]
         assert [(r.n, r.c) for r in out] == [(2, None), (1, 2), (None, None)]
-
-
-class TestEvalPerDistinct:
-    """eval_per_distinct: the dict-encoding-spirit distinct→evaluate→join
-    (reference common.rs:310-327 runs kernels on dictionary VALUES; the
-    relational spelling must be byte-identical to per-row evaluation)."""
-
-    DOCS = [
-        '{"k": 1, "s": "a"}',
-        '{"k": 1, "s": "a"}',      # duplicate doc
-        '{"k": 2}',
-        "not json",
-        "",
-        None,
-        None,                       # duplicate NULL
-        ' {"k": 3, "s": "ws"}',
-    ]
-
-    def _df(self, spark):
-        return spark.createDataFrame(
-            [(i, d) for i, d in enumerate(self.DOCS)], "id int, j string"
-        )
-
-    def test_matches_per_row_evaluation(self, spark):
-        df = self._df(spark)
-        exprs = {
-            "k": lambda c: jsonf.json_get_int(c, "k"),
-            "s": lambda c: jsonf.json_as_text(c, "s"),
-        }
-        got = {
-            r.id: (r.k, r.s)
-            for r in jsonf.eval_per_distinct(df, "j", exprs).collect()
-        }
-        want = {
-            r.id: (r.k, r.s)
-            for r in df.select(
-                "id",
-                jsonf.json_get_int("j", "k").alias("k"),
-                jsonf.json_as_text("j", "s").alias("s"),
-            ).collect()
-        }
-        assert got == want  # includes NULL and malformed docs
-
-    def test_column_exprs_and_evaluation_count(self, spark):
-        # Column (non-callable) exprs work, and the Python kernel runs
-        # over the DISTINCT set only — pinned with an accumulator inside
-        # a pandas UDF counting processed rows (local mode: no task
-        # retries to inflate it; the persist-free plan evaluates the
-        # distinct side once for the single action)
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        df = self._df(spark)
-        acc = spark.sparkContext.accumulator(0)
-
-        @pandas_udf("long")
-        def counted_extract(s: pd.Series) -> pd.Series:
-            acc.add(len(s))
-            return pd.Series(
-                [len(x) if x is not None else None for x in s],
-                dtype="object",
-            )
-
-        out = jsonf.eval_per_distinct(
-            df, "j", {"n": counted_extract(F.col("j"))}
-        )
-        rows = {r.id: r.n for r in out.collect()}
-        n_distinct = len({d for d in self.DOCS if d is not None})
-        assert rows[0] == len(self.DOCS[0])
-        assert rows[5] is None  # NULL doc matched null-safely
-        # 8 input rows, 5 distinct non-null docs (+1 NULL distinct row)
-        assert acc.value <= n_distinct + 1, acc.value
-
-    def test_join_modes_and_validation(self, spark):
-        from spark_pipeline_ops.plans import explain_str
-
-        df = self._df(spark)
-        exprs = {"k": lambda c: jsonf.json_get_int(c, "k")}
-        plan_b = explain_str(
-            jsonf.eval_per_distinct(df, "j", exprs, join="broadcast")
-        )
-        assert "BroadcastHashJoin" in plan_b
-        plan_s = explain_str(
-            jsonf.eval_per_distinct(df, "j", exprs, join="shuffle")
-        )
-        assert "ShuffledHashJoin" in plan_s or "SortMergeJoin" in plan_s
-        with pytest.raises(ValueError, match="unknown join"):
-            jsonf.eval_per_distinct(df, "j", exprs, join="bogus")
-        with pytest.raises(ValueError, match="already exist"):
-            jsonf.eval_per_distinct(df, "j", {"id": exprs["k"]})
-        with pytest.raises(ValueError, match="reserved"):
-            jsonf.eval_per_distinct(
-                df, "j", {"__dict_eval_doc": exprs["k"]}
-            )
-
-    def test_sql_cte_recipe(self, spark):
-        # The README's spelling for jsonf.sql / pure-SQL users (VERDICT
-        # r13 item 6): DISTINCT subquery -> extract over the distinct
-        # side -> null-safe (<=>) join back. Must be byte-identical to
-        # the Python API on the same docs, NULL/malformed included.
-        from datafusion_functions_json_spark import register_all
-
-        register_all(spark)
-        df = self._df(spark)
-        df.createOrReplaceTempView("epd_docs")
-        out = spark.sql(
-            """
-            WITH dict AS (
-              SELECT __doc,
-                     json_get_int(__doc, 'k') AS k,
-                     json_as_text(__doc, 's') AS s
-              FROM (SELECT DISTINCT j AS __doc FROM epd_docs)
-            )
-            SELECT t.id, d.k, d.s
-            FROM epd_docs t LEFT JOIN dict d ON t.j <=> d.__doc
-            """
-        )
-        got = {r.id: (r.k, r.s) for r in out.collect()}
-        want = {
-            r.id: (r.k, r.s)
-            for r in jsonf.eval_per_distinct(
-                df,
-                "j",
-                {
-                    "k": lambda c: jsonf.json_get_int(c, "k"),
-                    "s": lambda c: jsonf.json_as_text(c, "s"),
-                },
-            ).collect()
-        }
-        assert got == want
-        spark.catalog.dropTempView("epd_docs")

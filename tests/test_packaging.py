@@ -120,3 +120,24 @@ def test_json_package_stands_alone(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "alone" in out.stdout
+
+
+def test_public_surface_is_pinned():
+    # adding or removing a public name takes a deliberate edit here
+    import datafusion_functions_json_spark as jsonf
+
+    reference = [  # the reference's 13 functions (src/lib.rs:69-96)
+        "json_get", "json_get_str", "json_get_int", "json_get_float",
+        "json_get_bool", "json_get_json", "json_get_array", "json_as_text",
+        "json_contains", "json_length", "json_object_keys",
+        "json_from_scalar", "json_union_to_text",
+    ]
+    aliases = ["json_len", "json_keys", "scalar_to_json"]
+    sugar = ["JsonColumn", "col", "json_is_null"]
+    multi = ["json_extract_multi", "JsonProfile"]
+    sql = ["register_all", "rewrite_sql", "sql"]
+    union = ["UNION_SCHEMA", "UNION_DDL", "format_union_value"]
+    surface = reference + aliases + sugar + multi + sql + union
+    assert sorted(jsonf.__all__) == sorted(surface)
+    assert len(set(jsonf.__all__)) == len(jsonf.__all__)
+    assert all(hasattr(jsonf, name) for name in surface)

@@ -305,7 +305,7 @@ def test_batch_mask_duplicate_keys_and_escapes():
 
 
 # ------------------------------------------- per-batch dictionary shortcut
-# (kernels._dict_encode and the pc.take scatter in udfs._eval_literal —
+# (kernels._dict_encode and the pc.take scatter in udfs._eval —
 # the Arrow analog of the reference's dictionary-array evaluation,
 # src/common.rs:310-327)
 

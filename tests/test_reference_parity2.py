@@ -175,12 +175,12 @@ class TestLookupMatrix:
 
 class TestFromScalarEdges:
     # reference: tests/main.rs:2447-2615
-    def _lift(self, spark, sql_expr, dtype=None):
+    def _lift(self, spark, sql_expr):
         df = spark.createDataFrame([(1,)], "x int").select(
             F.expr(sql_expr).alias("v")
         )
         return jsonf.format_union_value(
-            df.select(jsonf.json_from_scalar("v", dtype=dtype).alias("u"))
+            df.select(jsonf.json_from_scalar("v").alias("u"))
             .collect()[0]
             .u
         )

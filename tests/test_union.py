@@ -28,10 +28,18 @@ class TestFromScalar:
         assert jsonf.format_union_value(r.b) == "{bool=true}"
         assert jsonf.format_union_value(r.f) == "{float=1.5}"
 
-    def test_explicit_dtype(self, spark):
-        df = spark.createDataFrame([(3,)], "x int")
-        r = df.select(jsonf.json_from_scalar("x", dtype="int").alias("u")).collect()[0]
-        assert jsonf.format_union_value(r.u) == "{int=3}"
+    def test_input_type_chooses_the_arm(self, spark):
+        # one argument, as the reference's Signature::any(1): a cast of
+        # the input chooses the arm
+        df = spark.createDataFrame([("3",)], "x string")
+        r = df.select(
+            jsonf.json_from_scalar("x").alias("s"),
+            jsonf.json_from_scalar(F.col("x").cast("int")).alias("i"),
+        ).collect()[0]
+        assert jsonf.format_union_value(r.s) == "{str=3}"
+        assert jsonf.format_union_value(r.i) == "{int=3}"
+        with pytest.raises(TypeError):
+            jsonf.json_from_scalar("x", dtype="int")
 
     def test_round_trip_to_text(self, spark):
         # reference: tests/main.rs:2446-2577 (scalar -> union -> text)

@@ -148,10 +148,9 @@ def main():
         "the persisted base's UDF per consumer branch under lazy "
         "printing; at runtime the base executes once and later "
         "branches read InMemoryTableScan (persist-eager cache "
-        "contract, round 11). dict_extract's exchanges are the "
-        "distinct's partial/final pair + the join's (AQE coalesces "
-        "and may broadcast at runtime from actual computed-table "
-        "size). Keep adjudication notes IN THIS TOOL, not hand-edited "
+        "contract, round 11). dict_extract evaluates per row, like "
+        "dict_extract_rowwise: no distinct and no join. "
+        "Keep adjudication notes IN THIS TOOL, not hand-edited "
         "into PLANS.md — regeneration overwrites the file wholesale "
         "(round 13 nearly lost this note twice)."
     )
