@@ -508,35 +508,22 @@ def _q_sql_operators_ext(spark, sf_dir):
     cannot exercise the parse route — a fresh subprocess session runs
     the query and writes parquet; this entry returns that result read
     back, so the driver oracle hash-checks the parse-time path end to
-    end (VERDICT r14 #6). Requires a JDK or the prebuilt jar; raises
-    (driver records err) rather than silently falling back to the
+    end (VERDICT r14 #6). Requires a JDK or a cached jar (the package's
+    own build, keyed by the sources, build.sh and the Spark version);
+    raises (driver records err) rather than silently falling back to the
     Python rewriter — a fallback would fake the coverage this entry
     exists to provide."""
-    import glob as _glob
-    import shutil as _shutil
     import subprocess as _sp
     import tempfile as _tempfile
 
+    from datafusion_functions_json_spark.functions import jvm_tier
+
     repo = os.path.dirname(os.path.abspath(__file__))
-    ext_dir = os.path.join(repo, "jvm_extension")
-    jar = os.path.join(ext_dir, "build", "json-spark-ext.jar")
-    srcs = _glob.glob(
-        os.path.join(ext_dir, "src", "**", "*.java"), recursive=True
-    )
-    stale = not os.path.exists(jar) or any(
-        os.path.getmtime(s) > os.path.getmtime(jar) for s in srcs
-    )
-    if stale:
-        if _shutil.which("javac") is None:
-            raise RuntimeError(
-                "sql_operators_ext needs a JDK to (re)build the parser "
-                "extension jar and no prebuilt jar is current"
-            )
-        _sp.run(
-            ["sh", os.path.join(ext_dir, "build.sh")],
-            check=True,
-            capture_output=True,
-            cwd=ext_dir,
+    jar = jvm_tier._jar_path()
+    if not jar:
+        raise RuntimeError(
+            "sql_operators_ext needs the parser extension jar, which "
+            "failed to build (no JDK?)"
         )
     out_dir = _tempfile.mkdtemp(prefix="sqlops_ext_")
     script = (

@@ -242,58 +242,18 @@ def json_from_scalar(col):
     ``json_from_scalar``, as the SQL name is: the tier's builder reads the
     type at analysis, the column is named like its SQL spelling, and an
     unsupported type raises the reference's error at analysis. Without
-    the tier it is pure Column expressions dispatching on ``typeof`` (no
-    UDF); an unsupported type raises the reference's error at execution.
+    the tier it is the SQL name's Python UDF (:func:`udfs.from_scalar_udf`),
+    which reads the Arrow type of each batch; an unsupported type raises
+    the reference's error at execution.
     """
     if isinstance(col, str):
         col = F.col(col)
     jvm = jvm_tier.call("json_from_scalar", col)
-    out = _from_scalar_by_typeof(col) if jvm is None else jvm
+    out = udfs.from_scalar_udf()(col) if jvm is None else jvm
     return JsonColumn(out, call=("json_from_scalar", col))
 
 
 scalar_to_json = json_from_scalar
-
-
-def _from_scalar_by_typeof(col: Column) -> Column:
-    """``json_from_scalar(col)`` without the tier: a ``CASE`` over
-    ``typeof(col)`` building the union struct."""
-
-    def build(tid: int, member: str, value: Column) -> Column:
-        s = F.struct(
-            F.lit(tid).cast("tinyint").alias("type_id"),
-            *(
-                (value if f.name == member else F.lit(None).cast(f.dataType))
-                .alias(f.name)
-                for f in union_mod.UNION_SCHEMA.fields[1:]
-            ),
-        )
-        # typed NULL input -> null arm -> whole-struct NULL
-        return F.when(value.isNull(), F.lit(None).cast(union_mod.UNION_DDL)).otherwise(s)
-
-    t = F.typeof(col)
-    return (
-        F.when(t == "boolean", build(1, "bool", col.cast("boolean")))
-        .when(
-            t.isin("tinyint", "smallint", "int", "bigint"),
-            build(2, "int", col.cast("bigint")),
-        )
-        .when(t.isin("float", "double"), build(3, "float", col.cast("double")))
-        .when(t == "string", build(4, "str", col.cast("string")))
-        .when(t.isin("void", "null"), F.lit(None).cast(union_mod.UNION_DDL))
-        # unsupported type: raise the reference's plan-error text at
-        # execution (the SQL surface and reference both ERROR here —
-        # a silent all-null-arm column hid the mistake entirely)
-        .otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("Unexpected argument type to 'json_from_scalar', got "),
-                    t,
-                    F.lit("."),
-                )
-            ).cast(union_mod.UNION_DDL)
-        )
-    )
 
 
 def _union_arg(fn_key: str, u):

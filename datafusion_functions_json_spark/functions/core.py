@@ -51,7 +51,6 @@ __all__ = [
     "INT64_MIN",
     "INT64_MAX",
     "find",
-    "find_scalar",
     "find_raw",
     "exists_at",
     "length_at",
@@ -93,45 +92,11 @@ def _reject_nonfinite_token(tok):
     raise ValueError(f"invalid JSON constant {tok!r}")
 
 
-# Fast-path parser: orjson (Rust, ~3× stdlib) when available, stdlib
-# otherwise. Semantics-neutral under find_scalar's guard: docs with
-# duplicate path keys or escapes never reach it, and orjson's stricter
-# failures (>i64 ints, trailing garbage) raise into the same
-# streaming-scanner fallback the stdlib path uses. Both arms reject
-# NaN/Infinity tokens like the reference's jiter (orjson natively;
-# stdlib via parse_constant).
-try:  # pragma: no cover - environment-dependent
-    from orjson import loads as _loads
-
-    _IS_ORJSON = True
-except ImportError:  # pragma: no cover
-    import functools
-
-    _loads = functools.partial(
-        json.loads, parse_constant=_reject_nonfinite_token
-    )
-    _IS_ORJSON = False
-
-# orjson parses integers OUTSIDE [i64::MIN, u64::MAX] as lossy floats
-# (stdlib keeps arbitrary precision, and the union builder's documented
-# BigInt null-arm needs to see an int). Any 19+ digit run can be such an
-# integer (|i64::MIN| = 9223372036854775808 is 19 digits), so those docs
-# take the streaming-scanner path. Digits inside string values
-# over-trigger; that's a conservative fallback, never a wrong answer.
-_BIG_DIGITS = re.compile(r"[0-9]{19}")
-
 # The streaming finder gives up on values nested deeper than this many
-# containers (about CPython's recursion limit, checked exactly by
-# _nests_too_deep; JsonFinder.DEPTH_LIMIT on the JVM tier is the same
-# number), and orjson 3.8 crashes the process
-# on documents some 70,000 levels deep. A document with fewer '{'/'['
-# characters than this cannot nest that deep, so only such documents
-# reach orjson; the rest take the streaming finder on both tiers.
+# containers: about CPython's recursion limit, checked exactly by
+# _nests_too_deep. JsonFinder.DEPTH_LIMIT on the JVM tier is the same
+# number.
 DEPTH_LIMIT = 960
-
-
-def _may_nest_too_deep(s: str) -> bool:
-    return s.count("{") + s.count("[") >= DEPTH_LIMIT
 
 
 def _raw_decode(s: str, i: int):
@@ -339,248 +304,6 @@ def find(s, path):
         raise ValueError("unexpected scalar")
     except (ValueError, TypeError, RecursionError, IndexError, StopIteration):
         return MISSING, None
-
-
-def find_scalar(s, path):
-    """Fast twin of :func:`find` for consumers that never need raw
-    container slices (``json_get_str/int/float/bool``, ``json_contains``,
-    the to_text/is_null fusions).
-
-    Strategy: one C-speed ``json.loads`` + native dict/list walk — ~2-3×
-    faster than the streaming scan on typical documents because the whole
-    tokenize/skip loop runs inside the C decoder instead of Python. The
-    walk is only equivalent to the streaming first-match scan when object
-    keys are unique, so a cheap textual guard falls back to :func:`find`
-    whenever equivalence can't be proven from the raw text:
-
-    * any ``\\`` in the document (escapes could hide a duplicate key from
-      the textual check), or
-    * any string path key occurring more than once as a quoted token
-      (conservative: a hit inside a string *value* also falls back).
-
-    With no backslashes, decoded key text == raw key text, so counting
-    ``"key"`` occurrences bounds the number of members with that name
-    anywhere in the document. Trailing garbage / invalid JSON also falls
-    back (``loads`` raises; the streaming scan may still find the value —
-    reference never-throw contract, src/common.rs:559-578).
-
-    Returns ``(kind, value)`` like :func:`find`, EXCEPT that ARRAY/OBJECT
-    values are the *parsed* ``list``/``dict`` (not the raw text slice) —
-    callers needing raw fidelity must re-run :func:`find` for those rows.
-    """
-    if s is None:
-        return MISSING, None
-    if not isinstance(s, str):
-        # never-throw contract: a non-string document (int column fed
-        # to a getter, boolean from a rewritten `?`) must yield MISSING
-        # like :func:`find`, not a TypeError that kills the task on the
-        # `in`/`count` guards below
-        return MISSING, None
-    if "\\" in s:
-        return find(s, path)
-    for p in path:
-        if isinstance(p, str) and s.count('"%s"' % p) > 1:
-            return find(s, path)
-    if _IS_ORJSON and _BIG_DIGITS.search(s) is not None:
-        return find(s, path)
-    if _may_nest_too_deep(s):
-        return find(s, path)
-    try:
-        doc = _loads(s)
-    except Exception:
-        return find(s, path)
-    try:
-        for p in path:
-            if p is None:
-                return MISSING, None
-            if isinstance(p, str):
-                if type(doc) is dict:
-                    doc = doc[p]  # KeyError -> MISSING
-                else:
-                    return MISSING, None
-            elif isinstance(p, bool):  # guard: bool is an int subclass
-                return MISSING, None
-            else:
-                i = int(p)
-                if i < 0 or type(doc) is not list:
-                    return MISSING, None
-                doc = doc[i]  # IndexError -> MISSING
-    except (KeyError, IndexError, TypeError, ValueError):
-        return MISSING, None
-    if doc is None:
-        return NULL, None
-    if doc is True or doc is False:
-        return BOOL, doc
-    t = type(doc)
-    if t is int:
-        return INT, doc
-    if t is float:
-        return FLOAT, doc
-    if t is str:
-        return STR, doc
-    if t is list:
-        return ARRAY, doc
-    return OBJECT, doc
-
-
-def _constant_missing(_s):
-    return MISSING, None
-
-
-def make_find_scalar(path):
-    """Specialized :func:`find_scalar` for a CONSTANT path — the
-    literal-path UDF shape, which dominates real workloads. The per-path
-    work ``find_scalar`` re-derives on every row (guard needles via
-    ``'"%s"' % p`` formatting, isinstance dispatch, negative-index
-    checks) is precompiled once per batch; rows then pay only the
-    guards, one C-speed ``loads``, and a typed walk. Behavior is
-    row-for-row identical to ``find_scalar(s, path)``
-    (hypothesis-differential pinned in tests/test_property.py)."""
-    path = tuple(path)
-    ops = []
-    for p in path:
-        # constant-MISSING paths: null / bool / negative / non-int
-        # elements miss on every row (reference: src/common.rs:118-127)
-        if p is None or isinstance(p, bool):
-            return _constant_missing
-        if isinstance(p, str):
-            ops.append((True, p))
-        else:
-            try:
-                i = int(p)
-            except (TypeError, ValueError):
-                return _constant_missing
-            if i < 0:
-                return _constant_missing
-            ops.append((False, i))
-    needles = tuple('"%s"' % p for is_key, p in ops if is_key)
-    fallback = find
-    loads = _loads
-    big = _BIG_DIGITS.search if _IS_ORJSON else None
-    too_deep = _may_nest_too_deep
-
-    def find_scalar_const(s):
-        if s is None:
-            return MISSING, None
-        if "\\" in s:
-            return fallback(s, path)
-        for nd in needles:
-            if s.count(nd) > 1:
-                return fallback(s, path)
-        if big is not None and big(s) is not None:
-            return fallback(s, path)
-        if too_deep(s):
-            return fallback(s, path)
-        try:
-            doc = loads(s)
-        except Exception:
-            return fallback(s, path)
-        try:
-            for is_key, p in ops:
-                if is_key:
-                    if type(doc) is dict:
-                        doc = doc[p]  # KeyError -> MISSING
-                    else:
-                        return MISSING, None
-                else:
-                    if type(doc) is not list:
-                        return MISSING, None
-                    doc = doc[p]  # IndexError -> MISSING
-        except (KeyError, IndexError):
-            return MISSING, None
-        if doc is None:
-            return NULL, None
-        if doc is True or doc is False:
-            return BOOL, doc
-        t = type(doc)
-        if t is int:
-            return INT, doc
-        if t is float:
-            return FLOAT, doc
-        if t is str:
-            return STR, doc
-        if t is list:
-            return ARRAY, doc
-        return OBJECT, doc
-
-    return find_scalar_const
-
-
-def guard_needles(path) -> tuple:
-    """The quoted-key needles :func:`make_find_scalar`'s duplicate-key
-    guard counts for ``path`` — exposed so the batch-vectorized guard
-    (kernels._fast_mask) tests EXACTLY the same conditions."""
-    return tuple(
-        '"%s"' % p for p in path if isinstance(p, str) and not isinstance(p, bool)
-    )
-
-
-def make_fast_walk(path):
-    """The GUARDS-PASSED arm of :func:`make_find_scalar` alone: one
-    C-speed ``loads`` + typed walk, with the same parse-failure fallback
-    to the streaming scanner. Callers must only invoke it on rows a
-    guard check (textual or the batch-vectorized ``kernels._fast_mask``)
-    has already cleared — rows with escapes or duplicated path keys
-    belong to :func:`make_find_scalar` / :func:`find`.
-
-    NOTE on the big-digit guard: when the mask skipped the 19-digit
-    check (``check_big=False``), an out-of-range integer reaches orjson
-    and comes back as INT (within u64) or a lossy FLOAT (outside) — the
-    per-kernel equivalence proofs in kernels._scalar_pairs document why
-    the five scalar getters produce identical results either way."""
-    path = tuple(path)
-    for p in path:
-        if p is None or isinstance(p, bool):
-            return _constant_missing
-        if not isinstance(p, str):
-            try:
-                i = int(p)
-            except (TypeError, ValueError):
-                return _constant_missing
-            if i < 0:
-                return _constant_missing
-    ops = tuple(
-        (True, p) if isinstance(p, str) else (False, int(p)) for p in path
-    )
-    fallback = find
-    loads = _loads
-
-    def fast_walk(s):
-        if s is None:
-            return MISSING, None
-        try:
-            doc = loads(s)
-        except Exception:
-            return fallback(s, path)
-        try:
-            for is_key, p in ops:
-                if is_key:
-                    if type(doc) is dict:
-                        doc = doc[p]  # KeyError -> MISSING
-                    else:
-                        return MISSING, None
-                else:
-                    if type(doc) is not list:
-                        return MISSING, None
-                    doc = doc[p]  # IndexError -> MISSING
-        except (KeyError, IndexError):
-            return MISSING, None
-        if doc is None:
-            return NULL, None
-        if doc is True or doc is False:
-            return BOOL, doc
-        t = type(doc)
-        if t is int:
-            return INT, doc
-        if t is float:
-            return FLOAT, doc
-        if t is str:
-            return STR, doc
-        if t is list:
-            return ARRAY, doc
-        return OBJECT, doc
-
-    return fast_walk
 
 
 def find_raw(s, path):

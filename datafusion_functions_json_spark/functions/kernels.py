@@ -1,12 +1,14 @@
-"""Pandas-level kernels for the 13 JSON functions.
+"""Row kernels for the 13 JSON functions.
 
-Pure Python + pandas — no SparkSession needed, mirroring the reference's
-two-layer testability (kernels invokable directly, reference:
+Plain Python over :mod:`.core` — no SparkSession needed, mirroring the
+reference's two-layer testability (kernels invokable directly, reference:
 tests/main.rs:689-718 call ``invoke_with_args`` below the planner). Each
 kernel takes the JSON column as an iterable of ``str | None`` plus a
 per-row iterable of path tuples (``itertools.repeat(path)`` for the
 literal-path case — the dominant one), and returns plain Python lists
-ready for Arrow conversion.
+ready for Arrow conversion. Every kernel reads a document through the
+streaming finder (``core.find``/``find_raw`` and friends), as the
+reference reads it through ``jiter_json_find`` (src/common.rs:525-557).
 
 Semantics per function are documented in SURVEY.md §2.1 with reference
 file:line citations; the shared traversal lives in :mod:`.core`.
@@ -60,35 +62,6 @@ def repeat_path(path: Sequence) -> Iterable:
     return itertools.repeat(tuple(path))
 
 
-def _adaptive_raw_fallback(sample: int = 256):
-    """Per-batch chooser between the loads fast path and the streaming
-    scan for kernels that need RAW container slices.
-
-    ``find_scalar`` yields parsed containers, so container rows must
-    re-run the streaming scan — two parses. Whether that pays depends on
-    the data: scalar-heavy columns win big, container-heavy columns lose
-    ~2×. Sample the first ``sample`` rows; if container rows dominate,
-    switch the rest of the batch to the streaming scan outright (paths
-    are constant per batch in the dominant literal-path case, so the
-    sample is representative).
-    """
-    state = {"seen": 0, "containers": 0, "streaming": False}
-
-    def find_with_raw(s, p):
-        if state["streaming"]:
-            return core.find(s, p)
-        kind, v = core.find_scalar(s, p)
-        if kind == ARRAY or kind == OBJECT:
-            kind, v = core.find(s, p)  # raw-slice fidelity
-            state["containers"] += 1
-        state["seen"] += 1
-        if state["seen"] == sample and state["containers"] * 2 > sample:
-            state["streaming"] = True
-        return kind, v
-
-    return find_with_raw
-
-
 def kernel_json_get(json_vals, paths):
     """json_get → union struct columns (reference: src/json_get.rs:109-151).
 
@@ -99,9 +72,7 @@ def kernel_json_get(json_vals, paths):
     documented deviation).
     """
     tids, bools, ints, floats, strs, arrs, objs = ([] for _ in range(7))
-    fallback = _adaptive_raw_fallback()
-    for s, p in zip(json_vals, paths):
-        kind, v = fallback(s, p)
+    for kind, v in map(core.find, json_vals, paths):
         b = i = f = st = ar = ob = None
         if kind == BOOL:
             tid, b = 1, v
@@ -136,44 +107,6 @@ def kernel_json_get(json_vals, paths):
         "array": arrs,
         "object": objs,
     }
-
-
-def _fast_mask(json_vals, needles, check_big):
-    """Batch-vectorized evaluation of ``find_scalar``'s textual guards
-    (round-17 optimization, guide §4.2): True where a row may take the
-    loads+walk fast path — no backslash AND every queried path key
-    occurs at most once AND fewer than ``core.DEPTH_LIMIT`` ``{``/``[``
-    characters AND (when ``check_big``) no 19-digit run.
-    Identical conditions to the per-row guards, evaluated in one
-    pyarrow.compute pass over the whole Arrow batch instead of 2+K
-    C-string calls per row (measured 2.2x on the per-row guard cost at
-    600k nested docs). Returns a numpy bool array (null rows False), or
-    None when pyarrow is unavailable / the batch isn't plain strings —
-    callers then use the per-row guard path unchanged."""
-    try:  # pragma: no cover - environment-dependent
-        import pyarrow as pa
-        import pyarrow.compute as pc
-    except ImportError:
-        return None
-    if isinstance(json_vals, pa.ChunkedArray):
-        json_vals = json_vals.combine_chunks()
-    if isinstance(json_vals, pa.Array):
-        arr = json_vals  # arrow_udf wrappers: already an Arrow buffer
-    else:
-        try:
-            arr = pa.array(json_vals, type=pa.string(), from_pandas=True)
-        except Exception:
-            return None
-    m = pc.invert(pc.match_substring(arr, "\\"))
-    brackets = pc.add(pc.count_substring(arr, "{"), pc.count_substring(arr, "["))
-    m = pc.and_kleene(m, pc.less(brackets, core.DEPTH_LIMIT))
-    for nd in needles:
-        m = pc.and_kleene(m, pc.less_equal(pc.count_substring(arr, nd), 1))
-    if check_big:
-        m = pc.and_kleene(
-            m, pc.invert(pc.match_substring_regex(arr, "[0-9]{19}"))
-        )
-    return pc.fill_null(m, False).to_numpy(zero_copy_only=False)
 
 
 def _dict_encode(json_vals, min_rows=1024, sample=256):
@@ -270,55 +203,12 @@ def _repair_utf8(body, js):
         return body(pa.array(fixed, pa.string()))
 
 
-def _scalar_pairs(json_vals, paths, *, check_big=True):
-    """(kind, value) per row via ``find_scalar``. When ``paths`` is a
-    constant ``itertools.repeat`` — the literal-path UDF shape — the
-    per-path guards compile ONCE via :func:`core.make_find_scalar`
-    instead of being re-derived per row (~40% off the scalar kernels'
-    Python overhead on short documents), and since round 17 the guards
-    themselves run BATCH-VECTORIZED (:func:`_fast_mask`): guard-clear
-    rows take the bare loads+walk (:func:`core.make_fast_walk`),
-    everything else the unchanged per-row guarded path.
-
-    ``check_big=False`` lets a kernel skip the 19-digit orjson guard
-    when its own coercion makes the INT-vs-lossy-FLOAT distinction
-    unobservable. Proof per caller (raw integer literal out of i64
-    range; orjson returns exact int within u64, lossy float outside;
-    the guarded path would return INT with the exact value):
-    * json_get_str / json_get_bool: both INT and FLOAT coerce to NULL.
-    * json_get_int: INT out of [i64] -> NULL, FLOAT -> NULL — equal.
-    * json_get_float: float(exact_int) IS the nearest double, which is
-      exactly the lossy float the fast path returns.
-    * json_contains: kind != MISSING either way.
-    Kernels that DO observe the distinction (is_null_fused: big int ->
-    null arm; to_text_fused / json_get union: big int -> NULL vs float
-    -> canonical text) keep ``check_big=True``."""
-    if type(paths) is itertools.repeat:
-        path = tuple(next(iter(paths)))
-        const = core.make_find_scalar(path)
-        mask = _fast_mask(json_vals, core.guard_needles(path),
-                          check_big and core._IS_ORJSON)
-        if mask is None:
-            return map(const, json_vals)
-        walk = core.make_fast_walk(path)
-        vals = (
-            json_vals.tolist()
-            if hasattr(json_vals, "tolist")
-            else json_vals
-        )
-        return [
-            walk(s) if ok else const(s) for s, ok in zip(vals, mask)
-        ]
-    find_scalar = core.find_scalar
-    return (find_scalar(s, p) for s, p in zip(json_vals, paths))
-
-
 def kernel_json_get_str(json_vals, paths):
     """Value only if a JSON string; everything else NULL (reference:
     src/json_get_str.rs:74-77)."""
     return [
         v if kind == STR else None
-        for kind, v in _scalar_pairs(json_vals, paths, check_big=False)
+        for kind, v in map(core.find, json_vals, paths)
     ]
 
 
@@ -334,7 +224,7 @@ def kernel_json_get_int(json_vals, paths):
     ``todo!`` null-arm documented on kernel_json_get). Pinned by
     tests/test_functions.py::test_negative_numbers_returned."""
     out = []
-    for kind, v in _scalar_pairs(json_vals, paths, check_big=False):
+    for kind, v in map(core.find, json_vals, paths):
         if kind == INT:
             out.append(v if INT64_MIN <= v <= INT64_MAX else None)
         elif kind == STR:
@@ -351,7 +241,7 @@ def kernel_json_get_float(json_vals, paths):
     deviation as :func:`kernel_json_get_int` (reference
     src/json_get_float.rs:110 omits Peek::Minus; we return the value)."""
     out = []
-    for kind, v in _scalar_pairs(json_vals, paths, check_big=False):
+    for kind, v in map(core.find, json_vals, paths):
         if kind == FLOAT:
             out.append(v)
         elif kind == INT:
@@ -367,7 +257,7 @@ def kernel_json_get_bool(json_vals, paths):
     """JSON true/false → value; string only exact 'true'/'false'
     (reference: src/json_get_bool.rs:75-78); everything else NULL."""
     out = []
-    for kind, v in _scalar_pairs(json_vals, paths, check_big=False):
+    for kind, v in map(core.find, json_vals, paths):
         if kind == BOOL:
             out.append(v)
         elif kind == STR:
@@ -382,18 +272,17 @@ def kernel_json_get_json(json_vals, paths):
     quoted, JSON null → literal 'null' text, floats verbatim ('4.2e-1');
     missing → SQL NULL (reference: src/json_get_json.rs:84-94,
     tests/main.rs:486-512)."""
-    out = []
-    for s, p in zip(json_vals, paths):
-        kind, raw, _ = core.find_raw(s, p)
-        out.append(None if kind == MISSING else raw)
-    return out
+    return [
+        None if kind == MISSING else raw
+        for kind, raw, _ in map(core.find_raw, json_vals, paths)
+    ]
 
 
 def kernel_json_get_array(json_vals, paths):
     """JSON array → list of raw-text elements (literal 'null' kept);
     non-array / missing → NULL list (reference:
     src/json_get_array.rs:119-144)."""
-    return [core.items_at(s, p) for s, p in zip(json_vals, paths)]
+    return list(map(core.items_at, json_vals, paths))
 
 
 def kernel_json_as_text(json_vals, paths):
@@ -401,36 +290,13 @@ def kernel_json_as_text(json_vals, paths):
     any other present value → raw JSON text (reference:
     src/json_as_text.rs:101-112)."""
     out = []
-    seen = raws = 0
-    streaming = False
-    for s, p in zip(json_vals, paths):
-        if streaming:
-            kind, raw, sval = core.find_raw(s, p)
-            if kind == STR:
-                out.append(sval)
-            elif kind == MISSING or kind == NULL:
-                out.append(None)
-            else:
-                out.append(raw)
-            continue
-        kind, v = core.find_scalar(s, p)
+    for kind, raw, sval in map(core.find_raw, json_vals, paths):
         if kind == STR:
-            out.append(v)
+            out.append(sval)
         elif kind == MISSING or kind == NULL:
             out.append(None)
-        elif kind == BOOL:
-            out.append("true" if v else "false")
-        elif kind == INT and v != 0:
-            out.append(str(v))  # escape-free JSON int: raw text == str(v)
         else:
-            # FLOAT / containers need the VERBATIM slice ('4.2e-1' stays
-            # '4.2e-1'); INT 0 may be spelled '-0' in the document
-            _, raw, _ = core.find_raw(s, p)
             out.append(raw)
-            raws += 1
-        seen += 1
-        if seen == 256 and raws * 2 > seen:
-            streaming = True  # raw-needing rows dominate: skip double parse
     return out
 
 
@@ -438,19 +304,19 @@ def kernel_json_contains(json_vals, paths):
     """TRUE iff the path exists — including present-null (reference:
     tests/main.rs:21-43); invalid JSON → False, never an error (reference:
     src/json_contains.rs:103-106)."""
-    return [kind != MISSING for kind, _ in _scalar_pairs(json_vals, paths, check_big=False)]
+    return list(map(core.exists_at, json_vals, paths))
 
 
 def kernel_json_length(json_vals, paths):
     """Array element count / object key count; scalar/string/missing/
     invalid → NULL (reference: src/json_length.rs:99-128)."""
-    return [core.length_at(s, p) for s, p in zip(json_vals, paths)]
+    return list(map(core.length_at, json_vals, paths))
 
 
 def kernel_json_object_keys(json_vals, paths):
     """Object keys in document order; non-object / missing → NULL
     (reference: src/json_object_keys.rs:122-141)."""
-    return [core.keys_at(s, p) for s, p in zip(json_vals, paths)]
+    return list(map(core.keys_at, json_vals, paths))
 
 
 def kernel_json_to_text_fused(json_vals, paths):
@@ -460,9 +326,7 @@ def kernel_json_to_text_fused(json_vals, paths):
     (strings re-encoded canonically, containers raw passthrough, null
     arm/missing/out-of-range ints => SQL NULL)."""
     out = []
-    fallback = _adaptive_raw_fallback()
-    for s, p in zip(json_vals, paths):
-        kind, v = fallback(s, p)
+    for kind, v in map(core.find, json_vals, paths):
         if kind == INT and not (INT64_MIN <= v <= INT64_MAX):
             out.append(None)  # big ints land in the null arm (union rules)
         else:
@@ -475,7 +339,7 @@ def kernel_json_is_null_fused(json_vals, paths):
     would hold the null arm (missing / json-null / invalid / big int /
     a lone-surrogate string)."""
     out = []
-    for kind, v in _scalar_pairs(json_vals, paths):
+    for kind, v in map(core.find, json_vals, paths):
         out.append(
             kind in (MISSING, NULL)
             or (kind == INT and not (INT64_MIN <= v <= INT64_MAX))

@@ -6,9 +6,9 @@ per call (mitigated by its call un-nesting for chained lookups;
 SURVEY.md §2.3). With the JVM exact tier loaded, each field is one of
 the tier's columns (:func:`.jvm_tier.multi`), so the document is scanned
 once per field inside the executor and never crosses to Python. Without
-the tier, one Arrow UDF parses each document once (C-accelerated
-``json.loads``) and emits the struct — one JVM→Python Arrow hop, one
-parse, N fields.
+the tier, one Arrow UDF parses each document once (the stdlib's
+``json.loads``, first duplicate key winning as in the reference's scan)
+and emits the struct — one JVM→Python Arrow hop, one parse, N fields.
 
 Semantics per field mirror the single-field kernels exactly (same
 coercion and null taxonomy); documents where strict full-document
@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import functools
 import json
-import re
 from typing import Mapping, Sequence, Tuple
 
 import pyarrow as pa
@@ -241,49 +240,20 @@ def json_extract_multi(
     ret = "struct<" + ",".join(f"`{n}`:{FIELD_KINDS[k]}" for n, k, _ in specs) + ">"
     # parse_constant: reject NaN/Infinity tokens like the reference's
     # jiter — such documents are invalid, every field takes the fallback
-    # row (core._reject_nonfinite_token; orjson rejects them natively)
+    # row (core._reject_nonfinite_token)
     loads = functools.partial(
         json.loads, parse_constant=core._reject_nonfinite_token
     )
-    try:  # orjson (Rust): ~6× the hooked stdlib path; guarded below
-        from orjson import loads as fast_loads
-
-        # orjson float-ifies ints outside [i64::MIN, u64::MAX]; any 19+
-        # digit run routes to the stdlib path (see core._BIG_DIGITS)
-        big_digits = re.compile(r"[0-9]{19}").search
-    except ImportError:  # pragma: no cover
-        fast_loads = loads
-        big_digits = None
 
     def first_wins(pairs):
         # duplicate keys: the reference's linear scan takes the FIRST
         # match (src/common.rs:531-539); plain dict() would keep the last
         return dict(reversed(pairs))
 
-    # textual guard (same proof as core.find_scalar): with no backslashes,
-    # counting '"key"' occurrences bounds the members with that name, so a
-    # single occurrence of every queried path key means first-match ==
-    # plain-dict lookup and the hook (and its per-object cost) is
-    # unnecessary. Any ambiguity -> stdlib loads with the first-wins hook.
-    quoted_keys = tuple(
-        '"%s"' % p
-        for p in {p for _, _, path in specs for p in path if isinstance(p, str)}
-    )
-
-    # Does any kind OBSERVE the INT-vs-lossy-FLOAT distinction orjson
-    # introduces for integers outside [i64::MIN, u64::MAX]? Only the
-    # union kinds (big int -> null arm). Every other kind coerces the
-    # two identically ('int': both -> NULL out of range; 'float':
-    # float(exact int) == the lossy double; 'text': floats take the
-    # raw-slice fallback anyway; str/bool -> NULL; exists/length
-    # untouched) — same per-kind proofs as kernels._scalar_pairs.
-    needs_big = any(k in ("union_text", "union_isnull") for _, k, _ in specs)
     from .kernels import _dict_encode as dict_encode  # closure-captured
-    from .kernels import _fast_mask as fast_mask  # closure-captured
     from .kernels import _repair_utf8 as repair_utf8  # closure-captured
 
     text_value = core.text_value
-    too_deep = core._may_nest_too_deep
 
     # Arrow output type per field (matches FIELD_KINDS / ret exactly)
     _pa_kind = {
@@ -295,7 +265,7 @@ def json_extract_multi(
     out_types = tuple(_pa_kind[FIELD_KINDS[k]] for _, k, _ in specs)
     out_names = [n for n, _, _ in specs]
 
-    def extract_row(s, use_fast=None):
+    def extract_row(s):
         if s is None:
             return tuple(
                 False
@@ -304,25 +274,15 @@ def json_extract_multi(
                 for _, k, _p in specs
             )
         try:
-            if use_fast is None:
-                use_fast = not (
-                    "\\" in s
-                    or any(s.count(q) > 1 for q in quoted_keys)
-                    or (big_digits is not None and big_digits(s) is not None)
-                    or too_deep(s)
-                )
-            if use_fast:
-                doc = fast_loads(s)
-            else:
-                doc = loads(s, object_pairs_hook=first_wins)
+            doc = loads(s, object_pairs_hook=first_wins)
         except Exception:
             return tuple(_fallback_one(s, k, p) for _, k, p in specs)
         out = []
         for _, k, p in specs:
             found, v = _nav(doc, p)
-            if not use_fast and type(v) is str:
-                # only a document with escapes can decode to a lone
-                # surrogate; such a string has no value on any kind
+            if type(v) is str:
+                # a string holding a lone surrogate has no value on any
+                # kind
                 v = text_value(v)
             if found and (
                 (
@@ -348,26 +308,18 @@ def json_extract_multi(
         return tuple(out)
 
     def extract(js: pa.Array) -> pa.Array:
-        """Every field over one batch. The textual guards run over the
-        whole Arrow batch (``fast_mask``; None keeps the per-row guards),
-        and a batch that repeats its documents parses only the distinct
-        ones, then one ``pc.take`` per field scatters them back
-        (``dict_encode``, the reference's dictionary-array evaluation,
-        src/common.rs:310-327). The helpers are closure-captured: an
-        import of the package inside the body would need it on the
-        worker's sys.path (foreign-cwd contract, __init__.py)."""
+        """Every field over one batch. A batch that repeats its documents
+        parses only the distinct ones, then one ``pc.take`` per field
+        scatters them back (``dict_encode``, the reference's
+        dictionary-array evaluation, src/common.rs:310-327). The helpers
+        are closure-captured: an import of the package inside the body
+        would need it on the worker's sys.path (foreign-cwd contract,
+        __init__.py)."""
         import pyarrow.compute as pc
 
         pre = dict_encode(js)
         vals, idx = (js.to_pylist(), None) if pre is None else pre
-        mask = fast_mask(
-            js if idx is None else vals, quoted_keys,
-            needs_big and big_digits is not None,
-        )
-        if mask is None:
-            rows = [extract_row(s) for s in vals]
-        else:
-            rows = [extract_row(s, bool(ok)) for s, ok in zip(vals, mask)]
+        rows = [extract_row(s) for s in vals]
         # column-wise assembly: zip(*rows) transposes at C speed
         data = list(zip(*rows)) if rows else [[] for _ in specs]
         # from_pandas=True: a float NaN from the coercions stays SQL NULL

@@ -4,7 +4,9 @@ These are the bodies every call runs when the JVM exact tier
 (:mod:`.jvm_tier`) is not loaded — Spark Connect, no JDK, a failed
 build; with the tier loaded no call reaches them. Every function has one
 batch body, shared by the Python API and the SQL names
-:func:`register_all` registers without the tier. The body reads the
+:func:`register_all` registers without the tier, and every body reads
+its documents through the streaming finder (:mod:`.kernels` over
+:mod:`.core`), the one parse route of this tier. The body reads the
 shapes of its arguments per batch, like the reference's one dispatch
 over (JSON array | union) x (scalar | array path) (reference:
 src/common.rs:159-182):
@@ -23,8 +25,8 @@ src/common.rs:159-182):
 Both read a union-struct document (a nested call, or a stored
 ``json_get`` column) through its ``array``/``object`` text
 (:func:`_doc_text`, reference: src/common_union.rs:49-57), and read a
-batch holding invalid UTF-8 with each bad sequence as U+FFFD, as the JVM
-tier does (:func:`kernels._repair_utf8`).
+batch holding invalid UTF-8, documents and path keys alike, with each
+bad sequence as U+FFFD, as the JVM tier does (:func:`kernels._repair_utf8`).
 
 The literal-path body takes the per-batch dictionary shortcut
 (:func:`kernels._dict_encode` — the Arrow analog of the reference's
@@ -201,6 +203,16 @@ _DF_TYPE_NAMES = {
 }
 
 
+def _df_type_name(t: pa.DataType) -> str:
+    return _DF_TYPE_NAMES.get(str(t), str(t).capitalize())
+
+
+def _keys(k: pa.Array) -> list:
+    """The values of a path column; a string key holding invalid UTF-8
+    reads each bad sequence as U+FFFD, as the JVM tier reads it."""
+    return _repair_utf8(pa.Array.to_pylist, k)
+
+
 def _check_path_args(fn_key: str, key_cols) -> tuple | None:
     """Reference arg validation, applied per Arrow batch. Returns the path
     as a tuple when every path column holds one non-null value in the
@@ -233,10 +245,9 @@ def _check_path_args(fn_key: str, key_cols) -> tuple | None:
             or pa.types.is_large_string(t)
             or pa.types.is_integer(t)
         ):
-            name = _DF_TYPE_NAMES.get(str(t), str(t).capitalize())
             raise ValueError(
                 f"Unexpected argument type to '{fn_key}' at position {i + 2}, "
-                f"expected string or int, got {name}."
+                f"expected string or int, got {_df_type_name(t)}."
             )
     constant = [
         len(k) > 0
@@ -245,7 +256,7 @@ def _check_path_args(fn_key: str, key_cols) -> tuple | None:
         for k in key_cols
     ]
     if all(constant):
-        return tuple(k[0].as_py() for k in key_cols)
+        return tuple(_keys(k.slice(0, 1))[0] for k in key_cols)
     if len(key_cols) > 1 and any(
         len(k) > 1 and not c and k.null_count < len(k)
         for k, c in zip(key_cols, constant)
@@ -290,7 +301,7 @@ def path_udf(fn_key: str):
         path = _check_path_args(fn_key, key_cols)
         if path is not None:
             return _eval(fn_key, kernel, js, path)
-        paths = list(zip(*(k.to_pylist() for k in key_cols)))
+        paths = list(zip(*map(_keys, key_cols)))
         return _eval(fn_key, kernel, js, None, paths)
 
     fn.__name__ = fn_key
@@ -360,7 +371,8 @@ def from_scalar_udf():
             arm = next((a for is_t, a in _SCALAR_ARMS if is_t(s.type)), None)
             if arm is None:
                 raise ValueError(
-                    f"Unsupported type for json_from_scalar: {s.type}."
+                    "Unsupported type for json_from_scalar: "
+                    f"{_df_type_name(s.type)}."
                 )
             children[arm] = s.cast(_UNION_PA_TYPES[arm])
             children[0] = pc.if_else(

@@ -5,9 +5,10 @@ Mirrors the reference's kernel-level tests (reference: tests/main.rs:
 (SURVEY.md §7.5: key-missing vs value-is-json-null vs invalid-json).
 """
 
+import json
 import math
 
-from datafusion_functions_json_spark.functions import core
+from datafusion_functions_json_spark.functions import core, kernels
 from datafusion_functions_json_spark.functions.core import (
     ARRAY,
     BOOL,
@@ -100,75 +101,87 @@ class TestFind:
         assert core.find('{"a": { "b" : 1 }}', ("a",)) == (OBJECT, '{ "b" : 1 }')
 
 
+def _scalar_kernels(s, path):
+    """What the scalar getters give for one document: json_get_int,
+    json_get_str and json_contains through the kernels."""
+    p = kernels.repeat_path(path)
+    return (
+        kernels.kernel_json_get_int([s], p)[0],
+        kernels.kernel_json_get_str([s], p)[0],
+        kernels.kernel_json_contains([s], p)[0],
+    )
+
+
 class TestFindScalar:
-    """The json.loads fast path must be indistinguishable from the
-    streaming scan for every scalar-kernel-visible behavior — the guard
-    must catch every document where plain loads (last-wins) would diverge
-    from the streaming first-match rule."""
+    """Documents where a whole-document parse (last key wins, strict about
+    trailing text) would diverge from the streaming first-match scan that
+    every kernel reads through."""
 
     def test_duplicate_keys_first_wins(self):
-        # textual guard sees '"a"' twice -> falls back to streaming
-        assert core.find_scalar('{"a": 1, "a": 2}', ("a",)) == (INT, 1)
+        assert core.find('{"a": 1, "a": 2}', ("a",)) == (INT, 1)
+        assert _scalar_kernels('{"a": 1, "a": 2}', ("a",)) == (1, None, True)
 
     def test_duplicate_keys_nested(self):
         s = '{"o": {"a": 1, "a": 2}}'
-        assert core.find_scalar(s, ("o", "a")) == (INT, 1)
+        assert core.find(s, ("o", "a")) == (INT, 1)
+        assert _scalar_kernels(s, ("o", "a")) == (1, None, True)
 
     def test_escaped_duplicate_key_first_wins(self):
-        # 'a' decodes to 'a': textually invisible duplicate — the
-        # backslash guard must force the streaming path
+        # 'a' decodes to 'a': a duplicate the raw text does not show
         s = '{"\\u0061": 1, "a": 2}'
-        assert core.find_scalar(s, ("a",)) == core.find(s, ("a",)) == (INT, 1)
+        assert core.find(s, ("a",)) == (INT, 1)
+        assert _scalar_kernels(s, ("a",)) == (1, None, True)
 
     def test_dup_key_lookalike_in_string_value_is_safe(self):
-        # '"a"' inside a VALUE trips the guard (conservative) — result
-        # must still be correct via the fallback
-        assert core.find_scalar('{"t": "\\"a\\"", "a": 7}', ("a",)) == (INT, 7)
+        s = '{"t": "\\"a\\"", "a": 7}'
+        assert core.find(s, ("a",)) == (INT, 7)
+        assert _scalar_kernels(s, ("t",)) == (None, '"a"', True)
 
     def test_trailing_garbage_streaming(self):
-        # loads raises on trailing junk; streaming fallback still finds it
-        assert core.find_scalar('{"foo": 1} junk', ("foo",)) == (INT, 1)
+        # the scan stops at the value; trailing junk is never read
+        assert core.find('{"foo": 1} junk', ("foo",)) == (INT, 1)
+        assert _scalar_kernels('{"foo": 1} junk', ("foo",)) == (1, None, True)
 
     def test_invalid_tail_after_value(self):
-        assert core.find_scalar('{"foo": 1, "bad', ("foo",)) == (INT, 1)
+        assert core.find('{"foo": 1, "bad', ("foo",)) == (INT, 1)
+        assert _scalar_kernels('{"foo": 1, "bad', ("bad",)) == (
+            None, None, False)
 
     def test_containers_return_parsed(self):
-        kind, v = core.find_scalar('{"a": [1, 2]}', ("a",))
-        assert kind == core.ARRAY and v == [1, 2]
-        kind, v = core.find_scalar('{"a": {"b": 1}}', ("a",))
-        assert kind == core.OBJECT and v == {"b": 1}
+        # containers come back as raw slices, which parse to the value
+        kind, v = core.find('{"a": [1, 2]}', ("a",))
+        assert kind == ARRAY and json.loads(v) == [1, 2]
+        kind, v = core.find('{"a": {"b": 1}}', ("a",))
+        assert kind == OBJECT and json.loads(v) == {"b": 1}
+        assert _scalar_kernels('{"a": [1, 2]}', ("a",)) == (None, None, True)
 
     def test_scalars_and_null(self):
-        assert core.find_scalar('{"a": null}', ("a",)) == (core.NULL, None)
-        assert core.find_scalar('{"a": "x"}', ("a",)) == (STR, "x")
-        assert core.find_scalar('{"a": 4.2e-1}', ("a",)) == (FLOAT, 0.42)
-        assert core.find_scalar("{}", ("a",)) == (MISSING, None)
+        assert core.find('{"a": null}', ("a",)) == (core.NULL, None)
+        assert core.find('{"a": "x"}', ("a",)) == (STR, "x")
+        assert core.find('{"a": 4.2e-1}', ("a",)) == (FLOAT, 0.42)
+        assert core.find("{}", ("a",)) == (MISSING, None)
+        assert _scalar_kernels('{"a": null}', ("a",)) == (None, None, True)
+        assert _scalar_kernels("{}", ("a",)) == (None, None, False)
 
     def test_bigint_beyond_i64_stays_int(self):
-        # orjson (when present as the fast-path parser) float-ifies ints
-        # outside [i64::MIN, u64::MAX]; the 19-digit-run guard must route
-        # those docs to the streaming scanner so the kind stays INT with
-        # full precision (the union builder's BigInt null-arm depends on
-        # seeing an int, and json_get_float's cast must be exact)
-        assert core.find_scalar('{"k": -9223372036854775809}', ("k",)) == (
-            INT,
-            -9223372036854775809,
-        )
-        assert core.find_scalar('{"k": 18446744073709551616}', ("k",)) == (
-            INT,
-            18446744073709551616,
-        )
-        # within i64: the fast path is exact
-        assert core.find_scalar('{"k": 9223372036854775807}', ("k",)) == (
-            INT,
-            9223372036854775807,
-        )
+        # ints keep full precision: the union builder's BigInt null arm
+        # needs to see an int, and json_get_float's cast must be exact
+        for v in (-9223372036854775809, 18446744073709551616,
+                  9223372036854775807):
+            assert core.find('{"k": %d}' % v, ("k",)) == (INT, v)
+        p = kernels.repeat_path(("k",))
+        docs = ['{"k": 9223372036854775807}', '{"k": 18446744073709551616}']
+        assert kernels.kernel_json_get_int(docs, p) == [
+            9223372036854775807, None]
+        assert kernels.kernel_json_get_float(docs, p) == [
+            9223372036854775807.0, 18446744073709551616.0]
 
     def test_path_guards(self):
-        assert core.find_scalar('{"a": [1]}', ("a", True)) == (MISSING, None)
-        assert core.find_scalar('{"a": [1]}', ("a", -1)) == (MISSING, None)
-        assert core.find_scalar('{"a": [1]}', (None,)) == (MISSING, None)
-        assert core.find_scalar(None, ("a",)) == (MISSING, None)
+        assert core.find('{"a": [1]}', ("a", True)) == (MISSING, None)
+        assert core.find('{"a": [1]}', ("a", -1)) == (MISSING, None)
+        assert core.find('{"a": [1]}', (None,)) == (MISSING, None)
+        assert core.find(None, ("a",)) == (MISSING, None)
+        assert _scalar_kernels(None, ("a",)) == (None, None, False)
 
 
 class TestFindRaw:
@@ -310,21 +323,17 @@ class TestNonFiniteTokensRejected:
     def test_all_parse_arms_reject(self):
         for s in self.CASES:
             assert core.find(s, ("k",)) == (MISSING, None), s
-            assert core.find_scalar(s, ("k",)) == (MISSING, None), s
-            assert core.make_find_scalar(("k",))(s) == (MISSING, None), s
             assert core.exists_at(s, ("k",)) is False, s
             assert core.length_at(s, ()) is None, s
 
     def test_skipping_past_a_bad_token_rejects(self):
         # navigating to "b" must SKIP the NaN value -> lexes it -> invalid
         assert core.find('{"a": NaN, "b": 1}', ("b",)) == (MISSING, None)
-        assert core.find_scalar('{"a": NaN, "b": 1}', ("b",)) == (MISSING, None)
 
     def test_lazy_scan_before_bad_token_still_finds(self):
         # jiter is lazy: a value located BEFORE the bad token resolves
         # without ever lexing it — both tiers agree
         assert core.find('{"b": 1, "a": NaN}', ("b",)) == (INT, 1)
-        assert core.find_scalar('{"b": 1, "a": NaN}', ("b",)) == (INT, 1)
 
     def test_string_nan_values_unaffected(self):
         # "NaN" as a STRING value is valid JSON; the float STRING
@@ -337,21 +346,20 @@ class TestNonFiniteTokensRejected:
 
 class TestDeepNesting:
     def test_kernels_return_on_a_100k_deep_document(self):
-        # orjson 3.8 crashes the process (SIGSEGV) on this document, so no
-        # fast path may hand it over; run in a subprocess so a crash fails
-        # this test instead of the suite
+        # a document nested far past the recursion limit; run in a
+        # subprocess so a crash fails this test instead of the suite
         import os
         import subprocess
         import sys
 
         code = (
-            "import itertools, pyarrow as pa\n"
+            "import itertools\n"
             "from datafusion_functions_json_spark.functions import core, kernels\n"
             "deep = '{\"a\":' * 100_000 + '1' + '}' * 100_000\n"
             "print(kernels.kernel_json_get_int(\n"
-            "    pa.array([deep, '{\"b\": 3}']), itertools.repeat(('b',))))\n"
-            "print(core.find_scalar(deep, ('b',)))\n"
-            "print(core.make_find_scalar(('b',))(deep))\n"
+            "    [deep, '{\"b\": 3}'], itertools.repeat(('b',))))\n"
+            "print(core.find(deep, ('b',)))\n"
+            "print(kernels.kernel_json_length([deep], itertools.repeat(())))\n"
         )
         repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         proc = subprocess.run(
@@ -365,5 +373,5 @@ class TestDeepNesting:
         assert proc.stdout.splitlines() == [
             "[None, 3]",
             f"({MISSING}, None)",
-            f"({MISSING}, None)",
+            "[None]",
         ]

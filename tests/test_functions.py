@@ -445,12 +445,12 @@ class TestReviewFindingsRound7e:
     """Regression pins for the functions-layer review batch."""
 
     def test_non_string_document_never_throws(self, spark):
-        # find_scalar's textual guards ran before any type check: an int
-        # column fed to a getter raised TypeError and killed the task
+        # a textual guard that ran before any type check once raised
+        # TypeError on an int document and killed the task
         from datafusion_functions_json_spark.functions import core
 
-        assert core.find_scalar(5, ("a",)) == (core.MISSING, None)
-        assert core.find_scalar(True, ("a",)) == (core.MISSING, None)
+        assert core.find(5, ("a",)) == (core.MISSING, None)
+        assert core.find(True, ("a",)) == (core.MISSING, None)
         df = spark.createDataFrame([(1,)], "i bigint")
         got = df.select(
             jsonf.json_get_int(F.col("i").cast("string"), "a").alias("v")

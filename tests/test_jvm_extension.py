@@ -29,12 +29,10 @@ import sys
 
 import pytest
 
+from datafusion_functions_json_spark.functions import jvm_tier
 from datafusion_functions_json_spark.sql import rewrite_sql
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-EXT_DIR = os.path.join(REPO, "jvm_extension")
-BUILD = os.path.join(EXT_DIR, "build")
-JAR = os.path.join(BUILD, "json-spark-ext.jar")
 
 pytestmark = pytest.mark.skipif(
     shutil.which("javac") is None or shutil.which("java") is None,
@@ -45,21 +43,11 @@ pytestmark = pytest.mark.skipif(
 
 @pytest.fixture(scope="module")
 def ext_jar():
-    import glob
-
-    srcs = glob.glob(os.path.join(EXT_DIR, "src", "**", "*.java"),
-                     recursive=True)
-    stale = not os.path.exists(JAR) or any(
-        os.path.getmtime(s) > os.path.getmtime(JAR) for s in srcs
-    )
-    if stale:
-        subprocess.run(
-            ["sh", os.path.join(EXT_DIR, "build.sh")],
-            check=True,
-            capture_output=True,
-            cwd=EXT_DIR,
-        )
-    return JAR
+    # the package's own build: cached by the sources, build.sh and the
+    # Spark version it compiles against
+    jar = jvm_tier._jar_path()
+    assert jar, "the JVM extension jar failed to build"
+    return jar
 
 
 CURATED = [
@@ -155,8 +143,7 @@ def _python_results(queries):
 
 
 def _java_results(queries, jar):
-    classes = os.path.join(BUILD, "classes")
-    cmd = ["java", "-cp", classes, "jsonsparkext.JsonOperatorRewriter"]
+    cmd = ["java", "-cp", jar, "jsonsparkext.JsonOperatorRewriter"]
     proc = subprocess.run(
         cmd,
         input="\x00".join(queries).encode("utf-8"),

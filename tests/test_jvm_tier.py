@@ -18,6 +18,7 @@ import importlib.util
 import math
 import os
 import random
+import re
 import shutil
 import struct
 import sys
@@ -96,8 +97,7 @@ EDGE_DOCS = [
     # containers
     '{"k": [1, "x", null, true, {"a": [2]}]}', "[[1, 2], [3]]",
     '{"k": {"a": 1,  "b": [1, 2]}}', '[{"a": 1}, {"a": 2}]',
-    # nesting at depth 100 and at depth >= 1000; orjson crashes the
-    # process at 100,000
+    # nesting at depth 100, at depth >= 1000 and at 100,000
     _deep_obj(100), _deep_arr(100), _deep_obj(1000), _deep_arr(1000),
     _deep_obj(2500), _deep_arr(2500), _deep_obj(100_000),
     '{"deep": ' + _deep_arr(1000) + ', "k": 5}',
@@ -407,6 +407,34 @@ class TestBadUtf8:
         assert len(rows) == len(BAD_UTF8_HEX)
         bad = [(r.i, r.jvm, r.py) for r in rows if not _same(r.jvm, r.py)]
         assert not bad, bad
+
+
+    def test_key_column(self, spark, tier, monkeypatch):
+        # a path key holding invalid UTF-8 reads as U+FFFD on both tiers,
+        # whether the keys are constant in the batch (kc) or vary (kv)
+        spark.createDataFrame(
+            [(i, '{"\ufffd":1,"a":2}', "61" if i % 2 else "80")
+             for i in range(4)],
+            "i long, j string, h string",
+        ).coalesce(1).selectExpr(
+            "i", "j", "cast(unhex('80') as string) AS kc",
+            "cast(unhex(h) as string) AS kv",
+        ).createOrReplaceTempView("bad_utf8_keys")
+        q = "SELECT i, json_get_int(j, kc), json_get_int(j, kv) FROM bad_utf8_keys"
+        jsonf.register_all(spark)
+        got = sorted(spark.sql(q).collect())
+        monkeypatch.setattr(jvm_tier, "load", lambda sc: None)
+        try:
+            jsonf.register_all(spark)
+            plan = spark.sql(q)._jdf.queryExecution().executedPlan().toString()
+            assert "ArrowEvalPython" in plan
+            want = sorted(spark.sql(q).collect())
+        finally:
+            monkeypatch.undo()
+            jsonf.register_all(spark)
+        assert [tuple(r) for r in got] == [
+            (0, 1, 1), (1, 1, 2), (2, 1, 1), (3, 1, 2)]
+        assert got == want
 
 
 class TestRouting:
@@ -829,6 +857,30 @@ class TestPythonFallback:
         assert not bad, f"{len(bad)} mismatches, first: {bad[:10]}"
         assert [r[-2] for r in got].count(False) > 10  # hits, not all misses
 
+
+    def test_from_scalar_reads_the_arrow_type(self, spark, python_tier,
+                                             monkeypatch):
+        # the API and the SQL name share one Python body: the column is
+        # named like the SQL spelling, and an unsupported type raises the
+        # reference's message with DataFusion's type name
+        df = spark.createDataFrame([(7, "2020-01-01")], "i int, d string")
+        df = df.selectExpr("i", "cast(d as date) AS d")
+        df.createOrReplaceTempView("python_tier_dates")
+        u = jsonf.json_from_scalar("i")
+        out = df.select(u, jsonf.json_union_to_text(u).alias("t"))
+        assert out.columns == ["json_from_scalar(i)", "t"]
+        assert out.collect()[0].t == "7"
+        message = re.escape("Unsupported type for json_from_scalar: Date32.")
+        with pytest.raises(Exception, match=message):
+            df.select(jsonf.json_from_scalar("d")).collect()
+        try:
+            jsonf.register_all(spark)
+            with pytest.raises(Exception, match=message):
+                spark.sql("SELECT json_from_scalar(d) FROM python_tier_dates"
+                          ).collect()
+        finally:
+            monkeypatch.undo()
+            jsonf.register_all(spark)
 
     def test_sql_json_contains_requires_a_path(self, spark, python_tier,
                                               monkeypatch):

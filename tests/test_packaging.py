@@ -33,8 +33,7 @@ def test_pyproject_parses_with_required_metadata():
     for d in ("pyspark", "pyarrow", "pandas", "numpy"):
         assert d in deps, d
     # optional extras gate the import-try'd libs, never core deps
-    extras = proj["optional-dependencies"]
-    assert "orjson" in " ".join(extras["fast"])
+    assert "fast" not in proj["optional-dependencies"]
     assert meta["build-system"]["build-backend"] == "setuptools.build_meta"
 
 
@@ -94,7 +93,7 @@ def test_json_package_stands_alone(tmp_path):
     # the JSON engine never imports the pipeline operators: importing it
     # loads no spark_pipeline_ops module, the operator suite is not one
     # of its subpackages, and it registers only its own modules for
-    # by-value pickling
+    # by-value pickling. It has one parse route, so no orjson either.
     import subprocess
     import sys
 
@@ -104,6 +103,7 @@ def test_json_package_stands_alone(tmp_path):
         "from pyspark import cloudpickle; "
         "ops = [m for m in sys.modules if m.split('.')[0] == %r]; "
         "assert not ops, ops; "
+        "assert 'orjson' not in sys.modules; "
         "gone = [s for s in ('operators', 'streaming', 'oracle_twin', 'plans') "
         "if importlib.util.find_spec('datafusion_functions_json_spark.' + s)]; "
         "assert not gone, gone; "

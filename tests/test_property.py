@@ -106,26 +106,6 @@ def test_find_raw_slices_reparse(value, path):
         assert sval == expected
 
 
-@settings(max_examples=400, deadline=None)
-@given(value=json_values, path=paths, pre=ws, post=ws)
-def test_find_scalar_matches_find(value, path, pre, post):
-    """The loads-based fast path must agree with the streaming scan on
-    every document (container values compared by reparse: the fast path
-    yields parsed dict/list, the streaming path a raw slice)."""
-    s = pre + json.dumps(value) + post
-    p = tuple(path)
-    kind_f, got_f = core.find_scalar(s, p)
-    kind_s, got_s = core.find(s, p)
-    assert kind_f == kind_s
-    if kind_f in (core.ARRAY, core.OBJECT):
-        norm_f = json.loads(got_f) if isinstance(got_f, str) else got_f
-        assert norm_f == json.loads(got_s)
-    elif kind_f == core.FLOAT:
-        assert got_f == got_s or (math.isnan(got_f) and math.isnan(got_s))
-    else:
-        assert got_f == got_s
-
-
 @settings(max_examples=200, deadline=None)
 @given(value=json_values, path=paths)
 def test_exists_matches_dom(value, path):
@@ -163,7 +143,6 @@ def test_lengths_and_keys(value):
 def test_never_raises_on_garbage(junk, path):
     """The never-throw contract against arbitrary non-JSON text."""
     core.find(junk, tuple(path))
-    core.find_scalar(junk, tuple(path))
     core.find_raw(junk, tuple(path))
     core.exists_at(junk, tuple(path))
     core.length_at(junk, tuple(path))
@@ -179,119 +158,51 @@ def test_never_raises_on_garbage(junk, path):
 def test_never_raises_on_json_shaped_garbage(junk, path):
     """Same, but biased toward almost-JSON byte soup (the hard cases)."""
     core.find(junk, tuple(path))
-    core.find_scalar(junk, tuple(path))
     core.exists_at(junk, tuple(path))
     core.length_at(junk, tuple(path))
     core.keys_at(junk, tuple(path))
     core.items_at(junk, tuple(path))
 
 
-@settings(max_examples=400, deadline=None)
-@given(value=json_values, path=paths, pre=ws, post=ws)
-def test_make_find_scalar_matches_find_scalar(value, path, pre, post):
-    """The constant-path specialization must agree with per-row
-    find_scalar on every (document, path) pair — same kinds, same
-    values, same fallback decisions."""
-    s = pre + json.dumps(value) + post
-    p = tuple(path)
-    fs = core.make_find_scalar(p)
-    kind_c, got_c = fs(s)
-    kind_r, got_r = core.find_scalar(s, p)
-    assert kind_c == kind_r
-    if kind_c == core.FLOAT:
-        assert got_c == got_r or (math.isnan(got_c) and math.isnan(got_r))
-    else:
-        assert got_c == got_r
-
-
-@settings(max_examples=200, deadline=None)
-@given(junk=st.text(alphabet='{}[]",:0123456789.eE+- \n\ttrufalsn', max_size=40), path=paths)
-def test_make_find_scalar_never_raises(junk, path):
-    core.make_find_scalar(tuple(path))(junk)
-    core.make_find_scalar(tuple(path))(None)
-
-
-# -------------------------------------------- batch-vectorized guards
-# (round-17 optimization: kernels._fast_mask + core.make_fast_walk)
+# ------------------------------------------------ kernels on edge rows
 
 from datafusion_functions_json_spark.functions import kernels  # noqa: E402
 
-_BATCH_KERNELS = [
-    kernels.kernel_json_get_str,
-    kernels.kernel_json_get_int,
-    kernels.kernel_json_get_float,
-    kernels.kernel_json_get_bool,
-    kernels.kernel_json_contains,
-    kernels.kernel_json_is_null_fused,
-]
-
-
-def _run_batch_both_ways(kernel, docs, path, monkey):
-    """Kernel output with the batch-vectorized guard vs with the mask
-    disabled (per-row guard path) — must be identical row for row."""
-    fast = kernel(docs, kernels.repeat_path(path))
-    monkey.setattr(kernels, "_fast_mask", lambda *a, **k: None)
-    try:
-        slow = kernel(docs, kernels.repeat_path(path))
-    finally:
-        monkey.undo()
-    return fast, slow
-
-
-@settings(max_examples=150, deadline=None)
-@given(
-    values=st.lists(json_values, max_size=6),
-    path=paths,
-    pre=ws,
-    post=ws,
-)
-def test_batch_mask_path_matches_per_row(values, path, pre, post):
-    """Every scalar kernel must give row-identical results whether the
-    textual guards run batch-vectorized (pyarrow mask) or per row."""
-    import pytest
-
-    monkey = pytest.MonkeyPatch()
-    docs = [pre + json.dumps(v) + post for v in values] + [None]
-    p = tuple(path)
-    for kernel in _BATCH_KERNELS:
-        fast, slow = _run_batch_both_ways(kernel, docs, p, monkey)
-        assert list(fast) == list(slow), kernel.__name__
-
 
 def test_batch_mask_big_int_proofs():
-    """The check_big=False kernels must be unobservably equal on
-    integers outside i64 — the documented proof cases (orjson exact int
-    within u64, lossy float outside) — and the check_big=True kernel
-    (is_null_fused) must still see the big-int null arm."""
-    import pytest
-
-    monkey = pytest.MonkeyPatch()
+    """Integers outside i64 keep their exact value through the finder:
+    the int getter gives NULL, the float getter the nearest double, and
+    is_null_fused sees the big-int null arm."""
     docs = [
         '{"k": 9223372036854775807}',    # i64 max
         '{"k": 9223372036854775808}',    # i64 max + 1 (u64 range)
         '{"k": 18446744073709551615}',   # u64 max
-        '{"k": 18446744073709551616}',   # u64 max + 1 (lossy float)
+        '{"k": 18446744073709551616}',   # u64 max + 1
         '{"k": -9223372036854775808}',   # i64 min
-        '{"k": -9223372036854775809}',   # i64 min - 1 (lossy float)
+        '{"k": -9223372036854775809}',   # i64 min - 1
         '{"k": 1.5}',
-        '{"k": "9223372036854775808"}',  # string: untouched by parser
+        '{"k": "9223372036854775808"}',  # string: out of range for i64
         None,
     ]
-    for kernel in _BATCH_KERNELS:
-        fast, slow = _run_batch_both_ways(kernel, docs, ("k",), monkey)
-        assert list(fast) == list(slow), kernel.__name__
-    # the distinction-observing kernel: big ints land in the null arm
-    assert kernels.kernel_json_is_null_fused(
-        docs[:6], kernels.repeat_path(("k",))
-    ) == [False, True, True, True, False, True]
+    p = kernels.repeat_path(("k",))
+    assert kernels.kernel_json_get_int(docs, p) == [
+        2**63 - 1, None, None, None, -(2**63), None, None, None, None]
+    assert kernels.kernel_json_get_float(docs, p) == [
+        float(2**63 - 1), float(2**63), float(2**64 - 1), float(2**64),
+        float(-(2**63)), float(-(2**63) - 1), 1.5, 9223372036854775808.0,
+        None]
+    assert kernels.kernel_json_contains(docs, p) == [True] * 8 + [False]
+    # big ints land in the union's null arm
+    assert kernels.kernel_json_is_null_fused(docs, p) == [
+        False, True, True, True, False, True, False, False, True]
 
 
 def test_batch_mask_duplicate_keys_and_escapes():
-    """Mask-fail rows (duplicate path keys, escapes) must keep the
-    streaming first-match semantics through the batch path."""
+    """Duplicate path keys and escapes keep the streaming first-match
+    semantics through the kernels."""
     docs = [
         '{"k": 1, "k": 2}',              # duplicate: first match wins
-        '{"a": {"k": 1}, "k": 2}',       # needle appears twice, nested
+        '{"a": {"k": 1}, "k": 2}',       # key appears twice, nested
         '{"\\u006b": 3}',                # escaped key spelling of "k"
         '{"k": "a\\"b"}',                # escaped quote in value
         '{"k": 7}',
