@@ -16,8 +16,9 @@ it reads the argument types when the query is analyzed, raises the
 reference's argument errors there and builds the call. Both surfaces go
 through it. :func:`register_all` installs the builders under the SQL
 names, and :func:`call` builds the Python API's calls as calls of the
-same builders (one py4j call each), so the two spellings of a call get the
-same plan, column name and errors.
+same builders (one py4j call each; :func:`multi` builds a struct of them
+in one), so the two spellings of a call get the same plan, column name
+and errors.
 
 The tier is on exactly when its jar loads into the running SparkContext.
 The jar is compiled from the repository's Java sources on first use, with
@@ -45,8 +46,8 @@ from pathlib import Path
 
 __all__ = ["MULTI_KIND_FNS", "load", "call", "multi", "register_all"]
 
-# json_extract_multi field kinds the tier serves, as the function each
-# kind reads (multi.py pins every kind to its single-field kernel)
+# json_extract_multi's field kinds, as the function each kind reads on
+# both tiers
 MULTI_KIND_FNS = {
     "str": "json_get_str",
     "int": "json_get_int",
@@ -181,18 +182,21 @@ def call(fn_key: str, doc, path=(), key=None):
     return Column(tier.call(fn_key, jc, path_json, kc))
 
 
-def multi(json_col, specs):
-    """``json_extract_multi`` over ``specs`` (``(name, kind, path)``) as a
-    struct of tier columns, or None when the tier is unavailable or a
-    kind is not one it serves."""
-    if any(k not in MULTI_KIND_FNS for _, k, _ in specs):
-        return None
-    fields = [call(MULTI_KIND_FNS[k], json_col, p) for _, k, p in specs]
-    if not fields or fields[0] is None:
-        return None
-    from pyspark.sql import functions as F
+def multi(doc, specs):
+    """``json_extract_multi`` over ``specs`` (``(name, fn_key, path)``):
+    ``struct(fn_key(doc, *path) AS name, ...)``, built by the tier in one
+    py4j call, or None when the tier is unavailable. ``doc`` is a column,
+    or a column name, which the tier resolves as ``F.col`` does without
+    ``F.col``'s round trips."""
+    from ..column import Column
 
-    return F.struct(*(c.alias(n) for c, (n, _, _) in zip(fields, specs)))
+    jc = doc if isinstance(doc, str) else getattr(doc, "_jc", None)
+    tier = None if jc is None else _active_tier()
+    if tier is None:
+        return None
+    # one JSON text: py4j would make a round trip per element of a list
+    fields_json = json.dumps([[n, fn, *p] for n, fn, p in specs])
+    return Column(tier.multi(jc, fields_json))
 
 
 def register_all(spark, names) -> bool:

@@ -37,6 +37,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.ExprCode;
 import org.apache.spark.sql.catalyst.trees.TreePattern$;
 import org.apache.spark.sql.classic.ExpressionUtils;
 import org.apache.spark.sql.classic.SparkSession;
+import org.apache.spark.sql.functions;
 import org.apache.spark.sql.types.BooleanType;
 import org.apache.spark.sql.types.ByteType;
 import org.apache.spark.sql.types.DataType;
@@ -83,7 +84,9 @@ import scala.runtime.AbstractFunction1;
  * <li>{@link #call} builds the Python API's calls, as calls of the
  *     internal functions {@code jsonsparkext.<fn>} that this class's
  *     constructor registers. So the API and SQL spellings of a call
- *     resolve to the same plan, column name and errors.</li>
+ *     resolve to the same plan, column name and errors.
+ *     {@link #multi} builds json_extract_multi's struct of such
+ *     calls.</li>
  * </ul>
  */
 public final class JsonExactTier {
@@ -261,24 +264,56 @@ public final class JsonExactTier {
     /**
      * {@code fn(doc, *path)} for the Python API, with the literal path as
      * a JSON array ({@code ["a", 0]}); or {@code fn(doc, key)} when
-     * {@code key} is a column of keys ({@code pathJson} is then null). The
+     * {@code key} is a column of keys ({@code pathJson} is then null).
+     * {@code doc} and {@code key} are each a Column or a column name. The
      * call is one of the internal function {@code fn}, which its
      * {@link SqlBuilder} builds once the argument types are known, as it
      * builds the SQL name's call.
      */
-    public Column call(String fn, Column doc, String pathJson, Column key) {
+    public Column call(String fn, Object doc, String pathJson, Object key) {
+        return ExpressionUtils.column(call(fn, expression(doc),
+            key == null ? JsonFinder.parseElements(pathJson) : null,
+            key == null ? null : expression(key)));
+    }
+
+    /**
+     * {@code struct(fn(doc, *path) AS name, ...)}, json_extract_multi's
+     * struct, with its fields as one JSON array of
+     * {@code [name, fn, *path]} arrays.
+     */
+    public Column multi(Object doc, String fieldsJson) {
+        Expression d = expression(doc);
+        Long n = JsonFinder.length(fieldsJson, new JsonFinder.Path(List.of()));
+        Column[] fields = new Column[n.intValue()];
+        for (int k = 0; k < fields.length; k++) {
+            List<Object> f = JsonFinder.parseElements(JsonFinder.getJson(
+                fieldsJson, new JsonFinder.Path(List.of((long) k))));
+            fields[k] = ExpressionUtils.column(call((String) f.get(1), d,
+                f.subList(2, f.size()), null)).as((String) f.get(0));
+        }
+        return functions.struct(fields);
+    }
+
+    /** A Column's expression, or a column name's as {@code col} resolves it. */
+    private static Expression expression(Object c) {
+        return ExpressionUtils.expression(
+            c instanceof Column ? (Column) c : functions.col((String) c));
+    }
+
+    private static Expression call(String fn, Expression doc, List<Object> path,
+                                   Expression key) {
         List<Expression> args = new ArrayList<>();
-        args.add(ExpressionUtils.expression(doc));
+        args.add(doc);
         if (key != null) {
-            args.add(ExpressionUtils.expression(key));
+            args.add(key);
         } else {
-            for (Object e : JsonFinder.parseElements(pathJson)) {
+            for (Object e : path) {
                 args.add(literal(e));
             }
         }
-        return ExpressionUtils.column(new UnresolvedFunction(
+        return new UnresolvedFunction(
             seq(List.of(INTERNAL + fn)), seq(args), false, Option.empty(), false,
-            seq(List.<SortOrder>of()), true));
+            seq(List.<SortOrder>of()), true);
     }
 
     /**
@@ -449,8 +484,8 @@ public final class JsonExactTier {
         }
 
         /**
-         * {@code json_from_scalar(v)} as the tree api.json_from_scalar(col,
-         * dtype) builds: the union arm picked by {@code v}'s type, a
+         * {@code json_from_scalar(v)}: the union arm picked by {@code v}'s
+         * type, as udfs.from_scalar_udf picks it by the Arrow type, and a
          * whole-struct NULL for a NULL {@code v} (reference
          * src/json_from_scalar.rs:48-68).
          */

@@ -30,10 +30,9 @@ import java.util.List;
  *     4300 digits (CPython's {@code int} limit);</li>
  * <li>raw slices are verbatim ({@code 4.2e-1}, {@code -0});</li>
  * <li>every value the finder skips or captures may nest at most
- *     {@link #DEPTH_LIMIT} containers deep, where CPython's recursion
- *     limit stops the Python finder; the Python kernels parse a row
- *     whole with orjson only when it has fewer than {@link #DEPTH_LIMIT}
- *     '{' and '[' characters, so the limit holds on every row.
+ *     {@link #DEPTH_LIMIT} containers deep, about where CPython's
+ *     recursion limit stops the Python finder, whose
+ *     {@code _nests_too_deep} makes the limit exactly this one.
  *     Scanning is iterative, so no depth raises
  *     {@code StackOverflowError}.</li>
  * </ul>

@@ -36,9 +36,9 @@ SCRIPT = textwrap.dedent(
     )
     got = [r.k for r in df.select(jsonf.json_get_int("j", "k").alias("k")).collect()]
     assert got == [7, None, None], got
-    # column paths, from the API and from a SQL name: on the JVM tier no
-    # Python UDF; with the tier forced off, the Python Arrow UDF (udfs,
-    # kernels and core by value)
+    # column paths, from the API and from a SQL name, and the fused
+    # multi: on the JVM tier no Python UDF; with the tier forced off, the
+    # Python Arrow UDF (multi, udfs, kernels and core by value)
     from datafusion_functions_json_spark.functions import jvm_tier
     df.createOrReplaceTempView("fc_docs")
     tier_load = jvm_tier.load
@@ -49,6 +49,8 @@ SCRIPT = textwrap.dedent(
         for q in (
             df.select(jsonf.json_get_int("j", F.col("key")).alias("k")),
             spark.sql("select json_get_int(j, key) as k from fc_docs"),
+            df.select(jsonf.json_extract_multi(
+                "j", {{"k": ("int", "k")}})["k"].alias("k")),
         ):
             plan = q._jdf.queryExecution().executedPlan().toString()
             if tier_on:
@@ -59,9 +61,6 @@ SCRIPT = textwrap.dedent(
             assert got == [7, None, None], got
     jvm_tier.load = tier_load
     jsonf.register_all(spark)
-    # fused multi (its own UDF closure)
-    u = df.select(jsonf.json_extract_multi("j", {{"k": ("int", "k")}}).alias("u"))
-    assert [r.u.k for r in u.collect()] == [7, None, None]
     # mapInPandas media path (multimodal + _codecs by value)
     from spark_pipeline_ops.operators._codecs import encode_avi
     import numpy as np

@@ -246,3 +246,65 @@ class TestMultiEquivalence:
         ).collect()
         assert [(r.u.n, r.u.c) for r in out] == [(r.n, r.c) for r in out]
         assert [(r.n, r.c) for r in out] == [(2, None), (1, 2), (None, None)]
+
+
+@pytest.fixture(params=["jvm", "python"])
+def either_tier(request, spark):
+    """Each test runs on the JVM exact tier, then with it forced off."""
+    from datafusion_functions_json_spark.functions import jvm_tier
+
+    if request.param == "python":
+        request.getfixturevalue("python_tier")
+    elif jvm_tier.load(spark.sparkContext) is None:
+        pytest.skip("JVM exact tier unavailable")
+    return request.param
+
+
+class TestOnBothTiers:
+    def test_field_names_need_no_quoting(self, spark, either_tier):
+        # the UDF's return type is no DDL text that a backtick would
+        # break, and a dot must not be read as a nested field
+        df = spark.createDataFrame([('{"a": 7, "b": "x"}',)], "j string")
+        u = jsonf.json_extract_multi(
+            "j", {"a`b": ("int", "a"), "c.d": ("str", "b")}
+        ).alias("u")
+        out = df.select(u).select("u.*")
+        assert out.columns == ["a`b", "c.d"]
+        assert [tuple(r) for r in out.collect()] == [(7, "x")]
+
+    def test_union_struct_document(self, spark, either_tier):
+        # a json_get value is read through its container text, as the
+        # single-field calls read it
+        df = spark.createDataFrame(
+            [(0, '{"a":{"b":1,"c":"x"}}'), (1, '{"a":5}'), (2, None)],
+            "i int, j string",
+        )
+        u = jsonf.json_extract_multi(
+            jsonf.json_get("j", "a"),
+            {"b": ("int", "b"), "c": ("str", "c"), "e": ("exists", "b")},
+        ).alias("u")
+        out = df.select("i", u).orderBy("i").select("u.*").collect()
+        assert [tuple(r) for r in out] == [
+            (1, "x", True), (None, None, False), (None, None, False)]
+
+
+def test_one_round_trip_on_the_jvm_tier(spark, monkeypatch):
+    # the tier builds the whole struct in one py4j call, and a column
+    # name reaches it as the name
+    from py4j.clientserver import ClientServerConnection
+
+    from datafusion_functions_json_spark.functions import jvm_tier
+
+    if jvm_tier.load(spark.sparkContext) is None:
+        pytest.skip("JVM exact tier unavailable")
+    fields = dict(FIELDS, u=("union_text", "foo", 0), z=("union_isnull",))
+    sent = []
+    send = ClientServerConnection.send_command
+    monkeypatch.setattr(ClientServerConnection, "send_command",
+                        lambda self, cmd: (sent.append(cmd), send(self, cmd))[1])
+    for doc in ("j", F.col("j")):
+        sent.clear()
+        jsonf.json_extract_multi(doc, fields)
+        # "m\nd\n" deletes a garbage-collected proxy, whenever Python
+        # collects one
+        assert len([c for c in sent if not c.startswith("m\nd\n")]) == 1
