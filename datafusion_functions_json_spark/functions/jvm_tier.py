@@ -13,12 +13,15 @@ tests/test_jvm_tier.py.
 
 Each function has one builder on the JVM, ``JsonExactTier.SqlBuilder``:
 it reads the argument types when the query is analyzed, raises the
-reference's argument errors there and builds the call. Both surfaces go
-through it. :func:`register_all` installs the builders under the SQL
-names, and :func:`call` builds the Python API's calls as calls of the
-same builders (one py4j call each; :func:`multi` builds a struct of them
-in one), so the two spellings of a call get the same plan, column name
-and errors.
+reference's argument errors there and builds the call: an expression of
+the tier's own (``JsonExactTier.Call``), which resolves the function and
+the literal path once and has generated code, so whole-stage codegen
+runs it; ``json_is_null`` and ``json_from_scalar`` become plain Catalyst
+trees. Both surfaces go through the builder. :func:`register_all`
+installs the builders under the SQL names, and :func:`call` builds the
+Python API's calls as calls of the same builders (one py4j call each;
+:func:`multi` builds a struct of them in one), so the two spellings of a
+call get the same plan, column name and errors.
 
 The tier is on exactly when its jar loads into the running SparkContext.
 The jar is compiled from the repository's Java sources on first use, with

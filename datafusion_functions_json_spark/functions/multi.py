@@ -6,10 +6,11 @@ Each field is one single-field function at one path
 function's own call gives. With the JVM exact tier loaded, the struct is
 built by the tier in one call (:func:`.jvm_tier.multi`) and no document
 crosses to Python. Without the tier, one Arrow UDF runs each field's
-batch body (:func:`.udfs._eval`: the dictionary shortcut, the bad-UTF-8
-repair and union-struct documents included) and assembles the struct:
-one JVM→Python Arrow hop, and one read of each document per field, as N
-separate calls would read it.
+batch body and assembles the struct: one JVM→Python Arrow hop, one read
+of each batch's documents (:func:`.udfs._read`: the dictionary shortcut,
+the bad-UTF-8 repair and union-struct documents included) and one scan
+of each document per field (:func:`.udfs._at`), as N separate calls
+would scan it.
 """
 
 from __future__ import annotations
@@ -61,6 +62,11 @@ def json_extract_multi(
 
     ``json_profile`` is accepted and ignored (see :class:`JsonProfile`).
     """
+    if not fields:
+        raise ValueError(
+            "json_extract_multi needs at least one field; the field map "
+            "is empty"
+        )
     specs = []
     for name, spec in fields.items():
         kind, *path = spec
@@ -77,12 +83,13 @@ def json_extract_multi(
     ])
     names = [n for n, _, _ in specs]
     evals = [(fn, udfs._KERNELS[fn], path) for _, fn, path in specs]
-    eval_ = udfs._eval  # closure-captured, like every helper of the body
+    read, at = udfs._read, udfs._at  # closure-captured, like every helper
 
     @F.arrow_udf(ret)
     def _multi(js: pa.Array) -> pa.Array:
+        docs = read(js)
         return pa.StructArray.from_arrays(
-            [eval_(fn, kernel, js, path) for fn, kernel, path in evals],
+            [at(fn, kernel, docs, path) for fn, kernel, path in evals],
             names=names,
         )
 

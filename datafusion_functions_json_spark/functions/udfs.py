@@ -155,21 +155,34 @@ def _to_arrow(fn_key: str, out, idx=None):
     return arr if idx is None else pc.take(arr, idx)
 
 
+def _read(js: pa.Array) -> tuple:
+    """The documents of a batch, read once for any number of lookups:
+    ``(texts, None)``, the JSON text of each row (:func:`_doc_text`), or,
+    when the batch repeats its documents, ``(distinct texts, idx)``, with
+    ``idx`` scattering their results back to row order
+    (:func:`kernels._dict_encode`). A batch holding invalid UTF-8 is read
+    as the JVM tier reads it (:func:`kernels._repair_utf8`)."""
+
+    def read(docs: pa.Array) -> tuple:
+        pre = _dict_encode(docs)
+        return (docs.to_pylist(), None) if pre is None else pre
+
+    return _repair_utf8(read, _doc_text(js))
+
+
+def _at(fn_key: str, kernel, docs: tuple, path) -> pa.Array:
+    """``kernel`` at one ``path`` over the documents :func:`_read` read."""
+    texts, idx = docs
+    return _to_arrow(fn_key, kernel(texts, itertools.repeat(path)), idx)
+
+
 def _eval(fn_key: str, kernel, js: pa.Array, path, paths=None) -> pa.Array:
-    """``kernel`` over the JSON text of ``js`` (:func:`_doc_text`) at one
-    ``path``, on the distinct documents only when the batch repeats
-    them, or at ``paths``, one per row. A batch holding invalid UTF-8 is
-    read as the JVM tier reads it (:func:`kernels._repair_utf8`)."""
-
-    def body(docs: pa.Array) -> pa.Array:
-        pre = None if paths is not None else _dict_encode(docs)
-        if pre is None:
-            each = itertools.repeat(path) if paths is None else paths
-            return _to_arrow(fn_key, kernel(docs.to_pylist(), each))
-        dvals, idx = pre
-        return _to_arrow(fn_key, kernel(dvals, itertools.repeat(path)), idx)
-
-    return _repair_utf8(body, _doc_text(js))
+    """``kernel`` over the documents of ``js`` (:func:`_read`) at one
+    ``path``, or at ``paths``, one per row."""
+    if paths is None:
+        return _at(fn_key, kernel, _read(js), path)
+    texts = _repair_utf8(pa.Array.to_pylist, _doc_text(js))
+    return _to_arrow(fn_key, kernel(texts, paths))
 
 
 @lru_cache(maxsize=512)

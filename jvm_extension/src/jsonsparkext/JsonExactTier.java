@@ -6,23 +6,20 @@ import java.util.Arrays;
 import java.util.List;
 import java.util.Map;
 import java.util.Objects;
-import java.util.concurrent.ConcurrentHashMap;
+import java.util.function.BiFunction;
 
 import org.apache.spark.sql.AnalysisException;
 import org.apache.spark.sql.Column;
-import org.apache.spark.sql.Row;
-import org.apache.spark.sql.RowFactory;
 import org.apache.spark.sql.catalyst.InternalRow;
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry;
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry$;
 import org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry;
 import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction;
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder;
 import org.apache.spark.sql.catalyst.expressions.Cast;
-import org.apache.spark.sql.catalyst.expressions.Coalesce;
 import org.apache.spark.sql.catalyst.expressions.CreateNamedStruct;
 import org.apache.spark.sql.catalyst.expressions.EqualTo;
 import org.apache.spark.sql.catalyst.expressions.Expression;
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow;
 import org.apache.spark.sql.catalyst.expressions.GetStructField;
 import org.apache.spark.sql.catalyst.expressions.If;
 import org.apache.spark.sql.catalyst.expressions.IsNull;
@@ -30,11 +27,15 @@ import org.apache.spark.sql.catalyst.expressions.Literal;
 import org.apache.spark.sql.catalyst.expressions.NonSQLExpression;
 import org.apache.spark.sql.catalyst.expressions.Or;
 import org.apache.spark.sql.catalyst.expressions.RuntimeReplaceable;
-import org.apache.spark.sql.catalyst.expressions.ScalaUDF;
 import org.apache.spark.sql.catalyst.expressions.SortOrder;
+import org.apache.spark.sql.catalyst.expressions.codegen.Block;
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeBlock;
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator;
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext;
 import org.apache.spark.sql.catalyst.expressions.codegen.ExprCode;
+import org.apache.spark.sql.catalyst.expressions.codegen.JavaCode;
 import org.apache.spark.sql.catalyst.trees.TreePattern$;
+import org.apache.spark.sql.catalyst.util.GenericArrayData;
 import org.apache.spark.sql.classic.ExpressionUtils;
 import org.apache.spark.sql.classic.SparkSession;
 import org.apache.spark.sql.functions;
@@ -53,10 +54,9 @@ import org.apache.spark.sql.types.ShortType;
 import org.apache.spark.sql.types.StringType;
 import org.apache.spark.sql.types.StructField;
 import org.apache.spark.sql.types.StructType;
+import org.apache.spark.unsafe.types.UTF8String;
 
 import scala.Enumeration;
-import scala.Function1;
-import scala.Function2;
 import scala.Option;
 import scala.collection.immutable.IndexedSeq;
 import scala.collection.immutable.Seq;
@@ -72,11 +72,11 @@ import scala.runtime.AbstractFunction1;
  * like the reference's one singleton UDF per function
  * (src/common_macros.rs:17-49). The builder reads the argument types when
  * the query is analyzed, raises the reference's argument errors there
- * (src/common.rs:106-141), and returns a {@link NamedCall} that prints as
- * the call and runs as one ScalaUDF over the document, plus the key when
- * the path is a per-row column (src/common.rs:106-127). A union-struct
- * document is read through its {@code array} and {@code object} text
- * (src/common_union.rs:49-57). The Python package
+ * (src/common.rs:106-141), and returns a {@link Call}, which runs the
+ * finder over the document, plus the key when the path is a per-row
+ * column (src/common.rs:106-127), or a {@link Replaced} Catalyst tree. A
+ * union-struct document is read through its {@code array} and
+ * {@code object} text (src/common_union.rs:49-57). The Python package
  * (datafusion_functions_json_spark/functions/jvm_tier.py) reaches the
  * builders two ways:
  * <ul>
@@ -107,19 +107,32 @@ public final class JsonExactTier {
     private static final DataType STRINGS =
         DataTypes.createArrayType(DataTypes.StringType, true);
 
-    /** The result type per getter, as udfs.RETURN_TYPES declares it. */
-    private static final Map<String, DataType> RESULT_TYPES = Map.ofEntries(
-        Map.entry("json_get", UNION),
-        Map.entry("json_get_str", DataTypes.StringType),
-        Map.entry("json_get_int", DataTypes.LongType),
-        Map.entry("json_get_float", DataTypes.DoubleType),
-        Map.entry("json_get_bool", DataTypes.BooleanType),
-        Map.entry("json_get_json", DataTypes.StringType),
-        Map.entry("json_get_array", STRINGS),
-        Map.entry("json_as_text", DataTypes.StringType),
-        Map.entry("json_contains", DataTypes.BooleanType),
-        Map.entry("json_length", DataTypes.LongType),
-        Map.entry("json_object_keys", STRINGS));
+    /**
+     * The functions that read a document at a path, named as the
+     * functions: each one's result type, as udfs.RETURN_TYPES declares
+     * it, and what it reads in a JSON text, as a Catalyst value.
+     */
+    private enum Fn {
+        json_get(UNION, (s, p) -> unionStruct(JsonFinder.getUnion(s, p))),
+        json_get_str(DataTypes.StringType, (s, p) -> utf8(JsonFinder.getStr(s, p))),
+        json_get_int(DataTypes.LongType, JsonFinder::getInt),
+        json_get_float(DataTypes.DoubleType, JsonFinder::getFloat),
+        json_get_bool(DataTypes.BooleanType, JsonFinder::getBool),
+        json_get_json(DataTypes.StringType, (s, p) -> utf8(JsonFinder.getJson(s, p))),
+        json_get_array(STRINGS, (s, p) -> strings(JsonFinder.getArray(s, p))),
+        json_as_text(DataTypes.StringType, (s, p) -> utf8(JsonFinder.asText(s, p))),
+        json_contains(DataTypes.BooleanType, JsonFinder::contains),
+        json_length(DataTypes.LongType, JsonFinder::length),
+        json_object_keys(STRINGS, (s, p) -> strings(JsonFinder.objectKeys(s, p)));
+
+        final DataType type;
+        final BiFunction<String, JsonFinder.Path, Object> at;
+
+        Fn(DataType type, BiFunction<String, JsonFinder.Path, Object> at) {
+            this.type = type;
+            this.at = at;
+        }
+    }
 
     /**
      * The Python API's fused union consumers over {@code json_get}
@@ -138,114 +151,21 @@ public final class JsonExactTier {
     private static final String INTERNAL = "jsonsparkext.";
 
     /**
-     * One function object per (function, path), so repeated call sites
-     * build equal expressions that Catalyst can share.
-     */
-    private static final Map<List<Object>, Object> FUNCTIONS =
-        new ConcurrentHashMap<>();
-
-    /**
      * Registers the builders {@link #call} calls, in the JVM-wide registry
      * of internal functions; the package makes one instance per JVM.
      */
     public JsonExactTier() {
         SimpleFunctionRegistry internal = FunctionRegistry$.MODULE$.internal();
-        List<String> fns = new ArrayList<>(RESULT_TYPES.keySet());
-        fns.addAll(FUSED.keySet());
+        List<String> fns = new ArrayList<>(FUSED.keySet());
+        for (Fn f : Fn.values()) {
+            fns.add(f.name());
+        }
         fns.addAll(List.of("json_union_to_text", "json_is_null", "json_from_scalar"));
         for (String fn : fns) {
             internal.createOrReplaceTempFunction(
                 INTERNAL + fn, new SqlBuilder(fn, fn, false), "scala_udf");
         }
     }
-
-    /**
-     * One getter at one path, applied to a JSON text per row. The path is
-     * the literal {@code path}, or the second argument's key per row when
-     * {@code path} is null.
-     */
-    static final class Getter implements Serializable {
-        private static final long serialVersionUID = 1L;
-
-        private final String fn;
-        private final JsonFinder.Path path;
-
-        Getter(String fn, JsonFinder.Path path) {
-            this.fn = fn;
-            this.path = path;
-        }
-
-        Object eval(Object doc) {
-            return at((String) doc, path);
-        }
-
-        Object eval(Object doc, Object key) {
-            return at((String) doc, JsonFinder.Path.ofKey(key));
-        }
-
-        private Object at(String s, JsonFinder.Path p) {
-            switch (fn) {
-                case "json_get_str":
-                    return JsonFinder.getStr(s, p);
-                case "json_get_int":
-                    return JsonFinder.getInt(s, p);
-                case "json_get_float":
-                    return JsonFinder.getFloat(s, p);
-                case "json_get_bool":
-                    return JsonFinder.getBool(s, p);
-                case "json_get_json":
-                    return JsonFinder.getJson(s, p);
-                case "json_as_text":
-                    return JsonFinder.asText(s, p);
-                case "json_contains":
-                    return JsonFinder.contains(s, p);
-                case "json_length":
-                    return JsonFinder.length(s, p);
-                case "json_get":
-                    return unionRow(JsonFinder.getUnion(s, p));
-                case "json_get_array":
-                    return JsonFinder.getArray(s, p);
-                case "json_object_keys":
-                    return JsonFinder.objectKeys(s, p);
-                default:
-                    throw new IllegalArgumentException(fn);
-            }
-        }
-    }
-
-    /** The union struct row for an arm (type id, value); null arm NULL. */
-    private static Row unionRow(Object[] arm) {
-        if (arm == null) {
-            return null;
-        }
-        int kind = (Integer) arm[0];
-        Object[] members = new Object[UNION.size()];
-        members[0] = (byte) kind;
-        members[kind] = arm[1];
-        return RowFactory.create(members);
-    }
-
-    /**
-     * json_union_to_text over a union struct row
-     * (kernels.kernel_json_union_to_text): the null arm, an unknown type id
-     * and a NULL member are NULL.
-     */
-    static String unionRowText(Object u) {
-        if (u == null) {
-            return null;
-        }
-        Row r = (Row) u;
-        Object tid = r.get(r.fieldIndex("type_id"));
-        int kind = tid == null ? 0 : ((Number) tid).intValue();
-        if (kind < 1 || kind >= UNION.size()) {
-            return null;
-        }
-        Object v = r.get(r.fieldIndex(UNION.fields()[kind].name()));
-        return v == null ? null : JsonFinder.unionText(kind, v);
-    }
-
-    private static final Object UNION_TO_TEXT =
-        (Function1<Object, String> & Serializable) JsonExactTier::unionRowText;
 
     /**
      * Python's repr of each double in {@code bits} (hexadecimal IEEE 754
@@ -369,21 +289,15 @@ public final class JsonExactTier {
         public Expression apply(Seq<Expression> args) {
             switch (fn) {
                 case "json_union_to_text":
-                case "json_is_null": {
-                    Expression u = single(args);
-                    if (typeIdOrdinal(u.dataType()) < 0) {
-                        throw argumentError(1, "a JSON union", u.dataType());
+                case "json_is_null":
+                    if (typeIdOrdinal(single(args).dataType()) < 0) {
+                        throw argumentError(1, "a JSON union", args.apply(0).dataType());
                     }
-                    if (fn.equals("json_is_null")) {
-                        return namedCall(args);
-                    }
-                    return new ScalaUDF(UNION_TO_TEXT, DataTypes.StringType, args,
-                        seq(List.<Option<ExpressionEncoder<?>>>of()), Option.empty(),
-                        Option.apply(name), true, true);
-                }
+                    return fn.equals("json_is_null") ? new Replaced(name, fn, args)
+                                                     : new Call(name, fn, args, null);
                 case "json_from_scalar":
                     single(args);
-                    return namedCall(args);
+                    return new Replaced(name, fn, args);
                 case "json_to_text_fused":
                 case "json_is_null_fused": {
                     // the consumer over json_get, as SQL spells the composition
@@ -393,42 +307,6 @@ public final class JsonExactTier {
                 }
                 default:
                     return getter(args);
-            }
-        }
-
-        /**
-         * The call of this function over {@code args} that prints as the
-         * call and runs as {@link #replacement}, built now so that its
-         * argument errors are raised at analysis.
-         */
-        private Expression namedCall(Seq<Expression> args) {
-            NamedCall call = new NamedCall(name, args, this);
-            call.replacement();
-            return call;
-        }
-
-        /**
-         * The Catalyst tree a {@link NamedCall} of this function runs as,
-         * for arguments {@link #apply} checked: {@code json_is_null(u)},
-         * {@code json_from_scalar(v)}, or a getter's ScalaUDF over the
-         * document text, plus the key when the path is a column.
-         */
-        Expression replacement(Seq<Expression> args) {
-            Expression v = args.apply(0);
-            switch (fn) {
-                case "json_is_null":
-                    return isNullArm(v, typeIdOrdinal(v.dataType()));
-                case "json_from_scalar":
-                    return fromScalar(v);
-                default:
-                    boolean keyColumn = args.size() == 2 && !args.apply(1).foldable();
-                    List<Expression> children = new ArrayList<>();
-                    children.add(v.dataType() instanceof StructType
-                        ? containerText(v, (StructType) v.dataType()) : v);
-                    if (keyColumn) {
-                        children.add(args.apply(1));
-                    }
-                    return udf(fn, keyColumn ? null : literalPath(args), seq(children));
             }
         }
 
@@ -454,7 +332,7 @@ public final class JsonExactTier {
             }
             DataType docType = args.apply(0).dataType();
             if (!(docType instanceof StringType || docType instanceof NullType
-                    || docType instanceof StructType && hasContainers((StructType) docType))) {
+                    || hasContainers(docType))) {
                 throw argumentError(1, "a string", docType);
             }
             boolean literal = true;
@@ -470,7 +348,7 @@ public final class JsonExactTier {
                 throw error("More than 1 path element is not supported when "
                     + "querying JSON using an array.");
             }
-            return namedCall(args);
+            return new Call(name, fn, args, literal ? literalPath(args) : null);
         }
 
         /** The literal path of a getter call: its arguments after the first. */
@@ -489,7 +367,7 @@ public final class JsonExactTier {
          * whole-struct NULL for a NULL {@code v} (reference
          * src/json_from_scalar.rs:48-68).
          */
-        private Expression fromScalar(Expression v) {
+        static Expression fromScalar(Expression v) {
             DataType t = v.dataType();
             if (t instanceof NullType) {
                 return Literal.create(null, UNION);
@@ -551,48 +429,42 @@ public final class JsonExactTier {
     }
 
     /**
-     * A call of {@code name} that prints as the call, like a
-     * {@link ScalaUDF}, and runs as the Catalyst tree its builder makes of
-     * the arguments, which the optimizer puts in its place: an unaliased
-     * call names its column after the call, as the Python tier's UDFs do,
-     * also inside another call. The tree is built on first use: the
-     * copies Spark makes to print the call hold arguments that cannot be
-     * evaluated.
+     * What a {@link Call} does per row, over the Catalyst values of the
+     * argument it reads and of its key column (null without one).
      */
-    static final class NamedCall extends Expression
-            implements RuntimeReplaceable, NonSQLExpression {
+    private interface Body extends BiFunction<Object, Object, Object>, Serializable {
+    }
+
+    /**
+     * A call of one of the tier's functions over {@code args}, which
+     * prints as the call: an unaliased call names its column after the
+     * call, as the Python tier's UDFs do, also inside another call.
+     */
+    private abstract static class Named extends Expression
+            implements NonSQLExpression, Serializable {
         private static final long serialVersionUID = 1L;
 
-        private static final Seq<Enumeration.Value> NODE_PATTERNS =
-            seq(List.of(TreePattern$.MODULE$.RUNTIME_REPLACEABLE()));
+        final String name;
+        final String fn;
+        final Seq<Expression> args;
 
-        private final String name;
-        private final Seq<Expression> children;
-        private final SqlBuilder builder;
-        private Expression replacement;
-
-        public NamedCall(String name, Seq<Expression> children, SqlBuilder builder) {
+        Named(String name, String fn, Seq<Expression> args) {
             this.name = name;
-            this.children = children;
-            this.builder = builder;
+            this.fn = fn;
+            this.args = args;
         }
 
-        @Override
-        public Expression replacement() {
-            if (replacement == null) {
-                replacement = builder.replacement(children);
-            }
-            return replacement;
-        }
+        /** The constructor's arguments; name, fn and args determine the rest. */
+        abstract Object[] product();
 
         @Override
         public Seq<Expression> children() {
-            return children;
+            return args;
         }
 
         @Override
-        public Expression withNewChildrenInternal(IndexedSeq<Expression> newChildren) {
-            return new NamedCall(name, newChildren, builder);
+        public boolean nullable() {
+            return true;
         }
 
         @Override
@@ -602,11 +474,8 @@ public final class JsonExactTier {
 
         @Override
         public String toString() {
-            return name + children.mkString("(", ", ", ")");
+            return name + args.mkString("(", ", ", ")");
         }
-
-        // the traits' members that Expression also declares: Java picks
-        // the class's, so each is passed on to its trait explicitly
 
         @Override
         public String sql() {
@@ -614,9 +483,121 @@ public final class JsonExactTier {
         }
 
         @Override
-        public boolean nullable() {
-            return RuntimeReplaceable.super.nullable();
+        public int productArity() {
+            return product().length;
         }
+
+        @Override
+        public Object productElement(int n) {
+            return product()[n];
+        }
+
+        @Override
+        public boolean canEqual(Object that) {
+            return that != null && that.getClass() == getClass();
+        }
+
+        @Override
+        public boolean equals(Object that) {
+            return canEqual(that) && name.equals(((Named) that).name)
+                && fn.equals(((Named) that).fn) && args.equals(((Named) that).args);
+        }
+
+        @Override
+        public int hashCode() {
+            return Objects.hash(name, fn, args);
+        }
+    }
+
+    /**
+     * A call of a getter or of json_union_to_text. Built, it resolves once
+     * what it does per row ({@link #body}): {@code fn} over its first
+     * argument at the literal {@code path} its other arguments spell, or,
+     * when {@code path} is null, over its first argument and the key
+     * column after it, if any.
+     */
+    public static final class Call extends Named {
+        private static final long serialVersionUID = 1L;
+
+        private final JsonFinder.Path path;
+        private final DataType type;
+        private final Expression key;
+        private final Body body;
+
+        public Call(String name, String fn, Seq<Expression> args, JsonFinder.Path path) {
+            super(name, fn, args);
+            this.path = path;
+            boolean union = fn.equals("json_union_to_text");
+            type = union ? DataTypes.StringType : Fn.valueOf(fn).type;
+            key = path == null && args.size() == 2 ? args.apply(1) : null;
+            DataType t = args.apply(0).dataType();
+            body = union ? unionText(t) : lookup(Fn.valueOf(fn), t, path);
+        }
+
+        @Override
+        Object[] product() {
+            return new Object[] {name, fn, args, path};
+        }
+
+        @Override
+        public Expression withNewChildrenInternal(IndexedSeq<Expression> newChildren) {
+            return new Call(name, fn, newChildren, path);
+        }
+
+        @Override
+        public DataType dataType() {
+            return type;
+        }
+
+        @Override
+        public Object eval(InternalRow row) {
+            return body.apply(args.apply(0).eval(row), key == null ? null : key.eval(row));
+        }
+
+        @Override
+        public ExprCode doGenCode(CodegenContext ctx, ExprCode ev) {
+            return invoke(ctx, ev, body, type,
+                key == null ? List.of(args.apply(0)) : List.of(args.apply(0), key));
+        }
+    }
+
+    /**
+     * A call of json_is_null or json_from_scalar, run as the plain
+     * Catalyst tree {@link #replacement}: the optimizer puts the tree in
+     * its place.
+     */
+    public static final class Replaced extends Named implements RuntimeReplaceable {
+        private static final long serialVersionUID = 1L;
+
+        private static final Seq<Enumeration.Value> NODE_PATTERNS =
+            seq(List.of(TreePattern$.MODULE$.RUNTIME_REPLACEABLE()));
+
+        private final Expression replacement;
+
+        public Replaced(String name, String fn, Seq<Expression> args) {
+            super(name, fn, args);
+            Expression v = args.apply(0);
+            replacement = fn.equals("json_is_null")
+                ? isNullArm(v, typeIdOrdinal(v.dataType())) : SqlBuilder.fromScalar(v);
+        }
+
+        @Override
+        Object[] product() {
+            return new Object[] {name, fn, args};
+        }
+
+        @Override
+        public Expression withNewChildrenInternal(IndexedSeq<Expression> newChildren) {
+            return new Replaced(name, fn, newChildren);
+        }
+
+        @Override
+        public Expression replacement() {
+            return replacement;
+        }
+
+        // the trait's members that Expression also declares: Java picks
+        // the class's, so each is passed on to the trait explicitly
 
         @Override
         public DataType dataType() {
@@ -648,37 +629,124 @@ public final class JsonExactTier {
                 Seq<Enumeration.Value> patterns) {
             // nodePatterns is the constant above
         }
+    }
 
-        @Override
-        public int productArity() {
-            return 3;
+    /**
+     * {@code fn} over a document of type {@code t}: at {@code path}, or,
+     * when {@code path} is null, at the one-element path of the key
+     * column's value per row (a NULL key misses).
+     */
+    private static Body lookup(Fn fn, DataType t, JsonFinder.Path path) {
+        int array = ordinal(t, "array", StringType.class);
+        int object = ordinal(t, "object", StringType.class);
+        if (path != null) {
+            return (doc, none) -> fn.at.apply(text(doc, array, object), path);
         }
+        return (doc, key) -> fn.at.apply(text(doc, array, object),
+            JsonFinder.Path.ofKey(key instanceof UTF8String ? key.toString() : key));
+    }
 
-        @Override
-        public Object productElement(int n) {
-            switch (n) {
-                case 0: return name;
-                case 1: return children;
-                case 2: return builder;
-                default: throw new IndexOutOfBoundsException(String.valueOf(n));
+    /**
+     * The JSON text in a document: a string, or for a union struct
+     * ({@code array >= 0}) its {@code array} member, else its
+     * {@code object} member (udfs._doc_text); null for a NULL document
+     * and for a scalar arm.
+     */
+    private static String text(Object doc, int array, int object) {
+        if (doc == null || array < 0) {
+            return doc == null ? null : doc.toString();
+        }
+        InternalRow u = (InternalRow) doc;
+        int m = u.isNullAt(array) ? object : array;
+        return u.isNullAt(m) ? null : u.getUTF8String(m).toString();
+    }
+
+    /**
+     * json_union_to_text over a union struct of type {@code t}
+     * (kernels.kernel_json_union_to_text): the null arm, an unknown type
+     * id and a NULL or absent member are NULL.
+     */
+    private static Body unionText(DataType t) {
+        int tid = typeIdOrdinal(t);
+        int[] members = new int[UNION.size()];
+        for (int k = 1; k < members.length; k++) {
+            members[k] = ordinal(t, UNION.fields()[k].name(), DataType.class);
+        }
+        return (v, none) -> {
+            InternalRow u = (InternalRow) v;
+            int kind = u == null || u.isNullAt(tid) ? 0 : u.getByte(tid);
+            int m = kind > 0 && kind < members.length ? members[kind] : -1;
+            if (m < 0 || u.isNullAt(m)) {
+                return null;
             }
-        }
+            Object value = u.get(m, ((StructType) t).fields()[m].dataType());
+            return utf8(JsonFinder.unionText(kind,
+                value instanceof UTF8String ? value.toString() : value));
+        };
+    }
 
-        @Override
-        public boolean canEqual(Object that) {
-            return that instanceof NamedCall;
+    /**
+     * The code of a call that applies {@code body} to the values of
+     * {@code args} (one or two) and reads its result as {@code type}. The
+     * generated class is compiled by Spark's class loader, which cannot
+     * see this jar's classes, so the code names the body by its JDK
+     * interface alone.
+     */
+    private static ExprCode invoke(CodegenContext ctx, ExprCode ev, Body body,
+                                   DataType type, List<Expression> args) {
+        List<Block> blocks = new ArrayList<>();
+        String[] values = {"null", "null"};
+        StringBuilder code = new StringBuilder();
+        for (int k = 0; k < args.size(); k++) {
+            ExprCode a = args.get(k).genCode(ctx);
+            blocks.add(a.code());
+            values[k] = ctx.freshName("arg");
+            code.append(String.format("Object %s = %s ? null : (%s) %s;%n", values[k],
+                a.isNull(), CodeGenerator.boxedType(args.get(k).dataType()), a.value()));
         }
+        code.append(String.format("%1$s %2$s = (%1$s) %3$s.apply(%4$s, %5$s);%n"
+                + "boolean %6$s = %2$s == null;%n%7$s %8$s = %9$s;%n"
+                + "if (!%6$s) {%n  %8$s = %2$s;%n}%n",
+            CodeGenerator.boxedType(type), ctx.freshName("result"),
+            ctx.addReferenceObj("json", body, "java.util.function.BiFunction"),
+            values[0], values[1], ev.isNull(), CodeGenerator.javaType(type), ev.value(),
+            CodeGenerator.defaultValue(type, false)));
+        blocks.add(new CodeBlock(seq(List.of(code.toString())), seq(List.<JavaCode>of())));
+        return ev.copy(Block.blocksToBlock(seq(blocks)), ev.isNull(), ev.value());
+    }
 
-        @Override
-        public boolean equals(Object that) {
-            return that instanceof NamedCall && name.equals(((NamedCall) that).name)
-                && children.equals(((NamedCall) that).children);
+    /** The union struct for an arm (type id, value); the null arm NULL. */
+    private static InternalRow unionStruct(Object[] arm) {
+        if (arm == null) {
+            return null;
         }
+        int kind = (Integer) arm[0];
+        Object[] members = new Object[UNION.size()];
+        members[0] = (byte) kind;
+        members[kind] = arm[1] instanceof String ? utf8((String) arm[1]) : arm[1];
+        return new GenericInternalRow(members);
+    }
 
-        @Override
-        public int hashCode() {
-            return Objects.hash(name, children);
+    private static UTF8String utf8(String s) {
+        return s == null ? null : UTF8String.fromString(s);
+    }
+
+    private static GenericArrayData strings(String[] items) {
+        return items == null ? null
+            : new GenericArrayData(Arrays.stream(items).map(UTF8String::fromString).toArray());
+    }
+
+    /**
+     * The ordinal of the field {@code name} when {@code t} is a struct with
+     * such a field of type {@code want}, else -1.
+     */
+    private static int ordinal(DataType t, String name, Class<? extends DataType> want) {
+        if (!(t instanceof StructType)) {
+            return -1;
         }
+        Option<Object> k = ((StructType) t).getFieldIndex(name);
+        return k.isDefined() && want.isInstance(((StructType) t).fields()[(Integer) k.get()]
+            .dataType()) ? (Integer) k.get() : -1;
     }
 
     /**
@@ -686,40 +754,16 @@ public final class JsonExactTier {
      * struct, else -1.
      */
     private static int typeIdOrdinal(DataType t) {
-        if (!(t instanceof StructType)) {
-            return -1;
-        }
-        Option<Object> k = ((StructType) t).getFieldIndex("type_id");
-        return k.isDefined() && ((StructType) t).fields()[(Integer) k.get()].dataType()
-            instanceof ByteType ? (Integer) k.get() : -1;
+        return ordinal(t, "type_id", ByteType.class);
     }
 
     /**
-     * Whether {@code t} has the string members {@code array} and
-     * {@code object} that a union-struct document is read through.
+     * Whether {@code t} is a struct with the string members {@code array}
+     * and {@code object} that a union-struct document is read through.
      */
-    private static boolean hasContainers(StructType t) {
-        for (String m : List.of("array", "object")) {
-            Option<Object> k = t.getFieldIndex(m);
-            if (k.isEmpty()
-                    || !(t.fields()[(Integer) k.get()].dataType() instanceof StringType)) {
-                return false;
-            }
-        }
-        return true;
-    }
-
-    /**
-     * {@code coalesce(u.array, u.object)}: the JSON text a lookup reads in
-     * the union-struct document {@code u} (udfs._doc_text); a scalar
-     * member misses.
-     */
-    private static Expression containerText(Expression u, StructType t) {
-        List<Expression> members = new ArrayList<>();
-        for (String m : List.of("array", "object")) {
-            members.add(new GetStructField(u, t.fieldIndex(m), Option.apply(m)));
-        }
-        return new Coalesce(seq(members));
+    private static boolean hasContainers(DataType t) {
+        return ordinal(t, "array", StringType.class) >= 0
+            && ordinal(t, "object", StringType.class) >= 0;
     }
 
     /**
@@ -765,23 +809,6 @@ public final class JsonExactTier {
         }
         String s = t.simpleString();
         return Character.toUpperCase(s.charAt(0)) + s.substring(1);
-    }
-
-    /**
-     * {@code fn} over the JSON text in {@code children}'s first at
-     * {@code path}, or at the second's key per row when {@code path} is
-     * null.
-     */
-    private static Expression udf(String fn, JsonFinder.Path path,
-                                  Seq<Expression> children) {
-        Object function = FUNCTIONS.computeIfAbsent(Arrays.asList(fn, path), key -> {
-            Getter g = new Getter(fn, path);
-            return path != null ? (Function1<Object, Object> & Serializable) g::eval
-                : (Function2<Object, Object, Object> & Serializable) g::eval;
-        });
-        return new ScalaUDF(function, RESULT_TYPES.get(fn), children,
-            seq(List.<Option<ExpressionEncoder<?>>>of()), Option.empty(),
-            Option.apply(fn), true, true);
     }
 
     private static <T> Seq<T> seq(List<T> items) {

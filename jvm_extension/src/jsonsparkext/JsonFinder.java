@@ -130,18 +130,6 @@ final class JsonFinder {
         int length() {
             return keys.length;
         }
-
-        @Override
-        public boolean equals(Object o) {
-            return o instanceof Path
-                && Arrays.equals(keys, ((Path) o).keys)
-                && Arrays.equals(indexes, ((Path) o).indexes);
-        }
-
-        @Override
-        public int hashCode() {
-            return 31 * Arrays.hashCode(keys) + Arrays.hashCode(indexes);
-        }
     }
 
     /**
@@ -168,10 +156,13 @@ final class JsonFinder {
 
     // ------------------------------------------------------ entry points
 
-    /** core.find / core.find_raw: kind and raw slice of the value. */
+    /**
+     * core.find / core.find_raw: kind and raw slice of the value; a NULL
+     * document misses.
+     */
     private static JsonFinder lookup(String s, Path p) {
-        JsonFinder f = new JsonFinder(s);
-        if (p.alwaysMissing) {
+        JsonFinder f = new JsonFinder(s == null ? "" : s);
+        if (s == null || p.alwaysMissing) {
             return f;
         }
         try {
@@ -186,17 +177,11 @@ final class JsonFinder {
     }
 
     static String getStr(String s, Path p) {
-        if (s == null) {
-            return null;
-        }
         JsonFinder f = lookup(s, p);
         return f.kind == STR ? f.outputString(f.start + 1, f.end - 1) : null;
     }
 
     static Long getInt(String s, Path p) {
-        if (s == null) {
-            return null;
-        }
         JsonFinder f = lookup(s, p);
         if (f.kind == INT) {
             return parseLong(s.substring(f.start, f.end));
@@ -205,9 +190,6 @@ final class JsonFinder {
     }
 
     static Double getFloat(String s, Path p) {
-        if (s == null) {
-            return null;
-        }
         JsonFinder f = lookup(s, p);
         String raw = f.kind == MISSING ? null : s.substring(f.start, f.end);
         Double v;
@@ -228,9 +210,6 @@ final class JsonFinder {
     }
 
     static Boolean getBool(String s, Path p) {
-        if (s == null) {
-            return null;
-        }
         JsonFinder f = lookup(s, p);
         if (f.kind == BOOL) {
             return s.charAt(f.start) == 't';
@@ -239,14 +218,11 @@ final class JsonFinder {
     }
 
     static boolean contains(String s, Path p) {
-        return s != null && lookup(s, p).kind != MISSING;
+        return lookup(s, p).kind != MISSING;
     }
 
     /** json_get_json: the verbatim slice; JSON null is the text null. */
     static String getJson(String s, Path p) {
-        if (s == null) {
-            return null;
-        }
         JsonFinder f = lookup(s, p);
         return f.kind == MISSING ? null : s.substring(f.start, f.end);
     }
@@ -256,9 +232,6 @@ final class JsonFinder {
      * null NULL, everything else as the document spells it.
      */
     static String asText(String s, Path p) {
-        if (s == null) {
-            return null;
-        }
         JsonFinder f = lookup(s, p);
         switch (f.kind) {
             case STR:
@@ -320,9 +293,6 @@ final class JsonFinder {
      * outside i64, a string holding a lone surrogate, an invalid document.
      */
     static Object[] getUnion(String s, Path p) {
-        if (s == null) {
-            return null;
-        }
         JsonFinder f = lookup(s, p);
         Object v = f.unionValue();
         return v == null ? null : new Object[] {f.kind, v};

@@ -169,10 +169,10 @@ class TestCallUnnesting:
         out = df.select(jsonf.json_get(inner, "b").alias("v"))
         plan = physical_plan(out)
         assert "EvalPython" not in plan
-        # the outer call reads the inner one's container text,
-        # coalesce(u.array, u.object), so the inner call prints twice
-        assert "json_get(coalesce(json_get(j#" in plan
-        assert plan.count("json_get(") == 3
+        # the outer call reads the inner one's union struct itself, so
+        # each call prints once
+        assert "json_get(json_get(j#" in plan
+        assert plan.count("json_get(") == 2
         assert out.collect()[0].v.int == 1
 
     @pytest.mark.parametrize("python", [False, True], ids=["jvm", "python"])
@@ -194,10 +194,9 @@ class TestCallUnnesting:
         direct = df.select(jsonf.json_get(inner, "x", "c"))
         assert chain._jdf.queryExecution().optimizedPlan().sameResult(
             direct._jdf.queryExecution().optimizedPlan())
-        # two calls, the inner one printed twice on the JVM tier (the
-        # outer call reads its container text); 7 before un-nesting
+        # two calls, each printed once; 7 before un-nesting
         plan = chain._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("json_get(") == (2 if python else 3)
+        assert plan.count("json_get(") == 2
         assert chain.columns == ["j -> kc -> 'x' -> 'c'"]
         rows = [jsonf.format_union_value(r[0]) if r[0] else None
                 for r in chain.collect()]

@@ -32,6 +32,8 @@ import datafusion_functions_json_spark as jsonf
 from datafusion_functions_json_spark import union as union_mod
 from datafusion_functions_json_spark.functions import core, jvm_tier, udfs
 
+from test_perfbench_python_tier import _Ctx
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 pytestmark = pytest.mark.skipif(
@@ -654,7 +656,7 @@ class TestRouting:
 
 # key columns over the edge rows: strings, ints and NULLs
 KEY_ROWS = [("k", 0), ("foo", 1), (None, None), ("a", -1), ("kk", 2)]
-LONG_PATH = ("a",) * 25  # past ScalaUDF's 22 arguments
+LONG_PATH = ("a",) * 25  # a long literal path: 26 arguments in all
 
 
 def _edge_keys_view(spark, name):
@@ -694,8 +696,8 @@ class TestNoPython:
     ]
 
     # the Python API's spelling of each call shape that has one: literal
-    # paths, paths past ScalaUDF's 22 arguments, key columns, union-struct
-    # documents and the fused union consumers over json_get
+    # paths, long literal paths, key columns, union-struct documents and
+    # the fused union consumers over json_get
     API = {
         **{_sql_call(fn, p): (lambda fn=fn, p=p: getattr(jsonf, fn)("j", *p))
            for fn, p in SQL_CALLS + [("json_get_str", LONG_PATH),
@@ -753,7 +755,7 @@ class TestNoPython:
                if not _same(g[k + 1], w[k + 1])]
         assert not bad, f"{len(bad)} mismatches, first: {bad[:10]}"
         # each call names its column after the call, nested calls and
-        # paths past ScalaUDF's arity included
+        # long literal paths included
         assert got_columns == want_columns
         hits = [r[self.SQL.index("json_get_str(j, kc)") + 1] for r in got]
         assert sum(v is not None for v in hits) > 3  # hits, not all misses
@@ -810,6 +812,123 @@ class TestNoPython:
         jsonf.register_all(spark)
         q = spark.sql("""SELECT json_get_int('{"a": 2}', 'a') AS v""")
         assert q.collect()[0].v == 2
+
+
+def _plan_calls(df):
+    """The tier's calls in ``df``'s executed plan, each as whether
+    whole-stage codegen runs it, and the class of each expression there
+    that has no generated code of its own (a ScalaUDF, any
+    CodegenFallback) or is the former NamedCall wrapper."""
+    jvm = df.sparkSession._jvm
+    fallback = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback",
+        False, df.sparkSession._jsc.getClass().getClassLoader())
+
+    def nodes(plan, staged):
+        name = plan.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            yield from nodes(plan.executedPlan(), staged)
+            return
+        if name.endswith("QueryStageExec"):
+            yield from nodes(plan.plan(), staged)
+            return
+        staged = name == "WholeStageCodegenExec" or staged and name != "InputAdapter"
+        yield plan, staged
+        kids = plan.children()
+        for k in range(kids.size()):
+            yield from nodes(kids.apply(k), staged)
+
+    calls, bad = [], []
+    for node, staged in nodes(df._jdf.queryExecution().executedPlan(), False):
+        roots = node.expressions()
+        todo = [roots.apply(k) for k in range(roots.size())]
+        while todo:
+            e = todo.pop()
+            name = e.getClass().getName()
+            if name == "jsonsparkext.JsonExactTier$Call":
+                calls.append(staged)
+            if "ScalaUDF" in name or "NamedCall" in name or fallback.isInstance(e):
+                bad.append(name)
+            kids = e.children()
+            todo += [kids.apply(k) for k in range(kids.size())]
+    return calls, bad
+
+
+class TestCodegen:
+    """Each call is a Catalyst expression with generated code of its own:
+    no executed plan holds a ScalaUDF or a CodegenFallback expression, and
+    every call runs inside whole-stage codegen. Spark's fallback to
+    interpreted evaluation is off, so generated code that does not
+    compile fails the query."""
+
+    def test_calls_run_in_whole_stage_codegen(self, spark, tier):
+        templates, corpus = _perfbench("templates"), _perfbench("corpus")
+        docs = corpus.generate(corpus.SHAPES["unique"], 1)[0].texts[:600]
+        ctx = _Ctx(spark, spark.createDataFrame(
+            [(0, d) for d in docs + EDGE_DOCS], "day int, j string"))
+        _edge_keys_view(spark, "codegen_edge")
+        jsonf.register_all(spark)
+        edge = spark.table("codegen_edge")
+        queries = {
+            **{t.name: t.build(ctx, 0)
+               for t in templates.QUERY_TEMPLATES + [templates.ETL_TEMPLATE]},
+            **{sql: spark.sql(f"SELECT {sql} FROM codegen_edge")
+               for sql in TestNoPython.SQL},
+            **{f"API {sql}": edge.select(api())
+               for sql, api in TestNoPython.API.items()},
+        }
+        before = spark.conf.get("spark.sql.codegen.fallback")
+        spark.conf.set("spark.sql.codegen.fallback", "false")
+        try:
+            found = 0
+            for name, df in queries.items():
+                df.collect()
+                calls, bad = _plan_calls(df)
+                assert not bad, (name, bad)
+                assert all(calls), (name, calls)
+                found += len(calls)
+        finally:
+            spark.conf.set("spark.sql.codegen.fallback", before)
+        assert found > len(queries)
+
+
+def _static_collections(spark):
+    """The size of each static Map or Collection field of every class in
+    the tier's jar, by field."""
+    import zipfile
+
+    jvm = spark._jvm
+    loader = jvm_tier.load(spark.sparkContext).getClass().getClassLoader()
+    kinds = [jvm.java.lang.Class.forName(c) for c in
+             ("java.util.Map", "java.util.Collection")]
+    with zipfile.ZipFile(jvm_tier._build()) as jar:
+        classes = [n[:-len(".class")].replace("/", ".")
+                   for n in jar.namelist() if n.endswith(".class")]
+    sizes = {}
+    for name in classes:
+        for f in jvm.java.lang.Class.forName(name, False, loader).getDeclaredFields():
+            if (jvm.java.lang.reflect.Modifier.isStatic(f.getModifiers())
+                    and any(k.isAssignableFrom(f.getType()) for k in kinds)):
+                f.setAccessible(True)
+                sizes[f"{name}.{f.getName()}"] = f.get(None).size()
+    return sizes
+
+
+def test_per_path_state_is_bounded(spark, tier):
+    # calls at 2,000 distinct literal paths, from the API and from SQL,
+    # built and analyzed: no static map or collection of the tier grows
+    jsonf.register_all(spark)
+    df = spark.createDataFrame([('{"k0": 1}',)], "j string")
+    df.createOrReplaceTempView("per_path")
+    before = _static_collections(spark)
+    assert before  # the walk does find the tier's static maps
+    for start in range(0, 2000, 250):
+        api = [jsonf.json_get_int("j", f"k{k}") for k in range(start, start + 125)]
+        df.select(*api)._jdf.queryExecution().analyzed()
+        sql = ", ".join(f"json_get_str(j, 'k{k}')"
+                        for k in range(start + 125, start + 250))
+        spark.sql(f"SELECT {sql} FROM per_path")._jdf.queryExecution().analyzed()
+    assert _static_collections(spark) == before
 
 
 class TestPythonFallback:

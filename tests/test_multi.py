@@ -287,6 +287,19 @@ class TestOnBothTiers:
         assert [tuple(r) for r in out] == [
             (1, "x", True), (None, None, False), (None, None, False)]
 
+    def test_empty_field_map_is_rejected(self, spark, either_tier, monkeypatch):
+        # its own error, raised before any UDF or tier call is built
+        from datafusion_functions_json_spark.functions import jvm_tier
+        from datafusion_functions_json_spark.functions import multi as multi_mod
+
+        built = []
+        monkeypatch.setattr(multi_mod.F, "arrow_udf",
+                            lambda *args, **kwargs: built.append(args))
+        monkeypatch.setattr(jvm_tier, "multi", lambda *args: built.append(args))
+        with pytest.raises(ValueError, match="the field map is empty"):
+            jsonf.json_extract_multi("j", {})
+        assert built == []
+
 
 def test_one_round_trip_on_the_jvm_tier(spark, monkeypatch):
     # the tier builds the whole struct in one py4j call, and a column
