@@ -44,7 +44,7 @@ from spark_pipeline_ops.operators import (  # noqa: E402
     text,
 )
 from spark_pipeline_ops import oracle_twin  # noqa: E402
-from datafusion_functions_json_spark.sources import load_table  # noqa: E402
+from spark_pipeline_ops.sources import load_table  # noqa: E402
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -74,8 +74,8 @@ def _lineitem(spark, sf_dir):
 def _lineitem_k(spark, sf_dir):
     # round-18 (guide §2.2): byte-derived spread WIDTH for entries whose
     # downstream is a dict-shortcut-able exact Python kernel
-    # (sources/io.py spread="kernel") — tiny inputs stop paying a
-    # full-core fan-out they cannot amortize; sf1+ inputs clear the
+    # (spark_pipeline_ops/sources.py spread="kernel") — tiny inputs stop
+    # paying a full-core fan-out they cannot amortize; sf1+ inputs clear the
     # cores×task-bytes product and spread exactly as before.
     return load_table(spark, sf_dir, "lineitem", spread="kernel")
 
@@ -92,8 +92,8 @@ def _docs(spark, sf_dir):
 
 def _docs_sig(spark, sf_dir):
     # round-18 (guide §2.2): byte-derived spread width for the two
-    # SIGNATURE-pass dedup headliners (sources/io.py spread="text",
-    # ~128 KB/task) — at sf0.1 the 0.6 MB docs input stops paying a
+    # SIGNATURE-pass dedup headliners (spark_pipeline_ops/sources.py
+    # spread="text", ~128 KB/task) — at sf0.1 the 0.6 MB docs input stops paying a
     # 32-way fan-out (minhash_pairs 1.113 -> 0.77-0.79 s measured,
     # same window); sf1+ inputs clear cores x task-bytes and spread at
     # full width exactly as before. Text OPERATORS (token_count,
@@ -538,7 +538,7 @@ def _q_sql_operators_ext(spark, sf_dir):
         "         .config('spark.ui.enabled', 'false').getOrCreate())\n"
         "spark.sparkContext.setLogLevel('ERROR')\n"
         "import datafusion_functions_json_spark as jsonf\n"
-        "from datafusion_functions_json_spark.sources import load_table\n"
+        "from spark_pipeline_ops.sources import load_table\n"
         "jsonf.register_all(spark)\n"
         "load_table(spark, sys.argv[3], 'events')"
         ".createOrReplaceTempView('events_sqlops')\n"

@@ -9,12 +9,18 @@ Public surface:
   the reference's ``->`` / ``->>`` / ``?`` SQL operators;
 * ``sql()`` / ``rewrite_sql()`` — SQL text with those operators;
 * ``register_all(spark)`` — SQL-surface registration;
-* ``sources`` — the readers and sinks the shared testdata and the
-  benchmark's write job use.
+* ``sources.write_partitioned`` — the one sink, which the benchmark's
+  write job uses.
 
-The training-data pipeline operators live in the sibling package
-``spark_pipeline_ops``, which imports this one; this package never
-imports it.
+Importing the package loads the API and the JVM exact tier's loader
+only. The Python tier (``functions.core``, ``kernels`` and ``udfs``) and
+pyarrow are imported on the first call the JVM tier does not serve, so
+a session on the tier needs no pyarrow. ``json_extract_multi`` is the
+one exception: it imports them on every call.
+
+The training-data pipeline operators, the testdata loaders and the
+pipeline's sinks live in the sibling package ``spark_pipeline_ops``,
+which imports this one; this package never imports it.
 """
 
 def _register_pickle_by_value(*modules) -> None:
@@ -26,9 +32,10 @@ def _register_pickle_by_value(*modules) -> None:
     registration makes every UDF closure self-contained — no installation
     or --py-files needed on executors. Only modules whose code runs
     inside workers belong here; the pure-API modules (api/column/union)
-    are driver-side and stay reference-pickled. The JSON engine registers
-    its kernel modules below; ``spark_pipeline_ops.operators`` and
-    ``spark_pipeline_ops.streaming`` register theirs, through this
+    are driver-side and stay reference-pickled. The Python tier's
+    modules (``functions.core``, ``kernels``, ``udfs``) register
+    themselves when they are imported; ``spark_pipeline_ops.operators``
+    and ``spark_pipeline_ops.streaming`` register theirs, through this
     helper, when they are imported.
     """
     try:
@@ -39,11 +46,6 @@ def _register_pickle_by_value(*modules) -> None:
     except Exception:  # pragma: no cover - best-effort; cwd layouts still work
         pass
 
-
-from .functions import core as _core, kernels as _kernels  # noqa: E402
-from .functions import multi as _multi, udfs as _udfs  # noqa: E402
-
-_register_pickle_by_value(_core, _kernels, _udfs, _multi)
 
 from .column import JsonColumn, col
 from .functions.multi import JsonProfile, json_extract_multi

@@ -33,9 +33,8 @@ from typing import Union
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .. import union as union_mod
 from ..column import JsonColumn
-from . import jvm_tier, udfs
+from . import jvm_tier
 
 __all__ = [
     "json_get",
@@ -124,20 +123,41 @@ def _lookup(fn_key: str, json, path: tuple):
     return doc, lit_path, key_col
 
 
+def _path_arg(p) -> Column:
+    """A literal path element as the column SQL passes for it; an int
+    outside i64 is -1, an index that never matches, as on the JVM tier."""
+    if isinstance(p, int) and not -(2**63) <= p < 2**63:
+        p = -1
+    return F.lit(p)
+
+
 def _call(fn_key: str, doc, path=(), key_col=None) -> Column:
     """``fn_key(doc, *path)``, or ``fn_key(doc, key_col)`` with a column
     of keys (reference: src/common.rs:106-127): on the JVM exact tier
     (:mod:`.jvm_tier`) when it is loaded, built by the function's SQL
-    builder, else as an Arrow UDF over the Python kernels. Both read a
-    union-struct document through its container text."""
+    builder, else as the SQL name's Arrow UDF over the Python kernels
+    (:func:`.udfs.path_udf`), called with the path as literals, as SQL
+    calls it. Both read a union-struct document through its container
+    text, and both name the column as the SQL spelling does.
+
+    One exception: over a union value the Python tier computes (a
+    ``json_get`` with a key column, ``json_from_scalar``), the call
+    closes over its literal path (:func:`.udfs.literal_path_udf`), so its
+    one argument lets Spark chain both UDFs in one Python hop; its column
+    is named without the path."""
+    union_udf = isinstance(doc, JsonColumn) and not doc._text
     if isinstance(doc, JsonColumn):
         doc = doc._column  # an argument carries no operator name
     jvm = jvm_tier.call(fn_key, doc, path, key_col)
     if jvm is not None:
         return jvm
+    from . import udfs
+
     if key_col is not None:
         return udfs.path_udf(fn_key)(doc, key_col)
-    return udfs.literal_path_udf(fn_key, path)(doc)
+    if union_udf:
+        return udfs.literal_path_udf(fn_key, path)(doc)
+    return udfs.path_udf(fn_key)(doc, *map(_path_arg, path))
 
 
 def _invoke(fn_key: str, json, path: tuple) -> Column:
@@ -242,14 +262,17 @@ def json_from_scalar(col):
     ``json_from_scalar``, as the SQL name is: the tier's builder reads the
     type at analysis, the column is named like its SQL spelling, and an
     unsupported type raises the reference's error at analysis. Without
-    the tier it is the SQL name's Python UDF (:func:`udfs.from_scalar_udf`),
-    which reads the Arrow type of each batch; an unsupported type raises
-    the reference's error at execution.
+    the tier it is the SQL name's Python UDF
+    (:func:`.udfs.from_scalar_udf`), which reads the Arrow type of each
+    batch; an unsupported type raises the reference's error at execution.
     """
     if isinstance(col, str):
         col = F.col(col)
-    jvm = jvm_tier.call("json_from_scalar", col)
-    out = udfs.from_scalar_udf()(col) if jvm is None else jvm
+    out = jvm_tier.call("json_from_scalar", col)
+    if out is None:
+        from . import udfs
+
+        out = udfs.from_scalar_udf()(col)
     return JsonColumn(out, call=("json_from_scalar", col))
 
 
@@ -274,27 +297,41 @@ def _union_arg(fn_key: str, u):
     return (u._column if inner is None else None), inner
 
 
+def _union_call(fn_key: str, fused: str, u) -> Column:
+    """``fn_key`` over the union ``u``. On the JVM exact tier, over a
+    literal-path ``json_get`` it is the tier's ``fused`` call, built in
+    one py4j call. Without the tier it is the SQL name's Arrow UDF over
+    the ``json_get`` call, as SQL spells the composition."""
+    u, inner = _union_arg(fn_key, u)
+    if inner is not None:
+        doc, path = inner
+        if isinstance(doc, JsonColumn):
+            doc = doc._column
+        jvm = jvm_tier.call(fused, doc, path)
+        if jvm is not None:
+            return jvm
+        u = _call("json_get", doc, path)
+    jvm = jvm_tier.call(fn_key, u)
+    if jvm is not None:
+        return jvm
+    from . import udfs
+
+    return udfs.sql_udf(fn_key)(u)
+
+
 def json_union_to_text(u) -> Column:
     """Flatten a union struct → canonical JSON text; null arm → SQL NULL
     (reference: src/json_union_to_text.rs:82-118).
 
-    When ``u`` is a literal-path ``json_get`` result, the composition
-    fuses into ONE call (find + canonicalize — no intermediate struct):
-    the reference's un-nesting philosophy extended to the union
-    consumers."""
-    u, inner = _union_arg("json_union_to_text", u)
-    if inner is not None:
-        return _call("json_to_text_fused", *inner)
-    jvm = jvm_tier.call("json_union_to_text", u)
-    return udfs.union_to_text_udf()(u) if jvm is None else jvm
+    When ``u`` is a literal-path ``json_get`` result on the JVM exact
+    tier, the composition fuses into ONE call (find + canonicalize — no
+    intermediate struct): the reference's un-nesting philosophy extended
+    to the union consumers."""
+    return _union_call("json_union_to_text", "json_to_text_fused", u)
 
 
 def json_is_null(u) -> Column:
     """IS NULL over the union — true for JSON null AND lookup miss
     (reference: tests/main.rs:1612-1729). Fuses with a literal-path
     ``json_get`` like :func:`json_union_to_text`."""
-    u, inner = _union_arg("json_is_null", u)
-    if inner is not None:
-        return _call("json_is_null_fused", *inner)
-    jvm = jvm_tier.call("json_is_null", u)
-    return union_mod.json_is_null(u) if jvm is None else jvm
+    return _union_call("json_is_null", "json_is_null_fused", u)

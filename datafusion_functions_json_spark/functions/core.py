@@ -36,8 +36,16 @@ from __future__ import annotations
 
 import json
 import re
+import sys
 from json.decoder import scanstring
 from typing import Optional, Sequence, Tuple, Union
+
+from .. import _register_pickle_by_value
+
+# Spark's workers unpickle this module's code by value; the binding is
+# dropped because a module shipped by value ships every name it holds
+_register_pickle_by_value(sys.modules[__name__])
+del _register_pickle_by_value
 
 __all__ = [
     "MISSING",

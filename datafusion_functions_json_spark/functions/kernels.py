@@ -17,6 +17,7 @@ file:line citations; the shared traversal lives in :mod:`.core`.
 from __future__ import annotations
 
 import itertools
+import sys
 from typing import Iterable, Optional, Sequence
 
 from . import core
@@ -32,6 +33,13 @@ from .core import (
     OBJECT,
     STR,
 )
+
+from .. import _register_pickle_by_value
+
+# Spark's workers unpickle this module's code by value; the binding is
+# dropped because a module shipped by value ships every name it holds
+_register_pickle_by_value(sys.modules[__name__])
+del _register_pickle_by_value
 
 __all__ = [
     "repeat_path",

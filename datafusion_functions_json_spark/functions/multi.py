@@ -5,31 +5,44 @@ Each field is one single-field function at one path
 (``jvm_tier.MULTI_KIND_FNS``), so a field gives exactly what the
 function's own call gives. With the JVM exact tier loaded, the struct is
 built by the tier in one call (:func:`.jvm_tier.multi`) and no document
-crosses to Python. Without the tier, one Arrow UDF runs each field's
-batch body and assembles the struct: one JVM→Python Arrow hop, one read
-of each batch's documents (:func:`.udfs._read`: the dictionary shortcut,
-the bad-UTF-8 repair and union-struct documents included) and one scan
-of each document per field (:func:`.udfs._at`), as N separate calls
-would scan it.
+crosses to Python. Without the tier, one Arrow UDF runs
+:func:`.udfs.multi_body`: one JVM→Python Arrow hop, one read of each
+batch's documents and one scan of each document per field, as N
+separate calls would scan it.
+
+Each call also builds that Arrow UDF through this module's ``F``, so it
+imports pyarrow and the Python tier even when the JVM tier serves it.
 """
 
 from __future__ import annotations
 
 from typing import Mapping, Tuple
 
-import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import from_arrow_type
 
-from . import jvm_tier, udfs
+from . import jvm_tier
 
 __all__ = ["json_extract_multi", "FIELD_KINDS", "JsonProfile"]
 
+# the SQL type of each function a field reads, as both tiers return it
+_FIELD_TYPES = {
+    "json_get_str": T.StringType(),
+    "json_get_int": T.LongType(),
+    "json_get_float": T.DoubleType(),
+    "json_get_bool": T.BooleanType(),
+    "json_as_text": T.StringType(),
+    "json_length": T.LongType(),
+    "json_contains": T.BooleanType(),
+    "json_to_text_fused": T.StringType(),
+    "json_is_null_fused": T.BooleanType(),
+}
+
 # each kind's SQL type, as the function it reads returns it
 FIELD_KINDS = {
-    kind: udfs.RETURN_TYPES[fn] for kind, fn in jvm_tier.MULTI_KIND_FNS.items()
+    kind: _FIELD_TYPES[fn].simpleString()
+    for kind, fn in jvm_tier.MULTI_KIND_FNS.items()
 }
 
 
@@ -78,20 +91,9 @@ def json_extract_multi(
         specs.append((name, jvm_tier.MULTI_KIND_FNS[kind], tuple(path)))
     # a DataType, not DDL text, which the JVM would parse even when the
     # tier serves the call, and in which a name like a`b needs quoting
-    ret = T.StructType([
-        T.StructField(n, from_arrow_type(udfs._PA_TYPES[fn])) for n, fn, _ in specs
-    ])
-    names = [n for n, _, _ in specs]
-    evals = [(fn, udfs._KERNELS[fn], path) for _, fn, path in specs]
-    read, at = udfs._read, udfs._at  # closure-captured, like every helper
+    ret = T.StructType([T.StructField(n, _FIELD_TYPES[fn]) for n, fn, _ in specs])
+    from . import udfs
 
-    @F.arrow_udf(ret)
-    def _multi(js: pa.Array) -> pa.Array:
-        docs = read(js)
-        return pa.StructArray.from_arrays(
-            [at(fn, kernel, docs, path) for fn, kernel, path in evals],
-            names=names,
-        )
-
+    udf = F.arrow_udf(ret)(udfs.multi_body(specs))
     jvm = jvm_tier.multi(json_col, specs)
-    return _multi(json_col) if jvm is None else jvm
+    return udf(json_col) if jvm is None else jvm

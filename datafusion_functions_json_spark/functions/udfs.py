@@ -2,25 +2,30 @@
 
 These are the bodies every call runs when the JVM exact tier
 (:mod:`.jvm_tier`) is not loaded — Spark Connect, no JDK, a failed
-build; with the tier loaded no call reaches them. Every function has one
-batch body, shared by the Python API and the SQL names
-:func:`register_all` registers without the tier, and every body reads
-its documents through the streaming finder (:mod:`.kernels` over
-:mod:`.core`), the one parse route of this tier. The body reads the
-shapes of its arguments per batch, like the reference's one dispatch
-over (JSON array | union) x (scalar | array path) (reference:
-src/common.rs:159-182):
+build; with the tier loaded no call reaches them, and this module, the
+kernels and pyarrow are imported on the first call that does (and by
+``json_extract_multi``). Every function has one batch body, shared by
+the Python API and the SQL names :func:`register_all` registers without
+the tier, and every body reads its documents through the streaming
+finder (:mod:`.kernels` over :mod:`.core`), the one parse route of this
+tier. The body reads the shapes of its arguments per batch, like the
+reference's one dispatch over (JSON array | union) x (scalar | array
+path) (reference: src/common.rs:159-182):
 
-* **literal path** (:func:`literal_path_udf`, the API's literal calls):
-  the path is closed over at plan time, so ONLY the JSON column crosses
-  the JVM→Python Arrow boundary. UDF objects are cached per (function,
-  path) so repeated plan references reuse one PythonUDF expression.
-* **path columns** (:func:`path_udf`, the SQL names and the API's column
-  paths): ``(doc, *path_cols)``. The path arguments are checked per batch
-  by the reference's rules (:func:`_check_path_args`). When every path
-  column holds one non-null value in the batch, the literal-path body
-  runs; otherwise the path tuple is built per row, and a NULL key yields
-  a null result (reference: src/common.rs:118-127 JsonPath::None).
+* **path columns** (:func:`path_udf`, the SQL names and the API's
+  calls, which pass a literal path as literal columns, as SQL does, so
+  both name their columns alike): ``(doc, *path_cols)``. The path
+  arguments are checked per batch by the reference's rules
+  (:func:`_check_path_args`). When every path column holds one non-null
+  value in the batch, the literal-path body runs; otherwise the path
+  tuple is built per row, and a NULL key yields a null result
+  (reference: src/common.rs:118-127 JsonPath::None).
+* **literal path** (:func:`literal_path_udf`, the API's calls over a
+  union value this tier computes): the path is closed over at plan
+  time, so the call's one argument is the inner UDF's output and Spark
+  chains both UDFs in one Python hop. UDF objects are cached per
+  (function, path) so repeated plan references reuse one PythonUDF
+  expression.
 
 Both read a union-struct document (a nested call, or a stored
 ``json_get`` column) through its ``array``/``object`` text
@@ -28,7 +33,7 @@ Both read a union-struct document (a nested call, or a stored
 batch holding invalid UTF-8, documents and path keys alike, with each
 bad sequence as U+FFFD, as the JVM tier does (:func:`kernels._repair_utf8`).
 
-The literal-path body takes the per-batch dictionary shortcut
+A literal path takes the per-batch dictionary shortcut
 (:func:`kernels._dict_encode` — the Arrow analog of the reference's
 dictionary-array evaluation, src/common.rs:310-327): on batches whose
 documents repeat, the kernel runs on the DISTINCT documents only and one
@@ -45,6 +50,7 @@ src/json_get.rs:61-77; SURVEY.md §2.3).
 from __future__ import annotations
 
 import itertools
+import sys
 from functools import lru_cache
 
 import pyarrow as pa
@@ -54,12 +60,20 @@ from pyspark.sql import functions as F
 from . import kernels
 from .kernels import UNION_FIELDS, _dict_encode, _repair_utf8
 
+from .. import _register_pickle_by_value
+
+# Spark's workers unpickle this module's code by value; the binding is
+# dropped because a module shipped by value ships every name it holds
+_register_pickle_by_value(sys.modules[__name__])
+del _register_pickle_by_value
+
 __all__ = [
     "literal_path_udf",
     "path_udf",
     "union_to_text_udf",
     "union_is_null_udf",
     "from_scalar_udf",
+    "sql_udf",
     "RETURN_TYPES",
 ]
 
@@ -321,6 +335,26 @@ def path_udf(fn_key: str):
     return F.arrow_udf(fn, RETURN_TYPES[fn_key])
 
 
+def multi_body(specs):
+    """json_extract_multi's batch body over ``specs`` (``(name, fn_key,
+    path)``): one read of each batch's documents (:func:`_read`: the
+    dictionary shortcut, the bad-UTF-8 repair and union-struct documents
+    included), then each field's kernel at its path (:func:`_at`),
+    assembled as one struct."""
+    names = [n for n, _, _ in specs]
+    evals = [(fn_key, _KERNELS[fn_key], path) for _, fn_key, path in specs]
+
+    def fn(js: pa.Array) -> pa.Array:
+        docs = _read(js)
+        return pa.StructArray.from_arrays(
+            [_at(fn_key, kernel, docs, path) for fn_key, kernel, path in evals],
+            names=names,
+        )
+
+    fn.__name__ = "json_extract_multi"
+    return fn
+
+
 @lru_cache(maxsize=1)
 def union_to_text_udf():
     """json_union_to_text over the union struct (reference:
@@ -343,10 +377,10 @@ def union_to_text_udf():
 
 @lru_cache(maxsize=1)
 def union_is_null_udf():
-    """json_is_null over the union struct: true for the null arm (JSON
-    null and lookup miss) and a NULL struct — the test
-    ``union.json_is_null`` builds for the API (reference:
-    tests/main.rs:1612-1729)."""
+    """json_is_null over the union struct, for the SQL name and the API:
+    true for the null arm (JSON null and lookup miss) and a NULL struct —
+    the test ``union.json_is_null`` builds as a Catalyst expression
+    (reference: tests/main.rs:1612-1729)."""
 
     def fn(u: pa.Array) -> pa.Array:
         return pc.fill_null(pc.equal(_members(u)["type_id"], 0), True)
@@ -397,3 +431,15 @@ def from_scalar_udf():
 
     fn.__name__ = "json_from_scalar"
     return F.arrow_udf(fn, RETURN_TYPES["json_get"])
+
+
+def sql_udf(fn_key: str):
+    """The Arrow UDF that runs ``fn_key`` under its SQL name without the
+    tier, and in the API's calls of the union consumers."""
+    if fn_key == "json_union_to_text":
+        return union_to_text_udf()
+    if fn_key == "json_is_null":
+        return union_is_null_udf()
+    if fn_key == "json_from_scalar":
+        return from_scalar_udf()
+    return path_udf(fn_key)

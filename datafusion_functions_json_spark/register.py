@@ -20,21 +20,22 @@ querying JSON using an array.", reference: src/common.rs:129-133), and
 
 Without the tier (Spark Connect, no JDK, a failed build) every name is
 the Arrow UDF :mod:`.functions.udfs` builds for the function — the body
-the Python API runs too. Those UDFs check their arguments by the same
-rules per Arrow batch (``udfs._check_path_args``) and raise them as
-PythonException at execution, with one delta inherent to a per-batch
-check (documented, SURVEY.md §7.4): a path *column* that is constant, or
-NULL throughout, within every Arrow batch is indistinguishable from a
-literal, so the >1-path-element error can miss it (a column that varies
-within a batch is always caught); a NULL element gives NULL, as a typed
-NULL literal does.
+the Python API runs too; that module and pyarrow are imported then, and
+only then. Those UDFs check their arguments by the same rules per Arrow
+batch (``udfs._check_path_args``) and raise them as PythonException at
+execution, with one delta inherent to a per-batch check (documented,
+SURVEY.md §7.4): a path *column* that is constant, or NULL throughout,
+within every Arrow batch is indistinguishable from a literal, so the
+>1-path-element error can miss it (a column that varies within a batch
+is always caught); a NULL element gives NULL, as a typed NULL literal
+does.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from .functions import jvm_tier, udfs
+from .functions import jvm_tier
 
 __all__ = ["register_all"]
 
@@ -83,17 +84,6 @@ _SQL_NAMES = {
 }
 
 
-def _python_udf(fn: str):
-    """The Arrow UDF over the Python kernels that runs ``fn`` in SQL."""
-    if fn == "json_union_to_text":
-        return udfs.union_to_text_udf()
-    if fn == "json_is_null":
-        return udfs.union_is_null_udf()
-    if fn == "json_from_scalar":
-        return udfs.from_scalar_udf()
-    return udfs.path_udf(fn)
-
-
 def register_all(
     spark: SparkSession,
     *,
@@ -113,5 +103,7 @@ def register_all(
     """
     if jvm_tier.register_all(spark, _SQL_NAMES):
         return
+    from .functions import udfs
+
     for name, fn in _SQL_NAMES.items():
-        spark.udf.register(name, _python_udf(fn))
+        spark.udf.register(name, udfs.sql_udf(fn))

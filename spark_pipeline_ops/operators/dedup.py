@@ -923,7 +923,7 @@ def minhash_band_table(
     index scan when that protection isn't wanted."""
     rows = _band_rows(num_perm, bands)
     validate_index_meta(index, num_perm=num_perm, seed=seed, mode=mode, n=n)
-    from datafusion_functions_json_spark.sources.sinks import write_bucketed
+    from ..sources import write_bucketed
 
     # content checksum is a FULL extra index scan at build time (the
     # banding write scans it once more) — build-time-only, paid once to

@@ -102,8 +102,9 @@ def cluster_by_zorder(
     boundaries — balanced output files even when one dimension is
     skewed), sort within each partition, and drop the key unless
     ``key_col`` asks to keep it. Write the result with
-    ``sinks.write_partitioned`` / plain parquet; footer min/max on every
-    interleaved dimension then prunes at read time."""
+    ``datafusion_functions_json_spark.sources.write_partitioned`` / plain
+    parquet; footer min/max on every interleaved dimension then prunes
+    at read time."""
     name = key_col or "__zkey"
     out = df.withColumn(name, zorder_key(cols, bits))
     if num_partitions:

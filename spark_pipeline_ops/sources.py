@@ -1,6 +1,18 @@
-"""Parquet loading for the shared testdata + scale-aware session defaults.
+"""The shared testdata's tables, session defaults and the pipeline's
+sinks, over Spark's own readers and writers.
 
-Scale notes (100 TB design):
+* :func:`load_table` reads one testdata table, its TIMESTAMP(NANOS)
+  columns as timestamps, optionally spread over the cores;
+* :data:`SCALE_CONF` / :func:`session_defaults` are the session
+  settings the driver entries and tools start with;
+* :func:`write_bucketed`, :func:`write_training_shards` and
+  :func:`compact_parquet` are the pipeline's sinks.
+
+The JSON engine keeps only its own sink,
+:func:`datafusion_functions_json_spark.sources.write_partitioned`, which
+:func:`write_training_shards` writes through.
+
+Scale notes:
 
 * Reads stay declarative (``spark.read.parquet``) so Catalyst performs
   predicate pushdown, column pruning, and partition pruning — never
@@ -8,7 +20,7 @@ Scale notes (100 TB design):
 * ``spark.sql.files.maxPartitionBytes`` default (128 MB) gives ~800k
   input splits at 100 TB — fine for a 1000-executor cluster; we leave it
   alone and instead make sure per-row work is bounded (no whole-table
-  collects anywhere in this package).
+  collects anywhere in this module).
 * AQE is enabled in :func:`session_defaults` so shuffle partition counts
   re-plan at runtime (skew joins, empty-partition coalescing).
 """
@@ -16,8 +28,25 @@ Scale notes (100 TB design):
 from __future__ import annotations
 
 import os
+from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from datafusion_functions_json_spark.sources import (
+    _norm_partition_by,
+    write_partitioned,
+)
+
+__all__ = [
+    "TABLES",
+    "SCALE_CONF",
+    "session_defaults",
+    "load_table",
+    "write_bucketed",
+    "write_training_shards",
+    "compact_parquet",
+]
 
 TABLES = (
     "region",
@@ -112,8 +141,6 @@ def load_table(
     regex scoring); pure Catalyst aggregations are cheaper unspread —
     partial aggregation already collapses the single scan task's output.
     """
-    from pyspark.sql import functions as F
-
     _ensure_nanos_conf(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if nanos_as_timestamp:
@@ -245,87 +272,173 @@ def _input_bytes(path: str):
         return None
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def read_jsonl(
-    spark: SparkSession, path: str, schema=None, *, keep_corrupt: bool = False
-) -> DataFrame:
-    """NDJSON reader (the host-engine format DataFusion also ingests;
-    the reference inherits IO from its host the same way we inherit
-    Spark's). Pass an explicit ``schema`` in production: schema
-    inference is a FULL extra pass over the data at 100 TB. Fields that
-    hold JSON documents must be JSON-*encoded strings* in the NDJSON
-    (`"props": "{\\"k\\": 1}"`) — our functions parse them from there;
-    a raw nested object would need a struct schema instead.
-
-    Malformed-line handling (PERMISSIVE mode): Spark quarantines bad
-    lines into ``_corrupt_record`` ONLY when that column exists in the
-    schema — with an explicit schema lacking it (or an inferred schema
-    over clean sample data), malformed rows silently become all-NULL
-    records. ``keep_corrupt=True`` appends the column to your schema so
-    the quarantine contract actually holds; audit
-    ``df.filter("_corrupt_record is not null")`` afterwards."""
-    r = spark.read
-    if schema is not None:
-        if keep_corrupt:
-            from pyspark.sql import types as T
-
-            if isinstance(schema, str):
-                # parse the DDL so the presence check is an exact
-                # field-name match — a substring test would be fooled
-                # by an unrelated column like `my_corrupt_record`
-                schema = T._parse_datatype_string(schema)
-            if "_corrupt_record" not in schema.fieldNames():
-                schema = schema.add("_corrupt_record", T.StringType())
-        r = r.schema(schema)
-    elif keep_corrupt:
-        raise ValueError(
-            "keep_corrupt requires an explicit schema (inference only "
-            "adds _corrupt_record when the sampled data already has "
-            "malformed lines)"
-        )
-    return r.json(path)
-
-
-def read_csv(
-    spark: SparkSession, path: str, schema=None, *, header: bool = True
-) -> DataFrame:
-    """CSV reader with the same explicit-schema guidance as
-    :func:`read_jsonl` (inference = extra full pass)."""
-    r = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        r = r.schema(schema)
-    else:
-        r = r.option("inferSchema", "true")
-    return r.csv(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC reader (built into Spark, columnar like parquet: schema in
-    the footer, predicate pushdown + column pruning + stripe-level
-    min/max pruning all apply). Same scan characteristics at 100 TB as
-    the parquet path; JSON document columns are plain strings and every
-    function here works on them unchanged."""
-    return spark.read.orc(path)
-
-
-def write_orc(
+def write_bucketed(
     df: DataFrame,
-    path: str,
+    table: str,
     *,
-    partition_by=None,
-    max_records_per_file: int | None = None,
+    bucket_by: Sequence[str],
+    num_buckets: int,
+    sort_by: Sequence[str] = (),
     mode: str = "overwrite",
 ) -> None:
-    """ORC writer mirroring the parquet sink contract: optional hive
-    partitioning and ``maxRecordsPerFile`` small-file control (writer
-    rolls files — NO extra count pass over the input)."""
-    w = df.write.mode(mode)
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", int(max_records_per_file))
-    if partition_by:
-        cols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-        w = w.partitionBy(*cols)
-    w.orc(path)
+    """Bucketed table write (saveAsTable — bucketing needs the catalog).
+
+    Co-locates future joins/aggregations on ``bucket_by``: two tables
+    bucketed the same way join with ZERO shuffle. The right call for
+    repeatedly-joined 100 TB fact tables (e.g. documents bucketed by
+    doc_id joined against minhash pair output)."""
+    writer = (
+        df.write.mode(mode)
+        .bucketBy(num_buckets, *bucket_by)
+    )
+    if sort_by:
+        writer = writer.sortBy(*sort_by)
+    writer.saveAsTable(table)
+
+
+
+def write_training_shards(
+    packed: DataFrame,
+    path: str,
+    *,
+    partition_by: Sequence[str] = ("split", "shard"),
+    order_by: Sequence[str] = ("batch_id",),
+    target_file_rows: Optional[int] = None,
+    mode: str = "overwrite",
+) -> None:
+    """Write a packed training set (the output of
+    ``operators.split.pack_batches`` / ``pack_positions`` /
+    ``pipeline.training_prep``) as trainer-ready shards:
+
+    * one directory per ``partition_by`` combo (split purity on disk —
+      a train loader never lists val files);
+    * ONE write task per partition via ``repartition(partition_by)``
+      (without it, every upstream task writes a sliver into every
+      directory — the small-files disaster squared);
+    * rows sorted by ``order_by`` *within* each file
+      (``sortWithinPartitions``), so a sequential reader sees batches
+      in order without a shuffle at training time;
+    * ``target_file_rows`` rolls files via ``maxRecordsPerFile``.
+
+    Shard counts bound the repartition width; at 100 TB raise
+    ``shards`` upstream rather than files-per-shard here."""
+    partition_by = _norm_partition_by(partition_by)
+    if isinstance(order_by, str):
+        order_by = (order_by,)
+    cols = set(packed.columns)
+    missing = [c for c in (*partition_by, *order_by) if c not in cols]
+    if missing:
+        raise ValueError(f"packed output lacks columns: {missing}")
+    out = packed.repartition(*[F.col(c) for c in partition_by])
+    out = out.sortWithinPartitions(
+        *[F.col(c) for c in (*partition_by, *order_by)]
+    )
+    write_partitioned(
+        out,
+        path,
+        partition_by=tuple(partition_by),
+        target_file_rows=target_file_rows,
+        mode=mode,
+    )
+
+
+
+def compact_parquet(
+    spark,
+    path: str,
+    *,
+    target_file_bytes: int = 256 * 1024 * 1024,
+    min_files: int = 2,
+) -> dict:
+    """Small-file compaction: rewrite a parquet directory into
+    ``ceil(total_bytes / target_file_bytes)`` files — the maintenance
+    pass every long-lived ingest target needs (streaming sinks, hourly
+    appends, and CDC merges all accrete small files, and at 100 TB the
+    per-file open/footer cost dominates scans long before data volume
+    does).
+
+    Sizing comes from FILE METADATA (a directory walk summing on-disk
+    parquet sizes), not a data pass; the rewrite itself is
+    one coalesce-shaped job into a staging directory which then
+    replaces the input via a two-rename swap (same driver-mounted
+    filesystem contract as :func:`~.streaming.upsert_sink`). The swap
+    is NOT one atomic operation: readers racing the swap can see a
+    brief missing-directory window, and a crash between the two renames
+    leaves the data in ``<path>.precompact`` — the next
+    ``compact_parquet`` call detects that exact state and RESTORES it
+    before proceeding (a backup alongside an intact ``path`` from some
+    earlier failed cleanup is removed as stale). Skips and reports when
+    the directory already has fewer than ``min_files`` files.
+
+    Hive-partitioned layouts (``key=value`` subdirectories) are
+    REFUSED: a flat rewrite would silently destroy the partition
+    columns and downstream pruning — compact each leaf partition
+    directory instead.
+
+    Returns ``{"files_before", "files_after", "bytes", "compacted"}``.
+    """
+    import math
+    import os
+    import re
+    import shutil
+
+    backup = path.rstrip("/") + ".precompact"
+    if os.path.isdir(backup):
+        if not os.path.isdir(path):
+            # crash window between the two renames: the previous run
+            # moved path aside but died before promoting staging —
+            # restore, then compact normally
+            os.rename(backup, path)
+        else:
+            # path is intact, so the backup is a stale leftover from a
+            # crash AFTER promotion but before cleanup
+            shutil.rmtree(backup, ignore_errors=True)
+    total = 0
+    n_files = 0
+    for root, dirs, files in os.walk(path):
+        for d in dirs:
+            if re.fullmatch(r"[^=/]+=[^/]*", d):
+                raise ValueError(
+                    f"{path} is Hive-partitioned ({d}/ under {root}); a "
+                    "flat compaction would silently drop the partition "
+                    "layout and its pruning — compact each leaf "
+                    "partition directory instead"
+                )
+        for f in files:
+            if f.endswith(".parquet"):
+                total += os.path.getsize(os.path.join(root, f))
+                n_files += 1
+    if n_files < min_files:
+        return {
+            "files_before": n_files,
+            "files_after": n_files,
+            "bytes": total,
+            "compacted": False,
+        }
+    n_out = max(1, math.ceil(total / target_file_bytes))
+    staging = path.rstrip("/") + ".compacting"
+    # repartition, not coalesce: coalesce(1) would also collapse the
+    # UPSTREAM read parallelism into one task; repartition keeps the
+    # scan wide and only narrows the write
+    spark.read.parquet(path).repartition(n_out).write.mode(
+        "overwrite"
+    ).parquet(staging)
+    os.rename(path, backup)
+    try:
+        os.rename(staging, path)
+    except OSError:
+        os.rename(backup, path)  # restore on failure
+        raise
+    shutil.rmtree(backup, ignore_errors=True)
+    out_files = sum(
+        1
+        for _r, _d, fs in os.walk(path)
+        for f in fs
+        if f.endswith(".parquet")
+    )
+    return {
+        "files_before": n_files,
+        "files_after": out_files,
+        "bytes": total,
+        "compacted": True,
+    }

@@ -948,8 +948,7 @@ class TestPythonFallback:
             "json_is_null(json_get(j, 'k'))",
             "json_from_scalar(length(j))",
         ]
-        api = [_python_call(SQL_ALIASES.get(fn, fn), p, F.col("j"))
-               for fn, p in SQL_CALLS] + [
+        api = [getattr(jsonf, fn)("j", *p) for fn, p in SQL_CALLS] + [
             jsonf.json_get_str("j", F.col("kc")),
             jsonf.json_get_int(jsonf.json_get("j", "a"), "b"),
             jsonf.json_is_null(jsonf.json_get("j", "k")),
@@ -975,7 +974,24 @@ class TestPythonFallback:
                if not _same(g[k + 1], w[k + 1])]
         assert not bad, f"{len(bad)} mismatches, first: {bad[:10]}"
         assert [r[-2] for r in got].count(False) > 10  # hits, not all misses
+        # and each API column is named as the SQL spelling names it; the
+        # API spells the aliases and the nested getter otherwise
+        spelled = {"json_len(j, k)": "json_length(j, k)",
+                   "json_keys(j, k)": "json_object_keys(j, k)",
+                   "json_get_int(json_get(j, a), b)": "json_get_int(j, a, b)"}
+        api_columns = spark.table("python_tier_edge").select(*api).columns
+        assert [spelled.get(c, c) for c in q.columns[1:]] == api_columns
 
+
+    def test_index_outside_i64_never_matches(self, spark, python_tier):
+        # the tier reads such an index as -1; the API's tier-off call
+        # passes it so, and is named so
+        df = spark.createDataFrame([('{"k": [1, 2]}',)], "j string")
+        out = df.select(*(jsonf.json_get_int("j", "k", i)
+                          for i in (2**70, -(2**70), 1)))
+        assert out.columns == ["json_get_int(j, k, -1)"] * 2 + [
+            "json_get_int(j, k, 1)"]
+        assert tuple(out.collect()[0]) == (None, None, 2)
 
     def test_from_scalar_reads_the_arrow_type(self, spark, python_tier,
                                              monkeypatch):

@@ -321,3 +321,13 @@ def test_one_round_trip_on_the_jvm_tier(spark, monkeypatch):
         # "m\nd\n" deletes a garbage-collected proxy, whenever Python
         # collects one
         assert len([c for c in sent if not c.startswith("m\nd\n")]) == 1
+
+
+def test_field_kinds_match_the_python_tier():
+    # the kinds' SQL types come from a table that needs no pyarrow; it
+    # must agree with the types the Python tier's UDFs return
+    from datafusion_functions_json_spark.functions import jvm_tier, multi, udfs
+
+    assert multi.FIELD_KINDS == {
+        kind: udfs.RETURN_TYPES[fn] for kind, fn in jvm_tier.MULTI_KIND_FNS.items()
+    }

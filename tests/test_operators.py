@@ -13,7 +13,7 @@ from spark_pipeline_ops.operators import (
     split,
     text,
 )
-from datafusion_functions_json_spark.sources import load_table
+from spark_pipeline_ops.sources import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
 

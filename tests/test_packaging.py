@@ -7,6 +7,10 @@ The full install is exercised out-of-band (clean venv, foreign cwd);
 these tests pin the invariants that would silently break it."""
 
 import os
+import shutil
+import subprocess
+import sys
+import textwrap
 
 import pytest
 
@@ -93,7 +97,9 @@ def test_json_package_stands_alone(tmp_path):
     # the JSON engine never imports the pipeline operators: importing it
     # loads no spark_pipeline_ops module, the operator suite is not one
     # of its subpackages, and it registers only its own modules for
-    # by-value pickling. It has one parse route, so no orjson either.
+    # by-value pickling: none at import, and the Python tier's three
+    # once the first tier-off call imports them. It has one parse route,
+    # so no orjson either.
     import subprocess
     import sys
 
@@ -107,9 +113,17 @@ def test_json_package_stands_alone(tmp_path):
         "gone = [s for s in ('operators', 'streaming', 'oracle_twin', 'plans') "
         "if importlib.util.find_spec('datafusion_functions_json_spark.' + s)]; "
         "assert not gone, gone; "
+        "assert not cloudpickle.list_registry_pickle_by_value(); "
+        "from datafusion_functions_json_spark.functions import jvm_tier; "
+        "from pyspark.sql import SparkSession; "
+        "spark = SparkSession.builder.master('local[1]')"
+        ".config('spark.ui.enabled', 'false').getOrCreate(); "
+        "jvm_tier.load = lambda sc: None; "
+        "datafusion_functions_json_spark.json_get_int('j', 'a'); "
+        "spark.stop(); "
         "reg = sorted(cloudpickle.list_registry_pickle_by_value()); "
         "assert reg == sorted('datafusion_functions_json_spark.functions.' + m "
-        "for m in ('core', 'kernels', 'udfs', 'multi')), reg; "
+        "for m in ('core', 'kernels', 'udfs')), reg; "
         "print('alone')" % (REPO, OPS)
     )
     out = subprocess.run(
@@ -141,3 +155,106 @@ def test_public_surface_is_pinned():
     assert sorted(jsonf.__all__) == sorted(surface)
     assert len(set(jsonf.__all__)) == len(jsonf.__all__)
     assert all(hasattr(jsonf, name) for name in surface)
+
+
+# every call shape with a JVM-tier spelling, through the API, the
+# ``jsonf.col`` sugar, the SQL names and ``jsonf.sql``; printed as one
+# line of rows after the line of Python-tier modules the calls loaded
+TIER_CALLS = textwrap.dedent(
+    """
+    import sys
+    sys.path.insert(0, {repo!r})
+    from pyspark.sql import functions as F
+    import datafusion_functions_json_spark as jsonf
+    assert "pyarrow" not in sys.modules
+    from pyspark.sql import SparkSession
+    from datafusion_functions_json_spark.functions import jvm_tier
+
+    spark = (SparkSession.builder.master("local[1]")
+             .config("spark.ui.enabled", "false").getOrCreate())
+    spark.sparkContext.setLogLevel("ERROR")
+    jsonf.register_all(spark)
+    df = spark.createDataFrame(
+        [(0, '{{"a": {{"b": 2}}, "k": [1, "x"], "s": "t"}}', "s"),
+         (1, '{{"a": null}}', "a"), (2, "not json", None)],
+        "i int, j string, kc string")
+    df.createOrReplaceTempView("tier_calls")
+    u = jsonf.json_get("j", "a")
+    api = df.select(
+        "i", jsonf.json_get_int("j", "a", "b"), jsonf.json_get_str("j", "s"),
+        jsonf.json_get_str("j", F.col("kc")), jsonf.json_length("j", "k"),
+        jsonf.json_get_array("j", "k"), jsonf.json_contains("j", "a"),
+        jsonf.col("j")["a"]["b"].cast("bigint"), jsonf.col("j").as_text("s"),
+        jsonf.json_union_to_text(u), jsonf.json_is_null(u),
+        jsonf.json_union_to_text(jsonf.json_from_scalar(F.col("i"))),
+    )
+    sql = spark.sql(
+        "SELECT i, json_get_int(j, 'a', 'b'), json_len(j, 'k'), "
+        "json_union_to_text(json_get(j, 'a')), json_is_null(json_get(j, 'a')), "
+        "json_union_to_text(json_from_scalar(i)) FROM tier_calls")
+    ops = jsonf.sql(spark, "SELECT i, j->'a'->>'b', j ? 's' FROM tier_calls")
+    rows = [sorted(map(tuple, q.collect())) for q in (api, sql, ops)]
+    tier = [m for m in sys.modules
+            if m.rsplit(".", 1)[-1] in ("core", "kernels", "udfs")
+            and m.startswith("datafusion_functions_json_spark")]
+    print(sorted(tier))
+    print(repr(rows))
+    if {block!r}:
+        jvm_tier.load = lambda sc: None
+        try:
+            jsonf.json_get_int("j", "a")
+        except ImportError as e:
+            print("ImportError", e.name)
+    """
+)
+
+TIER_ROWS = [
+    [(0, 2, "t", "t", 2, ['1', '"x"'], True, 2, "t", '{"b": 2}', False, "0"),
+     (1, None, None, None, None, None, True, None, None, None, True, "1"),
+     (2, None, None, None, None, None, False, None, None, None, True, "2")],
+    [(0, 2, 2, '{"b": 2}', False, "0"), (1, None, None, None, True, "1"),
+     (2, None, None, None, True, "2")],
+    [(0, "2", True), (1, None, False), (2, None, False)],
+]
+
+needs_jdk = pytest.mark.skipif(
+    shutil.which("javac") is None,
+    reason="no JDK: the JVM tier falls back to the Python kernels",
+)
+
+
+def _tier_calls(tmp_path, block):
+    """Run ``TIER_CALLS`` in a fresh interpreter; with ``block``, pyarrow
+    fails to import: a path entry's ``pyarrow/__init__.py`` raises."""
+    env = dict(os.environ)
+    if block:
+        (tmp_path / "pyarrow").mkdir()
+        (tmp_path / "pyarrow" / "__init__.py").write_text(
+            "raise ImportError('pyarrow is blocked', name='pyarrow')\n")
+        env["PYTHONPATH"] = os.pathsep.join(
+            p for p in (str(tmp_path), env.get("PYTHONPATH")) if p)
+    out = subprocess.run(
+        [sys.executable, "-c", TIER_CALLS.format(repo=REPO, block=block)],
+        capture_output=True, text=True, cwd=str(tmp_path), env=env,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    return out.stdout.splitlines()
+
+
+@needs_jdk
+def test_tier_calls_load_no_python_tier(tmp_path):
+    # with the JVM tier loaded, importing the package loads no pyarrow,
+    # and no call imports the Python tier
+    tier, rows = _tier_calls(tmp_path, block=False)
+    assert tier == "[]"
+    assert rows == repr(TIER_ROWS)
+
+
+@needs_jdk
+def test_tier_calls_need_no_pyarrow(tmp_path):
+    # with pyarrow unimportable the same calls give the tier's rows; with
+    # the tier forced off a call raises pyarrow's ImportError
+    tier, rows, error = _tier_calls(tmp_path, block=True)
+    assert tier == "[]"
+    assert rows == repr(TIER_ROWS)
+    assert error == "ImportError pyarrow"

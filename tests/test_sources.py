@@ -1,15 +1,12 @@
-"""Sources & sinks: testdata loading (nanos timestamps), partitioned
-writes, bucketed tables, prepared-statement args parity."""
+"""Sources & sinks: testdata loading (nanos timestamps), the engine's
+partitioned write, the pipeline's bucketed tables, training shards and
+compaction, prepared-statement args parity."""
 
 from pyspark.sql import functions as F
 
 import datafusion_functions_json_spark as jsonf
-from datafusion_functions_json_spark.sources import (
-    estimate_files,
-    load_table,
-    write_bucketed,
-    write_partitioned,
-)
+from datafusion_functions_json_spark.sources import write_partitioned
+from spark_pipeline_ops.sources import load_table, write_bucketed
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -47,11 +44,6 @@ class TestSinks:
 
         plan = explain_str(back.filter(F.col("event_type") == "click"))
         assert "PartitionFilters" in plan
-
-    def test_estimate_files(self, spark):
-        ev = load_table(spark, SF_DIR, "events")
-        est = {r.event_type: r.rows for r in estimate_files(ev, ["event_type"]).collect()}
-        assert sum(est.values()) == 1000 and len(est) == 5
 
     def test_bucketed_write_zero_shuffle_join(self, spark, tmp_path):
         # warehouse dir is a static conf; the default ./spark-warehouse is
@@ -97,40 +89,6 @@ class TestSinks:
             spark.sql("drop table if exists ord_b")
 
 
-class TestTextFormats:
-    def test_jsonl_roundtrip_with_json_column(self, spark, tmp_path):
-        import json as _json
-
-        from datafusion_functions_json_spark.sources import read_jsonl
-
-        p = tmp_path / "in"
-        p.mkdir()
-        rows = [
-            {"id": 1, "props": '{"k": 7}'},
-            {"id": 2, "props": "not json"},
-        ]
-        with open(p / "a.jsonl", "w") as f:
-            for r in rows:
-                f.write(_json.dumps(r) + "\n")
-        df = read_jsonl(spark, str(p), schema="id bigint, props string")
-        got = {
-            r.id: r.v
-            for r in df.select(
-                "id", jsonf.json_get_int("props", "k").alias("v")
-            ).collect()
-        }
-        assert got == {1: 7, 2: None}
-
-    def test_csv_roundtrip(self, spark, tmp_path):
-        from datafusion_functions_json_spark.sources import read_csv
-
-        p = tmp_path / "c"
-        p.mkdir()
-        (p / "a.csv").write_text("id,name\n1,x\n2,y\n")
-        df = read_csv(spark, str(p), schema="id bigint, name string")
-        assert {(r.id, r.name) for r in df.collect()} == {(1, "x"), (2, "y")}
-
-
 class TestPreparedArgs:
     def test_sql_named_args_with_json_functions(self, spark, test_df):
         # reference: prepared-statement params (tests/utils/mod.rs:249-256)
@@ -143,36 +101,12 @@ class TestPreparedArgs:
         assert [r.name for r in rows] == ["object_foo"]
 
 
-class TestOrc:
-    def test_orc_roundtrip_with_json_functions(self, spark, tmp_path):
-        from datafusion_functions_json_spark.sources import read_orc, write_orc
-
-        ev = load_table(spark, SF_DIR, "events").select(
-            "event_id", "event_type", "props"
-        )
-        out = str(tmp_path / "events_orc")
-        write_orc(ev, out, partition_by=["event_type"], max_records_per_file=400)
-        back = read_orc(spark, out)
-        assert back.count() == 1000
-        # JSON functions work unchanged on the ORC-sourced strings
-        n = back.select(jsonf.json_get_int("props", "k").alias("k")).filter(
-            F.col("k").isNotNull()
-        ).count()
-        assert n > 0
-        # partition pruning applies to the hive layout
-        one = back.filter(F.col("event_type") == "click")
-        plan = one._jdf.queryExecution().executedPlan().toString()
-        assert "click" in plan
-
-
 class TestTrainingShards:
     def test_shard_layout_and_in_file_order(self, spark, tmp_path):
         from pyspark.sql import functions as F
 
         from spark_pipeline_ops.operators import split as sp
-        from datafusion_functions_json_spark.sources import (
-            write_training_shards,
-        )
+        from spark_pipeline_ops.sources import write_training_shards
 
         rows = [(i, 20 + (i * 7) % 30) for i in range(300)]
         df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
@@ -204,47 +138,13 @@ class TestTrainingShards:
         assert back.count() == 300
 
     def test_missing_columns_rejected(self, spark, tmp_path):
-        from datafusion_functions_json_spark.sources import (
-            write_training_shards,
-        )
+        from spark_pipeline_ops.sources import write_training_shards
 
         df = spark.createDataFrame([(1,)], "doc_id long")
         import pytest as _pytest
 
         with _pytest.raises(ValueError):
             write_training_shards(df, str(tmp_path / "x"))
-
-
-class TestWriteJsonl:
-    def test_round_trip_with_reader(self, spark, tmp_path):
-        from datafusion_functions_json_spark.sources import (
-            read_jsonl,
-            write_jsonl,
-        )
-
-        df = spark.createDataFrame(
-            [(1, "a", '{"k": 1}'), (2, "b", None)],
-            "id long, s string, props string",
-        )
-        out = str(tmp_path / "jl")
-        write_jsonl(df, out, compression=None)
-        back = read_jsonl(spark, out).orderBy("id")
-        got = [(r.id, r.s, r.props) for r in back.collect()]
-        assert got == [(1, "a", '{"k": 1}'), (2, "b", None)]
-
-    def test_compressed_partitioned(self, spark, tmp_path):
-        import glob
-
-        from datafusion_functions_json_spark.sources import write_jsonl
-
-        df = spark.createDataFrame(
-            [(i, "p" if i % 2 else "q") for i in range(20)], "id long, part string"
-        )
-        out = str(tmp_path / "jlz")
-        write_jsonl(df, out, partition_by=("part",))
-        files = glob.glob(out + "/part=*/*.json.gz")
-        assert files, "expected gzip part files"
-        assert spark.read.json(out).count() == 20
 
 
 class TestReviewFindingsRound7c:
@@ -259,8 +159,6 @@ class TestReviewFindingsRound7c:
         ns = [1_700_000_000_123_456_050, 1_700_000_000_123_456_999]
         p = tmp_path / "events.parquet"
         pq.write_table(pa.table({"event_id": [1, 2], "ts": pa.array(ns, pa.int64())}), p)
-        from datafusion_functions_json_spark.sources import io as src_io
-
         df = spark.read.parquet(str(p))
         from pyspark.sql import functions as F
 
@@ -274,8 +172,6 @@ class TestReviewFindingsRound7c:
         # coincide on some platforms)
 
     def test_write_partitioned_accepts_bare_string(self, spark, tmp_path):
-        from datafusion_functions_json_spark.sources import write_partitioned
-
         df = spark.createDataFrame(
             [(1, "train"), (2, "val")], "id long, split string"
         )
@@ -283,38 +179,6 @@ class TestReviewFindingsRound7c:
         write_partitioned(df, out, partition_by="split")
         back = spark.read.parquet(out)
         assert back.count() == 2 and "split" in back.columns
-
-    def test_read_jsonl_keep_corrupt(self, spark, tmp_path):
-        p = tmp_path / "in.jsonl"
-        p.write_text('{"id": 1}\nnot json at all\n{"id": 3}\n')
-        from datafusion_functions_json_spark.sources import read_jsonl
-
-        df = read_jsonl(spark, str(p), schema="id bigint", keep_corrupt=True)
-        rows = df.collect()
-        bad = [r for r in rows if r._corrupt_record is not None]
-        assert len(bad) == 1 and "not json" in bad[0]._corrupt_record
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError, match="explicit schema"):
-            read_jsonl(spark, str(p), keep_corrupt=True)
-
-    def test_read_jsonl_keep_corrupt_similar_column_name(self, spark, tmp_path):
-        # a schema containing `my_corrupt_record` must NOT satisfy the
-        # keep_corrupt guard by substring accident — the real
-        # _corrupt_record column still gets appended
-        p = tmp_path / "in2.jsonl"
-        p.write_text('{"id": 1, "my_corrupt_record": "x"}\nbroken\n')
-        from datafusion_functions_json_spark.sources import read_jsonl
-
-        df = read_jsonl(
-            spark,
-            str(p),
-            schema="id bigint, my_corrupt_record string",
-            keep_corrupt=True,
-        )
-        assert "_corrupt_record" in df.columns
-        bad = [r for r in df.collect() if r._corrupt_record is not None]
-        assert len(bad) == 1 and "broken" in bad[0]._corrupt_record
 
     def test_zorder_accepts_bare_string(self, spark):
         from spark_pipeline_ops.operators import layout
@@ -349,7 +213,7 @@ class TestReviewFindingsRound7c:
 
 class TestCompactParquet:
     def test_compacts_small_files(self, spark, tmp_path):
-        from datafusion_functions_json_spark.sources import compact_parquet
+        from spark_pipeline_ops.sources import compact_parquet
 
         p = str(tmp_path / "frag")
         df = spark.range(0, 1000).selectExpr("id", "id * 2 as y")
@@ -371,7 +235,7 @@ class TestCompactParquet:
         assert not os.path.exists(p + ".precompact")
 
     def test_skips_already_compact(self, spark, tmp_path):
-        from datafusion_functions_json_spark.sources import compact_parquet
+        from spark_pipeline_ops.sources import compact_parquet
 
         p = str(tmp_path / "one")
         spark.range(10).coalesce(1).write.parquet(p)
@@ -388,7 +252,7 @@ class TestCompactParquetSafety:
     def test_crash_window_backup_is_restored(self, spark, tmp_path):
         import os
 
-        from datafusion_functions_json_spark.sources import compact_parquet
+        from spark_pipeline_ops.sources import compact_parquet
 
         p = str(tmp_path / "crash")
         spark.range(0, 100).repartition(4).write.parquet(p)
@@ -405,7 +269,7 @@ class TestCompactParquetSafety:
     ):
         import os
 
-        from datafusion_functions_json_spark.sources import compact_parquet
+        from spark_pipeline_ops.sources import compact_parquet
 
         p = str(tmp_path / "stale")
         spark.range(0, 50).repartition(4).write.parquet(p)
@@ -418,7 +282,7 @@ class TestCompactParquetSafety:
     def test_refuses_hive_partitioned_layout(self, spark, tmp_path):
         import pytest
 
-        from datafusion_functions_json_spark.sources import compact_parquet
+        from spark_pipeline_ops.sources import compact_parquet
 
         p = str(tmp_path / "parted")
         spark.range(0, 100).selectExpr(

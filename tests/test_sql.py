@@ -200,7 +200,7 @@ class TestRegisterPipeline:
 
         from spark_pipeline_ops.operators import text
         from spark_pipeline_ops.register import register_pipeline
-        from datafusion_functions_json_spark.sources import load_table
+        from spark_pipeline_ops.sources import load_table
 
         register_pipeline(spark)
         docs = load_table(spark, "/root/testdata/sf0.001", "documents")

@@ -32,7 +32,7 @@ import duckdb
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as entrymod
-from datafusion_functions_json_spark.sources import TABLES, session_defaults
+from spark_pipeline_ops.sources import TABLES, session_defaults
 
 
 def norm_cell(v):

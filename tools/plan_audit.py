@@ -21,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as entrymod
-from datafusion_functions_json_spark.sources import session_defaults
+from spark_pipeline_ops.sources import session_defaults
 
 MARKS = [
     ("exchanges", r"\bExchange\b"),
