@@ -23,9 +23,10 @@ read that description, so an intermediate step of a chain builds nothing:
   Guards replicated exactly: only when the inner call is ``json_get``
   (type-preserving, reference: src/rewrite.rs:74-78) and only when every
   path element is a literal (reference: src/rewrite.rs:83).
-* **cast elision** (reference: src/rewrite.rs:36-54): ``.cast`` to an
-  int/float/bool/string type rewrites to the typed getter so the union
-  struct is never materialized.
+* **cast elision** (reference: src/rewrite.rs:36-54): ``.cast`` to a
+  type of ``signatures.CAST_ELISION`` (the map SQL's rewriter reads)
+  rewrites to the typed getter so the union struct is never
+  materialized.
 
 JsonColumn subclasses ``pyspark.sql.Column`` so it drops into ``select`` /
 ``filter`` / ``groupBy`` unchanged; ``[]`` results with a literal key are
@@ -37,8 +38,6 @@ from __future__ import annotations
 
 import re
 from functools import cached_property
-
-from pyspark.sql import types as T
 
 try:  # Spark 4 classic: the concrete Column holding the py4j handle
     from pyspark.sql.classic.column import Column
@@ -200,61 +199,32 @@ class JsonColumn(Column):
 
     # -- cast elision ---------------------------------------------------
 
-    _CAST_MAP = {
-        "tinyint": "json_get_int",
-        "smallint": "json_get_int",
-        "int": "json_get_int",
-        "integer": "json_get_int",
-        "bigint": "json_get_int",
-        "long": "json_get_int",
-        "boolean": "json_get_bool",
-        "bool": "json_get_bool",
-        "float": "json_get_float",
-        "double": "json_get_float",
-        "string": "json_get_str",
-        "str": "json_get_str",
-    }
-
-    # each width keeps ITS name, so a DataType target narrows like its
-    # string spelling: cast(T.IntegerType()) and cast('int') are both INT
-    _TYPE_NAMES = {
-        T.LongType: "bigint",
-        T.IntegerType: "int",
-        T.ShortType: "smallint",
-        T.ByteType: "tinyint",
-        T.BooleanType: "boolean",
-        T.FloatType: "float",
-        T.DoubleType: "double",
-        T.DecimalType: "double",
-        T.StringType: "string",
-    }
-
-    # targets narrower than the getter's result, re-cast after it
-    _NARROW = {"tinyint", "smallint", "int", "integer", "float"}
-
     def cast(self, dataType):
         """Cast elision (reference: src/rewrite.rs:36-54): a cast of a
-        json_get result to int/float/bool/string becomes the typed getter
-        over the SAME args — the union struct is never built; a column key
-        is no obstacle (that guard belongs to call un-nesting only).
-        Unknown target types fall back to a real Spark cast of the struct
-        (which Spark will reject, like DataFusion would)."""
-        from .functions import api
+        json_get result to a type of ``signatures.CAST_ELISION`` becomes
+        the typed getter over the SAME args — the union struct is never
+        built; a column key is no obstacle (that guard belongs to call
+        un-nesting only). The getter is cast again to any type but its
+        own, so ``cast("int")`` is INT where SQL's ``::int`` is the
+        getter's BIGINT, as in the reference. Unknown target types fall
+        back to a real Spark cast of the struct (which Spark will reject,
+        like DataFusion would)."""
+        from .functions import api, signatures
 
-        if isinstance(dataType, str):
-            name = dataType.lower()
-        else:
-            name = self._TYPE_NAMES.get(type(dataType))
-        fn_key = self._CAST_MAP.get(name)
+        name = dataType if isinstance(dataType, str) else dataType.simpleString()
+        fn_key = signatures.cast_getter(name)
         if fn_key is None or self._path is None and self._key is None:
             return super().cast(dataType)
         steps = (self._key,) if self._key is not None else self._path
         out = getattr(api, fn_key)(self._doc, *steps)
-        # Decimal targets re-cast the float result (reference rewrite
-        # keeps the cast shell for decimals, rs:46-48)
-        if isinstance(dataType, T.DecimalType) or name in self._NARROW:
-            out = out.cast(dataType)
-        return out
+        own = signatures.RESULT_TYPES[fn_key]
+        name = name.strip().lower()
+        if name in signatures.UNTYPED_CASTS or name in (
+            own.simpleString(),
+            own.typeName(),
+        ):
+            return out
+        return out.cast(dataType)
 
     astype = cast
 

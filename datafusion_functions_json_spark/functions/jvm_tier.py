@@ -47,21 +47,7 @@ import threading
 import weakref
 from pathlib import Path
 
-__all__ = ["MULTI_KIND_FNS", "load", "call", "multi", "register_all"]
-
-# json_extract_multi's field kinds, as the function each kind reads on
-# both tiers
-MULTI_KIND_FNS = {
-    "str": "json_get_str",
-    "int": "json_get_int",
-    "float": "json_get_float",
-    "bool": "json_get_bool",
-    "text": "json_as_text",
-    "length": "json_length",
-    "exists": "json_contains",
-    "union_text": "json_to_text_fused",
-    "union_isnull": "json_is_null_fused",
-}
+__all__ = ["load", "call", "multi", "register_all"]
 
 _EXT_DIR = Path(__file__).resolve().parents[2] / "jvm_extension"
 _JAR = "json-spark-ext.jar"

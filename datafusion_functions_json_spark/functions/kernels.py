@@ -35,6 +35,7 @@ from .core import (
 )
 
 from .. import _register_pickle_by_value
+from ..union import UNION_SCHEMA
 
 # Spark's workers unpickle this module's code by value; the binding is
 # dropped because a module shipped by value ships every name it holds
@@ -60,9 +61,8 @@ __all__ = [
     "UNION_FIELDS",
 ]
 
-# Union struct member layout — order and names follow the reference's
-# sparse-union members (reference: src/common_union.rs:184-205).
-UNION_FIELDS = ("type_id", "bool", "int", "float", "str", "array", "object")
+# Union struct member names, in the order of UNION_SCHEMA
+UNION_FIELDS = tuple(UNION_SCHEMA.names)
 
 
 def repeat_path(path: Sequence) -> Iterable:

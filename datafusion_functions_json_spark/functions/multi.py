@@ -2,7 +2,7 @@
 as one struct.
 
 Each field is one single-field function at one path
-(``jvm_tier.MULTI_KIND_FNS``), so a field gives exactly what the
+(``signatures.MULTI_KINDS``), so a field gives exactly what the
 function's own call gives. With the JVM exact tier loaded, the struct is
 built by the tier in one call (:func:`.jvm_tier.multi`) and no document
 crosses to Python. Without the tier, one Arrow UDF runs
@@ -23,27 +23,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import jvm_tier
+from .signatures import MULTI_KINDS, RESULT_TYPES
 
-__all__ = ["json_extract_multi", "FIELD_KINDS", "JsonProfile"]
-
-# the SQL type of each function a field reads, as both tiers return it
-_FIELD_TYPES = {
-    "json_get_str": T.StringType(),
-    "json_get_int": T.LongType(),
-    "json_get_float": T.DoubleType(),
-    "json_get_bool": T.BooleanType(),
-    "json_as_text": T.StringType(),
-    "json_length": T.LongType(),
-    "json_contains": T.BooleanType(),
-    "json_to_text_fused": T.StringType(),
-    "json_is_null_fused": T.BooleanType(),
-}
-
-# each kind's SQL type, as the function it reads returns it
-FIELD_KINDS = {
-    kind: _FIELD_TYPES[fn].simpleString()
-    for kind, fn in jvm_tier.MULTI_KIND_FNS.items()
-}
+__all__ = ["json_extract_multi", "JsonProfile"]
 
 
 class JsonProfile:
@@ -62,9 +44,9 @@ def json_extract_multi(
     """Extract N typed fields from one JSON column as one struct.
 
     ``fields``: ``{out_name: (kind, *path)}`` with kind in
-    ``FIELD_KINDS`` ({str,int,float,bool,text,length,exists,union_text,
-    union_isnull}) and path elements str (key) / int (index). Each field
-    equals the call of its kind's function at its path.
+    ``signatures.MULTI_KINDS`` ({str,int,float,bool,text,length,exists,
+    union_text,union_isnull}) and path elements str (key) / int (index).
+    Each field equals the call of its kind's function at its path.
 
     Returns a struct column; expand with ``.select(out["*"])`` or
     ``F.col("out.*")``.
@@ -83,15 +65,15 @@ def json_extract_multi(
     specs = []
     for name, spec in fields.items():
         kind, *path = spec
-        if kind not in FIELD_KINDS:
+        if kind not in MULTI_KINDS:
             raise ValueError(
                 f"unknown kind {kind!r} for field {name!r}; expected one "
-                f"of {sorted(FIELD_KINDS)}"
+                f"of {sorted(MULTI_KINDS)}"
             )
-        specs.append((name, jvm_tier.MULTI_KIND_FNS[kind], tuple(path)))
+        specs.append((name, MULTI_KINDS[kind], tuple(path)))
     # a DataType, not DDL text, which the JVM would parse even when the
     # tier serves the call, and in which a name like a`b needs quoting
-    ret = T.StructType([T.StructField(n, _FIELD_TYPES[fn]) for n, fn, _ in specs])
+    ret = T.StructType([T.StructField(n, RESULT_TYPES[fn]) for n, fn, _ in specs])
     from . import udfs
 
     udf = F.arrow_udf(ret)(udfs.multi_body(specs))

@@ -37,9 +37,10 @@ A literal path takes the per-batch dictionary shortcut
 (:func:`kernels._dict_encode` — the Arrow analog of the reference's
 dictionary-array evaluation, src/common.rs:310-327): on batches whose
 documents repeat, the kernel runs on the DISTINCT documents only and one
-``pc.take`` scatters the typed result back. Outputs are explicitly-typed
-Arrow arrays; ``json_get``'s null arm is a whole-struct NULL, as on the
-JVM tier.
+``pc.take`` scatters the typed result back. Outputs are Arrow arrays of
+the function's result type in :data:`.signatures.RESULT_TYPES`, which
+pyspark's ``to_arrow_type`` converts; ``json_get``'s null arm is a
+whole-struct NULL, as on the JVM tier.
 
 All UDFs are deterministic (never call ``asNondeterministic``) so Catalyst
 remains free to push/collapse projections containing them — the Spark
@@ -56,9 +57,12 @@ from functools import lru_cache
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
+from ..union import UNION_SCHEMA
 from . import kernels
 from .kernels import UNION_FIELDS, _dict_encode, _repair_utf8
+from .signatures import RESULT_TYPES
 
 from .. import _register_pickle_by_value
 
@@ -74,29 +78,7 @@ __all__ = [
     "union_is_null_udf",
     "from_scalar_udf",
     "sql_udf",
-    "RETURN_TYPES",
 ]
-
-# Return types per function key. json_length returns LongType — Spark has
-# no unsigned (reference returns UInt64, SURVEY.md §2.1 #10).
-RETURN_TYPES = {
-    "json_get": (
-        "struct<type_id:tinyint,bool:boolean,int:bigint,float:double,"
-        "str:string,array:string,object:string>"
-    ),
-    "json_get_str": "string",
-    "json_get_int": "bigint",
-    "json_get_float": "double",
-    "json_get_bool": "boolean",
-    "json_get_json": "string",
-    "json_get_array": "array<string>",
-    "json_as_text": "string",
-    "json_contains": "boolean",
-    "json_length": "bigint",
-    "json_object_keys": "array<string>",
-    "json_to_text_fused": "string",
-    "json_is_null_fused": "boolean",
-}
 
 _KERNELS = {
     "json_get": kernels.kernel_json_get,
@@ -114,35 +96,9 @@ _KERNELS = {
     "json_is_null_fused": kernels.kernel_json_is_null_fused,
 }
 
-_STRUCT_FNS = {"json_get"}
-
-
-# Arrow output type per function key — matches RETURN_TYPES exactly.
-_PA_TYPES = {
-    "json_get_str": pa.string(),
-    "json_get_int": pa.int64(),
-    "json_get_float": pa.float64(),
-    "json_get_bool": pa.bool_(),
-    "json_get_json": pa.string(),
-    "json_get_array": pa.list_(pa.string()),
-    "json_as_text": pa.string(),
-    "json_contains": pa.bool_(),
-    "json_length": pa.int64(),
-    "json_object_keys": pa.list_(pa.string()),
-    "json_to_text_fused": pa.string(),
-    "json_is_null_fused": pa.bool_(),
-}
-
-# union struct member types (order matches UNION_FIELDS)
-_UNION_PA_TYPES = (
-    pa.int8(),
-    pa.bool_(),
-    pa.int64(),
-    pa.float64(),
-    pa.string(),
-    pa.string(),
-    pa.string(),
-)
+# Arrow output type per function key, and of each union member
+_PA_TYPES = {fn: to_arrow_type(t) for fn, t in RESULT_TYPES.items()}
+_UNION_PA_TYPES = tuple(to_arrow_type(f.dataType) for f in UNION_SCHEMA)
 
 
 def _pa_col(values, pa_type):
@@ -157,7 +113,7 @@ def _to_arrow(fn_key: str, out, idx=None):
     shortcut) scatters it to row order with one C-speed take. The union
     struct's null arm (type_id 0) is a whole-struct NULL, so ``IS NULL``
     holds for it (reference: tests/main.rs:1612-1729)."""
-    if fn_key in _STRUCT_FNS:
+    if fn_key == "json_get":
         children = [
             _pa_col(out[name], t) for name, t in zip(UNION_FIELDS, _UNION_PA_TYPES)
         ]
@@ -214,7 +170,7 @@ def literal_path_udf(fn_key: str, path: tuple):
         return _eval(fn_key, kernel, js, path)
 
     fn.__name__ = fn_key
-    return F.arrow_udf(fn, RETURN_TYPES[fn_key])
+    return F.arrow_udf(fn, RESULT_TYPES[fn_key])
 
 
 # DataFusion-style names for the argument-type error message (reference:
@@ -332,7 +288,7 @@ def path_udf(fn_key: str):
         return _eval(fn_key, kernel, js, None, paths)
 
     fn.__name__ = fn_key
-    return F.arrow_udf(fn, RETURN_TYPES[fn_key])
+    return F.arrow_udf(fn, RESULT_TYPES[fn_key])
 
 
 def multi_body(specs):
@@ -369,10 +325,10 @@ def union_to_text_udf():
         members = _members(u)
         # a str member cast from binary may hold invalid UTF-8
         cols = [_repair_utf8(pa.Array.to_pylist, members[n]) for n in UNION_FIELDS]
-        return _pa_col(kernel(*cols), pa.string())
+        return _pa_col(kernel(*cols), _PA_TYPES["json_union_to_text"])
 
     fn.__name__ = "json_union_to_text"
-    return F.arrow_udf(fn, "string")
+    return F.arrow_udf(fn, RESULT_TYPES["json_union_to_text"])
 
 
 @lru_cache(maxsize=1)
@@ -386,7 +342,7 @@ def union_is_null_udf():
         return pc.fill_null(pc.equal(_members(u)["type_id"], 0), True)
 
     fn.__name__ = "json_is_null"
-    return F.arrow_udf(fn, "boolean")
+    return F.arrow_udf(fn, RESULT_TYPES["json_is_null"])
 
 
 # json_from_scalar's arm per accepted Arrow input type (type ids of the
@@ -430,7 +386,7 @@ def from_scalar_udf():
         )
 
     fn.__name__ = "json_from_scalar"
-    return F.arrow_udf(fn, RETURN_TYPES["json_get"])
+    return F.arrow_udf(fn, RESULT_TYPES["json_from_scalar"])
 
 
 def sql_udf(fn_key: str):

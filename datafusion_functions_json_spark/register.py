@@ -8,8 +8,9 @@ hooks (SURVEY.md §2.2), so SQL users call the named functions:
     SELECT json_get_str(props, 'k'), count(*)
     FROM events WHERE json_contains(props, 'k') GROUP BY 1
 
-This module only names the functions; it runs on the driver. With the
-JVM exact tier loaded, every name is a function builder of the tier
+This module installs the SQL names of ``signatures.SQL_NAMES``; it runs
+on the driver. With the JVM exact tier loaded, every name is a function
+builder of the tier
 (:func:`.functions.jvm_tier.register_all`, one py4j call): it reads the
 argument types when the query is analyzed and raises the reference's
 argument errors there — an untyped NULL or a non-string/int path
@@ -36,52 +37,9 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from .functions import jvm_tier
+from .functions.signatures import SQL_NAMES
 
 __all__ = ["register_all"]
-
-# the functions registered under their own SQL names
-_FUNCTIONS = (
-    "json_get",
-    "json_get_str",
-    "json_get_int",
-    "json_get_float",
-    "json_get_bool",
-    "json_get_json",
-    "json_get_array",
-    "json_as_text",
-    "json_contains",
-    "json_length",
-    "json_object_keys",
-)
-
-
-# names also registered as ``<name>_exact``, an alias existing queries use
-# (like json_len for json_length)
-_EXACT_ALIASES = (
-    "json_get_str",
-    "json_get_int",
-    "json_get_float",
-    "json_get_bool",
-    "json_get_json",
-    "json_get_array",
-    "json_as_text",
-    "json_contains",
-)
-
-
-# every SQL name, mapped to the function it calls; the aliases are the
-# reference's (src/json_length.rs:29, src/json_object_keys.rs:29,
-# src/json_from_scalar.rs:31)
-_SQL_NAMES = {
-    **{fn_key: fn_key for fn_key in _FUNCTIONS},
-    **{f"{fn_key}_exact": fn_key for fn_key in _EXACT_ALIASES},
-    "json_len": "json_length",
-    "json_keys": "json_object_keys",
-    "json_union_to_text": "json_union_to_text",
-    "json_is_null": "json_is_null",
-    "json_from_scalar": "json_from_scalar",
-    "scalar_to_json": "json_from_scalar",
-}
 
 
 def register_all(
@@ -101,9 +59,9 @@ def register_all(
     ``auto_tier`` and ``json_profile`` are accepted and ignored, so
     existing callers keep working.
     """
-    if jvm_tier.register_all(spark, _SQL_NAMES):
+    if jvm_tier.register_all(spark, SQL_NAMES):
         return
     from .functions import udfs
 
-    for name, fn in _SQL_NAMES.items():
+    for name, fn in SQL_NAMES.items():
         spark.udf.register(name, udfs.sql_udf(fn))

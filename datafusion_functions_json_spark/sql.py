@@ -20,6 +20,11 @@ Behavior mirrors the reference rewrite:
   (src/rewrite.rs:57-99): the inner call must be ``json_get`` (only it
   preserves a JSON value; flattening through ``json_as_text`` would
   change semantics) and every path argument must be a literal.
+* a cast of a ``json_get`` chain to a type named in
+  ``signatures.CAST_ELISION`` becomes the typed getter
+  (src/rewrite.rs:36-54): ``(j->'a')::int`` is ``json_get_int(j, 'a')``.
+  The cast stays around the getter for ``decimal`` and for a type with
+  parameters (``varchar(10)``), as ``JsonColumn.cast`` reads the same map.
 * each rewritten top-level SELECT item is aliased to its operator
   spelling (``json_data -> 'foo' -> 0``) exactly like the reference's
   ``expr_to_sql_repr`` alias rendering (src/rewrite.rs:146-171), so
@@ -50,6 +55,8 @@ from __future__ import annotations
 import re
 from typing import List, Optional
 
+from .functions.signatures import CAST_ELISION, SIGNATURES, SQL_NAMES
+
 __all__ = ["sql", "rewrite_sql"]
 
 _TOKEN_RE = re.compile(
@@ -74,54 +81,17 @@ _OPS = {"arrow": "json_get", "longarrow": "json_as_text", "question": "json_cont
 _OP_SPELLING = {"arrow": "->", "longarrow": "->>", "question": "?"}
 
 # Outer functions through which a json_get inner call may be flattened
-# (reference: src/rewrite.rs:59-68). json_contains is deliberately absent.
-_UNNEST_OUTER = {
-    "json_get",
-    "json_get_bool",
-    "json_get_float",
-    "json_get_int",
-    "json_get_json",
-    "json_get_str",
-    "json_as_text",
-}
+# (reference: src/rewrite.rs:59-68): an operator builds only these two
+# and json_contains, which is deliberately absent
+_UNNEST_OUTER = {_OPS["arrow"], _OPS["longarrow"]}
 
-# Cast elision targets (reference: src/rewrite.rs:41-49): casting a
-# json_get chain picks the typed variant so the union never materializes.
-_CAST_ELISION = {
-    "int": "json_get_int",
-    "integer": "json_get_int",
-    "bigint": "json_get_int",
-    "long": "json_get_int",
-    "smallint": "json_get_int",
-    "tinyint": "json_get_int",
-    "boolean": "json_get_bool",
-    "bool": "json_get_bool",
-    "float": "json_get_float",
-    "double": "json_get_float",
-    "real": "json_get_float",
-    "decimal": "json_get_float",
-    "string": "json_get_str",
-    "varchar": "json_get_str",
-    "text": "json_get_str",
-}
-
-# Registered functions taking (json, *path) — validated for the
-# one-column-path-element rule and NULL path literals.
-_PATH_FNS = {
-    "json_get",
-    "json_get_str",
-    "json_get_int",
-    "json_get_float",
-    "json_get_bool",
-    "json_get_json",
-    "json_get_array",
-    "json_as_text",
-    "json_contains",
-    "json_length",
-    "json_len",
-    "json_object_keys",
-    "json_keys",
-}
+# The SQL names taking (json, *path), validated for the
+# one-column-path-element rule and NULL path literals, and those taking
+# exactly one argument (rewrite-time twin of the reference's signature
+# check, reference: tests/main.rs test_json_from_scalar_no_args /
+# test_json_from_scalar_too_many_args)
+_PATH_FNS = {name for name, fn in SQL_NAMES.items() if SIGNATURES[fn].path}
+_UNARY_FNS = set(SQL_NAMES) - _PATH_FNS
 
 # Spark higher-order functions whose lambda parameters must not be
 # mistaken for JSON-operator left operands.
@@ -150,7 +120,7 @@ _KEYWORDS = {
     "on", "using", "join", "inner", "left", "right", "full", "cross",
     "group", "by", "having", "order", "limit", "union", "except",
     "intersect", "values", "when", "then", "else", "case", "end",
-    "over", "partition", "window", "lateral", "view", "end", "null",
+    "over", "partition", "window", "lateral", "view", "null",
     "true", "false", "interval",
 }
 
@@ -371,19 +341,11 @@ def _arg_is_literal(arg_src: str) -> bool:
     return _LITERAL_ARG_RE.fullmatch(arg_src.strip()) is not None
 
 
-# exact-arity functions: rewrite-time twin of the reference's signature
-# check (reference: tests/main.rs test_json_from_scalar_no_args /
-# test_json_from_scalar_too_many_args, src/json_from_scalar.rs signature)
-_ARITY_FNS = {"json_from_scalar": 1, "scalar_to_json": 1}
-
-
 def _validate_arity(fn: str, args: List[str]):
-    want = _ARITY_FNS[fn]
     got = 0 if args == [""] else len(args)
-    if got != want:
+    if got != 1:
         raise ValueError(
-            f"The function '{fn}' expected {want} arguments "
-            f"but received {got}."
+            f"The function '{fn}' expected 1 arguments but received {got}."
         )
 
 
@@ -635,7 +597,7 @@ def rewrite_sql(query: str) -> str:
             ):
                 ty = _next(toks, after + 1)
                 if ty >= 0 and toks[ty].kind == "ident":
-                    cand = _CAST_ELISION.get(toks[ty].text.lower())
+                    cand = CAST_ELISION.get(toks[ty].text.lower())
                     if cand:
                         ty_end, params = _scan_type_params(toks, ty)
                         if ty_end >= 0:
@@ -664,7 +626,7 @@ def rewrite_sql(query: str) -> str:
                     ):
                         ty = _next(toks, a)
                         if ty >= 0 and toks[ty].kind == "ident":
-                            cand = _CAST_ELISION.get(toks[ty].text.lower())
+                            cand = CAST_ELISION.get(toks[ty].text.lower())
                             if cand:
                                 ty_end, params = _scan_type_params(toks, ty)
                                 close = _next(toks, ty_end) if ty_end >= 0 else -1
@@ -702,7 +664,7 @@ def rewrite_sql(query: str) -> str:
         if t.kind == "call" and t.fn in _PATH_FNS:
             _validate_path_args(t.fn, t.args)
         elif t.kind == "ident" and (
-            t.text.lower() in _PATH_FNS or t.text.lower() in _ARITY_FNS
+            t.text.lower() in _PATH_FNS or t.text.lower() in _UNARY_FNS
         ):
             n = _next(toks, i)
             if n >= 0 and toks[n].kind == "punct" and toks[n].text == "(":
@@ -719,7 +681,7 @@ def rewrite_sql(query: str) -> str:
                 if j < len(toks):
                     name = t.text.lower()
                     call_args = _split_call_args(toks, n, j)
-                    if name in _ARITY_FNS:
+                    if name in _UNARY_FNS:
                         _validate_arity(name, call_args)
                     else:
                         _validate_path_args(name, call_args)

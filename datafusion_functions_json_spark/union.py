@@ -50,6 +50,8 @@ TYPE_ID_STR = 4
 TYPE_ID_ARRAY = 5
 TYPE_ID_OBJECT = 6
 
+# the one declaration of the layout; member order and names follow the
+# reference's sparse-union members (reference: src/common_union.rs:184-205)
 UNION_SCHEMA = T.StructType(
     [
         T.StructField("type_id", T.ByteType()),
@@ -62,10 +64,7 @@ UNION_SCHEMA = T.StructType(
     ]
 )
 
-UNION_DDL = (
-    "struct<type_id:tinyint,bool:boolean,int:bigint,float:double,"
-    "str:string,array:string,object:string>"
-)
+UNION_DDL = UNION_SCHEMA.simpleString()
 
 
 def json_is_null(u: Column) -> Column:

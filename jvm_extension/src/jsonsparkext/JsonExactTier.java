@@ -109,7 +109,7 @@ public final class JsonExactTier {
 
     /**
      * The functions that read a document at a path, named as the
-     * functions: each one's result type, as udfs.RETURN_TYPES declares
+     * functions: each one's result type, as signatures.RESULT_TYPES declares
      * it, and what it reads in a JSON text, as a Catalyst value.
      */
     private enum Fn {
@@ -136,7 +136,7 @@ public final class JsonExactTier {
 
     /**
      * The Python API's fused union consumers over {@code json_get}
-     * (udfs.RETURN_TYPES), each the consumer it composes with
+     * (signatures.RESULT_TYPES), each the consumer it composes with
      * {@code json_get}.
      */
     private static final Map<String, String> FUSED = Map.of(

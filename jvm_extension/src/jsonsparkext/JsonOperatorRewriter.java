@@ -74,10 +74,15 @@ public final class JsonOperatorRewriter {
         OP_SPELLING.put("question", "?");
     }
 
+    // an operator builds only json_get, json_as_text and json_contains;
+    // json_contains is deliberately absent (reference: src/rewrite.rs:59-68)
     private static final Set<String> UNNEST_OUTER = new HashSet<>(Arrays.asList(
-        "json_get", "json_get_bool", "json_get_float", "json_get_int",
-        "json_get_json", "json_get_str", "json_as_text", "json_length",
-        "json_len", "json_object_keys", "json_keys", "json_get_array"));
+        "json_get", "json_as_text"));
+
+    // The tables below copy datafusion_functions_json_spark/functions/
+    // signatures.py (CAST_ELISION, and the SQL names with and without a
+    // path), which the differential in tests/test_jvm_extension.py
+    // replays call by call.
 
     private static final Map<String, String> CAST_ELISION = new HashMap<>();
     static {
@@ -94,6 +99,7 @@ public final class JsonOperatorRewriter {
         CAST_ELISION.put("boolean", "json_get_bool");
         CAST_ELISION.put("bool", "json_get_bool");
         CAST_ELISION.put("string", "json_get_str");
+        CAST_ELISION.put("str", "json_get_str");
         CAST_ELISION.put("varchar", "json_get_str");
         CAST_ELISION.put("text", "json_get_str");
     }
@@ -102,7 +108,9 @@ public final class JsonOperatorRewriter {
         "json_get", "json_get_str", "json_get_int", "json_get_float",
         "json_get_bool", "json_get_json", "json_get_array", "json_as_text",
         "json_contains", "json_length", "json_len", "json_object_keys",
-        "json_keys"));
+        "json_keys", "json_get_str_exact", "json_get_int_exact",
+        "json_get_float_exact", "json_get_bool_exact", "json_get_json_exact",
+        "json_get_array_exact", "json_as_text_exact", "json_contains_exact"));
 
     private static final Set<String> HOF_NAMES = new HashSet<>(Arrays.asList(
         "transform", "filter", "exists", "forall", "aggregate", "reduce",
@@ -118,11 +126,10 @@ public final class JsonOperatorRewriter {
         "over", "partition", "window", "lateral", "view", "null",
         "true", "false", "interval"));
 
-    private static final Map<String, Integer> ARITY_FNS = new HashMap<>();
-    static {
-        ARITY_FNS.put("json_from_scalar", 1);
-        ARITY_FNS.put("scalar_to_json", 1);
-    }
+    // the SQL names taking exactly one argument
+    private static final Set<String> UNARY_FNS = new HashSet<>(Arrays.asList(
+        "json_union_to_text", "json_is_null", "json_from_scalar",
+        "scalar_to_json"));
 
     private static final Set<String> CAST_KEY_TYPES = new HashSet<>(
         Arrays.asList("text", "varchar", "string", "int", "integer", "bigint"));
@@ -337,12 +344,11 @@ public final class JsonOperatorRewriter {
     }
 
     private static void validateArity(String fn, List<String> args) {
-        int want = ARITY_FNS.get(fn);
         int got = (args.size() == 1 && args.get(0).isEmpty()) ? 0 : args.size();
-        if (got != want) {
+        if (got != 1) {
             throw new IllegalArgumentException(
-                "The function '" + fn + "' expected " + want
-                + " arguments but received " + got + ".");
+                "The function '" + fn + "' expected 1 arguments but received "
+                + got + ".");
         }
     }
 
@@ -665,7 +671,7 @@ public final class JsonOperatorRewriter {
                 validatePathArgs(t.fn, t.args);
             } else if (t.kind.equals("ident")
                     && (PATH_FNS.contains(t.text.toLowerCase())
-                        || ARITY_FNS.containsKey(t.text.toLowerCase()))) {
+                        || UNARY_FNS.contains(t.text.toLowerCase()))) {
                 int n = next(toks, i);
                 if (n >= 0 && toks.get(n).kind.equals("punct")
                         && toks.get(n).text.equals("(")) {
@@ -683,7 +689,7 @@ public final class JsonOperatorRewriter {
                     if (j < toks.size()) {
                         String name = t.text.toLowerCase();
                         List<String> callArgs = splitCallArgs(toks, n, j);
-                        if (ARITY_FNS.containsKey(name)) {
+                        if (UNARY_FNS.contains(name)) {
                             validateArity(name, callArgs);
                         } else {
                             validatePathArgs(name, callArgs);

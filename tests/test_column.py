@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 import datafusion_functions_json_spark as jsonf
 from datafusion_functions_json_spark.functions import jvm_tier as jsonf_jvm_tier
+from datafusion_functions_json_spark.functions.signatures import CAST_ELISION
 
 
 def physical_plan(df) -> str:
@@ -268,6 +269,37 @@ class TestCastElision:
 @pytest.mark.usefixtures("python_tier")
 class TestCastElisionPythonTier(TestCastElision):
     """Cast elision on the Python kernels."""
+
+
+_CAST_DOCS = [
+    '{"a": 3}', '{"a": -2.75}', '{"a": "abc"}', '{"a": true}',
+    '{"a": null}', '{"a": [1]}', "{}", "not json",
+]
+
+
+@pytest.mark.parametrize("tier", ["jvm", "python"])
+@pytest.mark.parametrize(
+    "spelling", sorted(CAST_ELISION) + ["decimal(10,2)", "varchar(10)"]
+)
+def test_api_and_sql_casts_agree(spark, request, monkeypatch, tier, spelling):
+    # one row per spelling of the one cast-elision map: the API's cast
+    # and SQL's give the same values (the API keeps a width SQL drops:
+    # .cast("int") is INT where ::int is BIGINT, equal as values)
+    if tier == "python":
+        request.getfixturevalue("python_tier")
+    df = spark.createDataFrame(list(enumerate(_CAST_DOCS)), "id int, j string")
+    df.createOrReplaceTempView("cast_docs")
+    jsonf.register_all(spark)
+    try:
+        api = df.orderBy("id").select(jsonf.col("j")["a"].cast(spelling))
+        sql = jsonf.sql(
+            spark,
+            f"select cast(j->'a' as {spelling}) from cast_docs order by id",
+        )
+        assert [r[0] for r in api.collect()] == [r[0] for r in sql.collect()]
+    finally:
+        monkeypatch.undo()
+        jsonf.register_all(spark)
 
 
 class TestDeterminismPushdown:

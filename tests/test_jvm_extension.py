@@ -30,6 +30,11 @@ import sys
 import pytest
 
 from datafusion_functions_json_spark.functions import jvm_tier
+from datafusion_functions_json_spark.functions.signatures import (
+    CAST_ELISION,
+    SIGNATURES,
+    SQL_NAMES,
+)
 from datafusion_functions_json_spark.sql import rewrite_sql
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -116,6 +121,25 @@ CURATED = [
 ]
 
 
+def _signature_corpus():
+    """One row per entry of the Python rewriter's tables
+    (functions/signatures.py), so drift in the Java copies of the cast
+    map and of the path and one-argument SQL names fails the
+    differential: both cast spellings of every elided type, a NULL path
+    literal for every path function, and a call with no argument for
+    every one-argument function."""
+    rows = []
+    for t in sorted(CAST_ELISION):
+        rows.append(f"select (j->'a')::{t} from t")
+        rows.append(f"select cast(j->'a' as {t}) from t")
+    for name, fn in sorted(SQL_NAMES.items()):
+        if SIGNATURES[fn].path:
+            rows.append(f"select {name}(j, null) from t")
+        else:
+            rows.append(f"select {name}() from t")
+    return rows
+
+
 def _harvest_corpus():
     """Every operator-bearing string literal in the Python operator test
     suite — keeps the differential in sync with whatever the Python
@@ -155,7 +179,7 @@ def _java_results(queries, jar):
 
 class TestRewriterDifferential:
     def test_curated_and_harvested_corpus(self, ext_jar):
-        corpus = CURATED + _harvest_corpus()
+        corpus = CURATED + _signature_corpus() + _harvest_corpus()
         assert len(corpus) > 60  # the harvest must not silently go empty
         py = _python_results(corpus)
         jv = _java_results(corpus, ext_jar)

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 import datafusion_functions_json_spark as jsonf
 from datafusion_functions_json_spark import union as union_mod
 from datafusion_functions_json_spark.functions import core, jvm_tier, udfs
+from datafusion_functions_json_spark.functions.signatures import SIGNATURES
 
 from test_perfbench_python_tier import _Ctx
 
@@ -41,7 +42,7 @@ pytestmark = pytest.mark.skipif(
     reason="no JDK: the JVM tier falls back to the Python kernels",
 )
 
-FNS = sorted(udfs.RETURN_TYPES)  # every function at a path
+FNS = sorted(fn for fn, s in SIGNATURES.items() if s.path)  # every function at a path
 
 
 def _perfbench(name):

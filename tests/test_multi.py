@@ -326,8 +326,14 @@ def test_one_round_trip_on_the_jvm_tier(spark, monkeypatch):
 def test_field_kinds_match_the_python_tier():
     # the kinds' SQL types come from a table that needs no pyarrow; it
     # must agree with the types the Python tier's UDFs return
-    from datafusion_functions_json_spark.functions import jvm_tier, multi, udfs
+    from pyspark.sql.pandas.types import from_arrow_type
 
-    assert multi.FIELD_KINDS == {
-        kind: udfs.RETURN_TYPES[fn] for kind, fn in jvm_tier.MULTI_KIND_FNS.items()
+    from datafusion_functions_json_spark.functions import udfs
+    from datafusion_functions_json_spark.functions.signatures import (
+        MULTI_KINDS,
+        RESULT_TYPES,
+    )
+
+    assert {kind: RESULT_TYPES[fn] for kind, fn in MULTI_KINDS.items()} == {
+        kind: from_arrow_type(udfs._PA_TYPES[fn]) for kind, fn in MULTI_KINDS.items()
     }

@@ -111,7 +111,7 @@ class TestUnionToText:
             pa.array([None, None], pa.string()),
         ]
         u = pa.StructArray.from_arrays(
-            kids, names=list(udfs.UNION_FIELDS),
+            kids, names=jsonf.UNION_SCHEMA.names,
             mask=pa.array([False, True]),
         )
         assert udfs.union_to_text_udf().func(u).to_pylist() == ["7", None]
